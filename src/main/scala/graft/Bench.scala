@@ -27,29 +27,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC parity with the Verify session: without it, date-bucketing
-      // queries plan over DIFFERENT group cardinalities than the ones the
-      // correctness gate proved, on any machine whose JVM zone isn't UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session-scoped optimizer rewrites (RewriteDotProduct,
-    // RewriteRangeJoin) — registered once here, never inside a query fn
-    graft.functions.GraftExtensions.registerRules(spark)
+    val spark = Session.local()
     // warm the session once (parquet footers, codegen, JIT) so the first
     // measured query isn't charged JVM/session initialization
-    graft.model.Tables.names.foreach { n =>
-      try {
-        val d = if (n == "events") graft.model.Tables.events(spark, sfDir)
-                else graft.model.Tables.df(spark, sfDir, n)
-        d.count()
-      } catch { case _: Throwable => () }
-    }
+    Warmup.tables(spark, sfDir)
     Warmup.kernels(spark)
     // sorted order: Map iteration order shifts whenever a query is added,
     // silently moving any residual warmup tax onto a different query and
@@ -88,23 +69,8 @@ object Bench {
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) =>
         skipDeclared && graft.queries.Q.declaredPriceFaces.contains(n) }
-    // inter-query GC knob (r14, the carried-suite-drift investigation —
-    // kept as the A/B instrument, DEFAULT OFF): the hypothesis was that
-    // orphaned localCheckpoint blocks (released only when a GC collects
-    // the RDD weak-ref, via ContextCleaner) accumulate across the
-    // growing suite and tax later queries uniformly. MEASURED AND
-    // REJECTED at sf0.1 × 196 queries in one ambient window: nudge
-    // every 16 queries 116.4 s, nudge off 104.8 s, pre-knob binary
-    // 98.9 s — the forced full GCs cost more than the dead blocks they
-    // free (they also collapse JIT-warm heap aging), and the run-to-run
-    // spread (±15 %) swamps both. The r12→r13 uniform drift is ambient
-    // variance, not suite-size garbage (see BASELINE.md).
-    val gcEvery = sys.env.getOrElse("SPARK_GRAFT_GC_EVERY", "0").toInt
     def pass(): Map[String, Option[Double]] =
-      suite.zipWithIndex.map { case ((name, fn), i) =>
-        if (gcEvery > 0 && i % gcEvery == 0) System.gc()
-        name -> timeSafe(fn)
-      }.toMap
+      suite.map { case (name, fn) => name -> timeSafe(fn) }.toMap
     val passA = pass()
     val passB = pass()
     val results = suite.map { case (name, _) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump the formatted physical plan for declared queries —
   * the loop for auditing pushdown / pruning / join strategy / codegen
   * spans (SURVEY §4.2 physical-execution policy).
@@ -13,16 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // session-scoped optimizer rewrites (RewriteDotProduct,
-    // RewriteRangeJoin) — registered once here, never inside a query fn
-    graft.functions.GraftExtensions.registerRules(spark)
+    val spark = Session.local()
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case Some(fn) =>

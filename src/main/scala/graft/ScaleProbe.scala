@@ -10,23 +10,14 @@ import org.apache.spark.sql.functions._
   * a 10× scale-up" check the 100 TB design demands, run locally.
   *
   * Usage: runMain graft.ScaleProbe [sfDir] [factor]
+  * Env: SPARK_GRAFT_CPUS (default 4, see [[Session]]).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val out = "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // session-scoped optimizer rewrites (RewriteDotProduct,
-    // RewriteRangeJoin) — registered once here, never inside a query fn
-    graft.functions.GraftExtensions.registerRules(spark)
+    val spark = Session.local()
 
     // BOTH scales are written through the same writer: reading the 1×
     // side from the driver-provided fixture layout conflated file-layout

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual declared queries, N iterations each — the
   * "is this regression real or bench noise" check (CLAUDE.md: bench is
   * noisy ±25%; rerun before trusting a regression).
@@ -16,24 +14,8 @@ object TimeQuery {
       .getOrElse(SparkEntry.queries.keys.toSeq)
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // session-scoped optimizer rewrites (RewriteDotProduct,
-    // RewriteRangeJoin) — registered once here, never inside a query fn
-    graft.functions.GraftExtensions.registerRules(spark)
-    graft.model.Tables.names.foreach { n =>  // warm footers/codegen/JIT
-      try {
-        val d = if (n == "events") graft.model.Tables.events(spark, sfDir)
-                else graft.model.Tables.df(spark, sfDir, n)
-        d.count()
-      } catch { case _: Throwable => () }
-    }
+    val spark = Session.local()
+    Warmup.tables(spark, sfDir)
     Warmup.kernels(spark) // same policy as Bench: don't charge janino to iter 1
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -4,7 +4,6 @@ import graft.agg.Aggs
 import graft.core.Pipeline
 import graft.llm.{Dedup, Similarity}
 import graft.model.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executable documentation — the reference ships an `examples` module as
@@ -20,11 +19,7 @@ object Examples {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     // 1. typed fluent pipeline — the reference's DataPipelineT surface
@@ -78,8 +73,8 @@ object Examples {
     println(s"[6] typed QL: ${typed.mkString(", ")}")
 
     // 7. naive range join auto-bucketized by the RewriteRangeJoin rule:
-    // write the natural predicate, get a hash join (docs/PLANS.md §4a)
-    graft.functions.GraftExtensions.registerRules(spark)
+    // write the natural predicate, get a hash join (docs/PLANS.md §4a);
+    // graft.Session registered the rule with the session
     val evts = ev.select("event_id", "ts")
     val banded = evts.join(
       evts.select(col("event_id").as("b_id"), col("ts").as("b_ts")),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * separate expressions the generated code blows past whole-stage
   * codegen's size limits and Spark silently falls back to interpreted
   * per-expression eval — measured ~100× slower on the banded-LSH stage
-  * (EmbedProfile, round 3). Here the plane matrix rides along as ONE
+  * (round 3). Here the plane matrix rides along as ONE
   * reference object and the kernel is three tight primitive loops: a
   * single pass per plane with no boxing, no intermediate arrays, and
   * codegen output whose size is INDEPENDENT of numTables/bits.

@@ -1218,7 +1218,7 @@ object Dedup {
     val rng = new scala.util.Random(seed)
     // one SignProjection kernel computes ALL numTables×bits plane dots per
     // row — numTables×bits separate when(dot≥0) columns overflow codegen
-    // limits and fall back to interpreted eval (~100× slower, EmbedProfile)
+    // limits and fall back to interpreted eval (measured ~100× slower, round 3)
     val planes = Array.fill(numTables * bits)(Array.fill(dims)(rng.nextGaussian()))
     val banded = n.select(col(idCol),
         posexplode(graft.functions.SignProjection(col(vecCol), planes, numTables, bits))

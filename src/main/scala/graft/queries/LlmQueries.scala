@@ -201,9 +201,8 @@ object LlmQueries {
   // value exactly representable in binary, so squared-L2 double
   // arithmetic is identical across engines; formula-generated so the
   // Spark kernel and the DuckDB VALUES literal share one definition.
-  // private[graft] so dev profilers (ProfileR20.annProbe) measure the
-  // DECLARED codebooks instead of a silently-drifting copy (r21, the
-  // r20 ADVICE note)
+  // private[graft] so the benchmark under perfbench/ measures the
+  // DECLARED codebooks instead of a silently-drifting copy
   private[graft] val pqCodebooks: Seq[Seq[Seq[Double]]] =
     (0 until 8).map(s => (0 until 4).map(k =>
       (0 until 8).map(j => (((s * 31 + k * 17 + j * 7) % 19) - 9) / 4.0)))

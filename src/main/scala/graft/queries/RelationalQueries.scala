@@ -129,7 +129,7 @@ object RelationalQueries {
         |GROUP BY a.event_id ORDER BY a.event_id""".stripMargin) {
       (spark, sf) =>
         // relies on RewriteRangeJoin being registered at session setup
-        // (GraftExtensions.registerRules in Verify/Bench/Explain/SparkSpec,
+        // (graft.Session, which every main and the test suite use,
         // or spark.sql.extensions=graft.functions.GraftExtensions) — a
         // query fn must not mutate session optimizer state
         val e = Tables.events(spark, sf).select("event_id", "ts")

@@ -223,14 +223,7 @@ object Serve {
     // 7177, not 7077: 7077 is Spark standalone master's default port —
     // colocating graft-serve with a master must not collide
     val port = args.lift(1).map(_.toInt).getOrElse(7177)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.registerRules(spark)
+    val spark = graft.Session.local()
     val h = start(spark, sfDir, port)
     println(s"graft-serve listening on ${h.port} (sfDir=$sfDir)")
     Thread.currentThread().join()

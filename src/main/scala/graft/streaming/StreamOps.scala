@@ -1927,6 +1927,27 @@ object StreamOps {
     }
   }
 
+  /** Run two independent store writes overlapped: `side` on a second
+    * driver thread, `main` on this one, then join. Every failure is
+    * reported: a `main` failure is rethrown after the side write
+    * finishes, carrying the side's failure (if any) as suppressed; a
+    * side-only failure is rethrown as itself. */
+  private def overlapped(threadName: String)(side: => Unit)(main: => Unit): Unit = {
+    val task = new java.util.concurrent.FutureTask[Unit](() => side)
+    new Thread(task, threadName).start()
+    // get() waits for the side write to finish
+    def sideFailure(): Option[Throwable] =
+      try { task.get(); None }
+      catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+    try main
+    catch {
+      case e: Throwable =>
+        sideFailure().filterNot(_ eq e).foreach(e.addSuppressed)
+        throw e
+    }
+    sideFailure().foreach(e => throw e)
+  }
+
   /** Initial load of a streaming-dedup deployment: the (already
     * deduped) corpus into the CDC snapshot layout at `corpusPath`
     * (version 0) and its signature index into `indexPath` (partition
@@ -1943,22 +1964,14 @@ object StreamOps {
     // bootstrap under the sequential order (re-run bootstrapDedup —
     // the documented fresh-start recovery); overlap adds no new torn
     // state class.
-    val idxTask = new java.util.concurrent.FutureTask[Unit](() =>
+    overlapped("graft-dedup-index-bootstrap")(
       writeDedupIndexPartition(
         graft.llm.Dedup.signatureIndex(corpus, k, bands, rowsPerBand,
           idCol, textCol, poly),
         indexPath, "bootstrap", -1L, dynamic = false, nIdxBuckets,
-        bucketed = true))
-    val idxThread = new Thread(idxTask, "graft-dedup-index-bootstrap")
-    idxThread.start()
-    try
+        bucketed = true))(
       writeCdcSnapshot(graft.relational.Cdc.bootstrap(corpus, Seq(idCol)),
-        corpusPath, Seq(idCol), nBuckets)
-    finally idxThread.join()
-    try idxTask.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
+        corpusPath, Seq(idCol), nBuckets))
     // a fresh start resets BOTH stores' ownership (the corpus reset
     // happens inside writeCdcSnapshot)
     resetClaim(new org.apache.hadoop.fs.Path(indexPath)
@@ -2237,7 +2250,7 @@ object StreamOps {
             // corpus merge replays unconditionally (see the
             // folded-watermark comment above), and each write is
             // idempotent on redelivery by itself.
-            val idxTask = new java.util.concurrent.FutureTask[Unit](() =>
+            overlapped("graft-dedup-index-write")(
               if (!indexFolded) {
                 val survivorSigs = sigsB
                   .join(survivors.select(idCol), Seq(idCol), "left_semi")
@@ -2246,21 +2259,12 @@ object StreamOps {
                     survivorSigs.withColumn(idCol, col(idCol).cast(t))),
                   indexPath, writer, batchId, dynamic = true, nIdxBuckets,
                   bucketed = false, tailFiles = tailFiles)
-              })
-            val idxThread = new Thread(idxTask, "graft-dedup-index-write")
-            idxThread.start()
-            try
+              })(
               applyCdcBatch(
                 survivors.withColumn("version", lit(batchId + 1L))
                   .withColumn("op", lit("U")),
                 corpusPath, Seq(idCol), "version", "op", nBuckets,
-                Some(writer))
-            finally idxThread.join()
-            try idxTask.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
+                Some(writer)))
             // the TAIL BOUND (r19, the r18 verdict ask 2): every probe
             // reads the whole tail, so unbounded per-batch fact
             // partitions are the one growth term the two-tier layout

@@ -9,23 +9,17 @@ import org.scalatest.matchers.should.Matchers
   * on tiny literal datasets with hand-computed expectations.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Fixed, not `SPARK_GRAFT_CPUS`: plan-shape assertions and budgets
+    * are pinned at 4 shuffle partitions on every machine. */
+  val cpus = 4
+  lazy val spark: SparkSession = Session.local(cpus,
+    Map("spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse"))
 }
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("ERROR")
-    // same session-setup contract as the Verify/Bench/Explain mains: the
-    // optimizer rewrites are registered once per session, not by query fns
-    graft.functions.GraftExtensions.registerRules(s)
     s
   }
 }

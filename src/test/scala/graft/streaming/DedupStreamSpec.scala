@@ -537,6 +537,21 @@ class DedupStreamSpec extends SparkSpec {
     run(idx) // memoized: no re-verification, the probe serves
   }
 
+  test("when both overlapped bootstrap writes fail, the error carries both causes") {
+    // each store path sits under its own regular file, so neither write
+    // can create its directory and each failure names its own file
+    val dir = tmp("dedup_both_fail")
+    val files = Seq("index_parent", "corpus_parent").map { n =>
+      val f = new java.io.File(dir, n); f.createNewFile() shouldBe true; f }
+    val e = intercept[Exception] {
+      StreamOps.bootstrapDedup(corpus0, s"${files(0)}/idx", s"${files(1)}/corp",
+        k = 2, bands = 8, rowsPerBand = 2, nBuckets = 8)
+    }
+    e.getMessage should include ("corpus_parent")
+    e.getSuppressed.map(_.getMessage).filter(_ != null)
+      .exists(_.contains("index_parent")) shouldBe true
+  }
+
   test("docs carrying the store's internal merge columns are rejected") {
     val dir = tmp("dedup_cols")
     val bad = Seq((1L, "x", 1L)).toDF("doc_id", "text", "version")

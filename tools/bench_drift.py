@@ -14,6 +14,8 @@ Rules (the CLAUDE.md noise model):
     sub-floor samples are framework-cost noise, but a query regressing
     FROM sub-floor TO above-floor is exactly the class the gate exists
     to catch;
+  - an entry recorded as 0 s counts as an infinite ratio, so it is
+    flagged once its NOW sample is above the floor;
   - queries named in --touched are reported but never fail the gate
     (their movement is this round's explained diff);
   - dropped/renamed queries always fail (the driver treats a vanished
@@ -35,7 +37,7 @@ def load(path: str) -> dict:
     return {k: v for k, v in q.items() if v is not None and v >= 0}
 
 
-def main() -> int:
+def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("prev")
     ap.add_argument("now")
@@ -43,7 +45,7 @@ def main() -> int:
                     help="comma-separated queries changed this round")
     ap.add_argument("--ratio", type=float, default=1.5)
     ap.add_argument("--floor", type=float, default=0.5)
-    a = ap.parse_args()
+    a = ap.parse_args(argv)
     prev, now = load(a.prev), load(a.now)
     touched = {t for t in a.touched.split(",") if t}
 
@@ -55,9 +57,7 @@ def main() -> int:
     notes = []
     for q in common:
         p, n = prev[q], now[q]
-        if p <= 0 or n <= 0:
-            continue
-        r = n / p
+        r = n / p if p > 0 else (math.inf if n > 0 else 1.0)
         if r > a.ratio and n > a.floor:
             line = f"{q}: {p:.3f}s -> {n:.3f}s ({r:.2f}x)"
             if q in touched:
@@ -67,8 +67,9 @@ def main() -> int:
         elif r > a.ratio:
             notes.append(f"sub-floor, ignored: {q} {p:.3f}->{n:.3f}")
 
-    gm = math.exp(sum(math.log(now[q] / prev[q]) for q in common
-                      if prev[q] > 0 and now[q] > 0) / max(1, len(common)))
+    logs = [math.log(now[q] / prev[q]) for q in common
+            if prev[q] > 0 and now[q] > 0]
+    gm = math.exp(sum(logs) / max(1, len(logs)))
     print(f"common={len(common)} added={len(added)} dropped={len(dropped)} "
           f"geomean now/prev={gm:.3f}")
     for x in notes:
