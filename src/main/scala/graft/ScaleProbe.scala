@@ -1,6 +1,7 @@
 package graft
 
 import graft.model.Tables
+import graft.streaming.Store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,6 +64,12 @@ object ScaleProbe {
     // Replicating the real tables would make every replica a near-dup of
     // its source, and near-dup pair volume is quadratic in the replication
     // count BY CONSTRUCTION — that measures the data trick, not the plan.
+    // memo gates read a fixture's meta through its Store: an absent meta
+    // and one that does not decode (a run killed between the meta's
+    // create and write leaves zero bytes) both take the re-bootstrap
+    // branch, never a throw
+    def storedMeta[M](store: Store[M]): Option[M] =
+      scala.util.Try(store.meta).toOption.flatten
     def synthDocs(n: Long): DataFrame =
       spark.range(n).select(col("id").as("doc_id"),
         array_join(transform(sequence(lit(1), lit(40)),
@@ -75,32 +82,14 @@ object ScaleProbe {
 
     // the bucketed-CDC snapshot fixture shared by cdc_sink_prune and
     // cdc_point_lookup: n*256 keys, nBuckets scaled so rows/bucket stay
-    // constant; memoized behind a first-line meta check (the r17 rule)
+    // constant; memoized behind the meta's bucket count
     def cdcSnapFixture(n: Long): (String, Int, Long) = {
       val keys = n * 256
       val nBuckets = math.max(4L, keys / 8192L).toInt
       val dir = s"$out/cdc_sink_$n/snap"
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val metaOk = {
-        val mp = new org.apache.hadoop.fs.Path(dir + ".meta")
-        fs.exists(mp) && {
-          val in = fs.open(mp)
-          // first LINE only: since r17 the meta also carries a
-          // schema line (an exact-string compare re-bootstrapped the
-          // snapshot every pass and timed bootstrap, not the batch);
-          // nextOption: a run killed between create and write leaves a
-          // 0-byte meta — the gate must take the re-bootstrap branch,
-          // not throw (r18 self-review)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .linesIterator.nextOption().exists(_.trim == s"nBuckets=$nBuckets")
-          finally in.close()
-        }
-      }
-      if (!metaOk) {
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        fs.delete(new org.apache.hadoop.fs.Path(dir + ".meta"), false)
+      val snap = Store.CdcSnapshot.at(spark, dir)
+      if (!storedMeta(snap).exists(_.nBuckets == nBuckets)) {
+        snap.remove()
         graft.streaming.StreamOps.writeCdcSnapshot(
           graft.relational.Cdc.bootstrap(
             spark.range(keys).select(col("id").as("k"),
@@ -117,7 +106,7 @@ object ScaleProbe {
     // n/1000 per-batch tail partitions of 4096 docs (built through the
     // real batch path, auto-fold disabled); folded = one bootstrap of ALL the docs
     // (bit-identical to compacting the unfolded index: bootstrap and
-    // compaction share writeDedupIndexPartition's bucketed tier).
+    // compaction share Store.writeTier's bucketed tier).
     // nIdxBuckets follows the KV rule on the TOTAL doc count in both,
     // so the folded probe's rows-per-bucket stay constant across n.
     def tailDocs(start: Long, cnt: Long): DataFrame =
@@ -140,8 +129,8 @@ object ScaleProbe {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val corpReady =
-        fs.exists(new org.apache.hadoop.fs.Path(corp + ".meta")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(idx + ".meta"))
+        storedMeta(Store.CdcSnapshot.at(spark, corp)).isDefined &&
+          storedMeta(Store.SignatureIndex.at(spark, idx)).isDefined
       val tailNow =
         if (corpReady) graft.streaming.StreamOps
           .dedupIndexTailBatches(spark, idx)
@@ -192,33 +181,21 @@ object ScaleProbe {
     // assignment into one cell and the probe would degenerate to a
     // full-index read that measures the planting, not the layout),
     // plus two tail batches so the probe's tail leg is live. Memoized
-    // behind the cells= meta line.
+    // behind the meta's cell count.
     def annServeFixture(n: Long): String = {
       val cCount = math.max(8L, n / 512L).toInt
       val dir = s"$out/ann_serve_$n/ann"
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val metaOk = {
-        val mp = new org.apache.hadoop.fs.Path(dir + "/codes.meta")
-        fs.exists(mp) && {
-          val in = fs.open(mp)
-          val lines = try new String(
-            org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
-          finally in.close()
-          // first line = layout, AND the cbhash line must exist — a
-          // fixture written before the r19 fingerprint format would
-          // otherwise memoize forever and crash every probe on the
-          // missing meta line (the r17 sidecar-format rule: extending
-          // a meta format means re-checking every memoized consumer)
-          lines.headOption.exists(_.trim == s"cells=$cCount") &&
-            lines.exists(_.trim.startsWith("cbhash="))
-        }
+      // the decoded meta carries the codebook fingerprint, so a fixture
+      // written before that format does not decode and re-bootstraps
+      val metaOk = storedMeta(Store.AnnCodes.at(spark, s"$dir/codes"))
+        .exists(_.cells == cCount) &&
         // AND the two tail batches landed — a run killed between the
         // bootstrap and the batches would otherwise memoize a fixture
         // with a dead tail leg and measure the wrong shape forever
         // (the dedupTailFixture ready-predicate rule)
-      } && graft.streaming.StreamOps.annIndexTailBatches(spark, dir) == 2
+        graft.streaming.StreamOps.annIndexTailBatches(spark, dir) == 2
       if (!metaOk) {
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
         val corpus = synthEmb(n)
@@ -1399,21 +1376,12 @@ object ScaleProbe {
         val dir = s"$out/dedup_stream_$n"
         val fs = new org.apache.hadoop.fs.Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // memo gate checks BOTH stores' metas (first line only — the
-        // r17 rule): a fixture left by a pre-r18 run has no idx meta
-        // (flat layout) and must re-bootstrap, not trip the layout guard
-        val idxMetaOk = {
-          val mp = new org.apache.hadoop.fs.Path(dir + "/idx.meta")
-          fs.exists(mp) && {
-            val in = fs.open(mp)
-            try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-              java.nio.charset.StandardCharsets.UTF_8)
-              .linesIterator.nextOption()
-              .exists(_.trim == s"nIdxBuckets=$nIdxBuckets")
-            finally in.close()
-          }
-        }
-        if (!fs.exists(new org.apache.hadoop.fs.Path(dir + "/corp.meta"))
+        // memo gate checks BOTH stores' metas: a fixture left by a
+        // pre-r18 run has no idx meta (flat layout) and must
+        // re-bootstrap, not trip the layout guard
+        val idxMetaOk = storedMeta(Store.SignatureIndex.at(spark, s"$dir/idx"))
+          .exists(_.nIdxBuckets == nIdxBuckets)
+        if (storedMeta(Store.CdcSnapshot.at(spark, s"$dir/corp")).isEmpty
             || !idxMetaOk) {
           fs.delete(new org.apache.hadoop.fs.Path(dir), true)
           graft.streaming.StreamOps.bootstrapDedup(synthDocs(m),

@@ -1,0 +1,615 @@
+package graft.streaming
+
+import java.nio.charset.StandardCharsets
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The on-disk lifecycle every stateful [[StreamOps]] sink shares, for
+  * one store root: the `.meta` sidecar, the ownership claim, the
+  * data-dir listing, the torn-overwrite guard and — for the two tiered
+  * stores — the tail tier. The store kinds ([[Store.CdcSnapshot]],
+  * [[Store.SignatureIndex]], [[Store.AnnCodes]], [[Store.Labels]],
+  * [[Store.CanonEdges]]) only say what differs: their meta fields,
+  * which root children are data, and their messages. What a store
+  * reads and writes as DataFrames stays with its sink in StreamOps.
+  *
+  * The meta is a SIBLING file (`<root>.meta`), so a static overwrite of
+  * the data dir can never delete it: it pins the layout (a mismatched
+  * bucket count would prune or rewrite the WRONG buckets and silently
+  * duplicate keys) and turns a crashed overwrite into a loud failure
+  * (meta present + data gone = the write died mid-job; without it the
+  * cold-start fallback would silently re-bootstrap from empty and
+  * publish a plausible-looking partial store). */
+private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
+                                    val fs: FileSystem) {
+  import Store._
+
+  /** The decoded meta, None when absent. A meta this kind cannot decode
+    * — zero bytes from a create-then-die write, or another store's meta
+    * at a shared path — fails loudly with the store and its path. */
+  def meta: Option[M] = readSidecar(fs, metaPath(root)).map { content =>
+    try kind.decode(Meta.decode(content))
+    catch {
+      case NonFatal(e) => throw new IllegalArgumentException(
+        s"unrecognized ${kind.metaNoun} at $root.meta for the ${kind.name} " +
+          s"at $root: " +
+          (if (content.isEmpty) "zero bytes — a meta write crashed between " +
+            "create and write"
+          else s"'$content' — not a ${kind.name} meta; is the path shared " +
+            "with another store?") +
+          s" Restore the meta or rebuild the ${kind.name}.", e)
+    }
+  }
+
+  /** Replace the meta. Every writer lands it AFTER the data it
+    * describes, so a crash between the two leaves data without meta on
+    * a first write only — never a meta describing data that is not
+    * there. */
+  def writeMeta(m: M): Unit = writeSidecar(fs, metaPath(root), kind.encode(m).encode)
+
+  def removeMeta(): Unit = fs.delete(metaPath(root), false)
+
+  /** Remove the data root AND the meta together, so the store reads as
+    * ABSENT (cold-start semantics) — never as torn. */
+  def remove(): Unit = {
+    fs.delete(new Path(root), true)
+    removeMeta()
+  }
+
+  /** The root's data children — ONE root listStatus, the only listing
+    * whose cost may grow with the store (by partition COUNT, never by
+    * file count); empty when the root is absent. */
+  def dirs: Array[String] = {
+    val p = new Path(root)
+    if (!fs.exists(p)) Array.empty
+    else {
+      val names = fs.listStatus(p).map(_.getPath.getName)
+      kind.checkLayout(root, names)
+      names.filter(kind.isData)
+    }
+  }
+
+  /** The meta and the data children, behind the torn-overwrite guard:
+    * meta present with no data = a static overwrite died between its
+    * delete and its commit. Reading that as an absent store would
+    * restart from empty (silently admitting every dup, dropping every
+    * key); an empty static write removes the meta with the data, so a
+    * legitimately empty store never reaches this state. */
+  def open(): (Option[M], Array[String]) = {
+    val d = dirs
+    val m = meta
+    require(m.isEmpty || d.nonEmpty,
+      s"${kind.metaNoun} exists at $root.meta but the ${kind.dataNoun} " +
+        s"are gone — ${kind.tornHint}")
+    (m, d)
+  }
+
+  /** [[open]] for an op that needs the store to exist: an absent meta
+    * fails with `hint` (what to run first). */
+  def openExisting(hint: String): (M, Array[String]) = {
+    val (m, d) = open()
+    (m.getOrElse(throw missing(hint)), d)
+  }
+
+  def missing(hint: String): IllegalArgumentException =
+    new IllegalArgumentException(s"no ${kind.metaNoun} at $root.meta — $hint")
+
+  // ---- ownership, by the claim sidecar (the code below the Store class)
+
+  def claim(writer: Option[String], storedPin: Option[String]): Unit =
+    claimOwnership(fs, root, writer, storedPin, kind.name)
+
+  def resetClaim(writer: Option[String]): Unit = Store.resetClaim(fs, root, writer)
+
+  def owner(metaWriter: Option[String]): Option[String] =
+    effectiveOwner(fs, root, metaWriter)
+
+  def requireOwner(metaWriter: Option[String], asWriter: Option[String],
+                   op: String): Unit =
+    requireStoreOwner(fs, root, metaWriter, asWriter, kind.name, op)
+
+  // ---- the tail tier of the two tiered stores (the LSM/base-plus-delta
+  // shape): corpus-sized writes (bootstrap, fold) land BUCKETED, each
+  // batch lands whole in one unbucketed tail dir, and every probe reads
+  // its touched buckets plus the whole tail
+
+  private def tail: Tail = kind.tail.getOrElse(
+    throw new IllegalStateException(s"the ${kind.name} has no tail tier"))
+
+  /** Batch ids per writer in the tail dir, from the DIR NAMES (never
+    * data): one listStatus of the tail dir plus one per writer dir. */
+  private def tailBatchIds: Map[String, Seq[Long]] = {
+    val t = tail
+    val dir = new Path(root, s"${t.partCol}=${t.value}")
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir)
+      .filter(s => s.isDirectory &&
+        s.getPath.getName.startsWith(t.writerCol + "="))
+      .map { w =>
+        w.getPath.getName.stripPrefix(t.writerCol + "=") ->
+          fs.listStatus(w.getPath)
+            .filter(b => b.isDirectory &&
+              b.getPath.getName.startsWith(t.batchCol + "="))
+            .map(_.getPath.getName.stripPrefix(t.batchCol + "=").toLong)
+            .toSeq
+      }.toMap
+  }
+
+  /** How many per-batch partitions the tail holds — the number that
+    * grows between folds, since every probe reads the whole tail. */
+  def tailBatches: Int = tailBatchIds.values.map(_.size).sum
+
+  /** Whether `batchId` is a REPLAY of a batch a fold already moved into
+    * the bucketed tier: the fold deleted the tail partition that made
+    * the write idempotent, so re-landing it would duplicate its rows
+    * until the next fold — it recognizes itself here and skips. The
+    * marks are writer-scoped because batch ids restart at 0 under a new
+    * checkpoint (takeover): a new writer is never gated by an old
+    * writer's watermark. */
+  def isFolded(m: Option[M], writer: String, batchId: Long): Boolean =
+    m.exists(kind.folded(_).get(writer).exists(batchId <= _))
+
+  /** The tier write: `rows` tagged with their tier — `bucket` for a
+    * corpus-sized static write (bootstrap, fold: clustered, one file
+    * per bucket, spread over the bucket count's tasks), else the tail
+    * value for a batch's dynamic write (ONE partition commit per batch;
+    * bucketing a batch would pay one commit per touched bucket) — plus
+    * the writer and batch partitions beneath (the idempotent-sink
+    * keying: a replayed batch rewrites its own partition). One commit
+    * needs one partition DIR, not one file: `tailFiles` > 1
+    * hash-spreads a large batch over that many tasks inside the one
+    * tail dir. A static write that left no data dirs removes the store
+    * (checked on the dirs AFTER the write — an isEmpty pre-check would
+    * execute the input plan an extra time); otherwise `meta` lands
+    * after the data. */
+  def writeTier(rows: DataFrame, writer: String, batch: Long,
+                bucket: Option[Column], meta: M, tailFiles: Int = 1): Unit = {
+    require(tailFiles >= 1, s"tailFiles must be >= 1, got $tailFiles")
+    val t = tail
+    val tagged = rows.withColumn(t.partCol, bucket.getOrElse(lit(t.value)))
+      .withColumn(t.writerCol, lit(writer))
+      .withColumn(t.batchCol, lit(batch))
+    val clustered =
+      if (bucket.isDefined || tailFiles == 1) tagged.repartition(col(t.partCol))
+      else tagged.repartition(tailFiles,
+        col(rows.columns.filterNot(t.keyCols.contains).head))
+    val w = clustered.write.mode("overwrite")
+    (if (bucket.isEmpty) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy(t.partCol, t.writerCol, t.batchCol)
+      .parquet(root)
+    if (bucket.isDefined && dirs.isEmpty) remove()
+    else writeMeta(meta)
+  }
+
+  /** The fold preamble: the stored meta (absent → fails with `hint`),
+    * intact data dirs, the owner gate — a claimed store demands its
+    * owner (`asWriter`), since a fold racing a live batch's tail write
+    * would overwrite the committed partition — and the replay
+    * watermarks the fold records: prior folds' marks merged, max per
+    * writer, with the batches the tail holds now (see [[isFolded]]). */
+  def beginFold(asWriter: Option[String], op: String, hint: String)
+      : (M, Array[String], Map[String, Long]) = {
+    val (m, d) = openExisting(hint)
+    requireOwner(None, asWriter, op)
+    val now = tailBatchIds.collect { case (w, bs) if bs.nonEmpty => w -> bs.max }
+    val folded = (kind.folded(m).toSeq ++ now.toSeq).groupBy(_._1)
+      .map { case (w, xs) => w -> xs.map(_._2).max }
+    (m, d, folded)
+  }
+}
+
+private[graft] object Store {
+
+  // ---- the sidecar codec: newline-separated `key=value` fields, bare
+  // marker lines and `folded:<writer>=<batch>` watermarks. Consumers
+  // read typed fields through their kind — never a first-line compare
+  // by hand (an added line once broke three such consumers).
+
+  /** One decoded sidecar, in written order. */
+  final case class Meta(fields: Seq[(String, String)] = Nil,
+                        markers: Seq[String] = Nil,
+                        folded: Map[String, Long] = Map.empty) {
+    def get(key: String): Option[String] =
+      fields.collectFirst { case (`key`, v) => v }
+
+    def apply(key: String): String = get(key).getOrElse(
+      throw new NoSuchElementException(s"no $key line"))
+
+    /** Exactly `keys`' fields, headed by the first, and no other
+      * lines (watermarks only when `folding`). */
+    def expect(keys: Seq[String], folding: Boolean = false): Meta = {
+      require(fields.headOption.exists(_._1 == keys.head) &&
+        fields.forall(f => keys.contains(f._1)) && markers.isEmpty &&
+        (folding || folded.isEmpty), s"expected fields ${keys.mkString(", ")}")
+      this
+    }
+
+    def encode: String =
+      (fields.map { case (k, v) => s"$k=$v" } ++ markers ++
+        folded.toSeq.sortBy(_._1).map { case (w, b) => s"folded:$w=$b" })
+        .mkString("\n")
+  }
+
+  object Meta {
+    def decode(content: String): Meta = {
+      val lines = content.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+      // older builds wrote the canonical-edge meta as ONE line joining
+      // its fields with ';'
+      val split = lines.take(1).flatMap(_.split(";").toSeq) ++ lines.drop(1)
+      val (folded, rest) = split.partition(_.startsWith("folded:"))
+      val (fields, markers) = rest.partition(_.contains("="))
+      Meta(
+        fields.map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) },
+        markers,
+        folded.map { l =>
+          val kv = l.stripPrefix("folded:")
+          val i = kv.lastIndexOf('=')
+          kv.substring(0, i) -> kv.substring(i + 1).toLong
+        }.toMap)
+    }
+  }
+
+  private def schemaOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** The CDC snapshot's meta: the bucket count every reader/writer must
+    * agree on; the LOGICAL schema, which may be AHEAD of what older
+    * bucket files carry (readers pass it explicitly so they
+    * null-backfill; metas of the first bucketed builds lack it); the
+    * writer PIN (the claim sidecar is the CAS, this the record); and the
+    * RETAINED mark freezing a time-travel base. */
+  final case class CdcMeta(nBuckets: Int, schema: Option[StructType],
+                           writer: Option[String], retained: Option[Long])
+
+  /** The signature index's meta: bucket count, the stored sig-row schema
+    * (pins the id dtype later batches cast to), the fold watermarks. */
+  final case class IdxMeta(nIdxBuckets: Int, schema: StructType,
+                           folded: Map[String, Long])
+
+  /** The ANN code store's meta: cell count, the codebook fingerprint
+    * binding the codes to the quantization that encoded them, the
+    * stored code-row schema, the fold watermarks. */
+  final case class AnnMeta(cells: Int, cbHash: String, schema: StructType,
+                           folded: Map[String, Long])
+
+  /** The canonical-edge snapshot's meta: bucket count, writer pin and
+    * the applied-batch watermark (edge sums are facts, not convergent
+    * state, so a replay at or below it skips the fold). */
+  final case class CanonMeta(nBuckets: Int, writer: String, applied: Long)
+
+  /** The tail tier of a tiered kind: the tier partition column and its
+    * tail value, the writer/batch partitions beneath, and the row key
+    * columns (the other column is the id a large tail write spreads
+    * on). */
+  final case class Tail(partCol: String, value: Any, writerCol: String,
+                        batchCol: String, keyCols: Seq[String])
+
+  /** What one store kind parametrizes: its names in messages, its meta
+    * fields, which root children are data, and (tiered kinds) its tail. */
+  abstract class Kind[M](val name: String, val metaNoun: String,
+                         val dataNoun: String, val tornHint: String) {
+    def decode(m: Meta): M
+    def encode(m: M): Meta
+    def isData(child: String): Boolean
+    def tail: Option[Tail] = None
+    def folded(m: M): Map[String, Long] = Map.empty
+    /** Fail on a root holding a layout this build cannot serve. */
+    def checkLayout(root: String, children: Array[String]): Unit = ()
+
+    def at(spark: SparkSession, root: String): Store[M] =
+      new Store(this, root,
+        new Path(root).getFileSystem(spark.sessionState.newHadoopConf()))
+  }
+
+  private def partitioned(partCol: String)(child: String): Boolean =
+    child.startsWith(partCol + "=")
+
+  object CdcSnapshot extends Kind[CdcMeta]("snapshot", "layout meta",
+      "bucket dirs", "a prior overwrite crashed mid-write; rebuild the " +
+        "snapshot (from the changelog, or writeCdcSnapshot) first") {
+    private val keys = Seq("nBuckets", "schema", "writer", "retained")
+    def decode(m: Meta): CdcMeta = {
+      m.expect(keys)
+      CdcMeta(m("nBuckets").toInt, m.get("schema").map(schemaOf),
+        m.get("writer"), m.get("retained").map(_.toLong))
+    }
+    def encode(c: CdcMeta): Meta = Meta(keys.zip(Seq(Some(c.nBuckets.toString),
+      c.schema.map(_.json), c.writer, c.retained.map(_.toString)))
+      .collect { case (k, Some(v)) => k -> v })
+    def isData(child: String): Boolean = partitioned(StreamOps.CdcBucketCol)(child)
+  }
+
+  object SignatureIndex extends Kind[IdxMeta]("signature index",
+      "signature-index meta", "bucket dirs", "a compaction/rewrite " +
+        "crashed mid-overwrite; rebuild the index from the live corpus " +
+        "(rebuildDedupIndex) before probing through it") {
+    private val keys = Seq("nIdxBuckets", "schema")
+    def decode(m: Meta): IdxMeta = {
+      m.expect(keys, folding = true)
+      IdxMeta(m("nIdxBuckets").toInt, schemaOf(m("schema")), m.folded)
+    }
+    def encode(i: IdxMeta): Meta = Meta(
+      keys.zip(Seq(i.nIdxBuckets.toString, i.schema.json)), folded = i.folded)
+    def isData(child: String): Boolean =
+      partitioned(StreamOps.DedupIdxBucketCol)(child)
+    override val tail: Option[Tail] = Some(Tail(StreamOps.DedupIdxBucketCol,
+      StreamOps.DedupIdxTail, StreamOps.DedupWriterCol,
+      StreamOps.DedupBatchCol, Seq("band", "sig")))
+    override def folded(m: IdxMeta): Map[String, Long] = m.folded
+    override def checkLayout(root: String, children: Array[String]): Unit =
+      require(!children.exists(partitioned(StreamOps.DedupWriterCol)),
+        s"signature index at $root uses the pre-r18 FLAT layout " +
+          "(top-level writer partitions) — probing it bucket-pruned " +
+          "would silently admit dups; rebuild via bootstrapDedup or " +
+          "re-index the corpus")
+  }
+
+  object AnnCodes extends Kind[AnnMeta]("ANN code store",
+      "ANN code-store meta", "cell dirs", "a compaction/rewrite crashed " +
+        "mid-overwrite; re-bootstrap the index from the corpus " +
+        "(bootstrapAnn) first") {
+    private val keys = Seq("cells", "cbhash", "schema")
+    def decode(m: Meta): AnnMeta = {
+      m.expect(keys, folding = true)
+      AnnMeta(m("cells").toInt, m("cbhash"), schemaOf(m("schema")), m.folded)
+    }
+    def encode(a: AnnMeta): Meta = Meta(
+      keys.zip(Seq(a.cells.toString, a.cbHash, a.schema.json)),
+      folded = a.folded)
+    def isData(child: String): Boolean = partitioned(StreamOps.AnnCellCol)(child)
+    override val tail: Option[Tail] = Some(Tail(StreamOps.AnnCellCol,
+      StreamOps.AnnTail, StreamOps.AnnWriterCol, StreamOps.AnnBatchCol,
+      Seq("cell", "subspace", "code")))
+    override def folded(m: AnnMeta): Map[String, Long] = m.folded
+  }
+
+  /** The component-label snapshot: a flat parquet dir whose meta is the
+    * bare `graft-labels` marker. */
+  object Labels extends Kind[Unit]("labels store", "labels meta",
+      "parquet files", "a prior overwrite crashed mid-write; re-close the " +
+        "full edge set (rebuild from the raw edge log) before resuming") {
+    private val marker = "graft-labels"
+    def decode(m: Meta): Unit =
+      require(m.fields.isEmpty && m.folded.isEmpty && m.markers == Seq(marker))
+    def encode(u: Unit): Meta = Meta(markers = Seq(marker))
+    def isData(child: String): Boolean = child.endsWith(".parquet")
+  }
+
+  object CanonEdges extends Kind[CanonMeta]("canonical snapshot",
+      "canonical snapshot meta", "bucket dirs", "rebuild the snapshot " +
+        "from the raw edge log") {
+    private val keys = Seq("nBuckets", "writer", "applied")
+    def decode(m: Meta): CanonMeta = {
+      m.expect(keys)
+      CanonMeta(m("nBuckets").toInt, m("writer"), m("applied").toLong)
+    }
+    def encode(c: CanonMeta): Meta = Meta(
+      keys.zip(Seq(c.nBuckets.toString, c.writer, c.applied.toString)))
+    def isData(child: String): Boolean =
+      partitioned(StreamOps.CanonBucketCol)(child)
+  }
+
+  /** The canonical-edge fold's crash marker (at `<canonPath>.inflight`):
+    * a bare line holding the batch id whose fold is in flight. */
+  object Inflight extends Kind[Long]("canonical snapshot inflight marker",
+      "inflight marker", "", "") {
+    def decode(m: Meta): Long = {
+      require(m.fields.isEmpty && m.folded.isEmpty && m.markers.size == 1)
+      m.markers.head.toLong
+    }
+    def encode(b: Long): Meta = Meta(markers = Seq(b.toString))
+    def isData(child: String): Boolean = false
+  }
+
+  private def metaPath(dir: String) = new Path(dir + ".meta")
+
+  /** Create or replace a sidecar with one line of `content`. */
+  private def writeSidecar(fs: FileSystem, p: Path, content: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write((content + "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** A sidecar's trimmed content, None when absent. */
+  private def readSidecar(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(
+        org.apache.commons.io.IOUtils.toByteArray(in),
+        StandardCharsets.UTF_8).trim)
+      finally in.close()
+    }
+
+  // ---- store ownership CLAIM (r19, the r18 verdict's top ask): the
+  // meta's writer= line RECORDS the pin, but the first-batch claim used
+  // to be read-then-write — two streams' very FIRST batches overlapping
+  // could both pass the no-pin check and the loser's committed batch
+  // was permanently lost (its checkpoint advances; replay never
+  // redelivers a committed batch). The claim SIDECAR closes that window
+  // mechanically: `FileSystem.create(path, overwrite = false)` is an
+  // EXCLUSIVE create — atomic at HDFS's namenode; on a local FS the
+  // no-overwrite check narrows the window to one syscall gap, and the
+  // content re-read both racers perform closes the rest — so exactly
+  // one of two racing first batches wins the claim and the loser fails
+  // loudly BEFORE writing any data. Every store kind is claimed: the
+  // CDC snapshot (and the dedup corpus), the signature index, the ANN
+  // codes, the labels and the canonical-edge snapshot.
+
+  private def claimFilePath(dir: String) =
+    new org.apache.hadoop.fs.Path(dir + ".meta.claim")
+
+  /** The claim sidecar's content: None = absent, Some("") = a TORN
+    * claim (created, content never landed — a claim attempt crashed in
+    * the create-to-write gap, or is mid-flight right now). */
+  private[graft] def readClaim(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: String): Option[String] =
+    readSidecar(fs, claimFilePath(dir))
+
+  /** [[readClaim]], but an EMPTY read is re-read once after a short
+    * pause (r20, the r19 ADVICE note): an in-flight winner's content
+    * lands within milliseconds of its create, so a zero-byte sidecar
+    * observed inside that gap would mis-diagnose a LIVE claim as torn —
+    * and an operator following the torn-claim guidance
+    * (releaseStoreClaim) while the winner's first batch is mid-flight
+    * would delete the live claim and re-open the two-writer window the
+    * CAS exists to close. A sidecar still empty after the settle pause
+    * really is a crash remnant. */
+  private def readClaimSettled(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: String): Option[String] = {
+    val first = readClaim(fs, dir)
+    if (!first.contains("")) first
+    else {
+      Thread.sleep(100)
+      readClaim(fs, dir)
+    }
+  }
+
+  /** The store's effective owner for admin-op gates: the claim sidecar
+    * when present (a claimed store whose first meta write hasn't landed
+    * is still OWNED — and a torn claim still blocks), else the meta's
+    * recorded pin. */
+  private def effectiveOwner(fs: org.apache.hadoop.fs.FileSystem,
+                             dir: String,
+                             metaWriter: Option[String]): Option[String] =
+    readClaimSettled(fs, dir).orElse(metaWriter)
+
+  /** The ONE ownership gate every admin read-x-overwrite op runs
+    * ([[StreamOps.compactCdcSnapshot]], [[StreamOps.retainSnapshot]],
+    * the index/code folds): an owned store demands the owner's identity;
+    * a TORN claim gets the recovery guidance instead of an unsatisfiable
+    * "maintained by writer &lt;empty&gt;" (r19 review — writerIdFor
+    * never returns "", so no checkpoint path could ever match it). */
+  private def requireStoreOwner(fs: org.apache.hadoop.fs.FileSystem,
+                                dir: String, metaWriter: Option[String],
+                                asWriter: Option[String], store: String,
+                                op: String): Unit =
+    effectiveOwner(fs, dir, metaWriter) match {
+      case Some("") => throw new IllegalArgumentException(
+        s"$store at $dir has a claim sidecar with NO content — a claim " +
+          "attempt is in flight right now, or crashed between create " +
+          "and write. If no stream is starting, clear it with " +
+          s"releaseStoreClaim before running $op.")
+      case Some(pinned) =>
+        require(asWriter.contains(pinned),
+          s"$store at $dir is maintained by writer $pinned — $op " +
+            "without that stream's checkpoint identity (ownerCheckpoint) " +
+            "would race its batches' writes and silently lose committed " +
+            "state; pass the owning stream's checkpoint path and run " +
+            "with the stream stopped")
+      case None => // unowned: admin ops proceed
+    }
+
+  /** The body of [[StreamOps.releaseStoreClaim]]: drop the claim
+    * sidecar, failing loudly when there was nothing to release — a
+    * silent no-op on a mistyped path leaves the operator believing
+    * takeover is done while the real claim survives (r19 review — the
+    * ANN code store's claim lives at <indexPath>/codes, the most likely
+    * slip). */
+  def releaseClaim(spark: SparkSession, storePath: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    require(fs.delete(claimFilePath(storePath), false),
+      s"no ownership claim at ${claimFilePath(storePath)} — nothing " +
+        "released; check the path (the ANN code store's claim lives at " +
+        "<indexPath>/codes, not <indexPath>)")
+  }
+
+  /** Write/replace (Some) or remove (None) the claim OUTSIDE a race —
+    * the ownership-RESET paths (a full bootstrap rewrite, an explicit
+    * repin takeover), which run with the old stream stopped by their
+    * own contract. Never a claim attempt: use [[claimOwnership]]. */
+  private def resetClaim(fs: org.apache.hadoop.fs.FileSystem,
+                         dir: String, writer: Option[String]): Unit =
+    writer match {
+      case Some(w) => writeSidecar(fs, claimFilePath(dir), w)
+      case None => fs.delete(claimFilePath(dir), false)
+    }
+
+  /** Assert (writer = None: an admin/direct application, allowed only
+    * on an UNOWNED store) or atomically take (writer = Some: a stream's
+    * batch) ownership of a store, BEFORE its read-merge-overwrite
+    * touches any data. The effective owner is the claim sidecar when
+    * present, else the meta's recorded pin (`storedPin` — pre-claim
+    * stores recorded the pin only there; the first matching batch
+    * upgrades them by landing the sidecar, which is race-free because
+    * that batch already owns the store). */
+  private[graft] def claimOwnership(fs: org.apache.hadoop.fs.FileSystem,
+                                    dir: String, writer: Option[String],
+                                    storedPin: Option[String],
+                                    store: String): Unit = {
+    def fail(holder: String): Nothing = throw new IllegalArgumentException(
+      s"$store at $dir is maintained by writer $holder; this " +
+        s"${writer.fold("direct application carries no writer id")(w =>
+          s"stream is writer $w")} — a concurrent second writer's " +
+        "read-merge-overwrite would permanently lose committed batches. " +
+        "Use a distinct path, or take over explicitly (repin, a full " +
+        "bootstrap rewrite, or releaseStoreClaim with every stream " +
+        "stopped).")
+    def failTorn(): Nothing = throw new IllegalArgumentException(
+      s"$store at $dir has a claim sidecar with NO content — a claim " +
+        "attempt is in flight right now, or crashed between create and " +
+        "write; nobody can prove a torn claim is theirs, so everyone " +
+        "is refused. If no stream is starting, clear it with " +
+        "releaseStoreClaim and restart the stream.")
+    val claimed = readClaimSettled(fs, dir)
+    if (claimed.contains("")) failTorn()
+    (writer, claimed.orElse(storedPin)) match {
+      case (None, Some(holder)) => fail(holder)
+      case (None, None) => // unowned store, direct application allowed
+      case (Some(w), Some(holder)) if holder != w => fail(holder)
+      case (Some(w), Some(_)) => // ours — upgrade a pre-claim meta pin
+        if (claimed.isEmpty) resetClaim(fs, dir, Some(w))
+      case (Some(w), None) =>
+        // the CAS: exclusive create — exactly one racer wins
+        try {
+          if (fs.getScheme == "file") {
+            // Hadoop's local no-overwrite create is exists-then-open
+            // (a syscall gap between the check and the open); go
+            // through java.nio with CREATE_NEW, which IS O_EXCL — and
+            // create WITH content in the one call (r20, the r19
+            // verdict's What's-missing 3): the create-then-write pair
+            // left a torn-claim window between two calls; a single
+            // open(O_EXCL)+write shrinks it to a process death inside
+            // the call (failTorn + releaseStoreClaim stay the
+            // backstop). On HDFS the namenode create below is already
+            // atomic.
+            val p = java.nio.file.Paths.get(
+              fs.makeQualified(claimFilePath(dir)).toUri.getPath)
+            java.nio.file.Files.createDirectories(p.getParent)
+            java.nio.file.Files.write(p,
+              (w + "\n").getBytes(StandardCharsets.UTF_8),
+              java.nio.file.StandardOpenOption.CREATE_NEW,
+              java.nio.file.StandardOpenOption.WRITE)
+          } else {
+            val out = fs.create(claimFilePath(dir), false)
+            try out.write((w + "\n").getBytes(StandardCharsets.UTF_8))
+            finally out.close()
+          }
+        } catch {
+          case e: java.io.IOException =>
+            // the loser's view of the winner settles too: a zero-byte
+            // read here is almost always the winner mid-write, not a
+            // torn remnant (readClaimSettled re-reads once)
+            readClaimSettled(fs, dir) match {
+              case Some(h) if h == w => // a retried create of our own claim
+              case Some(h) if h.nonEmpty => fail(h)
+              case Some(_) => failTorn()
+              case None =>
+                // no sidecar at all: the create failed for a NON-race
+                // reason (permissions, disk, transient FS error) —
+                // surface the real cause instead of diagnosing a
+                // phantom torn claim (r19 review)
+                throw new java.io.IOException(
+                  s"claim create failed at ${claimFilePath(dir)} with no " +
+                    "sidecar present — not a lost race; see the cause", e)
+            }
+        }
+    }
+  }
+}

@@ -684,8 +684,8 @@ class CdcStreamSpec extends SparkSpec {
       .getFileSystem(spark.sessionState.newHadoopConf())
     // stream A claims the store, then crashes before its first write
     // lands anything: the claim sidecar alone records ownership
-    StreamOps.claimOwnership(fs, snap, Some("wA"), None, "snapshot")
-    StreamOps.readClaim(fs, snap) shouldBe Some("wA")
+    Store.claimOwnership(fs, snap, Some("wA"), None, "snapshot")
+    Store.readClaim(fs, snap) shouldBe Some("wA")
     // admin ops must not go around the claim (compaction-shaped holes)
     val e = intercept[IllegalArgumentException] {
       StreamOps.applyCdcBatch(batch1.toDF(), snap, Seq("k"), "version", "op", 8) }
@@ -697,7 +697,7 @@ class CdcStreamSpec extends SparkSpec {
     // (full bootstrap rewrite); the claim sidecar resets with the meta
     StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("k")), snap,
       Seq("k"), nBuckets = 8)
-    StreamOps.readClaim(fs, snap) shouldBe None
+    Store.readClaim(fs, snap) shouldBe None
     StreamOps.applyCdcBatch(batch1.toDF(), snap, Seq("k"), "version", "op", 8,
       writer = Some("wB"))
   }
@@ -721,7 +721,7 @@ class CdcStreamSpec extends SparkSpec {
     StreamOps.releaseStoreClaim(spark, snap)
     StreamOps.applyCdcBatch(batch1.toDF(), snap, Seq("k"), "version",
       "op", 8, writer = Some("wA"))
-    StreamOps.readClaim(fs, snap) shouldBe Some("wA")
+    Store.readClaim(fs, snap) shouldBe Some("wA")
   }
 
   test("compaction re-records the EFFECTIVE owner — claim-first, never a stale meta pin (r19 review)") {
@@ -732,7 +732,7 @@ class CdcStreamSpec extends SparkSpec {
       .getFileSystem(spark.sessionState.newHadoopConf())
     // the crash window the effectiveOwner rule covers: the claim landed,
     // the first closing meta write did not (meta still records no pin)
-    StreamOps.claimOwnership(fs, snap, Some(wA), None, "snapshot")
+    Store.claimOwnership(fs, snap, Some(wA), None, "snapshot")
     // an ownerless compaction bounces off the CLAIM...
     val e = intercept[IllegalArgumentException] {
       StreamOps.compactCdcSnapshot(spark, snap, horizon = 0L, Seq("k")) }
@@ -742,7 +742,7 @@ class CdcStreamSpec extends SparkSpec {
     // re-opening the store to a second writer mid-deployment
     StreamOps.compactCdcSnapshot(spark, snap, horizon = 0L, Seq("k"),
       ownerCheckpoint = Some("/ckpt/ea"))
-    StreamOps.readClaim(fs, snap) shouldBe Some(wA)
+    Store.readClaim(fs, snap) shouldBe Some(wA)
     an[IllegalArgumentException] should be thrownBy
       StreamOps.applyCdcBatch(batch1.toDF(), snap, Seq("k"), "version",
         "op", 8, writer = Some("intruder"))

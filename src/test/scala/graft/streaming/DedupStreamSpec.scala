@@ -326,7 +326,7 @@ class DedupStreamSpec extends SparkSpec {
     // the fold preserved the claim — maintenance, not takeover
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    StreamOps.readClaim(fs, idx) shouldBe Some(w1)
+    Store.readClaim(fs, idx) shouldBe Some(w1)
   }
 
   test("tail bound (r19): the index auto-folds past maxTailBatches; corpus and probe results unchanged") {
