@@ -1,22 +1,195 @@
 package graft
 
 import graft.model.Tables
-import graft.streaming.Store
+import graft.sources.Sinks
+import graft.streaming.{Store, StreamOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: scale-behavior probe. Replicates the sf tables `factor`× with
-  * shifted keys into /tmp, then times representative shapes (scan+agg,
-  * shuffle join, window) at 1× and factor× — the "would this plan survive
-  * a 10× scale-up" check the 100 TB design demands, run locally.
+/** Dev tool: scale-behavior probe. Replicates the whole fixture 1× and
+  * `factor`× into /tmp, then runs every declared query
+  * (`SparkEntry.queries`, into the full-plan [[Sinks.noop]]) plus a few
+  * kept shapes at both scales — the "would this plan survive a 10×
+  * scale-up" check the 100 TB design demands, run locally on the
+  * pipelines the registry declares, never on copies of them.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [factor]
+  * Usage: runMain graft.ScaleProbe [sfDir] [factor] [name...]
   * Env: SPARK_GRAFT_CPUS (default 4, see [[Session]]).
   */
 object ScaleProbe {
+  /** The dimension tables every replica shares; copied as they are. */
+  val sharedTables: Set[String] = Set("nation", "region")
+
+  /** The columns a replica shifts: every `*key` / `*_id` column except
+    * the references into [[sharedTables]]. */
+  def keyCols(df: DataFrame): Seq[String] = df.columns.toSeq.filter(c =>
+    (c.endsWith("key") || c.endsWith("_id")) &&
+      !c.endsWith("nationkey") && !c.endsWith("regionkey"))
+
+  private[graft] def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") Tables.events(spark, dir) else Tables.df(spark, dir, name)
+
+  // replica r > 0 renames every token with three letters chosen by
+  // xxhash64(token, r): within a replica the token structure (and so
+  // every near-dup pair) is the base's, across replicas no token is
+  // shared — plain copies would make each replica a near-dup of its
+  // source, and near-dup pair volume would grow quadratically in N
+  private val replicaText = expr("array_join(transform(split(text, ' '), t -> " +
+    "if(__rep = 0 or t = '', t, concat(t, array_join(transform(sequence(0, 2), " +
+    "i -> chr(97 + pmod(xxhash64(t, __rep, i), 26))), '')))), ' ')")
+  // the same for vectors: replica r > 0 flips the sign of each dimension
+  // chosen by xxhash64(dim, r) — one fixed orthogonal jitter per replica,
+  // so norms and within-replica cosines are the base's while a vector
+  // and its source sit ~orthogonal
+  private val replicaVector = expr("transform(embedding, (x, i) -> " +
+    "if(__rep = 0 or pmod(xxhash64(i, __rep), 2) = 0, x, -x))")
+
+  /** Writes every fixture table of `sfDir` `rep`× into `dest`, one file
+    * set per replica, so a file holds the same rows at every scale and
+    * only the file count grows. Replica r adds r × K to the [[keyCols]],
+    * with one K (one more than the largest key in the fixture) so every
+    * foreign-key join still matches within its replica. */
+  def replicate(spark: SparkSession, sfDir: String, rep: Int, dest: String): Unit = {
+    val tables = Tables.names.map(n => n -> table(spark, sfDir, n))
+    val k = 1L + tables.filterNot { case (n, _) => sharedTables(n) }.map { case (_, df) =>
+      df.agg(max(greatest(keyCols(df).map(c => col(c).cast("long")) :+ lit(0L): _*)))
+    }.reduce(_ union _).collect().map(_.getLong(0)).max
+    tables.foreach { case (name, df) =>
+      val keys = keyCols(df).toSet
+      def replica(r: Int): DataFrame = {
+        val shifted = df.select(df.columns.toSeq.map(c =>
+          if (keys(c)) (col(c) + r * k).cast(df.schema(c).dataType).as(c)
+          else col(c)) :+ lit(r).as("__rep"): _*)
+        (name match {
+          case "documents" => shifted.withColumn("text", replicaText)
+            .withColumn("n_chars", length(col("text")).cast("long"))
+          case "embeddings" => shifted.withColumn("embedding", replicaVector)
+          case _ => shifted
+        }).drop("__rep")
+      }
+      val rows = if (sharedTables(name)) df else (0 until rep).map(replica).reduce(_ union _)
+      rows.write.mode("overwrite").parquet(s"$dest/$name.parquet")
+    }
+  }
+
+  /** Every probe row at one scale: each declared query over the fixture
+    * in `dir`, sorted by name, then the kept shapes at corpus size `n`
+    * (their on-disk fixtures live under `out`). */
+  def rows(spark: SparkSession, dir: String, n: Long,
+           out: String): Seq[(String, () => Any)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, fn) =>
+      q -> (() => Sinks.noop(fn(spark, dir)))
+    } ++ shapes(spark, n, out)
+
+  /** The kept shapes: each drives an input property the replicated
+    * fixture cannot produce. */
+  private def shapes(spark: SparkSession, n: Long,
+                     out: String): Seq[(String, () => Any)] = Seq(
+    // hub skew: ONE hub node joined to n/10 spokes, every edge shares its key
+    ("dup_clusters_hub", () => graft.llm.Components.dupClusters(
+      spark.range(n).toDF("doc_id"),
+      spark.range(n / 10).select(lit(0L).as("a"), (col("id") + 1).as("b"))).count()),
+    // chain diameter (chain-of-6 components): the closure's round count
+    // (obs) must not move with n
+    ("cc_rounds", () => {
+      val (comp, rounds) = graft.llm.Components.pairComponentsWithRounds(
+        spark.range(n - 1).where(pmod(col("id"), lit(6)) < 5)
+          .select(col("id").as("a"), (col("id") + 1).as("b")))
+      observe(rounds.toLong)
+      comp.count()
+    }),
+    // an unfolded dedup index tail of n/1000 batches (50 at 10×)
+    ("dedup_tail_probe", () => {
+      val (idx, corp, b) = dedupTailFixture(spark, out, n, folded = false)
+      probeTailRequest(spark, idx, corp, b)
+    }),
+    // the same document set with the tail folded away
+    ("dedup_tail_folded", () => {
+      val (idx, corp, b) = dedupTailFixture(spark, out, n, folded = true)
+      probeTailRequest(spark, idx, corp, b)
+    }),
+    // near-unique doubles: Aggs.discreteRankPass's histogram cannot compress
+    ("quantile_rank_pass", () => {
+      val rows = n * 800
+      val df = spark.range(rows).select(
+        (pmod(xxhash64(col("id")), lit(10000000)).cast("double") / 10.0).as("x"))
+      val rks = Seq(2500L, 5000L, 9000L).map(q => (q * rows + 9999L) / 10000L)
+      graft.agg.Aggs.discreteRankPass(df, "x",
+        Seq(250000.0, 500000.0, 900000.0), rks).getLong(0)
+    }))
+
+  // memo gates read a fixture's meta through its Store: an absent meta
+  // and one that does not decode (a run killed between the meta's
+  // create and write leaves zero bytes) both take the re-bootstrap
+  // branch, never a throw
+  private def storedMeta[M](store: Store[M]): Option[M] =
+    scala.util.Try(store.meta).toOption.flatten
+
+  private def tailDocs(spark: SparkSession, start: Long, cnt: Long): DataFrame =
+    spark.range(start, start + cnt).select(col("id").as("doc_id"),
+      array_join(transform(sequence(lit(1), lit(40)),
+        i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))), " ").as("text"))
+
+  // the dedup-tail fixture pair: same document set both ways — unfolded =
+  // bucketed 2048-doc base + n/1000 per-batch tail partitions of 4096 docs
+  // (built through the real batch path, auto-fold disabled); folded = one
+  // bootstrap of ALL the docs (bit-identical to compacting the unfolded
+  // index: bootstrap and compaction share Store.writeTier's bucketed
+  // tier). nIdxBuckets follows the KV rule on the TOTAL doc count in
+  // both, so the folded probe's rows-per-bucket stay constant across n.
+  // 4096 docs per batch: at 512 the 1× base sat under the fixed-cost
+  // floor and the pair read flat-vs-flat while saying nothing.
+  private def dedupTailFixture(spark: SparkSession, out: String, n: Long,
+                               folded: Boolean): (String, String, Int) = {
+    val batches = (n / 1000L).toInt
+    val batchDocs = 4096L
+    val nIdxBuckets = math.max(64L, (2048L + batches * batchDocs) / 64L).toInt
+    val dir = s"$out/dedup_tail_${if (folded) "f" else "u"}_$n"
+    val idx = s"$dir/idx"; val corp = s"$dir/corp"
+    val corpReady = storedMeta(Store.CdcSnapshot.at(spark, corp)).isDefined &&
+      storedMeta(Store.SignatureIndex.at(spark, idx)).isDefined
+    val tailNow = if (corpReady) StreamOps.dedupIndexTailBatches(spark, idx) else -1
+    if (!(corpReady && tailNow == (if (folded) 0 else batches))) {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+      val base = tailDocs(spark, 0L, 2048L)
+      StreamOps.bootstrapDedup(
+        if (folded) base.unionAll(tailDocs(spark, 100000L, batches * batchDocs)) else base,
+        idx, corp, k = 2, bands = 8, rowsPerBand = 2, nBuckets = 16,
+        nIdxBuckets = nIdxBuckets)
+      if (!folded) for (j <- 0 until batches)
+        StreamOps.applyDedupBatch(
+          tailDocs(spark, 100000L + j * batchDocs, batchDocs), j, idx, corp,
+          k = 2, bands = 8, rowsPerBand = 2, threshold = 0.5,
+          nBuckets = 16, idCol = "doc_id", textCol = "text",
+          poly = false, nIdxBuckets = nIdxBuckets,
+          maxTailBatches = 1000000)
+    }
+    (idx, corp, nIdxBuckets)
+  }
+
+  // the fixed serving request both tail shapes measure: 4 base dups +
+  // 4 tail dups + 4 fresh, re-idded so the dup text carries a new id;
+  // the sink consumes dup_of (a bare count() would let Catalyst prune
+  // the evidence join)
+  private def probeTailRequest(spark: SparkSession, idx: String, corp: String,
+                               nIdxBuckets: Int): Long = {
+    val req = tailDocs(spark, 0L, 4L)
+      .select((col("doc_id") + 999000L).as("doc_id"), col("text"))
+      .unionAll(tailDocs(spark, 100000L, 4L)
+        .select((col("doc_id") + 999100L).as("doc_id"), col("text")))
+      .unionAll(tailDocs(spark, 5000000L, 4L))
+    StreamOps.probeDedup(req, idx, corp, k = 2, bands = 8, rowsPerBand = 2,
+        threshold = 0.5, idCol = "doc_id", textCol = "text", poly = false,
+        nIdxBuckets = nIdxBuckets)
+      .agg(count(col("dup_of"))).head().getLong(0)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
+    // optional row-name filter (args 3+): probe just the named rows
+    val only = args.drop(2).toSet
     val out = "/tmp/graft_scale"
     val spark = Session.local()
 
@@ -25,1562 +198,45 @@ object ScaleProbe {
     // differences (partition count, row-group sizes) with scale behavior
     // — a scan-bound ratio was uninterpretable. `rep = 1` reproduces the
     // fixture content in this session's layout.
-    def replicate(name: String, keyCols: Seq[String], rep: Int, dest: String): Unit = {
-      val base = Tables.df(spark, sfDir, name)
-      val maxes = keyCols.map(k => k -> base.agg(max(col(k))).head().getLong(0)).toMap
-      val big = base.crossJoin(spark.range(rep).select(col("id").as("__rep")))
-      keyCols.foldLeft(big) { (df, k) =>
-          df.withColumn(k, col(k) + col("__rep") * (lit(maxes(k)) + 1))
-        }
-        .drop("__rep")
-        .write.mode("overwrite").parquet(s"$dest/$name.parquet")
-    }
-    val base1x = s"$out/base1x"
-    Seq("lineitem" -> Seq("l_orderkey"), "orders" -> Seq("o_orderkey")).foreach {
-      case (t, keys) =>
-        replicate(t, keys, 1, base1x)
-        replicate(t, keys, factor, out)
-    }
+    val (dir1, dirN) = (s"$out/x1", s"$out/x$factor")
+    replicate(spark, sfDir, 1, dir1)
+    replicate(spark, sfDir, factor, dirN)
+    val llmBase = 5000L
+    val all = rows(spark, dir1, llmBase, out).zip(rows(spark, dirN, llmBase * factor, out))
+      .collect { case ((n, f1), (_, fN)) if only.isEmpty || only(n) => (n, f1, fN) }
 
     def time(f: => Any): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    def shapes(dir: String): Seq[(String, () => Any)] = {
-      def li: DataFrame = spark.read.parquet(s"$dir/lineitem.parquet")
-      def od: DataFrame = spark.read.parquet(s"$dir/orders.parquet")
-      Seq(
-        ("scan_agg", () => li.groupBy("l_returnflag", "l_linestatus")
-          .agg(sum("l_quantity"), avg("l_extendedprice")).head()),
-        ("shuffle_join_agg", () => li.join(od, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_orderpriority").agg(count(lit(1))).count()),
-        ("window_topk", () => od.withColumn("rnk",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy("o_orderpriority")
-              .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
-          .where(col("rnk") <= 10).count()))
-    }
-    // LLM-tier shapes run on SYNTHETIC corpora with a fixed statistical
-    // profile (seeded xxhash64 content), generated at 1× and factor×.
-    // Replicating the real tables would make every replica a near-dup of
-    // its source, and near-dup pair volume is quadratic in the replication
-    // count BY CONSTRUCTION — that measures the data trick, not the plan.
-    // memo gates read a fixture's meta through its Store: an absent meta
-    // and one that does not decode (a run killed between the meta's
-    // create and write leaves zero bytes) both take the re-bootstrap
-    // branch, never a throw
-    def storedMeta[M](store: Store[M]): Option[M] =
-      scala.util.Try(store.meta).toOption.flatten
-    def synthDocs(n: Long): DataFrame =
-      spark.range(n).select(col("id").as("doc_id"),
-        array_join(transform(sequence(lit(1), lit(40)),
-          i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))), " ").as("text"))
-    def synthEmb(n: Long, dims: Int = 32): DataFrame =
-      spark.range(n).select(col("id").as("vec_id"),
-        transform(sequence(lit(1), lit(dims)),
-          i => (pmod(xxhash64(col("id"), i), lit(2000)).cast("double") / 1000.0 - 1.0)
-            .cast("float")).as("embedding"))
-
-    // the bucketed-CDC snapshot fixture shared by cdc_sink_prune and
-    // cdc_point_lookup: n*256 keys, nBuckets scaled so rows/bucket stay
-    // constant; memoized behind the meta's bucket count
-    def cdcSnapFixture(n: Long): (String, Int, Long) = {
-      val keys = n * 256
-      val nBuckets = math.max(4L, keys / 8192L).toInt
-      val dir = s"$out/cdc_sink_$n/snap"
-      val snap = Store.CdcSnapshot.at(spark, dir)
-      if (!storedMeta(snap).exists(_.nBuckets == nBuckets)) {
-        snap.remove()
-        graft.streaming.StreamOps.writeCdcSnapshot(
-          graft.relational.Cdc.bootstrap(
-            spark.range(keys).select(col("id").as("k"),
-              concat(lit("n"), col("id")).as("name"),
-              pmod(col("id"), lit(1000)).cast("double").as("amt")),
-            Seq("k")),
-          dir, Seq("k"), nBuckets)
-      }
-      (dir, nBuckets, keys)
-    }
-
-    // the dedup-tail fixture pair (see the dedup_tail_probe comment):
-    // same document set both ways — unfolded = bucketed 2048-doc base +
-    // n/1000 per-batch tail partitions of 4096 docs (built through the
-    // real batch path, auto-fold disabled); folded = one bootstrap of ALL the docs
-    // (bit-identical to compacting the unfolded index: bootstrap and
-    // compaction share Store.writeTier's bucketed tier).
-    // nIdxBuckets follows the KV rule on the TOTAL doc count in both,
-    // so the folded probe's rows-per-bucket stay constant across n.
-    def tailDocs(start: Long, cnt: Long): DataFrame =
-      spark.range(start, start + cnt).select(col("id").as("doc_id"),
-        array_join(transform(sequence(lit(1), lit(40)),
-          i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))),
-          " ").as("text"))
-    def dedupTailFixture(n: Long, folded: Boolean): (String, String, Int) = {
-      // n is the llmBase corpus-scale knob (5000 / 50000); the tail
-      // axis is BATCH COUNT, so map it to 5 batches at 1× and 50 at
-      // 10×. 4096 docs per batch: at 512 the 1× probe base sat under
-      // the fixed-cost floor (0.67 s) and the pair read flat-vs-flat
-      // while saying nothing (the r8 overhead-domination rule)
-      val batches = (n / 1000L).toInt
-      val batchDocs = 4096L
-      val total = 2048L + batches * batchDocs
-      val nIdxBuckets = math.max(64L, total / 64L).toInt
-      val dir = s"$out/dedup_tail_${if (folded) "f" else "u"}_$n"
-      val idx = s"$dir/idx"; val corp = s"$dir/corp"
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val corpReady =
-        storedMeta(Store.CdcSnapshot.at(spark, corp)).isDefined &&
-          storedMeta(Store.SignatureIndex.at(spark, idx)).isDefined
-      val tailNow =
-        if (corpReady) graft.streaming.StreamOps
-          .dedupIndexTailBatches(spark, idx)
-        else -1
-      val ready = corpReady && (if (folded) tailNow == 0 else tailNow == batches)
-      if (!ready) {
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        if (folded)
-          graft.streaming.StreamOps.bootstrapDedup(
-            tailDocs(0L, 2048L)
-              .unionAll(tailDocs(100000L, batches * batchDocs)),
-            idx, corp, k = 2, bands = 8, rowsPerBand = 2, nBuckets = 16,
-            nIdxBuckets = nIdxBuckets)
-        else {
-          graft.streaming.StreamOps.bootstrapDedup(tailDocs(0L, 2048L),
-            idx, corp, k = 2, bands = 8, rowsPerBand = 2, nBuckets = 16,
-            nIdxBuckets = nIdxBuckets)
-          for (j <- 0 until batches)
-            graft.streaming.StreamOps.applyDedupBatch(
-              tailDocs(100000L + j * batchDocs, batchDocs), j, idx, corp,
-              k = 2, bands = 8, rowsPerBand = 2, threshold = 0.5,
-              nBuckets = 16, idCol = "doc_id", textCol = "text",
-              poly = false, nIdxBuckets = nIdxBuckets,
-              maxTailBatches = 1000000)
-        }
-      }
-      (idx, corp, nIdxBuckets)
-    }
-    // the fixed serving request both tail shapes measure: 4 base dups +
-    // 4 tail dups + 4 fresh, re-idded so the dup text carries a new id;
-    // the sink consumes dup_of (count(col) needs the values — a bare
-    // count() would let Catalyst prune the evidence join, the r8 rule)
-    def probeTailRequest(idx: String, corp: String, nIdxBuckets: Int): Long = {
-      val req = tailDocs(0L, 4L)
-        .select((col("doc_id") + 999000L).as("doc_id"), col("text"))
-        .unionAll(tailDocs(100000L, 4L)
-          .select((col("doc_id") + 999100L).as("doc_id"), col("text")))
-        .unionAll(tailDocs(5000000L, 4L))
-      graft.streaming.StreamOps.probeDedup(req, idx, corp, k = 2,
-          bands = 8, rowsPerBand = 2, threshold = 0.5, idCol = "doc_id",
-          textCol = "text", poly = false, nIdxBuckets = nIdxBuckets)
-        .agg(count(col("dup_of"))).head().getLong(0)
-    }
-
-    // the maintained-ANN fixture: synthEmb corpus bootstrapped into the
-    // stored IVF-PQ index (coarse codebook TRAINED so cells are
-    // balanced — planted centroids far from the data would collapse
-    // assignment into one cell and the probe would degenerate to a
-    // full-index read that measures the planting, not the layout),
-    // plus two tail batches so the probe's tail leg is live. Memoized
-    // behind the meta's cell count.
-    def annServeFixture(n: Long): String = {
-      val cCount = math.max(8L, n / 512L).toInt
-      val dir = s"$out/ann_serve_$n/ann"
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the decoded meta carries the codebook fingerprint, so a fixture
-      // written before that format does not decode and re-bootstraps
-      val metaOk = storedMeta(Store.AnnCodes.at(spark, s"$dir/codes"))
-        .exists(_.cells == cCount) &&
-        // AND the two tail batches landed — a run killed between the
-        // bootstrap and the batches would otherwise memoize a fixture
-        // with a dead tail leg and measure the wrong shape forever
-        // (the dedupTailFixture ready-predicate rule)
-        graft.streaming.StreamOps.annIndexTailBatches(spark, dir) == 2
-      if (!metaOk) {
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        val corpus = synthEmb(n)
-        val coarse = graft.llm.Similarity
-          .trainCodebook(corpus, k = cCount, iters = 3,
-            sampleSize = Some(math.min(n, 16384L).toInt))
-          .orderBy("cid").collect()
-          .map(_.getSeq[Number](1).map(_.doubleValue()).toSeq).toSeq
-        val pq = (0 until 8).map(s => (0 until 16).map(kk =>
-          (0 until 4).map(j => ((s * 5 + kk * 3 + j) % 16 - 8) / 4.0)))
-        graft.streaming.StreamOps.bootstrapAnn(corpus, dir, coarse, pq)
-        for (j <- 0 until 2)
-          graft.streaming.StreamOps.applyAnnBatch(
-            synthEmb(256).select((col("vec_id") + n + j * 256).as("vec_id"),
-              col("embedding")),
-            j, dir, maxTailBatches = 1000000)
-      }
-      dir
-    }
-
-    def llmShapes(n: Long): Seq[(String, () => Any)] = Seq(
-      ("minhash_neardup", () => graft.llm.Dedup.minHashNearDups(
-        synthDocs(n), k = 2, bands = 8, rowsPerBand = 2, threshold = 0.5).count()),
-      // edit-distance verify rides the SAME poly banding: the
-      // O(|a|·|b|) Levenshtein DP runs once per CANDIDATE pair (the
-      // planted n/10 clones + rare random band collisions), so cost
-      // tracks the banding output, never corpus² — read against
-      // minhash_neardup, the ratio pair isolates the verify-family
-      // swap (set-Jaccard → per-pair DP) at equal candidate topology
-      ("edit_neardup", () => {
-        val base = synthDocs(n)
-        val clones = base.where(pmod(col("doc_id"), lit(10)) === 0)
-          .select((col("doc_id") + n).as("doc_id"),
-            concat(col("text"), lit(" zq")).as("text"))
-        graft.llm.Dedup.polyEditNearDups(base.unionAll(clones),
-          maxRelBp = 600L).count()
-      }),
-      // default bitsPerTable = auto: clamp(ceil(log2(n)), 4, 24) — this
-      // probes the auto-sizing rule itself (13 bits at 5k, 16 at 50k), the
-      // regime where a FIXED width goes superlinear at scale
-      ("embed_neardup", () => graft.llm.Dedup.embeddingNearDups(
-        synthEmb(n), threshold = 0.7).count()),
-      ("ivf_topk", () => {
-        val c = synthEmb(n)
-        graft.llm.Similarity.ivfTopK(
-          c.where(col("vec_id") < 20), c,
-          centroids = c.where(col("vec_id") % (n / 100) === 0),
-          k = 5, nprobe = 3).count()
-      }),
-      ("positional_index", () => graft.core.Positional.zipWithIndex(
-        spark.range(n * 20).toDF("n"), Seq(col("n"))).count()),
-      ("asof_join", () => {
-        // synthetic tick data: n*20 trades / n*4 quotes over 1000 keys
-        def ticks(m: Long, tag: String) = spark.range(m).select(
-          pmod(col("id"), lit(1000)).as("k"),
-          pmod(xxhash64(col("id"), lit(tag)), lit(100000)).as("t"),
-          col("id").as(s"${tag}_id"))
-        graft.relational.AsOf.joinAsOf(
-          ticks(n * 20, "trade"),
-          ticks(n * 4, "quote").groupBy("k", "t").agg(max("quote_id").as("qid")),
-          timeCol = "t", keys = Seq("k"), rightCols = Seq("qid")).count()
-      }),
-      // the full curation composite: docs get synthetic lang/source so the
-      // gate and the stratified cap both engage
-      ("curate_full", () => {
-        val corpus = synthDocs(n).select(col("doc_id"), col("text"),
-          when(pmod(xxhash64(col("doc_id"), lit("l")), lit(2)) === 0, "en")
-            .otherwise("de").as("lang"),
-          when(pmod(xxhash64(col("doc_id"), lit("s")), lit(2)) === 0, "web")
-            .otherwise("book").as("source"))
-        // maxPerGroup above any group size here (the bounded heap
-        // preallocates its buffer, so "no cap" must stay finite)
-        graft.llm.Curation.curateFull(corpus, lang = "en", minQuality = 0.0,
-          nearDupThreshold = 0.5, maxPerGroup = 1 << 17).count()
-      }),
-      // paragraph-level dedup: synthetic 3-paragraph docs where one
-      // paragraph is corpus-wide boilerplate — the winner election
-      // shuffles 32-byte sha2 keys, reassembly groups by doc id; both
-      // should track the scan
-      ("paragraph_dedup", () => {
-        val pdocs = synthDocs(n).select(col("doc_id"),
-          concat_ws("\n\n",
-            substring(col("text"), 1, 60),
-            lit("subscribe to our newsletter"),
-            substring(col("text"), 61, 120)).as("text"))
-        graft.llm.Dedup.paragraphDedup(pdocs)
-          .agg(sum("n_kept"), sum(length(col("text")))).head()
-      }),
-      // benchmark decontamination: the eval side is FIXED-size by contract
-      // (it broadcasts), so only the document side scales — the ratio
-      // should track the narrow document scan, not a join blow-up
-      ("contamination", () => graft.llm.Dedup.contamination(
-        synthDocs(n), synthDocs(200), k = 3)
-        .agg(sum("matched"), sum("contamination")).head()),
-      // iterative IVF codebook training + assignment: per-iter shuffle
-      // carries k×dims partial sums per partition, assignment is a narrow
-      // kernel pass — the ratio should track the corpus scan
-      ("ivf_train", () => {
-        val emb = synthEmb(n)
-        val cb = graft.llm.Similarity.trainCodebook(emb, k = 16, iters = 3)
-        graft.llm.Similarity.assign(emb,
-            cb.select(col("cid").as("vec_id"), col("embedding")))
-          .groupBy("cid").agg(count(lit(1))).count()
-      }),
-      // transitive duplicate clustering: chain-of-6 components (diameter 5,
-      // worse than real near-clique dup clusters) — per-round cost is one
-      // edge-keyed shuffle + one label self-join, rounds are O(log d), so
-      // the ratio should track the edge scan, not the iteration count
-      ("dup_clusters", () => {
-        val nodes = spark.range(n).toDF("doc_id")
-        val edges = spark.range(n - 1).where(pmod(col("id"), lit(6)) < 5)
-          .select(col("id").as("a"), (col("id") + 1).as("b"))
-        graft.llm.Components.dupClusters(nodes, edges).count()
-      }),
-      // hub-skew clustering: ONE hub (node 0) connected to n/10 spokes —
-      // the mega-cluster case (a boilerplate doc near-dup of everything).
-      // Every edge shares the hub's endpoint, the documented worst skew
-      // for the per-round neighbour-min shuffle; min is algebraic, so
-      // map-side partial aggregation absorbs the hub's key and the ratio
-      // should track the edge scan exactly like the chain shape does
-      ("dup_clusters_hub", () => {
-        val nodes = spark.range(n).toDF("doc_id")
-        val edges = spark.range(n / 10)
-          .select(lit(0L).as("a"), (col("id") + 1).as("b"))
-        graft.llm.Components.dupClusters(nodes, edges).count()
-      }),
-      // convergence, not seconds: the closure's ROUND COUNT on the same
-      // chain-of-6 lattice must be IDENTICAL at 1× and factor× (rounds
-      // are O(log diameter) and the diameter is scale-free) — reported
-      // through the obs columns, the r12 verdict's "round count, not
-      // just time" receipt for the iterative operator family
-      ("cc_rounds", () => {
-        val edges = spark.range(n - 1).where(pmod(col("id"), lit(6)) < 5)
-          .select(col("id").as("a"), (col("id") + 1).as("b"))
-        val (comp, rounds) =
-          graft.llm.Components.pairComponentsWithRounds(edges)
-        observe(rounds.toLong)
-        comp.count()
-      }),
-      // token-budget shard packing: one window shuffle keyed by the 8
-      // synthetic strata — the prefix sum serializes per stratum, which is
-      // exactly the documented sizing rule being probed
-      ("pack_shards", () => {
-        val docs = synthDocs(n).select(col("doc_id"), col("text"),
-          concat(lit("s"), pmod(xxhash64(col("doc_id")), lit(8))).as("source"))
-        graft.llm.Packing.packShards(docs, tokensPerShard = 2048)
-          .agg(sum("shard_id"), sum("offset_in_shard")).head()
-      }),
-      // TF-IDF top-k: explode → (doc,term) count → term-keyed df join →
-      // per-doc cut; vocab is fixed (500 synthetic terms), so the join's
-      // build side stays constant while the probe side scales
-      ("tfidf", () => graft.llm.TextStats.tfIdf(synthDocs(n), topK = 3,
-        nDocs = n).count()),
-      // markup stripping: pure regexp_replace chain — the agg + head()
-      // sink keeps the projection alive. head(), NOT count(): count() on
-      // top of an agg prunes the (unreferenced) aggregate expressions and
-      // then ELIMINATES every row-preserving operator under them —
-      // windows, projections, left joins with unique keys — timing an
-      // empty pipeline (round-8 catch: 0.22 s flat vs 6.55 s real on
-      // substring_dedup at 10×; same bug invalidated the flat
-      // paragraph_dedup / pack_shards / contamination rows)
-      ("strip_markup", () => {
-        val html = synthDocs(n).select(col("doc_id"),
-          concat(lit("<html><body class=\"m\"><!-- nav --><p>"), col("text"),
-            lit(" &amp; tail</p><script>var i=0;</script></body></html>")).as("text"))
-        graft.llm.Cleanup.stripMarkup(html)
-          .agg(sum(length(col("clean_text"))), sum("chars_removed")).head()
-      }),
-      // context-length chunking: sequence→explode→slice row amplification
-      // (~nt/stride ×); the length sink forces the chunk_text slices
-      ("chunk", () => graft.llm.Chunking.chunk(synthDocs(n), 16, 4)
-        .agg(sum(length(col("chunk_text"))), sum("n_tokens")).head()),
-      // target-mixture reweighting: stratum counts (map-side combined) +
-      // broadcast rates join + narrow residue filter — should track the scan
-      ("reweight", () => {
-        val docs = synthDocs(n).select(col("doc_id"),
-          concat(lit("s"), pmod(xxhash64(col("doc_id"), lit("rw")), lit(4))).as("source"))
-        graft.llm.Sampling.reweight(docs,
-          Map("s0" -> 0.5, "s1" -> 0.3, "s2" -> 0.2)).count()
-      }),
-      // bloom-prefiltered decontamination: fixed eval side (bloom build),
-      // scaling doc side probed in codegen — only survivors shuffle; the
-      // ratio should track contamination's (same fixture sizes)
-      ("bloom_contamination", () => graft.llm.Dedup.bloomContamination(
-        synthDocs(n), synthDocs(200), k = 3)
-        .agg(sum("matched"), sum("contamination")).head()),
-      // SemDeDup at FIXED codebook size with the bounded pair cap engaged:
-      // train+assign are O(n·k·d) (linear at fixed k); cluster population
-      // grows with n, so the within-cluster pair stage is quadratic UNTIL
-      // maxCluster clamps it — at 10× the cap is active (pop ~1560 > 256)
-      // and the ratio must show cap-bounded linear cost, not pop². (An
-      // earlier probe grew k with √n — train AND pair cost then compound
-      // to a measured 14× at 10×; that regime is the documented misuse.)
-      ("semdedup", () => graft.llm.Dedup.semDedup(synthEmb(n),
-        threshold = 0.7, numClusters = 32, maxCluster = 256).count()),
-      // the corpus-scale training mode: k-means iterations run on a
-      // FIXED 2048-vector lowest-hash sample (train cost flat in n);
-      // assignment + the capped pair stage still see every vector, so
-      // the ratio isolates what sampling buys vs the shape above
-      ("semdedup_sampled", () => graft.llm.Dedup.semDedup(synthEmb(n),
-        threshold = 0.7, numClusters = 32, maxCluster = 256,
-        trainSample = Some(2048)).count()),
-      // true sequence packing: per-stratum prefix-sum window + block
-      // explode + one groupBy that REUSES the window's partitioning (the
-      // plan has no extra exchange) — should track the window shape
-      ("pack_sequences", () => {
-        val docs = synthDocs(n).select(col("doc_id"), col("text"),
-          concat(lit("s"), pmod(xxhash64(col("doc_id")), lit(8))).as("source"))
-        graft.llm.Packing.packSequences(docs, blockTokens = 256)
-          .agg(sum("n_tokens"), sum(length(col("block_text")))).head()
-      }),
-      // exact-substring dedup: the window-hash election shuffles one
-      // fixed-width (id, start, sha2) row per token position — the
-      // probe's stream is ~40n rows regardless of text width. Corpus-wide
-      // boilerplate rides in HALF the docs, so the loser-position
-      // explosion (proportional to the duplicated volume being removed,
-      // by design) genuinely engages at both scales
-      ("substring_dedup", () => {
-        val bp = (1 to 30).map(i => s"bp$i").mkString(" ")
-        val sdocs = synthDocs(n).select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(2)) === 0,
-              concat(col("text"), lit(" " + bp)))
-            .otherwise(col("text")).as("text"))
-        graft.llm.Dedup.substringDedup(sdocs, k = 20)
-          .agg(sum("n_kept"), sum(length(col("text")))).head()
-      }),
-      // the fully-oracle-gated assembly composite under stratum SKEW: one
-      // lang holds 50% of the corpus (the mixture matches the planted
-      // proportions, so reweight keeps ~everything and the packing load is
-      // maximal). The per-stratum prefix-sum window then serializes half
-      // the corpus through one partition — the documented worst case of
-      // Packing's sizing rule ("pack per (source, dt-bucket) when one
-      // stratum is a double-digit share"); the ratio probes that rule's
-      // cost, not just the happy path
-      ("assemble_skewed", () => {
-        val lane = pmod(xxhash64(col("doc_id"), lit("al")), lit(4))
-        val corpus = synthDocs(n).select(col("doc_id"), col("text"),
-          when(lane < 2, "en").when(lane === 2, "de").otherwise("zh").as("lang"))
-        graft.llm.Curation.assemble(corpus, minQuality = 0.0,
-            splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-            keepSplit = "train",
-            mixture = Map("en" -> 0.5, "de" -> 0.25, "zh" -> 0.25),
-            blockTokens = 256L)
-          .agg(sum("n_tokens"), sum(length(col("block_text")))).head()
-      }),
-      // token-budget sampling: same per-stratum window as pack_shards but
-      // with the early-out filter — the ratio should match pack_shards'
-      // (the budget cut changes the OUTPUT volume, not the window cost).
-      // Each of the 8 sources holds ~40·n/8 = 5n tokens, so budget 2n
-      // keeps ~40% — the cut BINDS at both scales (a budget above the
-      // per-source total would keep every row and time a vacuous filter,
-      // the round-8 sink-vacuity class)
-      ("token_budget", () => {
-        val docs = synthDocs(n).select(col("doc_id"), col("text"),
-          concat(lit("s"), pmod(xxhash64(col("doc_id")), lit(8))).as("source"))
-        graft.llm.Sampling.tokenBudget(docs, budgetTokens = 2L * n)
-          .agg(sum("n_tokens"), count(lit(1))).head()
-      }),
-      // deterministic global shuffle: the one genuinely global op in
-      // training prep — a range-partitioned sort on the lattice hash +
-      // the two-pass offset index; the ratio probes the global sort's
-      // scaling, which positional_index (id-ordered, pre-sorted ranges)
-      // does not exercise
-      ("shuffle_shards", () => graft.llm.Packing.shuffleShards(
-        spark.range(n * 20).toDF("doc_id"), rowsPerShard = 1024L)
-        .agg(sum("shard_id"), sum("pos_in_shard")).head()),
-      // corpus-derived domain gate: per-domain partials (map-side
-      // combined, n/50 domains) + broadcast anti join — the corpus side
-      // is scanned twice (stats + gate) but never shuffled, so the ratio
-      // should track the scan. One planted crowd domain holds ~n/10 docs
-      // against a cap of n/20, so the blocklist is NON-EMPTY and the
-      // anti join actually drops ~10% of rows at both scales (an
-      // unreachable threshold left the gate empty — AQE's empty-relation
-      // propagation could then erase the very join being probed)
-      ("domain_gate", () => {
-        val docs = synthDocs(n).select(col("doc_id"), col("text"),
-          concat(lit("https://d"),
-            when(pmod(xxhash64(col("doc_id"), lit("dg2")), lit(10)) === 0, lit("crowd"))
-              .otherwise(pmod(xxhash64(col("doc_id"), lit("dg")), lit(n / 50))
-                .cast("string")),
-            lit(".example.com/p/"), col("doc_id")).as("url"))
-        graft.llm.TextStats.domainGate(docs, minAvgQualityBp = 5000L,
-            maxDocsPerDomain = n / 20)
-          .agg(count(lit(1)), sum(length(col("domain")))).head()
-      }),
-      // incremental exact dedup: the delta is FIXED-size by contract (a
-      // day's crawl vs the accumulated corpus; 250 re-fetches + 250 fresh
-      // docs here), the corpus side scales — the bloom probe keeps the
-      // exchange delta-sized, so the ratio should track the narrow
-      // corpus-hash scan
-      ("incremental_dedup", () => {
-        val corpus = synthDocs(n)
-        val batch = synthDocs(n + 250).where(col("doc_id") >= n - 250)
-          .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
-        graft.llm.Dedup.incrementalExact(batch, corpus)
-          .agg(count(lit(1)), sum("dup_count")).head()
-      }),
-      // snapshot diff: BOTH sides scale — the fixed-width (id, hash)
-      // full-outer sort-merge join is the whole cost; text never shuffles
-      ("corpus_diff", () => {
-        val prev = synthDocs(n)
-        val next = synthDocs(n + n / 10)
-          .where(pmod(col("doc_id"), lit(6)) =!= 0)
-          .select(col("doc_id"),
-            when(pmod(col("doc_id"), lit(5)) === 0,
-              concat(col("text"), lit(" e"))).otherwise(col("text")).as("text"))
-        graft.llm.Audit.corpusDiff(prev, next)
-          .agg(count(lit(1)), sum(length(col("status")))).head()
-      }),
-      // quality tiers: two corpus scans + a score-domain histogram — the
-      // adaptive-gate family. Per-doc vocab size varies so the score
-      // distribution SPREADS (a point mass degenerates the tier fold,
-      // the CLAUDE.md percentile-fixture lesson)
-      ("quality_tiers", () => {
-        val varied = spark.range(n).select(col("id").as("doc_id"),
-          array_join(transform(sequence(lit(1), lit(40)),
-            i => concat(lit("w"), pmod(xxhash64(col("id"), i),
-              pmod(col("id"), lit(37)) + 2))), " ").as("text"))
-        graft.llm.TextStats.qualityTiers(varied, tiers = 4)
-          .agg(sum("tier"), sum("quality_bp")).head()
-      }),
-      // classifier threshold sweep: ONE scan, 2×|thresholds| conditional
-      // aggregates — should track scan_agg regardless of threshold count
-      ("classifier_sweep", () => graft.llm.Classifier.sweep(synthDocs(n),
-        graft.llm.Classifier.Weights(wTokens = 3, wDistinct = 5, bias = -60000),
-        thresholds = Seq(-100000L, 0L, 40000L, 80000L, 120000L))
-        .agg(sum("kept_docs"), sum("kept_tokens")).head()),
-      // weighted interleaving: per-source rank windows (8 strata) + the
-      // one global (cycle, source, slot) range sort + offset index —
-      // shuffle_shards' tail plus the window family's stratum rule
-      ("interleave", () => {
-        val docs = spark.range(n).select(col("id").as("doc_id"),
-          concat(lit("s"), pmod(xxhash64(col("id"), lit("il")), lit(8))).as("source"))
-        graft.llm.Packing.interleave(docs,
-            (0 until 8).map(i => s"s$i" -> (if (i == 0) 3 else 1)).toMap)
-          .agg(sum("interleave_pos"), count(lit(1))).head()
-      }),
-      // per-domain boilerplate removal: paragraph stats are fixed-width
-      // (domain, sha2, id) rows, chrome broadcast-anti-joins, text
-      // shuffles only for reassembly — ratio should track the explode +
-      // reassembly. Chrome is planted NON-EMPTY at both scales (60% of
-      // each domain's docs share the domain footer ≥ the 50% default
-      // ratio; the 10% 'rare' note stays under it) so the anti join
-      // genuinely drops ~half the paragraph volume — an empty chrome set
-      // would let AQE's empty-relation propagation erase the join being
-      // probed (the round-8 vacuity class)
-      ("domain_boilerplate", () => {
-        val dom = concat(lit("d"), pmod(xxhash64(col("doc_id"), lit("db")), lit(n / 100)))
-        val docs = synthDocs(n).select(col("doc_id"), dom.as("domain"),
-          concat_ws("\n\n",
-            col("text"),
-            when(pmod(xxhash64(col("doc_id"), lit("db2")), lit(5)) < 3,
-              concat(lit("footer for "), dom)),
-            when(pmod(xxhash64(col("doc_id"), lit("db3")), lit(10)) === 0,
-              concat(lit("rare note "), dom))).as("text"))
-        graft.llm.Cleanup.domainBoilerplate(docs)
-          .agg(sum("n_kept"), sum(length(col("text")))).head()
-      }),
-      // gap-based sessionization (the batch form of stream_session): n*20
-      // events over 1000 users, ~5k-second spread per user
-      ("session_window", () => {
-        val evts = spark.range(n * 20).select(
-          pmod(col("id"), lit(1000)).as("user_id"),
-          timestamp_seconds(lit(1700000000L) +
-            pmod(xxhash64(col("id")), lit(500000))).as("ts"))
-        graft.streaming.StreamOps.sessions(evts, gap = "30 minutes").count()
-      }),
-      // leakage-safe split: the closure runs over ~2n·20/3 participants
-      // in length-4 chains (2 pointer-jump rounds), then the corpus pays
-      // one (id, component) left join + the narrow band projection —
-      // n*20 rows so the join work clears the closure's fixed
-      // per-round checkpoint cost at the 1× base
-      ("leakage_safe_split", () => {
-        val docs = spark.range(n * 20).toDF("doc_id")
-        val pairs = spark.range(n * 20 - 1)
-          .where(pmod(col("id"), lit(6)) < 3)
-          .select(col("id").as("a"), (col("id") + 1).as("b"))
-        graft.llm.Curation.leakageSafeSplit(docs, pairs,
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-          .agg(count(lit(1)), sum(length(col("split")))).head()
-      }),
-      // quality-aware winner election: same chain closure + the
-      // participant-subset argmax + the dup-mass anti join against the
-      // corpus — scores spread mod 31 so every cluster has one strict
-      // winner and the anti join genuinely drops ~half the participants
-      ("quality_dedup", () => {
-        val docs = spark.range(n * 20).select(col("id").as("doc_id"),
-          pmod(col("id") * 7, lit(31)).as("score"))
-        val pairs = spark.range(n * 20 - 1)
-          .where(pmod(col("id"), lit(6)) < 3)
-          .select(col("id").as("a"), (col("id") + 1).as("b"))
-        graft.llm.Curation.qualityDedup(docs, pairs, col("score"))
-          .agg(count(lit(1)), sum("score")).head()
-      }),
-      // eval-integrity report: the corpus side (scales, ×4 so the 1×
-      // base outweighs fixed costs) explodes its shingles through the
-      // broadcast benchmark-set semi filter; the benchmark (FIXED 200
-      // docs — half real corpus text, half junk, so matched is strictly
-      // between 0 and total at both scales) pays the bounded distinct.
-      // Ratio should track the corpus scan + explode
-      ("contamination_report", () => {
-        val bench = synthDocs(200).select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(2)) === 0, col("text"))
-            .otherwise(concat(lit("jj"), col("doc_id"), lit(" jk"),
-              col("doc_id"), lit(" jl"), col("doc_id"))).as("text"))
-        graft.llm.Dedup.contaminationReport(synthDocs(n * 4), bench, k = 2)
-          .agg(sum("matched"), sum("total")).head()
-      }),
-      // cross-source duplicate matrix: ONE hash-keyed shuffle with
-      // map-side collect_set over 20 sources; contents repeat ~10× each
-      // (n*2 distinct contents over n*20 rows) so the matrix stays dense
-      // and the pair expansion runs on every hash at both scales
-      ("source_overlap", () => {
-        val docs = spark.range(n * 20).select(
-          concat(lit("s"), pmod(col("id"), lit(20))).as("source"),
-          concat(lit("c"), pmod(xxhash64(col("id")), lit(n * 2))).as("text"))
-        graft.llm.Audit.sourceOverlap(docs)
-          .agg(sum("n_shared"), count(lit(1))).head()
-      }),
-      // continuous-ingest composite: FIXED 500-doc delta (half corpus
-      // re-fetches, half fresh) + fixed 100-doc benchmark vs a SCALING
-      // corpus — like incremental_dedup the ratio should stay near flat
-      // (the corpus pays one narrow bloom-probed hash scan; quality and
-      // contamination run on the delta only), and a regression that
-      // re-introduces a corpus-sized exchange reads as a jump to
-      // scan_agg-like ratios
-      ("ingest_delta", () => {
-        val corpus = synthDocs(n)
-        val batch = synthDocs(n + 250).where(col("doc_id") >= n - 250)
-          .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
-        val bench = synthDocs(100)
-        graft.llm.Curation.ingestDelta(batch, corpus, bench,
-            minQualityBp = 4000L, maxContamBp = 9000L, k = 3)
-          .agg(count(lit(1)), sum("quality_bp"), sum("contamination_bp")).head()
-      }),
-      // z-order layout: ONE range-sort exchange + the two-pass offset
-      // index — shuffle_shards' profile with a morton projection in
-      // front; the agg references z_value AND pos_in_shard so neither
-      // the projection nor the positional index can be pruned
-      ("zorder", () => {
-        val docs = synthDocs(n).select(col("doc_id"), col("text"),
-          pmod(xxhash64(col("doc_id")), lit(1024L)).as("qa"),
-          pmod(xxhash64(col("doc_id"), lit(7)), lit(1024L)).as("qb"))
-        graft.llm.Layout.zOrder(docs, col("qa"), col("qb"),
-            bits = 10, rowsPerShard = 256L)
-          .agg(sum("z_value"), sum("pos_in_shard"), max("shard_id")).head()
-      }),
-      // winnowing fingerprints: pure narrow kernel + explode, NO
-      // shuffle — should track the scan near-linearly; n*20 in-shape so
-      // the 1x base clears the fixed-cost floor (CLAUDE.md probe rule)
-      ("winnow", () => graft.llm.TextStats.winnow(synthDocs(n * 20), k = 3, w = 4)
-        .agg(sum("fp"), count(lit(1))).head()),
-      // PQ encoding: narrow reference-object kernel + posexplode, no
-      // shuffle; 8×4×4 codebook over the 32-dim synth vectors
-      ("pq_encode", () => {
-        val cb = (0 until 8).map(s => (0 until 4).map(k =>
-          (0 until 4).map(j => (((s * 31 + k * 17 + j * 7) % 19) - 9) / 4.0)))
-        graft.llm.Similarity.pqEncode(synthEmb(n * 20), cb)
-          .agg(sum("code"), count(lit(1))).head()
-      }),
-      // duplication budget: n distinct contents × 10 copies, cap 3 —
-      // the bounded-heap shuffle carries ≤3 structs per content while
-      // the text column never moves; a window-row_number regression
-      // would sort all 10 copies per group and read superlinear
-      ("dedup_budget", () => {
-        val docs = spark.range(n * 10).select(col("id").as("doc_id"),
-          concat(lit("c"), pmod(xxhash64(col("id")), lit(n))).as("text"))
-        graft.llm.Dedup.duplicationBudget(docs, maxCopies = 3)
-          .agg(sum("copy_rank"), count(lit(1))).head()
-      }),
-      // contamination sweep: all the work (shingle explode, broadcast
-      // semi join, matched agg) is threshold-independent — four
-      // candidates must cost one corpus pass, not four
-      ("contamination_sweep", () => graft.llm.Dedup.contaminationSweep(
-        synthDocs(n), synthDocs(100),
-        thresholds = Seq(2500L, 5000L, 7500L, 10000L), k = 3)
-        .agg(sum("kept_docs"), sum("kept_tokens")).head()),
-      // DSIR: three corpus scans (distribution agg → 64-row driver
-      // collect, score histogram, keep filter), shuffled never — the
-      // eager collect is part of the timed plan; n*4 in-shape clears
-      // the fixed-cost floor
-      ("dsir", () => graft.llm.TextStats.dsir(synthDocs(n * 4),
-          isTarget = pmod(col("doc_id"), lit(3L)) === 0L, keepFraction = 0.4)
-        .agg(sum("dsir_score"), count(lit(1))).head()),
-      // UniMax: one skewed stratum at 50% of rows probes the
-      // partial-epoch window under the packing sizing rule's worst case
-      // (the assemble_skewed discipline); water-filling itself runs on
-      // the tiny strata frame
-      ("unimax", () => {
-        val docs = synthDocs(n * 4).select(col("doc_id"), col("text"),
-          when(pmod(col("doc_id"), lit(2L)) === 0L, lit("big"))
-            .otherwise(concat(lit("s"), pmod(col("doc_id"), lit(10L)))).as("source"))
-        graft.llm.Sampling.unimax(docs, budgetBp = 7000L, maxEpochs = 2)
-          .agg(sum("n_tokens"), count(lit(1))).head()
-      }),
-      // length-grouped batching: one per-stratum sort exchange + a
-      // fixed-width groupBy — should track shuffle_shards
-      ("length_batches", () => {
-        val docs = synthDocs(n * 4).select(col("doc_id"), col("text"),
-          concat(lit("s"), pmod(col("doc_id"), lit(16L))).as("source"))
-        graft.llm.Packing.lengthBatches(docs, batchSize = 32)
-          .agg(sum("real_tokens"), max("batch_id"), sum("waste_bp")).head()
-      }),
-      // shard manifest over the shuffleShards layout: the range-sort
-      // exchange plus ONE map-side-combined agg onto |shards| rows —
-      // manifest cost must ride the layout's, not add to it
-      ("manifest", () => graft.llm.Audit.shardManifest(
-          graft.llm.Packing.shuffleShards(synthDocs(n * 4), rowsPerShard = 256L))
-        .agg(sum("n_tokens"), sum("checksum"), count(lit(1))).head()),
-      // post-split leakage: the held-out shingle set is ~10% of the
-      // corpus's distinct trigrams and BROADCASTS — this shape watches
-      // that broadcast grow with n (the documented regime boundary where
-      // bloomContamination takes over)
-      ("split_leakage", () => graft.llm.Curation.splitLeakage(synthDocs(n),
-          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-          heldOutLabels = Seq("val", "test"), k = 3)
-        .agg(sum("matched"), sum("total"), count(lit(1))).head()),
-      // PQ ADC search: fixed 20-query LUT broadcast against a SCALING
-      // code index (8 fixed-width rows per vector) — raw vectors never
-      // read after encoding; the (qid, id) sum map-side combines
-      ("pq_search", () => {
-        val cb = (0 until 8).map(s => (0 until 4).map(k =>
-          (0 until 4).map(j => (((s * 31 + k * 17 + j * 7) % 19) - 9) / 4.0)))
-        val emb = synthEmb(n * 4)
-        graft.llm.Similarity.pqTopK(
-            emb.where(col("vec_id") < 20).withColumnRenamed("vec_id", "qid"),
-            graft.llm.Similarity.pqEncode(emb, cb), cb, k = 5)
-          .agg(sum("dist16"), count(lit(1))).head()
-      }),
-      // mixture-balance audit over the shuffleShards layout: the layout's
-      // range-sort exchange + ONE corpus agg onto checkpointed
-      // (shard, stratum) cells — must ride the manifest shape's profile
-      ("mix_audit", () => {
-        val docs = synthDocs(n * 4).select(col("doc_id"),
-          concat(lit("s"), pmod(col("doc_id"), lit(16L))).as("source"))
-        graft.llm.Audit.mixReport(
-            graft.llm.Packing.shuffleShards(docs, rowsPerShard = 256L))
-          .agg(sum("max_dev_bp"), count(lit(1))).head()
-      }),
-      // IVF-PQ: this shape times INDEX CONSTRUCTION + search (the thunk
-      // is the whole plan), so at probe scale encoding dominates and the
-      // ratio (~3.2) tracks pq_search's (~3.0) rather than undercutting
-      // it — the routing benefit is that the (qid, id) sum sees ~3/8 of
-      // the index rows, which matters when the index is PRE-BUILT and
-      // queries are the recurring cost
-      ("ivf_pq", () => {
-        val coarse = (0 until 8).map(kk =>
-          (0 until 32).map(j => (((kk * 17 + j * 7) % 19) - 9) / 4.0))
-        val cb = (0 until 8).map(s => (0 until 4).map(k =>
-          (0 until 4).map(j => (((s * 31 + k * 17 + j * 7) % 19) - 9) / 4.0)))
-        val emb = synthEmb(n * 4)
-        graft.llm.Similarity.ivfPqTopK(
-            emb.where(col("vec_id") < 20).withColumnRenamed("vec_id", "qid"),
-            emb, coarse, cb, k = 5, nprobe = 3)
-          .agg(sum("dist16"), count(lit(1))).head()
-      }),
-      // SEARCH-ONLY over a PERSISTED IVF-PQ index — the recurring cost of
-      // the build-once/search-many regime ivf_pq's construction-dominated
-      // shape can't see: the index is built+written during the warm pass
-      // (ensure-once per (shape, n) dir), so the timed thunk is
-      // loadPqIndex (codebook table read — constant) + routing + the
-      // probed-cell ADC scan (~nprobe/8 of the code rows) + top-k. The
-      // ratio is the probed SCAN growing with the index; LUT/routing are
-      // flat in n
-      ("pq_search_loaded", () => {
-        val coarse = (0 until 8).map(kk =>
-          (0 until 32).map(j => (((kk * 17 + j * 7) % 19) - 9) / 4.0))
-        val cb = (0 until 8).map(s => (0 until 4).map(k =>
-          (0 until 4).map(j => (((s * 31 + k * 17 + j * 7) % 19) - 9) / 4.0)))
-        val dir = s"/tmp/graft_probe_pqidx_$n"
-        if (!new java.io.File(s"$dir/codes/_SUCCESS").exists())
-          graft.sources.Sinks.pqIndex(synthEmb(n * 20), dir, coarse, cb)
-        val idx = graft.llm.Similarity.loadPqIndex(spark, dir)
-        graft.llm.Similarity.searchPqIndex(
-            synthEmb(n * 20).where(col("vec_id") < 20)
-              .withColumnRenamed("vec_id", "qid"),
-            idx, k = 5, nprobe = 3)
-          .agg(sum("dist16"), count(lit(1))).head()
-      }),
-      // cluster-balanced sampling: ONE narrow PQ-cell kernel projection
-      // + the bounded-heap per-cell quota. The cap stays FIXED while the
-      // corpus grows — the real selection regime (quota set by token
-      // budget, corpus by crawl). The ~4.1 ratio is the K×dims kernel
-      // arithmetic scaling near-linearly with rows (substring_dedup's
-      // compute-bound band), not a shuffle: the quota exchange is
-      // bounded at 8·cap structs. (A cap that SCALES with n additionally
-      // turns heap partials into O(cap) buffers per partition — the
-      // window-vs-heap regime boundary documented on clusterBalance.)
-      ("cluster_balance", () => {
-        val cb = (0 until 8).map(k =>
-          (0 until 32).map(j => (((k * 17 + j * 7) % 19) - 9) / 4.0))
-        graft.llm.Similarity.clusterBalance(synthEmb(n * 20), Seq(cb),
-            capPerCluster = 256)
-          .agg(sum("cluster"), count(lit(1))).head()
-      }),
-      // dup-mass audit: substring_dedup's plan + a |groups|-row agg —
-      // planted shared 30-token runs on %5 docs so the loser explosion
-      // is exercised, not skipped
-      ("dup_mass", () => {
-        val bp = (0 until 30).map(i => f"bp$i%02d").mkString(" ")
-        val docs = synthDocs(n).select(col("doc_id"),
-          concat(lit("s"), pmod(col("doc_id"), lit(8L))).as("source"),
-          when(pmod(col("doc_id"), lit(5L)) === 0L,
-            concat(col("text"), lit(" " + bp))).otherwise(col("text")).as("text"))
-        graft.llm.Audit.dupMass(docs, k = 20)
-          .agg(sum("total_tokens"), sum("kept_tokens"), sum("removed_bp")).head()
-      }),
-      // the graft-jsonl connector, write + read: the shuffleShards
-      // layout serialized to sharded JSONL (one ordered file per shard)
-      // and read back through the V2 scan — both sides scale with the
-      // corpus; JSON serialization cost is the knowingly-paid price of
-      // the line-oriented format (parquet trainingShards is the
-      // columnar default)
-      ("jsonl_connector", () => {
-        val dir = s"/tmp/graft_probe_jsonl_$n"
-        // n*20 clears the fixed-cost floor (sub-2s bases read
-        // overhead-flat — the ScaleProbe floor rule)
-        graft.sources.Sinks.jsonlShards(
-          graft.llm.Packing.shuffleShards(synthDocs(n * 20),
-            rowsPerShard = 1024L), dir)
-        spark.read.format("graft-jsonl")
-          .schema("doc_id LONG, text STRING, pos_in_shard LONG, shard_id LONG")
-          .load(dir)
-          .agg(sum(length(col("text"))), count(lit(1))).head()
-      }),
-      // planning-time shard pruning at layout scale: a FIXED 64-shard
-      // slice read from a GROWING multi-file layout (98 shards at 1×,
-      // ~980 at 10×; 4 V2 append jobs → 4 files per shard, the
-      // one-InputPartition-per-FILE planner shape). The layout builds
-      // ONCE per scale in the warm pass (idempotent file-count guard),
-      // so the timed passes measure read+plan only. Pruned dirs are
-      // never listed at planning time, so the ratio must read ~flat
-      // (≈1.0) while jsonl_connector's full read scales with the
-      // corpus; the fixed slice is 64·4096 rows — clears the sub-2s
-      // overhead floor (the ScaleProbe floor rule) so the flatness is
-      // measured, not vacuous
-      ("jsonl_pruned_read", () => {
-        val dir = s"/tmp/graft_probe_jsonl_pr_$n"
-        val s0 = new java.io.File(s"$dir/shard_id=0")
-        val built = s0.isDirectory && s0.listFiles().count(f =>
-          f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_")) >= 4
-        if (!built) {
-          val layout = graft.llm.Packing.shuffleShards(synthDocs(n * 20),
-            rowsPerShard = 1024L)
-          layout.write.format("graft-jsonl").mode("overwrite").save(dir)
-          (1 to 3).foreach(_ =>
-            layout.write.format("graft-jsonl").mode("append").save(dir))
-        }
-        spark.read.format("graft-jsonl")
-          .schema("doc_id LONG, text STRING, pos_in_shard LONG, shard_id LONG")
-          .load(dir)
-          .where(col("shard_id") < 64)
-          .agg(sum(length(col("text"))), count(lit(1))).head()
-      }),
-      // selection composite end to end (DSIR → budget → unimax →
-      // layout → manifest) under the tier's worst case: skewed lang
-      // strata (en = 50% of rows vs four 12.5% langs — the unimax
-      // water-filling imbalance CLAUDE.md's stratify-by-lang rule is
-      // about). The BUDGET SCALES with n (a fixed budget would bound
-      // every post-budget stage to a constant and the probe would read
-      // overhead-flat while saying nothing — the ScaleProbe floor rule);
-      // with it, every stage sees n-proportional data: three DSIR
-      // scans, the per-source budget window, the strata-frame
-      // water-filling, the global layout sort, the manifest agg
-      ("select_full", () => {
-        val docs = synthDocs(n * 4).select(col("doc_id"), col("text"),
-          when(pmod(xxhash64(col("doc_id"), lit("l")), lit(2)) === 0, lit("en"))
-            .otherwise(concat(lit("l"), pmod(col("doc_id"), lit(4L)))).as("lang"),
-          concat(lit("s"), pmod(col("doc_id"), lit(8L))).as("source"))
-        graft.llm.Audit.shardManifest(graft.llm.Curation.selectFull(docs,
-            isTarget = col("lang") === "en", keepFraction = 0.4,
-            budgetTokens = n * 10L, budgetBp = 14000L, maxEpochs = 2,
-            rowsPerShard = 256L))
-          .agg(sum("n_tokens"), count(lit(1))).head()
-      }),
-      // BM25 under a fixed 3-term query: per-doc tf columns are narrow
-      // kernel probes, the corpus stats collapse to ONE broadcast row,
-      // and the ranking is TakeOrdered — time should track the scan
-      // and shuffle bytes stay flat (nothing corpus-wide ever re-keys)
-      ("bm25_rank", () => {
-        val docs = synthDocs(n).select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) === 0,
-            concat(col("text"), lit(" zq1"))).otherwise(col("text")).as("text"))
-        graft.llm.TextStats.bm25(docs, Seq("zq1", "w3", "w17"), limit = 20)
-          .count()
-      }),
-      // margin-based bitext mining, brute vs LSH-candidate path: the
-      // query side is FIXED (128 vectors) while the target corpus
-      // grows, so the brute all-pairs stage is linear-in-n BY
-      // DECLARATION and the LSH path scores bucket-mates only — the
-      // pair of ratios is the scale story of marginMine's `candidates`
-      // hook (the declared query's all-pairs face is the correctness
-      // baseline; this is the production path)
-      ("bitext_margin_brute", () => {
-        val emb = synthEmb(n)
-        graft.llm.Similarity.marginMine(
-          emb.where(col("vec_id") < 128).withColumnRenamed("vec_id", "qid"),
-          emb.withColumnRenamed("vec_id", "cid"),
-          k = 4, srcIdCol = "qid", tgtIdCol = "cid").count()
-      }),
-      ("bitext_margin_lsh", () => {
-        val emb = synthEmb(n)
-        val src = emb.where(col("vec_id") < 128)
-          .withColumnRenamed("vec_id", "qid")
-        // bits sized to the corpus (the autoBits rule): 2^10 signatures
-        // per table keeps buckets ~n/1024 — the probe-scale analog of
-        // embed_neardup's clamp(log2 n) sizing; the default bits=2 is a
-        // DEMO setting whose 4 buckets/table would out-candidate brute
-        val cand = graft.llm.Similarity.quantizedLshTopK(
-            src, emb, k = 32, bits = 10, dims = 32)
-          .select(col("qid"), col("vec_id").as("cid"))
-        graft.llm.Similarity.marginMine(src,
-          emb.withColumnRenamed("vec_id", "cid"), k = 4,
-          srcIdCol = "qid", tgtIdCol = "cid",
-          candidates = Some(cand)).count()
-      }),
-      // the serve surface's control-plane contract: request latency at a
-      // FIXED page (limit 100) must stay flat as the corpus grows —
-      // only the clamped head crosses the socket, and a well-formed
-      // registry query (pushed id filter → row-group pruning) reads a
-      // corpus-independent slice. n*20 so the 1× corpus write (warmup
-      // pass only — the timed pass finds it on disk) clears the probe
-      // floor without making the timed read corpus-bound.
-      ("serve_page", () => {
-        val dir = s"$out/serve_docs_${n * 20}"
-        if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists())
-          synthDocs(n * 20).write.mode("overwrite")
-            .parquet(s"$dir/documents.parquet")
-        val registry = Map[String, (SparkSession, String) => DataFrame](
-          "probe_docs" -> ((s, d) => s.read.parquet(s"$d/documents.parquet")
-            .where(col("doc_id") < 100).orderBy("doc_id")))
-        val h = graft.serve.Serve.start(spark, dir, registry = registry)
-        try {
-          val sock = new java.net.Socket("127.0.0.1", h.port)
-          try {
-            val outW = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-              sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-            val inR = new java.io.BufferedReader(new java.io.InputStreamReader(
-              sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-            outW.write("""{"query":"probe_docs","limit":100}"""); outW.write("\n")
-            outW.flush()
-            val lines = Iterator.continually(inR.readLine())
-              .takeWhile(_ != null).toSeq
-            require(lines.last.contains("\"done\":100"), s"bad serve reply: ${lines.last}")
-          } finally sock.close()
-        } finally h.close()
-      }),
-      // corpus-statistics tier (r13 s3): phrase mining's exchanges past
-      // the one corpus scan are vocab²-bounded (the synth vocab is 500
-      // words → ≤ 250k pair keys at ANY n), so the ratio reads the scan,
-      // not the join tree; n*4 clears the checkpoint fixed cost
-      ("phrase_mine", () => graft.llm.TextStats.phrases(
-        synthDocs(n * 4), delta = 5L, minCount = 10L, minScoreFp = 1L)
-        .count()),
-      // backoff LM: train on half, score half — both sides grow with n,
-      // the count tables stay vocab³-bounded; the blocking agg head()
-      // forces every join (the .count() prune trap)
-      ("backoff_lm", () => {
-        val d = synthDocs(n * 4)
-        graft.llm.TextStats.backoffScore(
-            d.where(pmod(col("doc_id"), lit(2)) === 0),
-            d.where(pmod(col("doc_id"), lit(2)) === 1))
-          .agg(sum("logp_fp"), sum("n_bo1")).head()
-      }),
-      // the minCount lever on the SAME fixture: random 500-word text
-      // makes nearly every trigram a singleton (the Heaps-law regime),
-      // so pruning at 2 collapses the trigram table — the knob a
-      // deployment turns when the r14 size gate starts reporting
-      // shuffle-joined count tables
-      ("backoff_lm_pruned", () => {
-        val d = synthDocs(n * 4)
-        graft.llm.TextStats.backoffScore(
-            d.where(pmod(col("doc_id"), lit(2)) === 0),
-            d.where(pmod(col("doc_id"), lit(2)) === 1),
-            minCount = 2L)
-          .agg(sum("logp_fp"), sum("n_bo1")).head()
-      }),
-      // chat assembly: ONE conv-keyed exchange (window + groupBy share
-      // the partitioning) — the ratio is the linear re-shuffle of the
-      // corpus, nothing quadratic hides in the span arithmetic
-      ("chat_pack", () => {
-        val turns = synthDocs(n * 4).select(
-          graft.functions.VectorFunctions.intDiv(col("doc_id"), lit(5L))
-            .as("conv_id"),
-          pmod(col("doc_id"), lit(5)).cast("long").as("turn"),
-          when(pmod(col("doc_id"), lit(5)) === 2, "assistant")
-            .otherwise("user").as("role"),
-          substring(col("text"), 1, 60).as("content"))
-        graft.llm.Packing.chatPack(turns)
-          .agg(sum("masked_chars"), sum("total_chars")).head()
-      }),
-      // distinct-n pair (r14): the exact face IS one corpus-sized
-      // (group, n, gram) exchange by declaration — this row measures
-      // what that costs; the HLL face shuffles |groups|·3 sketch
-      // partials regardless of n, so its ratio should read the scan
-      ("distinct_n_exact", () => graft.llm.TextStats.distinctNgrams(
-        synthDocs(n * 4).select(
-          concat(lit("s"), pmod(col("doc_id"), lit(5))).as("source"),
-          col("text")))
-        .agg(sum("distinct_grams")).head()),
-      ("distinct_n_hll", () => graft.llm.TextStats.distinctNgramsApprox(
-        synthDocs(n * 4).select(
-          concat(lit("s"), pmod(col("doc_id"), lit(5))).as("source"),
-          col("text")))
-        .agg(sum("distinct_est")).head()),
-      // host-graph PageRank: hosts GROW with n (n·4/10 — the verdict's
-      // watch item is the per-round |hosts|-sized broadcast lookups);
-      // edge mass linear in n, 3 damped rounds
-      ("host_rank", () => {
-        // n*40 edges over n*4 hosts: at n*4/10 the 1× base was 1.27 s
-        // ≈ the fixed 3-round checkpoint cost and the ratio read 1.0
-        // while saying nothing (the overhead-floor rule)
-        val hosts = math.max(16L, n * 4)
-        val edges = spark.range(n * 40).select(
-          pmod(col("id"), lit(hosts)).as("src"),
-          pmod(col("id") * 7L + 3L, lit(hosts)).as("dst"))
-          .groupBy("src", "dst").agg(count(lit(1)).as("c"))
-        graft.llm.Audit.hostRank(edges).agg(sum("rank_fp")).head()
-      }),
-      // ANN recall audit: FIXED 128-query side, corpus grows — the
-      // brute truth is linear-in-corpus per query by declaration (the
-      // bitext_margin_brute policy), the LSH side bucket-bounded
-      ("ann_recall", () => {
-        val corpus = synthEmb(n * 4)
-        val queries = synthEmb(128)
-          .select((col("vec_id") + 1000000L).as("qid"),
-            transform(col("embedding"), (x, i) =>
-              (x + (pmod(col("vec_id") * 31 + i * 7, lit(9)) - 4)
-                .cast("float") * lit(0.01f)).cast("float")).as("embedding"))
-        val truth = graft.llm.Similarity.quantizedBruteTopK(
-          queries, corpus, k = 10)
-        val approx = graft.llm.Similarity.quantizedLshTopK(
-          queries, corpus, k = 10, numTables = 4, bits = 4, dims = 32)
-        graft.llm.Similarity.annRecall(truth, approx)
-          .agg(sum("n_hits"), sum("n_true")).head()
-      }),
-      // JL projection: one codegen kernel pass — should track pq_encode
-      ("rand_proj", () => graft.llm.Similarity.randomProject(
-        synthEmb(n * 4, dims = 64), outDims = 16, dims = 64)
-        .agg(sum(element_at(col("proj"), 1))).head()),
-      // event-funnel fold: ONE user-keyed exchange + per-user aggregate
-      // fold (no per-step join — a k-step funnel as k as-of joins would
-      // be k corpus shuffles); users grow with n, ~24 events each
-      ("funnel_fold", () => {
-        // n*96: at n*24 the 1× base was 0.45 s and the ratio read 0.9
-        // while measuring fixed job costs (the overhead-floor rule)
-        val users = math.max(8L, n)
-        val ev = spark.range(n * 96).select(
-          pmod(col("id"), lit(users)).as("user_id"),
-          timestamp_micros(col("id") * 1000000L).as("ts"),
-          element_at(typedLit(Seq("view", "click", "purchase", "error")),
-            (pmod(xxhash64(col("id")), lit(4)) + 1).cast("int"))
-            .as("event_type"),
-          col("id").as("event_id"))
-        graft.relational.Funnel.funnel(ev,
-            Seq("view", "click", "purchase"), maxGapUs = 3600000000L)
-          .agg(sum("steps_completed")).head()
-      }),
-      // sessionize: the one-exchange window pair + rollup on the same
-      // distribution — should track funnel_fold's user-keyed shuffle
-      ("sessionize", () => {
-        val users = math.max(8L, n)
-        val ev = spark.range(n * 96).select(
-          pmod(col("id"), lit(users)).as("user_id"),
-          timestamp_micros(col("id") * 1000000L).as("ts"),
-          col("id").as("event_id"))
-        graft.relational.Sessionize.sessionize(ev, gapUs = 1800000000L)
-          .agg(sum("n_events"), count(lit(1))).head()
-      }),
-      // novelty: train gram-set distinct (corpus-sized BY DECLARATION)
-      // + the size-gated membership join — the gate flips to
-      // shuffle-hash once random-text grams clear 2^20 (the backoff_lm
-      // regime family)
-      ("novelty", () => {
-        val d = synthDocs(n * 4)
-        graft.llm.TextStats.novelty(
-            d.where(pmod(col("doc_id"), lit(2)) === 0),
-            d.where(pmod(col("doc_id"), lit(2)) === 1))
-          .agg(sum("n_novel"), sum("n_grams")).head()
-      }),
-      // hard-negative mining: fixed 128-query side over a growing
-      // corpus — signature equi-join + candidate distinct + bounded
-      // heap; should track ann_recall's LSH half without the brute
-      // truth pass
-      ("hard_negatives", () => {
-        val corpus = synthEmb(n * 4)
-        val queries = synthEmb(128)
-          .select((col("vec_id") + 1000000L).as("qid"),
-            transform(col("embedding"), (x, i) =>
-              (x + (pmod(col("vec_id") * 31 + i * 7, lit(9)) - 4)
-                .cast("float") * lit(0.01f)).cast("float")).as("embedding"))
-        val positives = spark.range(128)
-          .select((col("id") + 1000000L).as("qid"), col("id").as("vec_id"))
-        graft.llm.Similarity.hardNegatives(queries, corpus, positives,
-            k = 3, numTables = 4, bits = 4, dims = 32)
-          .agg(sum("margin_bp"), count(lit(1))).head()
-      }),
-      // OOV audit: vocab TakeOrdered over the corpus + the gated
-      // membership join + |groups| agg — tracks the two scans
-      ("oov_rate", () => graft.llm.TextStats.oovRate(
-        synthDocs(n * 4).select(
-          concat(lit("l"), pmod(col("doc_id"), lit(5))).as("lang"),
-          col("text")),
-        graft.llm.TextStats.vocab(synthDocs(n * 4), topK = 100))
-        .agg(sum("oov_tokens"), sum("total_tokens")).head()),
-      // dedup dial sweep: the minhash_neardup banding+verify pass plus
-      // the multi-distinct Expand — read against minhash_neardup, the
-      // delta isolates the sweep aggregate (candidate-sized by the
-      // banding contract)
-      ("dedup_sweep", () => graft.llm.Dedup.thresholdSweep(
-        synthDocs(n), Seq(2000L, 5000L, 8000L), k = 2, bands = 8,
-        rowsPerBand = 2)
-        .agg(sum("n_pairs"), sum("n_docs_dropped")).head()),
-      // MMR re-rank: the PRODUCER scales (corpus scoring + top-20
-      // heap); the greedy itself is driver-side over ≤ 20 rows — flat
-      // by construction
-      ("mmr_rerank", () => {
-        val isum = (c: org.apache.spark.sql.Column) =>
-          aggregate(c, lit(0L), (s, x) => s + x)
-        val quant = (c: org.apache.spark.sql.Column) =>
-          transform(c.cast("array<double>"),
-            x => floor(x * 64 + lit(0.5)).cast("long"))
-        val intDiv = graft.functions.VectorFunctions.intDiv _
-        val emb = synthEmb(n * 4)
-        val qv = emb.where(col("vec_id") === 7)
-          .select(quant(col("embedding")).as("qv"))
-        val pool = emb.crossJoin(broadcast(qv))
-          .select(col("vec_id"), quant(col("embedding")).as("vq"), col("qv"))
-          .select(col("vec_id"), col("vq"),
-            isum(zip_with(col("vq"), col("qv"), (x, y) => x * y)).as("dot"),
-            isum(transform(col("vq"), x => x * x)).as("na"),
-            isum(transform(col("qv"), x => x * x)).as("nb"))
-          .where(col("dot") > 0 && col("na") > 0 && col("nb") > 0)
-          .select(col("vec_id"), col("vq"), col("na"),
-            intDiv(col("dot") * col("dot") * 20000L + col("na") * col("nb"),
-              col("na") * col("nb") * 2L).as("simq_bp"))
-          .orderBy(col("simq_bp").desc, col("vec_id")).limit(20)
-        graft.llm.Similarity.mmrRerank(pool, k = 10).count()
-      }),
-      // kNN labeling: fixed 128-query side over a growing labeled
-      // corpus — tracks hard_negatives' LSH half plus the label join
-      // (corpus-sized probe side, never broadcast) and the vote agg
-      ("knn_label", () => {
-        val corpus = synthEmb(n * 4).withColumn("label",
-          pmod(xxhash64(col("vec_id")), lit(10)).cast("int"))
-        val queries = synthEmb(128)
-          .select((col("vec_id") + 1000000L).as("qid"),
-            transform(col("embedding"), (x, i) =>
-              (x + (pmod(col("vec_id") * 31 + i * 7, lit(9)) - 4)
-                .cast("float") * lit(0.01f)).cast("float")).as("embedding"))
-        graft.llm.Similarity.knnLabel(queries, corpus, k = 5,
-            numTables = 4, bits = 4, dims = 32)
-          .agg(sum("pred_label"), count(lit(1))).head()
-      }),
-      // CDC upsert: changelog window (latest-per-key) + full-outer
-      // base join riding the window hash — both sides grow with n
-      ("cdc_upsert", () => {
-        // n*128 base / n*32 changes: at n*16/n*4 the 1x base read
-        // 0.30 s flat (overhead floor)
-        val keys = math.max(16L, n * 128)
-        val base = spark.range(keys).select(col("id").as("k"),
-          (col("id") * 3L).as("pv"))
-        val changes = spark.range(n * 32).select(
-          pmod(xxhash64(col("id")), lit(keys)).as("k"),
-          (col("id") * 7L).as("pv"),
-          col("id").as("version"),
-          when(pmod(col("id"), lit(5)) === 0, "D").otherwise("U").as("op"))
-        graft.relational.Cdc.upsert(base, changes, Seq("k"))
-          .agg(count(lit(1)), sum("pv")).head()
-      }),
-      // cohort retention: one user-keyed aggregate (cohort + day set),
-      // then the |cohorts|·|buckets| rollup — tracks funnel_fold's
-      // exchange with a calendar-bounded array instead of a fold
-      ("retention", () => {
-        // n*768 events over n*2 users across a 60-day span: ~6 events
-        // per user-day — the (user, day) distinct must REDUCE before
-        // anything shuffles (a d≈1 fixture made the distinct pure
-        // overhead and measured nothing); at n*96 the 1x base was
-        // 0.38 s — the overhead floor
-        val users = math.max(8L, n * 2)
-        val ev = spark.range(n * 768).select(
-          pmod(col("id"), lit(users)).as("user_id"),
-          timestamp_micros(((pmod(col("id"), lit(users)) % 30) * 86400L +
-            pmod(xxhash64(col("id")), lit(60L * 86400L))) * 1000000L)
-            .as("ts"))
-        graft.relational.Retention.retention(ev, bucketDays = 7)
-          .agg(sum("n_users")).head()
-      }),
-      // per-column profiler: ONE scan + ONE global wide aggregate (all
-      // partials algebraic/HLL) — the ratio should read the scan
-      // the sink consumes EVERY stat column: sum(n_rows) alone lets
-      // Catalyst prune min/max/HLL out of the wide aggregate and the
-      // row reads generation-flat while measuring nothing (the
-      // count()-prunes rule, aggregate form)
-      ("profile", () => graft.relational.Profile.profile(
-        synthDocs(n * 64), Seq("doc_id", "text"))
-        .agg(sum("n_rows"), sum("n_nulls"), sum("distinct_est"),
-          sum(length(col("min_val"))), sum(length(col("max_val"))))
-        .head()),
-      // PSI drift: one |bins|-key aggregate + a 1-row total broadcast —
-      // flat shuffle by construction (bins fixed at 10)
-      ("psi_drift", () => graft.llm.TextStats.psiDrift(
-        // n*3200: at n*400 the 1x base was 0.37 s (overhead floor)
-        spark.range(n * 3200).toDF("id"),
-        isBase = pmod(col("id"), lit(2)) === 0,
-        scoreBp = pmod(xxhash64(col("id"), lit(1)), lit(10000)))
-        .agg(sum("psi_fp")).head()),
-      // calibration/ECE: the same |bins|-key single-aggregate family —
-      // labels sampled AT the predicted rate so gaps stay nonzero
-      ("calibration", () => graft.llm.Classifier.calibration(
-        // n*3200: at n*400 the 1x base was 0.22 s (overhead floor)
-        spark.range(n * 3200).toDF("id"),
-        predBp = pmod(xxhash64(col("id"), lit(1)), lit(10000)),
-        label = pmod(xxhash64(col("id"), lit(2)), lit(10000)) <
-          pmod(xxhash64(col("id"), lit(1)), lit(10000)))
-        .agg(sum("ece_num"), sum("n")).head()),
-      // outlink extraction: narrow regexp projection + explode (~2
-      // anchors/doc) + map-side-combined edge groupBy — the shuffle
-      // carries hosts², not anchors
-      ("outlinks", () => {
-        val docs = spark.range(n * 48).select(
-          concat(lit("s"), pmod(col("id"), lit(20))).as("source"),
-          concat(lit("text <a href=\"http://h"), pmod(col("id"), lit(97)),
-            lit(".example.com/p\">x</a> mid <a href=\"https://g"),
-            pmod(xxhash64(col("id")), lit(97)),
-            lit(".example.org/q\">y</a>")).as("text"))
-        graft.llm.Audit.outlinks(docs)
-          .agg(sum("n_links"), count(lit(1))).head()
-      }),
-      // connected components over an edge list (r16, the outlink graph
-      // tier): chain clusters of depth 8 — the per-round cost is an
-      // edge-keyed shuffle and the ROUND COUNT is fixed by chain depth
-      // (pointer jumping), so 10× more edges must probe FLAT ROUNDS
-      // (the obs column) and a linearly-sized shuffle, never more
-      // rounds. n*96 puts the label frame past the broadcast threshold
-      // on BOTH sides (at n*32 the 1× labels broadcast and the byte
-      // ratio read 17.6× — a regime flip, not a blow-up). Measured
-      // r16: 9.96× shuffle, 0.0 spill both scales, rounds 3=3. Upper
-      // boundary also measured: at n*320/10× (16M edges) the SMJ
-      // external sort spills under the harness's 8-partition heap —
-      // graceful spill with time still linear (11.6×) and rounds flat,
-      // the partition-count sizing knob, not an operator fallback
-      ("components", () => {
-        val edges = spark.range(n * 96)
-          .where(pmod(col("id"), lit(8)) < 7)
-          .select(col("id").as("a"), (col("id") + 1).as("b"))
-        val (labels, rounds) = graft.llm.Components
-          .pairComponentsWithRounds(edges, idCol = "node")
-        observe(rounds.toLong)
-        labels.agg(sum("component"), count(lit(1))).head()
-      }),
-      // incremental CC relabel (r16): prior labels arrive as the star
-      // contraction (one edge per labeled node — NOT the historical
-      // edge volume), the delta merges adjacent clusters pairwise; the
-      // whole point is that cost scales with |nodes| + |delta|, not
-      // with everything ever closed
-      ("components_incremental", () => {
-        val m = n * 96
-        val prior = spark.range(m).select(col("id").as("node"),
-          (col("id") - pmod(col("id"), lit(8))).as("component"))
-        val delta = spark.range(m / 16).select(
-          (col("id") * 16 + 7).as("a"), (col("id") * 16 + 8).as("b"))
-        graft.llm.Components.incremental(prior, delta,
-            idCol = "node", compCol = "component")
-          .agg(sum("component"), count(lit(1))).head()
-      }),
-      // streaming-CDC per-batch merge kernel (r16): latest-per-key
-      // window on the changes + full-outer snapshot join riding that
-      // hash — the sink adds only bucket-pruned IO around this. Sink
-      // consumes EVERY output column class (payload, version,
-      // tombstone) so nothing prunes
-      ("cdc_merge_versioned", () => {
-        val snap = graft.relational.Cdc.bootstrap(
-          spark.range(n * 128).select(col("id").as("k"),
-            concat(lit("n"), col("id")).as("name"),
-            (pmod(col("id"), lit(1000))).cast("double").as("amt")), Seq("k"))
-        val chg = spark.range(n * 32).select(
-          (col("id") * 4).as("k"),
-          concat(lit("u"), col("id")).as("name"),
-          lit(1.0).as("amt"),
-          (pmod(xxhash64(col("id")), lit(5)) + 1).as("version"),
-          when(pmod(col("id"), lit(10)) === 0, lit("D"))
-            .otherwise(lit("U")).as("op"))
-        graft.relational.Cdc.mergeVersioned(snap, chg, Seq("k"))
-          .agg(count(lit(1)), sum(length(col("name"))), sum("amt"),
-            sum(col(graft.relational.Cdc.VersionCol)),
-            sum(col(graft.relational.Cdc.DeletedCol).cast("long"))).head()
-      }),
-      // bucketed CDC SINK I/O (r17, the round-16 verdict's ask 6): the
-      // merge kernel above scales both sides with n; THIS row scales
-      // only the STORED SNAPSHOT (n*256 keys) at a FIXED 64-key batch,
-      // with nBuckets sized so rows/bucket stay constant (keys/8192 —
-      // the deployment's "one bucket ≪ executor memory" knob). The
-      // 100 TB claim under test: a batch touching k of nBuckets buckets
-      // moves k/nBuckets of the snapshot, so at 10× the snapshot the
-      // batch still touches ≤64 constant-size buckets and the time and
-      // rewritten bytes read FLAT (obs = buckets touched, flat by
-      // construction; the touched FRACTION falls 10× — 64/156 → 64/1562
-      // at llmBase). The bootstrap write happens once in the warm pass
-      // (meta check skips it after); measured passes re-apply the same
-      // batch — a fixed point of the merge, so state never drifts.
-      // This row's first run MEASURED 3.0× and found two real defects:
-      // un-clustered writes landing nTasks files per bucket, and two
-      // recursive full-root listings per batch (cost grows with the
-      // whole snapshot) — fixed by bucket-clustered writes + reading
-      // ONLY the touched bucket dirs by constructed name. Measured
-      // r17 after the fix at sf0.1/10×: 1.0× time (1.74 s → 1.67 s,
-      // min of 2 decorrelated runs post meta-format fix — the schema
-      // line r17 added to the meta had made the exact-string check
-      // re-bootstrap every pass), obs 51 → 63 touched buckets (64-key
-      // birthday spread), spill 0.0 both scales; shuffle 15.0 →
-      // 20.4 MB tracks touched-bucket rows, never the snapshot.
-      ("cdc_sink_prune", () => {
-        val (dir, nBuckets, keys) = cdcSnapFixture(n)
-        val batch = spark.range(64).select(
-          pmod(xxhash64(col("id")), lit(keys)).as("k"),
-          concat(lit("u"), col("id")).as("name"),
-          lit(1.0).as("amt"),
-          (col("id") + 1L).as("version"),
-          lit("U").as("op"))
-        observe(batch
-          .select(pmod(xxhash64(col("k")), lit(nBuckets))).distinct().count())
-        graft.streaming.StreamOps.applyCdcBatch(batch, dir, Seq("k"),
-          "version", "op", nBuckets)
-      }),
-      // CDC point lookup (r18, the readKeys serving claim): latest
-      // state of a FIXED 64-key request against a 10×-growing snapshot
-      // + an 8-row un-applied tail — readKeys reads ≤|keys| bucket dirs
-      // by constructed name plus the tail, NEVER the snapshot, so the
-      // clock must stay ~flat while the store grows 10×; obs = rows
-      // served (distinct wanted keys present). The updates-only tail
-      // makes the measured pass a read-only fixed point of the shared
-      // fixture (cdc_sink_prune's applied batch does not change key
-      // presence either).
-      ("cdc_point_lookup", () => {
-        val (dir, _, keys) = cdcSnapFixture(n)
-        val wanted = spark.range(64).select(
-          pmod(xxhash64(col("id") + 7L), lit(keys)).as("k"))
-        val tail = spark.range(8).select(
-          pmod(xxhash64(col("id")), lit(keys)).as("k"),
-          concat(lit("t"), col("id")).as("name"),
-          lit(2.0).as("amt"), lit(999L).as("version"), lit("U").as("op"))
-        // agg-head sink consuming a payload column: count() would prune
-        // the payload read out of the probed scans (the r8/r15 rule)
-        observe(graft.streaming.StreamOps
-          .readKeys(spark, dir, wanted, tail, Seq("k"))
-          .agg(count(lit(1)).as("n"), sum(length(col("name"))).as("b"))
-          .head().getLong(0))
-      }),
-      // streaming-dedup batch (r17; index re-laid-out r18): a FIXED
-      // 64-doc batch against a 10×-growing corpus + stored signature
-      // index. r17 measured 1.9× (3.49 s → 6.50 s) with the per-batch
-      // FULL-index scan the only growing data term — the last
-      // linear-in-corpus cost, tens of GB per micro-batch at 100 TB.
-      // r18 bucketed the index on hash(band, sig) (two-tier LSM:
-      // per-batch writes land whole in the tail dir, bootstrap/compact
-      // land bucketed), so the probe reads touched buckets + tail —
-      // rows read per batch now ~CONSTANT in corpus size. Measured r18
-      // at sf0.1/10×: 1.5× time (4.5 s → 7.1 s, min-of-2 runs ×2
-      // sessions; the residual growth is O(#dirs) LISTING on the two
-      // stores — metadata, not data — and the corpus-side CDC listings
-      // that scale with its nBuckets by this fixture's sizing), shuffle
-      // FLAT 32.9 → 36.9 MB, spill 0.0 both scales. A first r18 cut
-      // that bucketed the PER-BATCH writes too paid one partition
-      // commit per touched bucket per batch — 3× the fixed per-batch
-      // cost (10.3 s base) for the same bytes; the tail tier is why
-      // batch writes stay one commit.
-      ("dedup_stream_batch", () => {
-        val m = n * 64
-        val nBuckets = math.max(4L, m / 4096L).toInt
-        // the r18 KV-approximation sizing rule: nIdxBuckets scales with
-        // the corpus so one bucket holds a CONSTANT ~8k signature rows —
-        // a fixed batch (512 sigs) then touches ≤512 buckets and reads
-        // ~constant bytes regardless of corpus size. A fixed nIdxBuckets
-        // would degenerate to the full-index scan the bucketing removes
-        // (512 sigs hash into all 64 default buckets).
-        val nIdxBuckets = math.max(64L, m / 1024L).toInt
-        val dir = s"$out/dedup_stream_$n"
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // memo gate checks BOTH stores' metas: a fixture left by a
-        // pre-r18 run has no idx meta (flat layout) and must
-        // re-bootstrap, not trip the layout guard
-        val idxMetaOk = storedMeta(Store.SignatureIndex.at(spark, s"$dir/idx"))
-          .exists(_.nIdxBuckets == nIdxBuckets)
-        if (storedMeta(Store.CdcSnapshot.at(spark, s"$dir/corp")).isEmpty
-            || !idxMetaOk) {
-          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-          graft.streaming.StreamOps.bootstrapDedup(synthDocs(m),
-            s"$dir/idx", s"$dir/corp", k = 2, bands = 8, rowsPerBand = 2,
-            nBuckets = nBuckets, nIdxBuckets = nIdxBuckets)
-        }
-        val dups = synthDocs(m).where(col("doc_id") < 32)
-          .select((col("doc_id") + m).as("doc_id"), col("text"))
-        val fresh = spark.range(32).select((col("id") + 10L * m).as("doc_id"),
-          concat(lit("qa"), col("id").cast("string"),
-            lit(" qb"), col("id").cast("string"),
-            lit(" qc"), col("id").cast("string")).as("text"))
-        graft.streaming.StreamOps.applyDedupBatch(
-          dups.unionByName(fresh), 0L, s"$dir/idx", s"$dir/corp",
-          k = 2, bands = 8, rowsPerBand = 2, threshold = 0.5,
-          nBuckets = nBuckets, idCol = "doc_id", textCol = "text",
-          poly = false, nIdxBuckets = nIdxBuckets)
-      }),
-      // the dedup-index TAIL pair (r19, the r18 verdict ask 2): the
-      // growth axis here is BATCHES SINCE THE LAST COMPACTION, not
-      // corpus size — every probe reads the whole tail tier, so an
-      // unbounded tail is the one per-batch term the two-tier layout
-      // left to operator cadence. Fixture: a FIXED 2048-doc bucketed
-      // base whose tail holds n/1000 per-batch fact partitions (5 at
-      // 1×, 50 at 10×; 4096 docs each — see dedupTailFixture for the
-      // sizing); the measured pass is ONE read-only probeDedup of a fixed
-      // 12-doc request (4 base dups / 4 tail dups / 4 fresh — obs = 8
-      // verified matches, pinning that tail content is actually
-      // served). dedup_tail_probe reads base buckets + the WHOLE tail
-      // (grows with n); dedup_tail_folded probes the SAME document set
-      // after the fold (everything bucketed, nIdxBuckets sized by the
-      // KV rule so rows/bucket stay constant) — must stay ~flat. The
-      // auto-fold bound (applyDedupBatch maxTailBatches) exists to keep
-      // a deployment on the folded curve. Measured r19 (sf0.1 machine,
-      // 10×, two decorrelated runs): folded 1.0×/1.2× and unfolded
-      // 0.8×/0.8× — BOTH flat on the sandbox clock, because the
-      // unfolded tail read (164k rows / 5 files → 1.64M rows / 50
-      // files per probe) parallelizes across cores faster than the
-      // per-file overhead accumulates at these sizes. The bounded
-      // quantity is the tail I/O itself, which grows 10× by
-      // construction and is corpus-fraction-sized at deployment scale;
-      // the wall-clock crossover sits above what this sandbox can
-      // hold on disk, so the row/file arithmetic is the record here.
-      // maintained-ANN serving probe (r19): a FIXED 8-query top-k
-      // request against a 10×-growing stored IVF-PQ index. The store's
-      // cell count follows the IVF KV rule (C = m/512, trained coarse
-      // centroids so assignment is balanced): rows per cell dir stay
-      // ~constant, so the probe — routed cell dirs + a 2-batch tail —
-      // must read ~constant bytes and stay ~flat while the index grows
-      // 10×. obs = Σ dist16 over the served top-k (consumes the scoring
-      // column: a bare count would let Catalyst prune the ADC join).
-      // Measured r19 (two decorrelated runs): 0.5×/0.6× at 10× —
-      // flat-or-better; the 10× side's more/smaller cell dirs spread
-      // the probed read across cores.
-      ("ann_probe_serve", () => {
-        val idx = annServeFixture(n)
-        observe(graft.streaming.StreamOps.probeAnn(
-            synthEmb(8).withColumnRenamed("vec_id", "qid"), idx,
-            k = 10, nprobe = 2)
-          .agg(sum(col("dist16"))).head().getLong(0))
-      }),
-      // the r20 allowIds liveness/metadata gate, measured on the same
-      // fixture: the allow frame is CORPUS-ID-sized (grows 10× with the
-      // index — the deployment shape: "serve only live ids"), below the
-      // Joins broadcast gate at both sandbox scales, so the added cost
-      // is one narrow count pass + a broadcast-build of the id set and
-      // the candidate-sized semi-join. Above 2^20 live ids the gate
-      // flips to shuffle_hash by design (documented degradation: the
-      // allow frame exchanges once per probe; deployments at that size
-      // pass a bounded or pre-materialized live set).
-      ("ann_probe_gated", () => {
-        val idx = annServeFixture(n)
-        val live = spark.range(n + 512).select(col("id").as("vec_id"))
-          .where(pmod(col("vec_id"), lit(3)) =!= 1)
-        observe(graft.streaming.StreamOps.probeAnn(
-            synthEmb(8).withColumnRenamed("vec_id", "qid"), idx,
-            k = 10, nprobe = 2, allowIds = Some(live))
-          .agg(sum(col("dist16"))).head().getLong(0))
-      }),
-      ("dedup_tail_probe", () => {
-        val (idx, corp, b) = dedupTailFixture(n, folded = false)
-        observe(probeTailRequest(idx, corp, b))
-      }),
-      ("dedup_tail_folded", () => {
-        val (idx, corp, b) = dedupTailFixture(n, folded = true)
-        observe(probeTailRequest(idx, corp, b))
-      }),
-      // GK quantile sketch build+merge: per-group summary aggregate
-      // (bounded buffers), 8 driver-merged partials, one rank query
-      ("quantile_sketch", () => {
-        val parts = spark.range(n * 3200).select(
-          pmod(col("id"), lit(8)).as("g"),
-          (pmod(xxhash64(col("id")), lit(100000)).cast("double") / 10.0)
-            .as("x"))
-          .groupBy("g")
-          .agg(graft.functions.QuantileSketch.agg(col("x")).as("sk"))
-          .collect()
-        require(parts.length <= 64, "bounded partial set")
-        val merged = parts.map(r => graft.functions.QuantileSketch
-          .fromBytes(r.getAs[Array[Byte]]("sk")))
-          .reduce(graft.functions.QuantileSketch.merge)
-        graft.functions.QuantileSketch.query(merged, 0.5).getOrElse(-1.0)
-      }),
-      // exact-percentile rank pass (r21): agg_quantile_merge's replay
-      // half (Aggs.discreteRankPass — histogram + one cumulative
-      // window). Near-unique doubles are the operator's WORST case (the
-      // histogram doesn't compress); the probe's spill column is the
-      // guide §5 receipt: the window's sort SPILLS gracefully where the
-      // shape it replaced — three percentile_disc buffers, each the
-      // whole column in ONE final-agg OpenHashMap — died with
-      // java.lang.OutOfMemoryError at this probe's 10x (measured r21,
-      // n*3200: the old shape OOM-killed the JVM, so it cannot live in
-      // this registry; the new one completed 8.8 s -> 31.8 s with
-      // 12.5 GB spill at the same scale)
-      ("quantile_rank_pass", () => {
-        val rows = n * 800
-        val df = spark.range(rows).select(
-          (pmod(xxhash64(col("id")), lit(10000000)).cast("double") / 10.0)
-            .as("x"))
-        val ests = Seq(250000.0, 500000.0, 900000.0)
-        val rks = Seq(2500L, 5000L, 9000L)
-          .map(q => (q * rows + 9999L) / 10000L)
-        graft.agg.Aggs.discreteRankPass(df, "x", ests, rks).getLong(0)
-      }),
-      // theta set sketch: per-source partial build (ONE groupBy pass
-      // over a growing corpus), pairwise intersections driver-side
-      // over kilobyte compacts — the set-algebra cost must stay flat
-      ("theta_overlap", () => {
-        val parts = spark.range(n * 1600).select(
-          concat(lit("s"), pmod(col("id"), lit(8))).as("source"),
-          concat(lit("k"), pmod(xxhash64(col("id")), lit(4000))).as("key"))
-          .groupBy("source")
-          .agg(graft.functions.ThetaSketch.agg(col("key")).as("sk"))
-          .collect()
-        require(parts.length <= 64, "bounded source set")
-        val sks = parts.map(r => graft.functions.ThetaSketch
-          .fromBytes(r.getAs[Array[Byte]]("sk")))
-        (for { i <- sks.indices; j <- (i + 1) until sks.length } yield
-          graft.functions.ThetaSketch.estimateLong(
-            graft.functions.ThetaSketch.intersect(sks(i), sks(j)))).sum
-      }),
-      // CMS build+merge: the distributed cost is the per-group sketch
-      // aggregate; the driver merge is 8 partials by construction
-      ("cms_merge", () => {
-        // n*3200: at n*400 the 1x base was 0.19 s (overhead floor)
-        val parts = spark.range(n * 3200).select(
-          pmod(col("id"), lit(8)).as("g"),
-          pmod(xxhash64(col("id")), lit(1000)).as("k"))
-          .groupBy("g")
-          .agg(expr("count_min_sketch(k, 0.001d, 0.99d, 42)").as("sk"))
-          .collect()
-        require(parts.length <= 64,
-          s"cms merge expects a bounded partial set, got ${parts.length}")
-        val merged = parts.map(r => org.apache.spark.util.sketch
-          .CountMinSketch.readFrom(r.getAs[Array[Byte]]("sk")))
-          .reduce { (a, b) => a.mergeInPlace(b); a }
-        merged.estimateCount(7L)
-      }))
-    val llmBase = 5000L
-
-    // Per-shape error isolation: one shape failing at factor× (the case
-    // the probe exists to find) must not abort the run and discard every
+    // Per-row error isolation: one row failing at factor× (the case the
+    // probe exists to find) must not abort the run and discard every
     // other measurement — record a -1 sentinel instead (Bench discipline).
     def timeSafe(f: () => Any): Double =
       try time(f()) catch {
         case e: Throwable =>
-          System.err.println(s"[scaleprobe] shape failed: ${e.getMessage}")
+          System.err.println(s"[scaleprobe] row failed: ${e.getMessage}")
           -1.0
       }
     def warmSafe(f: () => Any): Unit =
       try { f(); () } catch { case _: Throwable => () }
     // warm both paths once (JIT/codegen/parquet footers), then measure —
-    // TWICE per shape as two separated passes, keeping the min: a single
+    // TWICE per row as two separated passes, keeping the min: a single
     // contention spike in a one-shot measurement lands straight in the
     // printed ratio (the BENCH_r03 lesson; CLAUDE.md forbids single-shot)
-    // optional shape-name filter (args 3+): probe just the named shapes —
-    // iterating on one new operator must not pay the whole suite
-    val only = args.drop(2).toSet
-    val all: Seq[(String, () => Any, () => Any)] =
-      (shapes(base1x).zip(shapes(out)).map { case ((n, f1), (_, fN)) => (n, f1, fN) } ++
-        llmShapes(llmBase).zip(llmShapes(llmBase * factor))
-          .map { case ((n, f1), (_, fN)) => (n, f1, fN) })
-        .filter { case (n, _, _) => only.isEmpty || only.contains(n) }
     all.foreach { case (_, f1, fN) => warmSafe(f1); warmSafe(fN) }
-    // each measurement also captures the shape's executed shuffle-write
-    // and spill bytes (r12 verdict item 6: time ratios catch blow-ups
-    // but not memory-regime changes — a shape that starts spilling at
-    // 10× is a scale bug even if the clock still looks linear) plus the
-    // optional observable a shape reports via `observe` (CC round
-    // counts — an iterative operator's scale story is its convergence,
-    // not just its seconds)
+    // each measurement also captures the row's executed shuffle-write and
+    // spill bytes (time ratios catch blow-ups but not memory-regime
+    // changes — a row that starts spilling at 10× is a scale bug even if
+    // the clock still looks linear), the largest single-task stage input,
+    // and the optional observable a shape reports via `observe`
     val metrics = new ProbeMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     def measure(f: () => Any): Probe = {
       observed = -1L
       metrics.reset(spark)
       val t = timeSafe(f)
-      val (sh, sp) = metrics.snapshot(spark)
-      Probe(t, sh / 1e6, sp / 1e6, observed)
+      val (sh, sp, st) = metrics.snapshot(spark)
+      Probe(t, sh / 1e6, sp / 1e6, st, observed)
     }
     def pass(): Seq[(Probe, Probe)] =
       all.map { case (_, f1, fN) => (measure(f1), measure(fN)) }
@@ -1597,45 +253,57 @@ object ScaleProbe {
         s""","obs_base":${p1.obs},"obs_x$factor":${pN.obs}""" else ""
       f"""{"shape":"$n","base_sec":${p1.sec}%.2f,"x${factor}_sec":${pN.sec}%.2f,"ratio":$ratio%.1f,""" +
         f""""shuffle_mb_base":${p1.shuffleMb}%.1f,"shuffle_mb_x$factor":${pN.shuffleMb}%.1f,""" +
-        f""""spill_mb_base":${p1.spillMb}%.1f,"spill_mb_x$factor":${pN.spillMb}%.1f""" + obs + "}"
+        f""""spill_mb_base":${p1.spillMb}%.1f,"spill_mb_x$factor":${pN.spillMb}%.1f,""" +
+        s""""max_single_task_rows_base":${p1.singleTaskRows},""" +
+        s""""max_single_task_rows_x$factor":${pN.singleTaskRows}""" + obs + "}"
     }
     println(results.mkString("[", ",", "]"))
     spark.stop()
   }
 
   /** One timed invocation's record: seconds, executed shuffle-write MB,
-    * spilled MB (memory + disk), and the shape-reported observable
-    * (−1 = none). */
+    * spilled MB (memory + disk), the largest single-task stage input in
+    * records, and the shape-reported observable (−1 = none). */
   private final case class Probe(sec: Double, shuffleMb: Double,
-                                 spillMb: Double, obs: Long)
+                                 spillMb: Double, singleTaskRows: Long, obs: Long)
 
-  /** Shape-reported observable for the CURRENT invocation (e.g. the CC
-    * round count); reset by the harness before each measurement. */
+  /** Shape-reported observable for the CURRENT invocation (the CC round
+    * count); reset by the harness before each measurement. */
   @volatile private var observed: Long = -1L
   private def observe(n: Long): Unit = observed = n
 
   /** Sums executed task metrics between resets — shuffle bytes written
-    * and bytes spilled — so every probe row carries the memory-regime
-    * columns alongside the clock. */
+    * and bytes spilled — and keeps the largest input-plus-shuffle-read
+    * record count of any stage that ran exactly one task (the north-star
+    * rule: no single-task stage holds corpus-sized data). */
   private final class ProbeMetricsListener
       extends org.apache.spark.scheduler.SparkListener {
     private val shuffle = new java.util.concurrent.atomic.LongAdder
     private val spill = new java.util.concurrent.atomic.LongAdder
+    private val stageRows = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]
+    private val singleTaskRows = new java.util.concurrent.atomic.AtomicLong
     override def onTaskEnd(
         t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
       if (m != null) {
         shuffle.add(m.shuffleWriteMetrics.bytesWritten)
         spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
+        stageRows.merge(t.stageId,
+          m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead, (a, b) => a + b)
       }
+    }
+    override def onStageCompleted(
+        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val rows = Option(stageRows.remove(s.stageInfo.stageId)).fold(0L)(_.longValue)
+      if (s.stageInfo.numTasks == 1) singleTaskRows.accumulateAndGet(rows, (a, b) => math.max(a, b))
     }
     def reset(spark: SparkSession): Unit = {
       org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      shuffle.reset(); spill.reset()
+      shuffle.reset(); spill.reset(); singleTaskRows.set(0L)
     }
-    def snapshot(spark: SparkSession): (Long, Long) = {
+    def snapshot(spark: SparkSession): (Long, Long, Long) = {
       org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      (shuffle.sum(), spill.sum())
+      (shuffle.sum(), spill.sum(), singleTaskRows.get())
     }
   }
 }

@@ -83,9 +83,9 @@ object Components {
     pairComponentsWithRounds(pairs, aCol, bCol, idCol, maxIter, inputIsCut)._1
 
   /** [[pairComponents]] plus the number of label-propagation rounds the
-    * closure took — the convergence observable `graft.ScaleProbe`
-    * reports at 10× (round count, not just time, is the scale story of
-    * an iterative operator). */
+    * closure took — the convergence observable the kept `cc_rounds`
+    * shape of `graft.ScaleProbe` reports at 1× and N× (round count, not
+    * just time, is the scale story of an iterative operator). */
   def pairComponentsWithRounds(pairs: DataFrame,
                                aCol: String = "a", bCol: String = "b",
                                idCol: String = "doc_id",

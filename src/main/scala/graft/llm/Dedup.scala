@@ -1187,7 +1187,8 @@ object Dedup {
     * Sizing at scale: an unrelated pair collides on a table with prob
     * ≈ 2^-bitsPerTable, so expected bucket sizes stay O(1) only while
     * `bitsPerTable ≳ log2(n)` — grow the signature with the corpus (and
-    * add tables to buy recall back); ScaleProbe measures this regime.
+    * add tables to buy recall back). Its registry face,
+    * `llm_dedup_embed`, reads a fixed 500-vector prefix at any scale.
     * The default (`bitsPerTable = 0` = auto) applies that rule for you:
     * `clamp(ceil(log2(count)), 4, 24)` from a cheap corpus count (a
     * count-star — parquet answers it from footers), so scaling the corpus
@@ -1418,8 +1419,8 @@ object Dedup {
     * O(k · min(n/k, maxCluster)²). Size k ≈ n/maxCluster so clusters sit
     * near the cap; past n ≈ k·maxCluster the cap engages and RECALL
     * degrades (pairs beyond the cap's smallest-id window are skipped)
-    * while cost stays bounded — measured in ScaleProbe's `semdedup`
-    * shape. Growing k with the corpus instead compounds train and pair
+    * while cost stays bounded (`llm_semdedup` is the registry face).
+    * Growing k with the corpus instead compounds train and pair
     * cost superlinearly (a measured 14× at 10× data); at that scale,
     * train the codebook on a fixed-size SAMPLE of the corpus and keep k
     * at the cap. */

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions.broadcast
   * [[TextStats.backoffScore]] broadcast its trigram count table
   * unconditionally. On a closed 500-word fixture vocabulary that table
   * is tens of KB; on natural text the distinct-trigram count grows
-  * near-linearly with the corpus (Heaps' law — the 10× ScaleProbe
-  * fixture already produced a ~7M-row, corpus-sized table), and at
+  * near-linearly with the corpus (Heaps' law — on a 10× random-text
+  * corpus the table `llm_backoff_score` builds was already a ~7M-row,
+  * corpus-sized one), and at
   * 100 TB an unconditional `broadcast()` of it OOMs every executor.
   *
   * Why not just drop the hint and let the planner decide? Because every

@@ -4543,8 +4543,8 @@ object LlmQueries {
     // two batches must answer exactly like an inline index over
     // everything ingested — the defining parity of a maintained index.
     // Probe cost at scale: routed cell dirs + the bounded tail, never
-    // the index (AnnStreamSpec pins fold/ownership/replay; the
-    // ann_probe_serve ScaleProbe row measures the probe flat at 10×).
+    // the index (AnnStreamSpec pins fold/ownership/replay; this query's
+    // ScaleProbe row times the whole lifecycle, bootstrap included).
     Q("llm_ann_probe", annProbeSql) { (spark, sf) =>
       import graft.streaming.StreamOps
       // one materialization feeds bootstrap, both planted batches, and

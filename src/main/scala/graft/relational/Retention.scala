@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * `bucketDays` window, how many of them were active again — the
   * retention matrix every growth dashboard renders.
   *
-  * Shape for 100 TB (redesigned r15 — the ScaleProbe caught the first
-  * cut spilling 2.4 GB at 10×): the original one-exchange
+  * Shape for 100 TB (redesigned r15 — a 10× scale probe of
+  * `op_retention`'s operator caught the first cut spilling 2.4 GB): the
+  * original one-exchange
   * `collect_set` formulation plans as ObjectHashAggregate, which
   * falls back to SORT-BASED aggregation past the per-partition
   * key threshold — so at scale the whole raw event stream was being
