@@ -26,7 +26,7 @@ object SparkEntry {
     * smoke-checks rows > 0 on sf0.001.
     */
   def entry(spark: SparkSession): DataFrame =
-    graft.agg.Ql(spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"))
+    graft.agg.Ql(graft.model.Tables.lineitem(spark, "/root/testdata/sf0.001"))
       .where(col("l_shipdate") <= lit("1998-09-01"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .aggregate(

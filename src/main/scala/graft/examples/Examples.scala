@@ -737,7 +737,7 @@ object Examples {
     // 43. round-16 additions — a changelog STREAM maintaining a bucketed
     // snapshot (out-of-order micro-batches, tombstone GC), and the
     // outlink graph's connected components closed incrementally
-    val snapDir = java.nio.file.Files.createTempDirectory("ex_cdc").toString
+    val snapDir = graft.queries.Q.createTempDirectory("ex_cdc")
     graft.streaming.StreamOps.writeCdcSnapshot(
       graft.relational.Cdc.bootstrap(ordBase, Seq("o_orderkey")),
       snapDir, Seq("o_orderkey"), nBuckets = 8)
@@ -782,7 +782,7 @@ object Examples {
     {
       import graft.streaming.StreamOps
       import graft.relational.Cdc
-      val dir44 = java.nio.file.Files.createTempDirectory("ex44").toString
+      val dir44 = graft.queries.Q.createTempDirectory("ex44")
       val base44 = Seq((1L, "alice", 10.0), (2L, "bob", 20.0))
         .toDF("k", "name", "amt")
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base44, Seq("k")),
@@ -821,7 +821,7 @@ object Examples {
     {
       import graft.streaming.StreamOps
       import graft.relational.Cdc
-      val dir45 = java.nio.file.Files.createTempDirectory("ex45").toString
+      val dir45 = graft.queries.Q.createTempDirectory("ex45")
       val prev = Seq((1L, "alice", 10.0), (2L, "bob", 20.0), (3L, "eve", 30.0))
         .toDF("k", "name", "amt")
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(prev, Seq("k")),
@@ -853,7 +853,7 @@ object Examples {
     // again (same answers); and the retention window GC'd explicitly
     {
       import graft.streaming.StreamOps
-      val dir46 = java.nio.file.Files.createTempDirectory("ex46").toString
+      val dir46 = graft.queries.Q.createTempDirectory("ex46")
       val vecs46 = (0 until 24).map(i => (i.toLong,
           (0 until 8).map(j => ((i * 7 + j * 3) % 17 - 8) / 8.0f)))
         .toDF("vec_id", "embedding")
@@ -899,7 +899,7 @@ object Examples {
     // re-rank: top-R ADC candidates re-scored on their raw vectors
     {
       import graft.streaming.StreamOps
-      val dir47 = java.nio.file.Files.createTempDirectory("ex47").toString
+      val dir47 = graft.queries.Q.createTempDirectory("ex47")
       val vecs47 = (0 until 24).map(i => (i.toLong,
           (0 until 8).map(j => ((i * 7 + j * 3) % 17 - 8) / 8.0f)))
         .toDF("vec_id", "embedding")

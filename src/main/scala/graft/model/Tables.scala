@@ -35,11 +35,14 @@ final case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
 
 /** Canonical scans. Every `SparkEntry.queries` fn receives `(spark, sfDir)`
   * and must stand alone; these helpers keep scans lazy so Catalyst pushes
-  * filters/column pruning into the parquet reader (SURVEY §4.2).
+  * filters/column pruning into the parquet reader (SURVEY §4.2). Each
+  * read goes through [[graft.sources.Sources.parquet]], which takes the
+  * schema from the file's footer on the driver: building a frame starts
+  * no Spark job.
   */
 object Tables {
   def df(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.Sources.parquet(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = df(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = df(spark, sfDir, "nation")

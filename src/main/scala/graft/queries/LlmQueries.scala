@@ -998,7 +998,7 @@ object LlmQueries {
         .localCheckpoint(false) // two waves filter ONE planted frame
       val wave1 = weighted.where(!col("dst_host").startsWith("bridge-"))
       val wave2 = weighted.where(col("dst_host").startsWith("bridge-"))
-      val dir = java.nio.file.Files.createTempDirectory("canon_q").toString
+      val dir = Q.createTempDirectory("canon_q")
       val labels = dir + "/labels"; val canon = dir + "/canon"
       StreamOps.applyCanonBatch(wave1, 0L, labels, canon, "q",
         "src", "dst_host", "n_links", nBuckets = 16, maxNodes = 1L << 20)
@@ -1512,8 +1512,7 @@ object LlmQueries {
             concat(lit("qa"), col("doc_id").cast("string"),
               lit(" qb"), col("doc_id").cast("string"),
               lit(" qc"), col("doc_id").cast("string")).as("text")))
-      val dir = java.nio.file.Files
-        .createTempDirectory("dedup_stream_q").toString
+      val dir = Q.createTempDirectory("dedup_stream_q")
       // nIdxBuckets sized to the FIXTURE corpus per the r18 sizing rule
       // (buckets hold ~constant rows): the 64-bucket default on a tiny
       // corpus pays 64 dirs of probe/commit overhead for no pruning
@@ -1595,8 +1594,7 @@ object LlmQueries {
           .as("c"))
         .where(col("c").isNotNull)
         .select(col("c.*"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("dedup_probe_q").toString
+      val dir = Q.createTempDirectory("dedup_probe_q")
       StreamOps.bootstrapDedup(corpus, s"$dir/idx", s"$dir/corp",
         k = 2, bands = 8, rowsPerBand = 2, nBuckets = 16, poly = true,
         nIdxBuckets = 8)
@@ -4550,8 +4548,7 @@ object LlmQueries {
       // one materialization feeds bootstrap, both planted batches, and
       // the query set — uncut, each consumer re-scans the parquet
       val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
-      val dir = java.nio.file.Files
-        .createTempDirectory("ann_probe_q").toString + "/ann"
+      val dir = Q.createTempDirectory("ann_probe_q") + "/ann"
       StreamOps.bootstrapAnn(emb, dir, clusterCodebook, pqCodebooks)
       StreamOps.applyAnnBatch(
         emb.where(pmod(col("vec_id"), lit(7)) === 0)
@@ -4582,8 +4579,7 @@ object LlmQueries {
     Q("llm_ann_probe_filtered", annProbeFilteredSql) { (spark, sf) =>
       import graft.streaming.StreamOps
       val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
-      val dir = java.nio.file.Files
-        .createTempDirectory("ann_probe_f_q").toString + "/ann"
+      val dir = Q.createTempDirectory("ann_probe_f_q") + "/ann"
       StreamOps.bootstrapAnn(emb, dir, clusterCodebook, pqCodebooks)
       StreamOps.applyAnnBatch(
         emb.where(pmod(col("vec_id"), lit(7)) === 0)

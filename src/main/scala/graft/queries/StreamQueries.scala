@@ -185,8 +185,7 @@ object StreamQueries {
       val changes = rawChanges.localCheckpoint(false)
       val applied = changes.where(col("version") === 2L) // sink got these
       val tail = changes.where(col("version") === 1L)    // un-applied tail
-      val snap = java.nio.file.Files
-        .createTempDirectory("cdc_mor_q").toString + "/snap"
+      val snap = Q.createTempDirectory("cdc_mor_q") + "/snap"
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("o_orderkey")),
         snap, Seq("o_orderkey"), nBuckets = 16)
       StreamOps.applyCdcBatch(applied, snap, Seq("o_orderkey"),
@@ -217,8 +216,7 @@ object StreamQueries {
       import graft.relational.Cdc
       val (base, rawChanges) = CdcFixture.baseAndChanges(spark, sf)
       val changes = rawChanges.localCheckpoint(false)
-      val snap = java.nio.file.Files
-        .createTempDirectory("cdc_asof_q").toString + "/snap"
+      val snap = Q.createTempDirectory("cdc_asof_q") + "/snap"
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("o_orderkey")),
         snap, Seq("o_orderkey"), nBuckets = 16)
       val (retained, _) = StreamOps.retainSnapshot(spark, snap)
@@ -247,8 +245,7 @@ object StreamQueries {
       val changes = rawChanges.localCheckpoint(false)
       val applied = changes.where(col("version") === 2L)
       val tail = changes.where(col("version") === 1L)
-      val snap = java.nio.file.Files
-        .createTempDirectory("cdc_keys_q").toString + "/snap"
+      val snap = Q.createTempDirectory("cdc_keys_q") + "/snap"
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("o_orderkey")),
         snap, Seq("o_orderkey"), nBuckets = 16)
       StreamOps.applyCdcBatch(applied, snap, Seq("o_orderkey"),
@@ -276,8 +273,7 @@ object StreamQueries {
       val changes = rawChanges.localCheckpoint(false)
       val applied = changes.where(col("version") === 2L)
       val tail = changes.where(col("version") === 1L)
-      val snap = java.nio.file.Files
-        .createTempDirectory("cdc_evolve_q").toString + "/snap"
+      val snap = Q.createTempDirectory("cdc_evolve_q") + "/snap"
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("o_orderkey")),
         snap, Seq("o_orderkey"), nBuckets = 16)
       StreamOps.evolveCdcSnapshot(spark, snap,

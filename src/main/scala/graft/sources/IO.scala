@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.streaming.DataStreamReader
 import org.apache.spark.sql.types.StructType
 
@@ -12,8 +13,15 @@ import org.apache.spark.sql.types.StructType
   * wrap the same way.
   */
 object Sources {
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The one parquet reader. The schema comes from one footer read on
+    * the driver ([[GraftFooterSchema]]), so building the frame starts no
+    * Spark job; the scan itself stays lazy. A path with no parquet file
+    * to read (missing, empty) is left to Spark's own read, which fails
+    * the way it always has. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val r = spark.read
+    GraftFooterSchema.read(spark, path).fold(r)(r.schema).parquet(path)
+  }
 
   def csv(spark: SparkSession, path: String, header: Boolean = true,
           schema: Option[StructType] = None): DataFrame = {

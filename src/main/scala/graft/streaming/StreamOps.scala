@@ -1310,11 +1310,23 @@ object StreamOps {
   }
 
   /** The FULL stored index (compaction/GC path — per-batch probes read
-    * touched buckets only), partition columns stripped. */
+    * touched buckets only) under its meta's sig-row schema, as
+    * [[readTouchedIndex]] reads the touched dirs: no schema-inference
+    * job. Partition columns stripped. */
   private def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
+                             indexPath: String, meta: IdxMeta): DataFrame =
+    spark.read.schema(withIdxPartitions(meta.schema)).parquet(indexPath)
       .drop(DedupIdxBucketCol, DedupWriterCol, DedupBatchCol)
+
+  /** A stored index file's read schema: the sig rows plus the bucket,
+    * writer and batch partition columns. */
+  private def withIdxPartitions(sigSchema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    sigSchema.add(DedupIdxBucketCol, IntegerType)
+      .add(DedupWriterCol, StringType)
+      .add(DedupBatchCol, LongType)
+  }
 
   /** The probe-side index read shared by [[applyDedupBatch]] and
     * [[probeDedup]]: verify the stored layout against the configured
@@ -1393,16 +1405,12 @@ object StreamOps {
           .filter(idxDirs.contains).map(d => s"$indexPath/$d")
         if (touchedDirs.isEmpty) None
         else {
-          import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
           val sigSchema = idxMeta.map(_.schema).getOrElse(
             spark.read.parquet(touchedDirs.head).schema
               .filter(f => !f.name.startsWith("__dedup_"))
               .foldLeft(new org.apache.spark.sql.types.StructType)(_ add _))
           Some(spark.read.option("basePath", indexPath)
-            .schema(sigSchema
-              .add(DedupIdxBucketCol, IntegerType)
-              .add(DedupWriterCol, StringType)
-              .add(DedupBatchCol, LongType))
+            .schema(withIdxPartitions(sigSchema))
             .parquet(touchedDirs.toIndexedSeq: _*)
             .drop(DedupIdxBucketCol, DedupWriterCol, DedupBatchCol))
         }
@@ -1845,7 +1853,7 @@ object StreamOps {
     val (meta, _, folded) = idx.beginFold(asWriter, "compactDedupIndex",
       "compact an index written by this engine (a pre-r18 flat index " +
         "has none; rebuild via bootstrapDedup)")
-    val all = readDedupIndex(spark, indexPath)
+    val all = readDedupIndex(spark, indexPath, meta)
     val idCol = all.columns.filterNot(Seq("band", "sig").contains).head
     val kept = corpusPath.fold(all) { cp =>
       all.join(readDedupCorpus(spark, cp).select(idCol), Seq(idCol), "left_semi")
