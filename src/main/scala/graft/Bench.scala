@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-contract benchmark: wall-clock `count()` per declared query
   * (the metric BASELINE was measured with — see BASELINE.md). count()
   * lets Catalyst prune final projections/sorts, so this measures the
@@ -48,15 +48,10 @@ object Bench {
     // runs of every query it overlapped — the whole stream block recorded
     // 4-15x). The two samples now come from two separate full passes over
     // the sorted suite, so each query's samples are the full suite apart.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
     // each run in its own try: a failure in one pass must not discard a
     // valid measurement from the other; -1 only when BOTH fail
-    def timeSafe(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
-      try Some(timeOnce(fn)) catch { case _: Throwable => None }
+    def timeSafe(fn: (SparkSession, String) => DataFrame): Option[Double] =
+      try Some(timeOnce(spark, sfDir, fn)) catch { case _: Throwable => None }
     // the engine-lane instrument (r18 BASELINE.md lane decision):
     // declared-price faces — in-query disk lifecycles and exact
     // contract replays, ~30 % of the unified total at r18 — can be
@@ -152,6 +147,14 @@ object Bench {
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
     spark.stop()
+  }
+
+  /** Seconds to build and `count()` one query: the driver's sink. */
+  def timeOnce(spark: SparkSession, sfDir: String,
+               fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).count()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** The compact `total` line, the record a tail-bounded reader parses:

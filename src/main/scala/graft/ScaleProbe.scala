@@ -229,17 +229,13 @@ object ScaleProbe {
     // changes — a row that starts spilling at 10× is a scale bug even if
     // the clock still looks linear), the largest single-task stage input,
     // and the optional observable a shape reports via `observe`
-    val metrics = new ProbeMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    def measure(f: () => Any): Probe = {
+    def probe(f: () => Any): Probe = {
       observed = -1L
-      metrics.reset(spark)
-      val t = timeSafe(f)
-      val (sh, sp, st) = metrics.snapshot(spark)
-      Probe(t, sh / 1e6, sp / 1e6, st, observed)
+      val (t, run) = graft.obs.QueryProfile.measure(spark)(timeSafe(f))
+      Probe(t, run.shuffleBytes / 1e6, run.spillBytes / 1e6, run.maxSingleTaskRows, observed)
     }
     def pass(): Seq[(Probe, Probe)] =
-      all.map { case (_, f1, fN) => (measure(f1), measure(fN)) }
+      all.map { case (_, f1, fN) => (probe(f1), probe(fN)) }
     val (pa, pb) = (pass(), pass())
     // per side keep the faster run's WHOLE record — mixing the min time
     // with the other run's bytes would fabricate a measurement
@@ -271,39 +267,4 @@ object ScaleProbe {
     * count); reset by the harness before each measurement. */
   @volatile private var observed: Long = -1L
   private def observe(n: Long): Unit = observed = n
-
-  /** Sums executed task metrics between resets — shuffle bytes written
-    * and bytes spilled — and keeps the largest input-plus-shuffle-read
-    * record count of any stage that ran exactly one task (the north-star
-    * rule: no single-task stage holds corpus-sized data). */
-  private final class ProbeMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val shuffle = new java.util.concurrent.atomic.LongAdder
-    private val spill = new java.util.concurrent.atomic.LongAdder
-    private val stageRows = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]
-    private val singleTaskRows = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffle.add(m.shuffleWriteMetrics.bytesWritten)
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        stageRows.merge(t.stageId,
-          m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead, (a, b) => a + b)
-      }
-    }
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val rows = Option(stageRows.remove(s.stageInfo.stageId)).fold(0L)(_.longValue)
-      if (s.stageInfo.numTasks == 1) singleTaskRows.accumulateAndGet(rows, (a, b) => math.max(a, b))
-    }
-    def reset(spark: SparkSession): Unit = {
-      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      shuffle.reset(); spill.reset(); singleTaskRows.set(0L)
-    }
-    def snapshot(spark: SparkSession): (Long, Long, Long) = {
-      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      (shuffle.sum(), spill.sum(), singleTaskRows.get())
-    }
-  }
 }

@@ -44,35 +44,44 @@ class SparkEntrySpec extends SparkSpec {
     // the engine-lane number. Source-level heuristic: scan the query
     // registry sources; each createTempDirectory occurrence inside a
     // Q("name", ...) block must belong to a registered lifecycle face.
-    val qDef = """Q(?:\.noOracle)?\(\s*"([a-z0-9_]+)"""".r
-    val files = new java.io.File("src/main/scala/graft/queries")
-      .listFiles().filter(_.getName.endsWith(".scala"))
-    files should not be empty
-    val offenders = files.toSeq.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val defs = qDef.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
-      var at = src.indexOf("createTempDirectory")
-      val hits = scala.collection.mutable.ListBuffer[String]()
-      while (at >= 0) {
-        defs.filter(_._1 < at).sortBy(_._1).lastOption.foreach {
-          case (_, name) => hits += name
-        }
-        at = src.indexOf("createTempDirectory", at + 1)
-      }
-      hits.distinct.filterNot(graft.queries.Q.lifecycleFaces.contains)
-        .map(n => s"${f.getName}: $n")
-    }
+    val faces = tempDirFaces(querySources)
+    val offenders = faces
+      .filterNot { case (_, name) => graft.queries.Q.lifecycleFaces.contains(name) }
+      .map { case (file, name) => s"$file: $name" }
     withClue("temp-dir lifecycle queries missing from Q.lifecycleFaces:\n" +
       offenders.mkString("\n")) { offenders shouldBe empty }
-    // the heuristic itself stays live: at least one registered face is
-    // found by it (an API rename would silently blind the gate)
-    val found = files.toSeq.exists { f =>
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .contains("createTempDirectory")
+    // the heuristic itself stays live: at least one call is attributed to
+    // a Q block (a hit anywhere else, such as the helper's own body in
+    // Q.scala, would pass while the gate finds no face at all)
+    faces should not be empty
+  }
+
+  test("the temp-dir lifecycle gate reports itself blind when the helper is renamed") {
+    val (file, src) = querySources.find(_._1 == "StreamQueries.scala").get
+    tempDirFaces(Seq(file -> src)) should not be empty
+    tempDirFaces(Seq(file -> src.replace("createTempDirectory", "storeDir"))) shouldBe empty
+  }
+
+  /** The registry sources the lifecycle gate scans, as (file name, text). */
+  private def querySources: Seq[(String, String)] = {
+    val files = new java.io.File("src/main/scala/graft/queries")
+      .listFiles().filter(_.getName.endsWith(".scala")).toSeq
+    files should not be empty
+    files.map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Each `createTempDirectory` call inside a `Q("name", …)` block, as
+    * (file name, query name); a call before the file's first block is
+    * attributed to no query. */
+  private def tempDirFaces(sources: Seq[(String, String)]): Seq[(String, String)] = {
+    val qDef = """Q(?:\.noOracle)?\(\s*"([a-z0-9_]+)"""".r
+    sources.flatMap { case (file, src) =>
+      val defs = qDef.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
+      "createTempDirectory".r.findAllMatchIn(src).flatMap { hit =>
+        defs.takeWhile(_._1 < hit.start).lastOption.map(d => file -> d._2)
+      }.toSeq.distinct
     }
-    found shouldBe true
   }
 
   test("declared queries run and are non-empty on sf0.001") {

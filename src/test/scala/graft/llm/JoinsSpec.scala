@@ -38,14 +38,7 @@ class JoinsSpec extends SparkSpec {
     // fitsBroadcast counts via toRdd over the cut — a df.count() here
     // would execute a SinglePartition exchange and every call site
     // would owe +1 on its executed-shuffle ratchet
-    val counter = new graft.plans.DistinctRddListener(
-      Set("ShuffledRowRDD", "ShuffledRDD"))
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      counter.reset()
-      Joins.fitsBroadcast(table(1000))
-      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      counter.countOf("ShuffledRowRDD", "ShuffledRDD") shouldBe 0
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (_, run) = graft.obs.QueryProfile.measure(spark)(Joins.fitsBroadcast(table(1000)))
+    run.shuffles shouldBe 0
   }
 }

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.model.Tables
+import graft.obs.QueryProfile
 import org.apache.spark.sql.functions._
 
 /** The hardNegatives checkpoint-cut contract as a listener gate, not a
@@ -22,28 +23,23 @@ class HardNegativesCutSpec extends SparkSpec {
   assume(new java.io.File(sfDir).isDirectory, s"fixture dir $sfDir missing")
 
   test("three cuts hold under caller-derived positives: 3 executed scans") {
-    val counter = new DistinctRddListener(Set("FileScanRDD"))
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      // every input shares the embeddings parquet lineage — the shape
-      // that regressed to 4 scans before posCut existed
-      val emb = Tables.embeddings(spark, sfDir)
-        .where(col("embedding").isNotNull && col("vec_id") < 200)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding"))
-      val queries = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-        .select((col("vec_id") + 100000L).as("qid"), col("embedding"))
-      val positives = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-        .select((col("vec_id") + 100000L).as("qid"), col("vec_id"))
-      counter.reset()
+    // every input shares the embeddings parquet lineage — the shape
+    // that regressed to 4 scans before posCut existed
+    val emb = Tables.embeddings(spark, sfDir)
+      .where(col("embedding").isNotNull && col("vec_id") < 200)
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+    val queries = emb.where(pmod(col("vec_id"), lit(7)) === 0)
+      .select((col("vec_id") + 100000L).as("qid"), col("embedding"))
+    val positives = emb.where(pmod(col("vec_id"), lit(7)) === 0)
+      .select((col("vec_id") + 100000L).as("qid"), col("vec_id"))
+    val (_, run) = QueryProfile.measure(spark) {
       graft.llm.Similarity.hardNegatives(queries, emb, positives,
           k = 3, numTables = 4, bits = 4)
         .write.format("noop").mode("overwrite").save()
-      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-      val scans = counter.countOf("FileScanRDD")
-      withClue(s"$scans executed scans (ratchet 3): ") {
-        scans should be <= 3
-      }
-    } finally spark.sparkContext.removeSparkListener(counter)
+    }
+    withClue(s"${run.scans} executed scans (ratchet 3): ") {
+      run.scans should be <= 3
+    }
   }
 }

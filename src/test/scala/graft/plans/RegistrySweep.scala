@@ -4,10 +4,10 @@ import scala.util.Try
 
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias, Window}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.obs.QueryProfile
 import graft.queries.{ExchangeBudgets, ScanBudgets, WindowBudgets}
 
 /** One pass over the declared-query registry at sf0.001, shared by the
@@ -21,10 +21,10 @@ import graft.queries.{ExchangeBudgets, ScanBudgets, WindowBudgets}
   *     subqueries included;
   *   - for oracle-gated queries, the output schema and the top operator
   *     of the analyzed plan;
-  *   - the executed shuffle and scan counts of a noop-sink write, under a
-  *     [[DistinctRddListener]] reset BEFORE the frame is built, so a
-  *     builder's eager jobs (trainers, bloom filters, codebooks) count
-  *     as part of the query's cost.
+  *   - the executed shuffle, scan and job counts of a noop-sink write,
+  *     under one [[QueryProfile.measure]] that starts BEFORE the frame is
+  *     built, so a builder's eager jobs (trainers, bloom filters,
+  *     codebooks) count as part of the query's cost.
   *
   * The plan facts are read before the write, and reading them runs no
   * job. The result is memoized: the gates that follow only assert over
@@ -41,6 +41,7 @@ object RegistrySweep {
       windows: Int,
       shuffles: Int,
       scans: Int,
+      jobs: Int,
       schema: Option[StructType],
       top: Option[String],
       rows: Option[Long])
@@ -55,31 +56,26 @@ object RegistrySweep {
 
   lazy val facts: Try[Map[String, Facts]] = Try {
     val spark = SparkSpec.spark
-    val counter = new DistinctRddListener(
-      Set("ShuffledRowRDD", "ShuffledRDD", "FileScanRDD"))
-    spark.sparkContext.addSparkListener(counter)
-    try graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      counter.reset()
-      val df = fn(spark, sfDir)
-      val qe = df.queryExecution
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val ((df, planScans, windows), run) = QueryProfile.measure(spark) {
+        val df = fn(spark, sfDir)
+        val qe = df.queryExecution
+        val planScans = scansPerTable(qe.explainString(FormattedMode))
+        val windows = qe.optimizedPlan.collectWithSubqueries {
+          case w: Window if w.partitionSpec.forall(_.foldable) => w
+        }.size
+        df.write.format("noop").mode("overwrite").save()
+        (df, planScans, windows)
+      }
       val gated = graft.SparkEntry.oracleSql.contains(name)
-      val planScans = scansPerTable(qe.explainString(FormattedMode))
-      val windows = qe.optimizedPlan.collectWithSubqueries {
-        case w: Window if w.partitionSpec.forall(_.foldable) => w
-      }.size
       val schema = Option.when(gated)(df.schema)
-      val top = Option.when(gated)(stripTop(qe.analyzed) match {
+      val top = Option.when(gated)(stripTop(df.queryExecution.analyzed) match {
         case s: Sort if s.global => GlobalSort
         case other               => other.nodeName
       })
-      df.write.format("noop").mode("overwrite").save()
-      ColumnBridge.waitListenerBus(spark)
-      val shuffles = counter.countOf("ShuffledRowRDD", "ShuffledRDD")
-      val scans = counter.countOf("FileScanRDD")
       val rows = Option.when(singleRow(name))(df.count())
-      name -> Facts(planScans, windows, shuffles, scans, schema, top, rows)
+      name -> Facts(planScans, windows, run.shuffles, run.scans, run.jobs, schema, top, rows)
     }.toMap
-    finally spark.sparkContext.removeSparkListener(counter)
   }
 
   // "(12) Scan parquet" then attribute lines, one of which is
@@ -169,7 +165,7 @@ class ExchangeBudgetSpec extends RegistrySweepSpec {
     noFailures(sweep.flatMap { case (name, f) =>
       val bSh = ExchangeBudgets.budget(name)
       val bSc = ScanBudgets.executedBudget(name)
-      info(s"$name: ${f.shuffles} executed shuffles (budget $bSh), ${f.scans} executed scans (budget $bSc)")
+      info(s"$name: ${f.shuffles} executed shuffles (budget $bSh), ${f.scans} executed scans (budget $bSc), ${f.jobs} jobs")
       (if (f.shuffles > bSh) List(s"$name: ${f.shuffles} executed shuffles > budget $bSh") else Nil) ++
         (if (f.scans > bSc) List(s"$name: ${f.scans} executed scans > budget $bSc") else Nil)
     })

@@ -1,15 +1,13 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
 import graft.model.Tables
+import graft.obs.QueryProfile
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit, pmod}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** [[Sources.parquet]], the one parquet reader: its schema, read from
   * one footer on the driver, equals Spark's inference, and building a
@@ -31,17 +29,7 @@ class SourcesSpec extends SparkSpec {
     try body(dir.toString) finally FileUtils.deleteQuietly(dir.toFile)
   }
 
-  /** The jobs `body` starts, counted once the listener bus has drained. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ColumnBridge.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ColumnBridge.waitListenerBus(spark); jobs.get }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsStartedBy(body: => Unit): Int = QueryProfile.measure(spark)(body)._2.jobs
 
   private val readers: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "region" -> Tables.region _, "nation" -> Tables.nation _,

@@ -205,25 +205,14 @@ class AnnStreamSpec extends SparkSpec {
     val w = StreamOps.writerIdFor("/ckpt/fc")
     ap(dir, vecs(100 until 102), 0L, writer = w) // 2 ids = 8 tail rows
     val indexRows = 42L * 4L // base 160 + tail 8
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      StreamOps.compactAnnIndex(spark, dir, ownerCheckpoint = Some("/ckpt/fc"))
-      org.apache.spark.sql.graftbridge.ColumnBridge.waitListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, run) = graft.obs.QueryProfile.measure(spark)(
+      StreamOps.compactAnnIndex(spark, dir, ownerCheckpoint = Some("/ckpt/fc")))
     // the r19 shape windowed the WHOLE store per fold (~2x index rows
     // through exchanges: full window + clustered write); the r20 split
     // shuffles the clustered write (index-sized, inherent to the
     // rewrite) + the tail-sized window ONLY. Bound well under 2x.
-    records.get() should be <= (indexRows + 8L * 4L)
-    records.get() should be >= indexRows // the write itself
+    run.shuffleRecords should be <= (indexRows + 8L * 4L)
+    run.shuffleRecords should be >= indexRows // the write itself
     // and the fold still converged: one row per (id, subspace)
     spark.read.parquet(s"$dir/codes").groupBy("vec_id", "subspace")
       .count().where(col("count") > 1).count() shouldBe 0L

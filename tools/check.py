@@ -5,6 +5,7 @@ Strictest plausible comparison: column names (sorted), column types, row
 count, and exact value equality row by row.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Exits 1 when any query reports a problem, else 0.
 """
 import sys, json, glob, os
 import duckdb
@@ -67,10 +68,12 @@ def main(sf_dir, out_dir):
         results[name] = "MISSING_DUMP"
     ok = sum(1 for v in results.values() if v == "OK")
     rows_only = sum(1 for v in results.values() if v.startswith("ROWS_ONLY"))
-    print(f"== {ok} OK, {rows_only} rows-only, {len(results) - ok - rows_only} problems ==")
+    problems = len(results) - ok - rows_only
+    print(f"== {ok} OK, {rows_only} rows-only, {problems} problems ==")
     for k, v in sorted(results.items()):
         if v != "OK":
             print(f"{k:28s} {v}")
+    return 1 if problems else 0
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
