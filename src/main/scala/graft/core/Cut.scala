@@ -1,0 +1,139 @@
+package graft.core
+
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The one owner of checkpoint blocks: every `localCheckpoint` in the
+  * engine is made and released here.
+  *
+  * A cut is a lazy ([[lazyCut]]) or eager ([[eager]]) `localCheckpoint`,
+  * unchanged — same plan, same statistics, same jobs. What this module
+  * adds is ownership. A cut belongs to the innermost [[scope]] open on
+  * the calling thread; with none open it is unowned and its blocks go
+  * when the ContextCleaner collects the frame, as a raw checkpoint's
+  * do. On exit a scope releases, newest first, every cut it owns that
+  * its result does not read; the ones the result does read move to the
+  * enclosing scope (or become unowned). "Reads" follows the result's
+  * plans and the RDD lineage under them, so a lazy cut that has not
+  * materialized yet keeps the cuts it will read alive too.
+  *
+  * A released cut has no blocks and no lineage: any later action on it
+  * fails instead of recomputing. [[release]] frees exactly one cut,
+  * never the other checkpoints in a frame's plan — those may belong to
+  * a caller.
+  */
+object Cut {
+
+  /** Every RDD this module checkpointed, weakly held: the set that tells
+    * a cut from any other `LogicalRDD` (a `foreachBatch` micro-batch, a
+    * frame built from an RDD). */
+  private val made = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], java.lang.Boolean]())
+
+  /** The open scopes on this thread, innermost first. */
+  private val open =
+    ThreadLocal.withInitial[List[mutable.ArrayBuffer[RDD[_]]]](() => Nil)
+
+  /** `ds.localCheckpoint(false)`: materializes under the first action
+    * that reads it. */
+  def lazyCut[T](ds: Dataset[T]): Dataset[T] = register(ds.localCheckpoint(false))
+
+  /** `ds.localCheckpoint(true)`: materialized before it returns. */
+  def eager[T](ds: Dataset[T]): Dataset[T] = register(ds.localCheckpoint(true))
+
+  /** The call form at the sites: `df.cut()` is [[lazyCut]], `df.cutNow()`
+    * is [[eager]]. */
+  implicit class CutOps[T](private val ds: Dataset[T]) extends AnyVal {
+    def cut(): Dataset[T] = lazyCut(ds)
+    def cutNow(): Dataset[T] = eager(ds)
+  }
+
+  /** Runs `body` owning the cuts made inside it (see the object doc).
+    * If `body` throws, every cut it made is released and the exception
+    * is rethrown, with any release failure suppressed onto it. */
+  def scope[A](body: => A): A = scopeWith(_.unpersist(blocking = false))(body)
+
+  /** [[scope]] with the release of one RDD given (CutSpec plants a
+    * failing one). */
+  private[core] def scopeWith[A](free: RDD[_] => Unit)(body: => A): A = {
+    val outer = open.get
+    val mine = mutable.ArrayBuffer.empty[RDD[_]]
+    open.set(mine :: outer)
+    val result =
+      try body
+      catch {
+        case t: Throwable =>
+          releaseAll(mine.reverseIterator, free).foreach(t.addSuppressed)
+          throw t
+      } finally open.set(outer)
+    val kept = readBy(result, mine.toSet)
+    outer.headOption.foreach(_ ++= mine.filter(kept))
+    releaseAll(mine.reverseIterator.filterNot(kept), free).foreach(e => throw e)
+    result
+  }
+
+  /** Releases the cut `ds` is, now — for a superseded cut that must not
+    * wait for its scope. A frame that is not itself a cut (a view of
+    * one included) is an IllegalArgumentException. */
+  def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
+    case lr: LogicalRDD if made.containsKey(lr.rdd) =>
+      open.get.foreach(_ -= lr.rdd)
+      lr.rdd.unpersist(blocking = false)
+    case plan =>
+      throw new IllegalArgumentException(
+        s"Cut.release takes a cut, not a frame derived from one:\n$plan")
+  }
+
+  /** True when `ds` reads nothing but cuts, through `Project`, `Filter`
+    * and `Union` only: reading it again reads the cuts' blocks, so a
+    * second copy would be pure storage. */
+  def isView(ds: Dataset[_]): Boolean = {
+    def narrow(p: LogicalPlan): Boolean = p.subqueries.isEmpty && (p match {
+      case lr: LogicalRDD => made.containsKey(lr.rdd)
+      case _: Project | _: Filter | _: Union => p.children.forall(narrow)
+      case _ => false
+    })
+    narrow(ds.queryExecution.analyzed)
+  }
+
+  private def register[T](cut: Dataset[T]): Dataset[T] = {
+    val rdd = cut.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    made.put(rdd, java.lang.Boolean.TRUE)
+    open.get.headOption.foreach(_ += rdd)
+    cut
+  }
+
+  /** Frees each RDD; returns the first failure with the later ones
+    * suppressed onto it. */
+  private def releaseAll(rdds: Iterator[RDD[_]],
+                         free: RDD[_] => Unit): Option[Throwable] = {
+    val failed = rdds.flatMap(rdd => Try(free(rdd)).failed.toOption).toList
+    failed.headOption.map { first => failed.tail.foreach(first.addSuppressed); first }
+  }
+
+  /** The members of `cuts` that `result` reads: the RDDs behind the
+    * frames it holds (through tuples, options, case classes and
+    * collections), and their lineage. */
+  private def readBy(result: Any, cuts: Set[RDD[_]]): Set[RDD[_]] = {
+    val seen = mutable.Set.empty[RDD[_]]
+    val todo = mutable.Stack.from(if (cuts.isEmpty) Iterator.empty else roots(result))
+    while (todo.nonEmpty) {
+      val rdd = todo.pop()
+      if (seen.add(rdd)) todo.pushAll(rdd.dependencies.map(_.rdd))
+    }
+    cuts.filter(seen)
+  }
+
+  private def roots(x: Any): Iterator[RDD[_]] = x match {
+    case ds: Dataset[_] => ds.queryExecution.analyzed
+      .collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.iterator
+    case i: Iterable[_] => i.iterator.flatMap(roots)
+    case p: Product => p.productIterator.flatMap(roots)
+    case _ => Iterator.empty
+  }
+}

@@ -2,6 +2,7 @@ package graft.examples
 
 import graft.agg.Aggs
 import graft.core.Pipeline
+import graft.core.Cut.CutOps
 import graft.llm.{Dedup, Similarity}
 import graft.model.Tables
 import org.apache.spark.sql.functions._
@@ -541,7 +542,7 @@ object Examples {
     // keep-head-and-middle policy's input)
     val vecs = graft.model.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .join(docs.select("doc_id", "lang"), col("doc_id") === col("vec_id"))
-      .localCheckpoint(false)
+      .cut()
     val mined = graft.llm.Similarity.marginMine(
       vecs.where(col("lang") === "de").select(col("vec_id").as("a"), col("embedding")),
       vecs.where(col("lang") === "en").select(col("vec_id").as("b"), col("embedding")),

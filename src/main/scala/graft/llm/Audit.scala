@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut.CutOps
+
 /** Corpus-versioning audit ops (training-data pipeline mandate; no analog
   * in the reference). A 100 TB corpus is rebuilt, refreshed and patched
   * continuously — the audit trail of WHAT changed between two snapshots
@@ -187,7 +189,7 @@ object Audit {
       intDiv(num * 20000L + den, den * 2L)
     val cell = laidOut.groupBy(col(shardCol), col(stratumCol))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .cut()
     val shardTot = cell.groupBy(col(shardCol)).agg(sum("__c").as("__n"))
     val strata = cell.groupBy(col(stratumCol)).agg(sum("__c").as("__g"))
     val total = strata.agg(sum("__g").as("__t"))
@@ -356,12 +358,12 @@ object Audit {
       s"dampPct must be in [1,99], got $dampPct")
     val w = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), col(weightCol).cast("long").as("c"))
-      .localCheckpoint(false)
+      .cut()
     val hosts = w.select(col("src").as("h"))
       .union(w.select(col("dst").as("h"))).distinct()
-      .localCheckpoint(false)
+      .cut()
     val od = w.groupBy(col("src")).agg(sum(col("c")).cast("long").as("odeg"))
-      .localCheckpoint(false)
+      .cut()
     val n = hosts.count()
     require(n > 0 && n <= maxHosts,
       s"hostRank expects a bounded host set (1..$maxHosts), got $n")

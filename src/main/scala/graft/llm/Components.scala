@@ -3,6 +3,9 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut
+import graft.core.Cut.CutOps
+
 /** Connected components over a duplicate-pair graph — the step that turns
   * pairwise near-dup output ([[Dedup.minHashNearDups]] / simHash / ngram
   * verify) into KEEP/DROP decisions: docs A~B and B~C must land in ONE
@@ -70,17 +73,15 @@ object Components {
     * materialized checkpoint: reading it re-reads nothing upstream (the
     * caller may release its own pair checkpoint immediately).
     *
-    * `inputIsCut = true` declares `pairs` is ALREADY a materialized
-    * checkpoint (e.g. [[Curation.curateFull]]'s eager pair stage): the
-    * closure then reads it through a narrow projection instead of
-    * copying it into a second edge checkpoint — and leaves releasing
-    * the caller's blocks to the caller. */
+    * When `pairs` is already a view of cuts ([[graft.core.Cut.isView]],
+    * e.g. [[Curation.curateFull]]'s eager pair stage) the closure reads
+    * those blocks through a narrow projection instead of copying them
+    * into a second edge cut; they stay the caller's. */
   def pairComponents(pairs: DataFrame,
                      aCol: String = "a", bCol: String = "b",
                      idCol: String = "doc_id",
-                     maxIter: Int = 30,
-                     inputIsCut: Boolean = false): DataFrame =
-    pairComponentsWithRounds(pairs, aCol, bCol, idCol, maxIter, inputIsCut)._1
+                     maxIter: Int = 30): DataFrame =
+    pairComponentsWithRounds(pairs, aCol, bCol, idCol, maxIter)._1
 
   /** [[pairComponents]] plus the number of label-propagation rounds the
     * closure took — the convergence observable the kept `cc_rounds`
@@ -89,9 +90,8 @@ object Components {
   def pairComponentsWithRounds(pairs: DataFrame,
                                aCol: String = "a", bCol: String = "b",
                                idCol: String = "doc_id",
-                               maxIter: Int = 30,
-                               inputIsCut: Boolean = false): (DataFrame, Int) = {
-    val (comp, rounds) = core(pairs, aCol, bCol, maxIter, inputIsCut)
+                               maxIter: Int = 30): (DataFrame, Int) = {
+    val (comp, rounds) = core(pairs, aCol, bCol, maxIter)
     (comp.select(col("id").as(idCol), col("comp").as("component")), rounds)
   }
 
@@ -112,7 +112,7 @@ object Components {
                           idCol: String = "id",
                           srcCol: String = "src", dstCol: String = "dst",
                           maxIter: Int = 30): DataFrame = {
-    val (comp, _) = core(edges, srcCol, dstCol, maxIter, inputIsCut = false)
+    val (comp, _) = core(edges, srcCol, dstCol, maxIter)
     val n = nodes.select(col(idCol))
     n.join(comp, n(idCol) === comp("id"), "left")
       .select(n(idCol),
@@ -121,25 +121,22 @@ object Components {
 
   /** The label-propagation loop over the edge list alone. Returns the
     * final `(id, comp)` CHECKPOINT (participants only) and the round
-    * count. All intermediate checkpoints and the edge cut are released
-    * before returning — on success exactly one persisted RDD (the
-    * result) survives; on failure none do. */
+    * count. The loop runs in one [[Cut.scope]]: each superseded round is
+    * released the moment the next one lands, the edge cut when the
+    * loop ends, and on failure everything it made — so on success
+    * exactly one persisted RDD (the result) survives; on failure none
+    * do. */
   private def core(edges: DataFrame, srcCol: String, dstCol: String,
-                   maxIter: Int, inputIsCut: Boolean): (DataFrame, Int) = {
+                   maxIter: Int): (DataFrame, Int) = Cut.scope {
     // ONE cut for the whole closure: the pair-generation lineage
     // (minhash banding, self-joins) executes exactly once, here.
     // Pair-list-sized by contract (dup mass, never the corpus). When
-    // the caller's pairs are already a materialized checkpoint
-    // (inputIsCut) the narrow projection reads those blocks directly —
-    // a second copy would be pure storage, and releasing it here would
-    // unpersist the CALLER's blocks (releaseCheckpoint unpersists every
-    // LogicalRDD in the plan), so ownership stays with the caller.
+    // the caller's pairs are already a view of cuts the narrow
+    // projection reads those blocks directly — a second copy would be
+    // pure storage.
     val proj = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
       .where(col("__a") =!= col("__b")) // self-loops cannot change a min
-    val e = if (inputIsCut) proj else proj.localCheckpoint(false)
-    def releaseEdges(): Unit =
-      if (!inputIsCut)
-        org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(e)
+    val e = if (Cut.isView(proj)) proj else proj.cut()
     // symmetric view: derived per consumer from the cut's blocks (a
     // narrow union — checkpointing it too would just double storage)
     val sym = e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
@@ -148,59 +145,46 @@ object Components {
     // min({id} ∪ N(id)), one whole round for free
     var labelsCk = sym.groupBy(col("__a").as("id"))
       .agg(least(min(col("__b")), col("__a")).as("comp"))
-      .localCheckpoint(false)
+      .cut()
     var labels: DataFrame = labelsCk
     var iter = 0
     var done = false
-    // a failed run (non-convergence, a dead executor mid-count) must not
-    // leave edge + label blocks pinned in the long-lived session — the
-    // exact lag the explicit releases exist to avoid
-    try {
-      while (!done && iter < maxIter) {
-        // min over neighbours' current labels (one keyed shuffle, map-side min)
-        val neighbourMin = sym.join(labels, col("__b") === col("id"))
-          .groupBy(col("__a")).agg(min("comp").as("__ncomp"))
-        // the pre-round label rides along as __old so convergence is a
-        // per-row comparison on the round's own output, not a second
-        // join-the-previous-round job
-        val prop = labels.as("l")
-          .join(neighbourMin.as("n"), col("l.id") === col("n.__a"), "left")
-          .select(col("l.id").as("id"),
-            least(col("l.comp"), coalesce(col("__ncomp"), col("l.comp"))).as("comp"),
-            col("l.comp").as("__old"))
-        // pointer jump: comp ← comp(comp) — label values are node ids, so
-        // the lookup is a self-join; left join keeps already-minimal labels
-        val jumped = prop.as("x")
-          .join(prop.select(col("id").as("__jid"), col("comp").as("__jcomp")).as("y"),
-            col("x.comp") === col("y.__jid"), "left")
-          .select(col("x.id").as("id"),
-            least(col("x.comp"), coalesce(col("__jcomp"), col("x.comp"))).as("comp"),
-            col("x.__old").as("__old"))
-        // ONE action per round: the lazy checkpoint materializes under the
-        // changed-label count (an eager checkpoint + join + isEmpty probe
-        // was two jobs and an extra shuffle per round)
-        val next = jumped.localCheckpoint(false)
-        done = next.where(col("comp") =!= col("__old")).count() == 0L
-        // the count materialized `next`; the previous round's blocks are
-        // now unreachable — free them before the next round allocates
-        org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(labelsCk)
-        labelsCk = next
-        labels = next.select("id", "comp")
-        iter += 1
-      }
-      if (!done)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter rounds — " +
-            "raise maxIter; a partial closure would leak duplicates")
-    } catch {
-      case t: Throwable =>
-        releaseEdges()
-        org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(labelsCk)
-        throw t
+    while (!done && iter < maxIter) {
+      // min over neighbours' current labels (one keyed shuffle, map-side min)
+      val neighbourMin = sym.join(labels, col("__b") === col("id"))
+        .groupBy(col("__a")).agg(min("comp").as("__ncomp"))
+      // the pre-round label rides along as __old so convergence is a
+      // per-row comparison on the round's own output, not a second
+      // join-the-previous-round job
+      val prop = labels.as("l")
+        .join(neighbourMin.as("n"), col("l.id") === col("n.__a"), "left")
+        .select(col("l.id").as("id"),
+          least(col("l.comp"), coalesce(col("__ncomp"), col("l.comp"))).as("comp"),
+          col("l.comp").as("__old"))
+      // pointer jump: comp ← comp(comp) — label values are node ids, so
+      // the lookup is a self-join; left join keeps already-minimal labels
+      val jumped = prop.as("x")
+        .join(prop.select(col("id").as("__jid"), col("comp").as("__jcomp")).as("y"),
+          col("x.comp") === col("y.__jid"), "left")
+        .select(col("x.id").as("id"),
+          least(col("x.comp"), coalesce(col("__jcomp"), col("x.comp"))).as("comp"),
+          col("x.__old").as("__old"))
+      // ONE action per round: the lazy checkpoint materializes under the
+      // changed-label count (an eager checkpoint + join + isEmpty probe
+      // was two jobs and an extra shuffle per round)
+      val next = jumped.cut()
+      done = next.where(col("comp") =!= col("__old")).count() == 0L
+      // the count materialized `next`; the previous round's blocks are
+      // now unreachable — free them before the next round allocates
+      Cut.release(labelsCk)
+      labelsCk = next
+      labels = next.select("id", "comp")
+      iter += 1
     }
-    // converged: downstream consumers read only the final labels
-    // checkpoint — the edge cut's blocks are dead, release them
-    releaseEdges()
+    if (!done)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds — " +
+          "raise maxIter; a partial closure would leak duplicates")
     (labels, iter)
   }
 

@@ -3,6 +3,9 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut
+import graft.core.Cut.CutOps
+
 /** The composite the individual LLM operators exist for: a training-data
   * curation pass over a document corpus.
   *
@@ -97,7 +100,7 @@ object Curation {
         .select(col(idCol), col("quality"), col("n_tokens")), idCol)
     val gatedPlan = scored.where(col("lang") === lang && col("quality") >= minQuality)
     val gated =
-      if (materializeGated) gatedPlan.localCheckpoint(eager = false)
+      if (materializeGated) gatedPlan.cut()
       else gatedPlan
     // near-dup prune on the gated survivors, with TRANSITIVE closure:
     // the old pairwise rule ("drop the higher id of each pair") leaked
@@ -109,21 +112,15 @@ object Curation {
     // over all docs; singletons skip the loop entirely and survive via
     // the anti join. r13: losers are exactly the non-min participants —
     // the closure derives its node set inside its own first-round
-    // shuffle, and inputIsCut tells it the eager pair checkpoint below
-    // is the edge cut already (no second copy).
-    val pairs = pairStage(gated, nearDupThreshold, idCol, textCol, polyHash)
-    val losers =
-      try Components.pairComponents(pairs, idCol = idCol, inputIsCut = true)
+    // shuffle, and reads the eager pair checkpoint below as its edge
+    // cut (no second copy). The closure runs its rounds eagerly;
+    // `losers` reads only the final labels checkpoint, so the scope
+    // frees the pair blocks before the (lazy) anti join + cap run.
+    val losers = Cut.scope {
+      val pairs = pairStage(gated, nearDupThreshold, idCol, textCol, polyHash)
+      Components.pairComponents(pairs, idCol = idCol)
         .where(col(idCol) =!= col("component")).select(col(idCol))
-      catch {
-        case t: Throwable => // failed clustering must not pin the pair blocks
-          org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(pairs)
-          throw t
-      }
-    // the closure ran its rounds eagerly just now; `losers` reads only the
-    // final labels checkpoint, so the pair blocks are already dead — free
-    // them before the (lazy) anti join + cap run
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(pairs)
+    }
     val pruned = gated.join(losers, Seq(idCol), "left_anti")
     Sampling.capPerGroup(pruned,
         keys = Seq(col("lang"), col("source")), n = maxPerGroup,
@@ -133,7 +130,7 @@ object Curation {
 
   /** The near-dup pair stage of [[curateFull]], cut with an EAGER
     * localCheckpoint. Since r13 the cut IS the closure's edge
-    * checkpoint ([[Components.pairComponents]] with `inputIsCut` —
+    * checkpoint ([[Components.pairComponents]] reads a cut in place —
     * the symmetric view, the participant shuffle and every round read
     * these blocks through a narrow projection), so the minhash stage
     * (shingling, 16 hash lanes, the banding shuffle, Jaccard
@@ -149,23 +146,18 @@ object Curation {
     * the plan IS a checkpoint boundary. */
   private[llm] def pairStage(gated: DataFrame, nearDupThreshold: Double,
                              idCol: String, textCol: String,
-                             polyHash: Boolean = false): DataFrame = {
+                             polyHash: Boolean = false): DataFrame = Cut.scope {
     // polyHash selects the cross-engine affine family (the
-    // llm_dedup_near_poly relationship) so the WHOLE composite can be
-    // oracle-gated; xxhash64 stays the production default
-    val (pairs, cuts) =
-      if (polyHash) Dedup.polyMinHashNearDupsCut(gated, k = 2, bands = 8,
-        rowsPerBand = 2, threshold = nearDupThreshold,
-        idCol = idCol, textCol = textCol)
-      else Dedup.minHashNearDupsCut(gated, k = 2, bands = 8,
-        rowsPerBand = 2, threshold = nearDupThreshold,
-        idCol = idCol, textCol = textCol)
-    val ck = pairs.localCheckpoint(eager = true)
-    // the eager pair checkpoint supersedes the near-dup stage's internal
-    // cuts (candidates + pruned shingle sets) — release them now instead
-    // of holding candidate-sized blocks for the session
-    cuts.foreach(org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint)
-    ck
+    // llm_dedup_near_poly relationship: minHashNearDups' plan under
+    // bandSignaturesPoly) so the WHOLE composite can be oracle-gated;
+    // xxhash64 stays the production default. The eager
+    // pair checkpoint supersedes the near-dup stage's internal cuts
+    // (candidates + pruned shingle sets): the scope releases them now
+    // instead of holding candidate-sized blocks for the session
+    val sigs = Dedup.signatureIndex(gated, k = 2, bands = 8, rowsPerBand = 2,
+      idCol = idCol, textCol = textCol, poly = polyHash)
+    Dedup.nearDupsFromSigs(sigs, gated, k = 2, threshold = nearDupThreshold,
+      idCol = idCol, textCol = textCol).cutNow()
   }
 
   /** Corpus ASSEMBLY — the recipe stage after curation: exact dedup →
@@ -220,7 +212,7 @@ object Curation {
     // survivors (lineage dropped; results identical, spec-pinned) for
     // callers who'd rather pay storage than the second derivation.
     val kept =
-      if (materializeKept) keptPlan.localCheckpoint(false) else keptPlan
+      if (materializeKept) keptPlan.cut() else keptPlan
     val balanced = Sampling.reweight(kept, mixture, idCol, stratumCol)
     Packing.packSequences(
       balanced.select(col(idCol), col(stratumCol), col(textCol)),
@@ -284,8 +276,7 @@ object Curation {
     *
     * RETENTION: inherits [[Dedup.incrementalExact]]'s contract — the
     * elected-batch checkpoint stays pinned until the ContextCleaner
-    * collects it; long-lived sessions release it after materializing
-    * the result via `ColumnBridge.releaseCheckpoint`. */
+    * collects it; long-lived sessions call it inside [[Cut.scope]]. */
   def ingestDelta(batch: DataFrame, corpus: DataFrame, benchmark: DataFrame,
                   minQualityBp: Long, maxContamBp: Long, k: Int = 3,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -300,19 +291,19 @@ object Curation {
     // count). Batch-sized BY CONTRACT (it is the ingest delta, never
     // the corpus) → one lazy localCheckpoint, the same cut discipline
     // as `kept`; executed scans drop to batch + corpus + benchmark.
-    val b = batch.localCheckpoint(false)
+    val b = batch.cut()
     val fresh = Dedup.incrementalExact(b, corpus,
         idCol = idCol, textCol = textCol)
       .select(col("keep_id").as(idCol), col("dup_count"))
     // `kept` feeds TWO consumers (the contamination probe and the final
     // join) — uncut, each re-derived the dedup election and the
     // corpus-side anti join (r11 scan audit: llm_ingest read its table
-    // 10×). Batch-sized by contract → one lazy localCheckpoint; release
-    // via ColumnBridge.releaseCheckpoint in long-lived sessions.
+    // 10×). Batch-sized by contract → one lazy localCheckpoint; call
+    // inside Cut.scope in long-lived sessions.
     val kept = b.join(fresh, Seq(idCol))
       .withColumn("quality_bp", TextStats.qualityBp(col(textCol)))
       .where(col("quality_bp") >= minQualityBp)
-      .localCheckpoint(false)
+      .cut()
     val contam = Dedup.contamination(kept, benchmark, k, idCol, textCol)
       .select(col(idCol), graft.functions.VectorFunctions.intDiv(
         col("matched") * 20000L + col("total"), col("total") * 2L)
@@ -560,7 +551,7 @@ object Curation {
     val budgeted = Sampling.tokenBudget(kept, budgetTokens,
         partitionCols = Seq(budgetStratumCol), idCol = idCol, textCol = textCol)
       .withColumnRenamed("n_tokens", "__bnt")
-      .localCheckpoint(false)
+      .cut()
     val epochs = Sampling.unimax(budgeted, budgetBp, maxEpochs, mixStratumCol,
       idCol, textCol, tokenCount = Some(col("__bnt")),
       carryCols = Seq(textCol))

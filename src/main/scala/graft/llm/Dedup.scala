@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut.CutOps
+
 /** Deduplication operators for LLM-scale corpora (SURVEY §2.9; north-star
   * mandate in BASELINE.json — not present in the reference, which only has
   * exact `distinct`, CITE: kernel/src/main/scala/trembita/operations/
@@ -160,8 +162,7 @@ object Dedup {
     * The elected batch feeds the bloom build and the anti join, so it's
     * cut once with a lazy localCheckpoint ([[bloomContamination]]'s
     * pattern — no lineage after the cut, by design). Same RETENTION
-    * contract: long-lived sessions should release the blocks after the
-    * result is materialized via `ColumnBridge.releaseCheckpoint(result)`.
+    * contract: long-lived sessions call it inside [[graft.core.Cut.scope]].
     * `expectedItems < 0` (default) sizes the bloom from the cut set's
     * exact count; pass it when known to skip that job. */
   def incrementalExact(batch: DataFrame, corpus: DataFrame,
@@ -169,7 +170,7 @@ object Dedup {
                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import graft.functions.BloomMightContainStr
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1), got $fpp")
-    val elected = exact(batch, idCol, textCol).localCheckpoint(false)
+    val elected = exact(batch, idCol, textCol).cut()
     val n = if (expectedItems >= 0) expectedItems else elected.count()
     val bloom = elected.stat.bloomFilter("content_hash", math.max(n, 1L), fpp)
     val priorCand = corpus
@@ -211,25 +212,8 @@ object Dedup {
                       rowsPerBand: Int = 4, threshold: Double = 0.8,
                       idCol: String = "doc_id", textCol: String = "text",
                       maxBucket: Int = 256): DataFrame =
-    minHashNearDupsCut(docs, k, bands, rowsPerBand, threshold, idCol,
-      textCol, maxBucket)._1
-
-  /** [[minHashNearDups]] also returning its two internal lazy
-    * checkpoints (candidates, pruned shingle sets) so a composite that
-    * eagerly materializes the pair list ([[Curation]]'s pairStage) can
-    * release the superseded cuts immediately instead of holding them
-    * for the session. */
-  private[llm] def minHashNearDupsCut(docs: DataFrame, k: Int, bands: Int,
-                                      rowsPerBand: Int, threshold: Double,
-                                      idCol: String, textCol: String,
-                                      maxBucket: Int = 256)
-      : (DataFrame, Seq[DataFrame]) = {
-    val bandSig = bandSignatures(docs, k, bands, rowsPerBand, idCol, textCol)
-    // Same (band, sig) bucket → candidate pair, one pass (no self-join).
-    val candidates = bucketPairs(bandSig, Seq("band", "sig"), idCol,
-      maxBucket = maxBucket)
-    verifiedPairs(docs, candidates, k, threshold, idCol, textCol)
-  }
+    nearDupsFromSigs(bandSignatures(docs, k, bands, rowsPerBand, idCol,
+      textCol), docs, k, threshold, idCol, textCol, maxBucket)
 
   /** [[minHashNearDups]] under the CROSS-ENGINE affine hash family
     * ([[graft.functions.PolyMinHashLanes]]) instead of xxhash64: same
@@ -248,20 +232,8 @@ object Dedup {
                           rowsPerBand: Int = 4, threshold: Double = 0.8,
                           idCol: String = "doc_id", textCol: String = "text",
                           maxBucket: Int = 256): DataFrame =
-    polyMinHashNearDupsCut(docs, k, bands, rowsPerBand, threshold, idCol,
-      textCol, maxBucket)._1
-
-  /** The cuts-returning twin, as [[minHashNearDupsCut]]. */
-  private[llm] def polyMinHashNearDupsCut(docs: DataFrame, k: Int, bands: Int,
-                                          rowsPerBand: Int, threshold: Double,
-                                          idCol: String, textCol: String,
-                                          maxBucket: Int = 256)
-      : (DataFrame, Seq[DataFrame]) = {
-    val bandSig = bandSignaturesPoly(docs, k, bands, rowsPerBand, idCol, textCol)
-    val candidates = bucketPairs(bandSig, Seq("band", "sig"), idCol,
-      maxBucket = maxBucket)
-    verifiedPairs(docs, candidates, k, threshold, idCol, textCol)
-  }
+    nearDupsFromSigs(bandSignaturesPoly(docs, k, bands, rowsPerBand, idCol,
+      textCol), docs, k, threshold, idCol, textCol, maxBucket)
 
   /** Character-level EDIT-DISTANCE verify over poly-banded candidates —
     * the fuzzy-dedup verify family Jaccard cannot express: shingle-set
@@ -300,7 +272,7 @@ object Dedup {
   private[llm] def editVerify(docs: DataFrame, candidates: DataFrame,
                               maxRelBp: Long, idCol: String,
                               textCol: String): DataFrame = {
-    val cand = candidates.localCheckpoint(false)
+    val cand = candidates.cut()
     val candIds = cand.select(col("a").as(idCol))
       .union(cand.select(col("b").as(idCol)))
     // candIds and the pruned texts are candidate-pair-sized by the
@@ -311,7 +283,7 @@ object Dedup {
     // verify join (the measured 3 → 10-shuffle llm_dedup_contain class)
     val texts = docs.select(col(idCol), col(textCol))
       .join(broadcast(candIds), Seq(idCol), "left_semi")
-      .localCheckpoint(false)
+      .cut()
     cand
       .join(broadcast(texts.select(col(idCol).as("a"),
         col(textCol).as("__ta"))), "a")
@@ -341,28 +313,27 @@ object Dedup {
     * signature/banding pass that materializes `candidates`, once for
     * the candidate-pruned shingle-set attach — the same two reads the
     * incremental face documents as the 100 TB shape. Tradeoff as
-    * everywhere: checkpoint drops lineage; long-lived sessions release
-    * blocks after materializing the result
-    * (`ColumnBridge.releaseCheckpoint`). */
+    * everywhere: checkpoint drops lineage; long-lived sessions call it
+    * inside [[graft.core.Cut.scope]], which frees both cuts once the
+    * result no longer reads them. */
   private def verifiedPairs(docs: DataFrame, candidates: DataFrame, k: Int,
                             threshold: Double, idCol: String,
-                            textCol: String): (DataFrame, Seq[DataFrame]) = {
+                            textCol: String): DataFrame = {
     import graft.functions.WordShingles
-    val cand = candidates.localCheckpoint(false)
+    val cand = candidates.cut()
     val candIds = cand.select(col("a").as(idCol))
       .union(cand.select(col("b").as(idCol)))
     val sets = docs
       .select(col(idCol), array_distinct(WordShingles(col(textCol), k)).as("set"))
       .join(candIds, Seq(idCol), "left_semi")
-      .localCheckpoint(false)
+      .cut()
     val withSets = cand
       .join(sets.select(col(idCol).as("a"), col("set").as("sa")), "a")
       .join(sets.select(col(idCol).as("b"), col("set").as("sb")), "b")
-    val out = withSets
+    withSets
       .withColumn("jaccard", jaccardOf(col("sa"), col("sb")))
       .where(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
-    (out, Seq(cand, sets))
   }
 
   /** Near-dup THRESHOLD sweep (r14) — the "what cutoff drops how much"
@@ -396,13 +367,13 @@ object Dedup {
     val bandSig = bandSignaturesPoly(docs, k, bands, rowsPerBand, idCol, textCol)
     // same checkpoint + explicit-broadcast discipline as verifiedPairs
     val cand = bucketPairs(bandSig, Seq("band", "sig"), idCol,
-      maxBucket = maxBucket).localCheckpoint(false)
+      maxBucket = maxBucket).cut()
     val candIds = cand.select(col("a").as(idCol))
       .union(cand.select(col("b").as(idCol)))
     val sets = docs
       .select(col(idCol), array_distinct(WordShingles(col(textCol), k)).as("set"))
       .join(broadcast(candIds), Seq(idCol), "left_semi")
-      .localCheckpoint(false)
+      .cut()
     val i = size(array_intersect(col("sa"), col("sb"))).cast("long")
     val u = size(array_union(col("sa"), col("sb"))).cast("long")
     val pairs = cand
@@ -499,8 +470,7 @@ object Dedup {
     * so it's cut once with a lazy localCheckpoint — without the cut,
     * both corpus-wide signature passes would derive three times per
     * action. Same RETENTION contract as [[bloomContamination]]:
-    * long-lived sessions release the blocks after materializing the
-    * result (`ColumnBridge.releaseCheckpoint`). */
+    * long-lived sessions call it inside [[graft.core.Cut.scope]]. */
   def incrementalNear(batch: DataFrame, corpus: DataFrame,
                       k: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                       threshold: Double = 0.8,
@@ -558,21 +528,8 @@ object Dedup {
                                       k: Int, threshold: Double,
                                       idCol: String = "doc_id",
                                       textCol: String = "text",
-                                      maxBucket: Int = 256): DataFrame =
-    nearDupsFromSigsCut(sigs, docs, k, threshold, idCol, textCol,
-      maxBucket)._1
-
-  /** The cuts-returning twin, as [[minHashNearDupsCut]] (r21, the r20
-    * ADVICE note): the streaming batch applier materializes the pair
-    * list eagerly every micro-batch, so without the cuts it would leak
-    * [[verifiedPairs]]' two internal lazy checkpoints per batch for the
-    * session (checkpoint blocks GC-release). */
-  private[graft] def nearDupsFromSigsCut(sigs: DataFrame, docs: DataFrame,
-                                         k: Int, threshold: Double,
-                                         idCol: String = "doc_id",
-                                         textCol: String = "text",
-                                         maxBucket: Int = 256)
-      : (DataFrame, Seq[DataFrame]) = {
+                                      maxBucket: Int = 256): DataFrame = {
+    // Same (band, sig) bucket → candidate pair, one pass (no self-join).
     val candidates = bucketPairs(sigs, Seq("band", "sig"), idCol,
       maxBucket = maxBucket)
     verifiedPairs(docs, candidates, k, threshold, idCol, textCol)
@@ -640,13 +597,13 @@ object Dedup {
     // once (r10 plan audit: without the cut the batch re-derived 3×);
     // the corpus side is NEVER cut (100 TB — its two reads are the
     // documented signature-index + candidate-pruned text scans)
-    val b = batch.localCheckpoint(false)
+    val b = batch.cut()
     val bSig = signatures(b, k, bands, rowsPerBand, idCol, textCol)
     val cSig = signatures(corpus, k, bands, rowsPerBand, idCol, textCol)
       .select(col(idCol).as("__cid"), col("band"), col("sig"))
     val cand = bSig.join(cSig, Seq("band", "sig"))
       .select(col(idCol), col("__cid")).distinct()
-      .localCheckpoint(false)
+      .cut()
     val bSets = b
       .select(col(idCol), array_distinct(WordShingles(col(textCol), k)).as("__sa"))
       .join(cand.select(idCol), Seq(idCol), "left_semi")
@@ -692,7 +649,7 @@ object Dedup {
     import graft.functions.WordShingles
     val bandSig = bandSignaturesPoly(docs, k, bands, rowsPerBand, idCol, textCol)
     val cand = bucketPairs(bandSig, Seq("band", "sig"), idCol,
-      maxBucket = maxBucket).localCheckpoint(false)
+      maxBucket = maxBucket).cut()
     val candIds = cand.select(col("a").as(idCol))
       .union(cand.select(col("b").as(idCol)))
     // candIds and the pruned sets are candidate-pair-sized by the
@@ -704,7 +661,7 @@ object Dedup {
     val sets = docs
       .select(col(idCol), array_distinct(WordShingles(col(textCol), k)).as("set"))
       .join(broadcast(candIds), Seq(idCol), "left_semi")
-      .localCheckpoint(false)
+      .cut()
     val minBp = math.round(minContainment * 10000).toLong
     val i = size(array_intersect(col("sa"), col("sb"))).cast("long")
     val u = size(array_union(col("sa"), col("sb"))).cast("long")
@@ -959,9 +916,8 @@ object Dedup {
     // pruned `sets` two — both are candidate-pair-sized by contract, so
     // each gets one lazy localCheckpoint; uncut, every consumer
     // re-derived its full lineage per action (llm_dedup_ngram read its
-    // table 7×). Release via ColumnBridge.releaseCheckpoint in
-    // long-lived sessions.
-    val cand = pairs.localCheckpoint(false)
+    // table 7×). Call inside Cut.scope in long-lived sessions.
+    val cand = pairs.cut()
     // prune shingle-set materialization to docs referenced by the pairs
     // (no distinct — the left_semi probe side dedups inherently)
     val pairIds = cand.select(col("a").as(idCol))
@@ -974,7 +930,7 @@ object Dedup {
         array_distinct(graft.functions.WordShingles(col(textCol), k)).as("set"))
       .where(col("set").isNotNull)
       .join(pairIds, Seq(idCol), "left_semi")
-      .localCheckpoint(false)
+      .cut()
     cand
       .join(sets.select(col(idCol).as("a"), col("set").as("sa")), "a")
       .join(sets.select(col(idCol).as("b"), col("set").as("sb")), "b")
@@ -1111,11 +1067,9 @@ object Dedup {
     *
     * RETENTION: the checkpoint's blocks stay pinned until the session's
     * ContextCleaner notices the frame is unreachable — in a long-lived
-    * session, callers that are done with the RESULT should release them
-    * eagerly via `ColumnBridge.releaseCheckpoint(result)` (the cut
-    * benchmark set is the plan's only `LogicalRDD` leaf). Any later
-    * action on the result then fails instead of recomputing — release
-    * only after the result is materialized. */
+    * session, call inside [[graft.core.Cut.scope]] and materialize the
+    * result there: the scope frees the cut on exit, after which any
+    * action on the result fails instead of recomputing. */
   def bloomContamination(docs: DataFrame, benchmark: DataFrame, k: Int = 3,
                          fpp: Double = 0.01, expectedItems: Long = -1L,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -1124,7 +1078,7 @@ object Dedup {
     val benchSh = benchmark
       .select(explode(array_distinct(WordShingles(col(textCol), k))).as("shingle"))
       .distinct()
-      .localCheckpoint(false)
+      .cut()
     val n = if (expectedItems >= 0) expectedItems else benchSh.count()
     val bloom = benchSh.stat.bloomFilter("shingle", math.max(n, 1L), fpp)
     val docSh = docs.select(col(idCol),
@@ -1262,7 +1216,7 @@ object Dedup {
     // three consumers (banding, both verify sides) — without the cut
     // each re-derives the quantization from the source (6 scans
     // measured in the round-10 plan audit; the multi-consumer rule)
-    val vq = quantized(emb, idCol, vecCol, scale).localCheckpoint(false)
+    val vq = quantized(emb, idCol, vecCol, scale).cut()
     val banded = vq.select(col(idCol),
       posexplode(graft.functions.SignProjection(col("__vq"), planes,
         numTables, bits)).as(Seq("tbl", "sig")))
@@ -1345,7 +1299,7 @@ object Dedup {
       .where(col("cluster").isNotNull)
       // three consumers (pair stage, verify vectors, anti-join base) —
       // without the cut each re-derives the assignment projection
-      .localCheckpoint(false)
+      .cut()
     val pairs = bucketPairs(assigned.select(col("cluster"), col(idCol)),
       Seq("cluster"), idCol, maxBucket = maxCluster)
     val dropped = cos2Verify(pairs, assigned.select(col(idCol), col("__vq")),
@@ -1442,12 +1396,12 @@ object Dedup {
     // localCheckpoint = the cluster-assignment materialization SemDeDup
     // does anyway (the paper's assignments table); corpus is read once.
     // Tradeoff as everywhere: lineage dropped; long-lived sessions
-    // release via `ColumnBridge.releaseCheckpoint` after materializing.
+    // call inside Cut.scope.
     val assigned = Similarity.withNorm(
         Similarity.assign(emb,
           centroids.select(col("cid").as(idCol), col(vecCol)), idCol, vecCol),
         vecCol, "__n")
-      .localCheckpoint(false)
+      .cut()
     val pairs = bucketPairs(assigned.select(col("cid"), col(idCol)),
       Seq("cid"), idCol, maxBucket = maxCluster)
     val dropped = pairs

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut.CutOps
+
 /** Deterministic corpus sampling (training-data pipeline mandate; no
   * analog in the reference). Both ops are reproducible across runs,
   * retries and cluster sizes — `df.sample`'s partition-seeded RNG is not
@@ -265,7 +267,7 @@ object Sampling {
     // localCheckpoint materializes the tiny frame once (multi-consumer
     // rule; no lineage after the cut, by design)
     val strata = nt.groupBy(stratumCol).agg(sum("n_tokens").as("__tok"))
-      .localCheckpoint(false)
+      .cut()
     val totals = strata.agg(sum("__tok").as("__tt"), count(lit(1)).as("__ns"))
     val w1 = Window.orderBy(col("__cap"), col(stratumCol))
     val ranked = strata
@@ -473,7 +475,7 @@ object Sampling {
       .agg(count(lit(1)).as("docs"),
         sum(mass.cast("long")).cast("long").as("__m"),
         sum(lossNum.cast("long")).cast("long").as("__ln"))
-      .localCheckpoint(false)
+      .cut()
     // one head over the cut frame yields BOTH driver-side guards: the
     // domain bound and the int64 contract the scaladoc promises —
     // factor ≤ 10⁴ + 10⁸ div etaDiv requires per-domain mean loss_fp

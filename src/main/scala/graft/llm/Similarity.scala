@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut.CutOps
+
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (SURVEY §2.9 L3; north-star mandate — absent in the reference).
   *
@@ -142,8 +144,8 @@ object Similarity {
     // (r10 plan audit: 4 Scan parquet on llm_ann_lsh). The checkpointed
     // hashed frame IS the persisted LSH index at scale — the artifact a
     // 100 TB deployment stores next to the corpus. Lineage dropped;
-    // release via `ColumnBridge.releaseCheckpoint` in long sessions.
-    val cHashed = model.transform(c).localCheckpoint(false)
+    // call inside `Cut.scope` in long sessions.
+    val cHashed = model.transform(c).cut()
     val joined = model.approxSimilarityJoin(
         model.transform(unitVec(queries)), cHashed, maxDist, "dist")
       .select(col(s"datasetA.$idCol").as("qid"), col(s"datasetB.$idCol").as(idCol),
@@ -211,7 +213,7 @@ object Similarity {
       case Some(n) => base
         .orderBy(draw, col(idCol))
         .limit(n)
-        .localCheckpoint(false)
+        .cut()
       case None => base
     }
     // deterministic pseudo-random candidate draw: lowest hash-ordered rows
@@ -274,7 +276,7 @@ object Similarity {
     // the sample checkpoint is fully consumed (centroids live on the
     // driver now) — release its blocks instead of waiting for GC
     if (sampleSize.isDefined)
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(vecs)
+      graft.core.Cut.release(vecs)
     matrix.toSeq.zipWithIndex
       .map { case (v, i) => (i.toLong, v.map(_.toFloat).toSeq) }
       .toDF("cid", "embedding")
@@ -542,7 +544,7 @@ object Similarity {
     // multi-consumer rule; measured 9 executed shuffles uncut vs the
     // probe paid once)
     val cand = candidates.select(col(queryIdCol), col(idCol))
-      .localCheckpoint(false)
+      .cut()
     val fitCand = Joins.fitsBroadcast(cand)
     // raw vectors for candidate ids ONLY — no distinct on the semi-join
     // probe side (the r4 rule: the join dedups inherently)
@@ -693,9 +695,9 @@ object Similarity {
         posexplode(graft.functions.SignProjection(col("__vq"), planes,
           numTables, bits)).as(Seq("tbl", "sig")))
     val qVq = Dedup.quantized(queries, qIdCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val cVq = Dedup.quantized(corpus, idCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val cand = sigs(qVq, qIdCol)
       .join(sigs(cVq, idCol), Seq("tbl", "sig"))
       .select(col(qIdCol).as("a"), col(idCol).as("b"))
@@ -847,11 +849,11 @@ object Similarity {
     // the caller's positive-derivation lineage — 4 executed scans on
     // llm_hard_negatives instead of 3)
     val qVq = Dedup.quantized(queries, qIdCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val cVq = Dedup.quantized(corpus, idCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val posCut = positives.select(col(qIdCol).as("a"), col(idCol).as("b"))
-      .localCheckpoint(false)
+      .cut()
     val cand = sigs(qVq, qIdCol)
       .join(sigs(cVq, idCol), Seq("tbl", "sig"))
       .select(col(qIdCol).as("a"), col(idCol).as("b"))
@@ -899,9 +901,9 @@ object Similarity {
     // cut both (the multi-consumer rule) or the input scans re-run
     // per consumer
     val qVq = Dedup.quantized(queries, qIdCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val cVq = Dedup.quantized(corpus, idCol, vecCol, scale)
-      .localCheckpoint(false)
+      .cut()
     val cand = broadcast(qVq.select(col(qIdCol).as("a")))
       .crossJoin(cVq.select(col(idCol).as("b")))
     val scored = Dedup.cos2Score(cand,
@@ -960,7 +962,7 @@ object Similarity {
     // truth feeds both the denominator and the hit join; it is
     // top-k-bounded, so the cut is list-sized (multi-consumer rule —
     // without it the whole exact-scoring plan runs twice)
-    val t = truth.select(col(qIdCol), col(idCol)).localCheckpoint(false)
+    val t = truth.select(col(qIdCol), col(idCol)).cut()
     val a = approx.select(col(qIdCol), col(idCol))
     val hits = t.join(a, Seq(qIdCol, idCol), "left_semi")
       .groupBy(col(qIdCol)).agg(count(lit(1)).as("n_hits"))
@@ -1022,9 +1024,9 @@ object Similarity {
     val enc = 1L << 40
     val intDiv = graft.functions.VectorFunctions.intDiv _
     val vqA = Dedup.quantized(src, srcIdCol, vecCol, scale)
-      .select(col(srcIdCol).as("a"), col("__vq")).localCheckpoint(false)
+      .select(col(srcIdCol).as("a"), col("__vq")).cut()
     val vqB = Dedup.quantized(tgt, tgtIdCol, vecCol, scale)
-      .select(col(tgtIdCol).as("b"), col("__vq")).localCheckpoint(false)
+      .select(col(tgtIdCol).as("b"), col("__vq")).cut()
     val pairs = candidates
       .map(_.select(col(srcIdCol).as("a"), col(tgtIdCol).as("b")))
       .getOrElse(vqA.select("a").crossJoin(vqB.select("b")))
@@ -1032,7 +1034,7 @@ object Similarity {
         vqA.select(col("a"), col("__vq").as("__va")),
         vqB.select(col("b"), col("__vq").as("__vb")))
       .select(col("a"), col("b"), col("cos2_bp"))
-      .localCheckpoint(false)
+      .cut()
     // Σ of the k best cos2_bp per side: bounded-heap collect of the
     // (inverted-score, id, score) struct, then an in-array fold — no
     // explode, no second aggregation over the exploded rows.
@@ -1052,7 +1054,7 @@ object Similarity {
       .select(col("a"), col("b"), intDiv(
           col("cos2_bp") * lit(2L * k * marginScale),
           col("__sum_a") + col("__sum_b")).as("margin_fp"))
-      .localCheckpoint(false)
+      .cut()
     def best(key: String, other: String): DataFrame =
       margins.groupBy(key)
         .agg(max(col("margin_fp") * enc + (lit(enc - 1) - col(other)))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cut.CutOps
+
 /** Text-analysis operators for training-data pipelines (SURVEY §2.9 L4 +
   * builder-prompt mandate): language-ID heuristic, quality scoring, token
   * counting, document fingerprinting. All codegen'd Column expressions —
@@ -337,7 +339,7 @@ object TextStats {
       .groupBy(col("bin"))
       .agg(sum(col("__b")).cast("long").as("n_base"),
         sum(lit(1L) - col("__b")).cast("long").as("n_cur"))
-      .localCheckpoint(false)
+      .cut()
     val tot = binned.agg(sum(col("n_base")).cast("long").as("__tb"),
       sum(col("n_cur")).cast("long").as("__tc"))
     binned.crossJoin(broadcast(tot))
@@ -759,7 +761,7 @@ object TextStats {
       if (n == 1) graft.functions.WordShingles(col(textCol), n)
       else when(size(t) >= n, graft.functions.WordShingles(col(textCol), n))
         .otherwise(array().cast("array<string>")))
-    val tg = train.select(gram.as("g")).distinct().localCheckpoint(false)
+    val tg = train.select(gram.as("g")).distinct().cut()
     val small = Joins.fitsBroadcast(tg, maxBroadcastRows)
     score.select(col(idCol), gram.as("g"))
       .join(Joins.hinted(small, tg.withColumn("__in", lit(1L))),
@@ -795,7 +797,7 @@ object TextStats {
   def oovRate(docs: DataFrame, vocab: DataFrame, groupCol: String = "lang",
               textCol: String = "text",
               maxBroadcastRows: Long = Joins.DefaultMaxBroadcastRows): DataFrame = {
-    val v = vocab.select(col("token")).localCheckpoint(false)
+    val v = vocab.select(col("token")).cut()
     val small = Joins.fitsBroadcast(v, maxBroadcastRows)
     docs.select(col(groupCol), explode(toks(col(textCol))).as("token"))
       .join(Joins.hinted(small, v.withColumn("__in", lit(1L))),
@@ -897,12 +899,12 @@ object TextStats {
     val cnt = paired
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .cut()
     // uni feeds THREE consumers (both join sides + the total) — cut it
     // too, or each broadcast build re-runs its aggregate (6 → 4
     // executed shuffles, ExchangeBudgets)
     val uni = cnt.groupBy(col("w1").as("w")).agg(sum(col("c")).as("cu"))
-      .localCheckpoint(false)
+      .cut()
     val tot = uni.agg(sum(col("cu")).as("n"))
     val uniSmall = Joins.fitsBroadcast(uni, maxBroadcastRows)
     cnt.where(col("w2").isNotNull && col("c") >= minCount)
@@ -1096,7 +1098,7 @@ object TextStats {
     val cnt = pos
       .groupBy(col("s.p2").as("p2"), col("s.p1").as("p1"), col("s.w").as("w"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .cut()
     // minCount prunes ONLY the deepest table: bigram/unigram counts
     // stay exact so every backoff denominator is consistent with its
     // numerator's level
@@ -1107,9 +1109,9 @@ object TextStats {
     // (9 → 6 executed shuffles, ExchangeBudgets)
     val c2 = cnt.where(col("p1").isNotNull)
       .groupBy(col("p1"), col("w")).agg(sum(col("c")).cast("long").as("__big"))
-      .localCheckpoint(false)
+      .cut()
     val c1 = cnt.groupBy(col("w")).agg(sum(col("c")).cast("long").as("__uni"))
-      .localCheckpoint(false)
+      .cut()
     val tot = c1.agg(sum(col("__uni")).cast("long").as("__n"))
     val sp = score.select(col(idCol), explode(
       graft.functions.ContextTriples(col(textCol), 3)).as("s"))
@@ -1403,7 +1405,7 @@ object TextStats {
     // tiny value-domain-sized frame once (the multi-consumer rule;
     // no lineage after the cut, by design — bounded by construction).
     val hist = vals.groupBy(valCol).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .cut()
     val cdf = hist.withColumn("__cum",
       sum(col("__c")).over(org.apache.spark.sql.expressions.Window
         .orderBy(valCol)
@@ -1701,7 +1703,7 @@ object TextStats {
         sum(col("__c")).over(org.apache.spark.sql.expressions.Window
           .partitionBy(langCol).orderBy("__pq")
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .localCheckpoint(false)
+      .cut()
     val totals = cdf.groupBy(langCol).agg(max(col("__cum")).as("__total"))
     val cuts = cdf.join(broadcast(totals), langCol)
       .groupBy(langCol)

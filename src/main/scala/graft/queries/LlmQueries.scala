@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Cut.CutOps
 import graft.llm.{Audit, Curation, Dedup, Multimodal, Packing, Sampling, Similarity, TextStats}
 import graft.model.Tables
 import graft.streaming.StreamOps
@@ -934,11 +935,10 @@ object LlmQueries {
           |FROM comp ORDER BY node""".stripMargin) { (spark, sf) =>
       val edges = GraphFixture.bipartiteEdges(
           GraphFixture.weightedEdges(spark, sf))
-        .localCheckpoint(false)
+        .cut()
       val star = edges.where(!col("b").startsWith("host:bridge-"))
       val delta = edges.where(col("b").startsWith("host:bridge-"))
-      val prior = graft.llm.Components.pairComponents(
-        star, idCol = "node", inputIsCut = true)
+      val prior = graft.llm.Components.pairComponents(star, idCol = "node")
       graft.llm.Components.incremental(prior, delta, idCol = "node",
           compCol = "component")
         .orderBy("node")
@@ -961,10 +961,10 @@ object LlmQueries {
           |FROM e JOIN comp c ON c.id = 'host:' || e.dst_host
           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (spark, sf) =>
       val weighted = GraphFixture.weightedEdges(spark, sf)
-        .localCheckpoint(false)
+        .cut()
       val pairEdges = GraphFixture.bipartiteEdges(weighted)
       val canon = graft.llm.Components
-        .pairComponents(pairEdges, idCol = "node", inputIsCut = true)
+        .pairComponents(pairEdges, idCol = "node")
         .where(col("node").startsWith("host:"))
         .select(expr("substring(node, 6)").as("dst_host"),
           expr("substring(component, 6)").as("canon_host"))
@@ -995,7 +995,7 @@ object LlmQueries {
           |FROM e JOIN comp c ON c.id = 'host:' || e.dst_host
           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (spark, sf) =>
       val weighted = GraphFixture.weightedEdges(spark, sf)
-        .localCheckpoint(false) // two waves filter ONE planted frame
+        .cut() // two waves filter ONE planted frame
       val wave1 = weighted.where(!col("dst_host").startsWith("bridge-"))
       val wave2 = weighted.where(col("dst_host").startsWith("bridge-"))
       val dir = Q.createTempDirectory("canon_q")
@@ -1181,7 +1181,7 @@ object LlmQueries {
       val comp = broadcast(aSide).join(bSide, col("bid") === col("aid") + 1)
         .select((col("aid") + 600000L).as("doc_id"),
           concat(col("ta"), lit(" "), col("tb")).as("text"))
-        .localCheckpoint(false)
+        .cut()
       Dedup.polyMinHashContainDups(base.unionAll(comp), k = 2, bands = 8,
           rowsPerBand = 2, minContainment = 0.8)
         .orderBy("a", "b")
@@ -3528,7 +3528,7 @@ object LlmQueries {
         .where(col("embedding").isNotNull && col("vec_id") < 400)
       // the projected frame feeds both sides of the consecutive-pair
       // self-join — cut it once (multi-consumer rule)
-      val pr = Similarity.randomProject(raw).localCheckpoint(false)
+      val pr = Similarity.randomProject(raw).cut()
       val a = pr.select(col("vec_id").as("a"),
         transform(col("__vq"), x => x.cast("double")).as("va"),
         transform(col("proj"), x => x.cast("double")).as("ya"))
@@ -4111,7 +4111,7 @@ object LlmQueries {
         .where(col("embedding").isNotNull)
         .select(col("vec_id"), col("lang"), col("embedding"))
         // src/tgt both slice this frame — one cut, 2 executed scans total
-        .localCheckpoint(false)
+        .cut()
       Similarity.marginMine(
           v.where(col("lang") === "de")
             .select(col("vec_id").as("a"), col("embedding")),
@@ -4202,7 +4202,7 @@ object LlmQueries {
         .select(col("vec_id"), col("lang"), col("embedding"))
         // four slices read this frame (each side's signature pass +
         // the scorer's quantize pass) — one cut
-        .localCheckpoint(false)
+        .cut()
       val src = v.where(col("lang") === "de")
         .select(col("vec_id").as("a"), col("embedding"))
       val tgt = v.where(col("lang") === "en")
@@ -4547,7 +4547,7 @@ object LlmQueries {
       import graft.streaming.StreamOps
       // one materialization feeds bootstrap, both planted batches, and
       // the query set — uncut, each consumer re-scans the parquet
-      val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
+      val emb = Tables.embeddings(spark, sf).cut()
       val dir = Q.createTempDirectory("ann_probe_q") + "/ann"
       StreamOps.bootstrapAnn(emb, dir, clusterCodebook, pqCodebooks)
       StreamOps.applyAnnBatch(
@@ -4578,7 +4578,7 @@ object LlmQueries {
     // predicate to the candidate domain of the shared IVF-PQ SQL.
     Q("llm_ann_probe_filtered", annProbeFilteredSql) { (spark, sf) =>
       import graft.streaming.StreamOps
-      val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
+      val emb = Tables.embeddings(spark, sf).cut()
       val dir = Q.createTempDirectory("ann_probe_f_q") + "/ann"
       StreamOps.bootstrapAnn(emb, dir, clusterCodebook, pqCodebooks)
       StreamOps.applyAnnBatch(
@@ -4613,7 +4613,7 @@ object LlmQueries {
     // between the quantized index and the answer — previously exact
     // distances meant the brute face over the whole corpus.
     Q("llm_ann_rerank", annRerankSql) { (spark, sf) =>
-      val emb = Tables.embeddings(spark, sf).localCheckpoint(false)
+      val emb = Tables.embeddings(spark, sf).cut()
       val queries = emb.where(col("vec_id") < 20)
         .withColumnRenamed("vec_id", "qid")
       Similarity.rerankExact(queries,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Cut.CutOps
 import graft.model.Tables
 import graft.streaming.StreamOps
 import org.apache.spark.sql.Column
@@ -156,7 +157,7 @@ object StreamQueries {
       val (base, rawChanges) = CdcFixture.baseAndChanges(spark, sf)
       // changelog-sized cut: two micro-batches filter ONE planted frame —
       // uncut, each would re-derive (and re-scan) the orders projection
-      val changes = rawChanges.localCheckpoint(false)
+      val changes = rawChanges.cut()
       val deletesFirst = changes.where(col("version") === 2L)
       val lateLower = changes.where(col("version") === 1L)
       val s0 = Cdc.bootstrap(base, Seq("o_orderkey"))
@@ -182,7 +183,7 @@ object StreamQueries {
       (spark, sf) =>
       import graft.relational.Cdc
       val (base, rawChanges) = CdcFixture.baseAndChanges(spark, sf)
-      val changes = rawChanges.localCheckpoint(false)
+      val changes = rawChanges.cut()
       val applied = changes.where(col("version") === 2L) // sink got these
       val tail = changes.where(col("version") === 1L)    // un-applied tail
       val snap = Q.createTempDirectory("cdc_mor_q") + "/snap"
@@ -215,7 +216,7 @@ object StreamQueries {
       (spark, sf) =>
       import graft.relational.Cdc
       val (base, rawChanges) = CdcFixture.baseAndChanges(spark, sf)
-      val changes = rawChanges.localCheckpoint(false)
+      val changes = rawChanges.cut()
       val snap = Q.createTempDirectory("cdc_asof_q") + "/snap"
       StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("o_orderkey")),
         snap, Seq("o_orderkey"), nBuckets = 16)
@@ -242,7 +243,7 @@ object StreamQueries {
       (spark, sf) =>
       import graft.relational.Cdc
       val (base, rawChanges) = CdcFixture.baseAndChanges(spark, sf)
-      val changes = rawChanges.localCheckpoint(false)
+      val changes = rawChanges.cut()
       val applied = changes.where(col("version") === 2L)
       val tail = changes.where(col("version") === 1L)
       val snap = Q.createTempDirectory("cdc_keys_q") + "/snap"
@@ -252,7 +253,7 @@ object StreamQueries {
         "version", "op", nBuckets = 16)
       // request-sized, consumed thrice (bucket discovery + two
       // broadcast semi-joins) — cut once, never re-derive the scan
-      val wanted = CdcFixture.wantedKeys(spark, sf).localCheckpoint(false)
+      val wanted = CdcFixture.wantedKeys(spark, sf).cut()
       StreamOps.readKeys(spark, snap, wanted, tail, Seq("o_orderkey"))
         .orderBy("o_orderkey")
     },
@@ -270,7 +271,7 @@ object StreamQueries {
       (spark, sf) =>
       import graft.relational.Cdc
       val (base, rawChanges) = CdcFixture.baseAndNotedChanges(spark, sf)
-      val changes = rawChanges.localCheckpoint(false)
+      val changes = rawChanges.cut()
       val applied = changes.where(col("version") === 2L)
       val tail = changes.where(col("version") === 1L)
       val snap = Q.createTempDirectory("cdc_evolve_q") + "/snap"

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.Cut
+import graft.core.Cut.CutOps
 import graft.model.Event
 import graft.streaming.Store.{AnnMeta, CanonMeta, CdcMeta, IdxMeta}
 
@@ -798,8 +800,8 @@ object StreamOps {
     * reader must match the writer's layout, never guess it (a wrong
     * bucket count would prune wrong and silently drop the tail's
     * effect on unpruned keys). The tail is consumed twice (bucket
-    * discovery + merge input) — cut a derived tail with
-    * `localCheckpoint` if its lineage is expensive.
+    * discovery + merge input) — cut a derived tail (`Cut.lazyCut`) if
+    * its lineage is expensive.
     *
     * `withUntouched = false` skips CONSTRUCTING the untouched-leg frame
     * (an empty schema-carrying placeholder is returned instead):
@@ -858,7 +860,7 @@ object StreamOps {
   def compactCdcSnapshot(spark: org.apache.spark.sql.SparkSession,
                          snapshotPath: String, horizon: Long,
                          keyCols: Seq[String],
-                         ownerCheckpoint: Option[String] = None): Unit = {
+                         ownerCheckpoint: Option[String] = None): Unit = Cut.scope {
     val snap = Store.CdcSnapshot.at(spark, snapshotPath)
     val meta = snap.meta.getOrElse(throw snap.missing("compact an " +
       "EXISTING maintained snapshot (the meta owns the bucket layout)"))
@@ -881,14 +883,13 @@ object StreamOps {
     val owner = snap.owner(meta.writer)
     val cut = graft.relational.Cdc
       .compact(readCdcSnapshot(spark, snapshotPath), horizon)
-      .localCheckpoint(true)
+      .cutNow()
     // compaction is maintenance, not takeover — OWNERSHIP survives: the
     // rewrite re-records the EFFECTIVE owner (claim-first — writing
     // back meta.writer alone would downgrade a store whose claim landed
     // but whose first meta write did not, r19 self-review), and the
     // bucket layout comes from the meta (never re-supplied)
-    try writeCdcSnapshot(cut, snapshotPath, keyCols, meta.nBuckets, owner)
-    finally org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(cut)
+    writeCdcSnapshot(cut, snapshotPath, keyCols, meta.nBuckets, owner)
   }
 
   /** Retain the maintained snapshot as a FROZEN time-travel base
@@ -1187,9 +1188,9 @@ object StreamOps {
       case None =>
         Cdc.bootstrap(aligned.drop(versionCol, opCol).limit(0), keyCols)
     }
-    val merged = Cdc.mergeVersioned(existing, aligned, keyCols, versionCol, opCol)
-      .localCheckpoint(true) // sever the snapshot self-read before overwrite
-    try {
+    Cut.scope {
+      val merged = Cdc.mergeVersioned(existing, aligned, keyCols, versionCol, opCol)
+        .cutNow() // sever the snapshot self-read before overwrite
       // bucket-clustered like writeCdcSnapshot: one file per touched
       // bucket per batch instead of nTasks per bucket — one extra
       // exchange of ONLY the touched rows (k/nBuckets of the snapshot,
@@ -1219,8 +1220,6 @@ object StreamOps {
       snap.writeMeta(CdcMeta(nBuckets,
         Some(unionAdditiveSchema(merged.schema, reRead.flatMap(_.schema))),
         reRead.flatMap(_.writer).orElse(writer), None))
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(merged)
     }
   }
 
@@ -1418,6 +1417,37 @@ object StreamOps {
     (storedIdx, idxIdType)
   }
 
+  /** Banding candidates `(bid, cid)`: touched index rows ⨝ batch
+    * signatures (batch side size-gated broadcast — an initial-load batch
+    * can be huge, and an unconditional broadcast OOMs; the Joins gate);
+    * id equality excludes a replayed doc's own prior entry. */
+  private def indexCandidates(idx: DataFrame, sigs: DataFrame,
+                              idCol: String): DataFrame =
+    idx.join(graft.llm.Joins.gatedBroadcast(sigs.select(
+        col(idCol).as("bid"), col("band"), col("sig"))), Seq("band", "sig"))
+      .where(col(idCol) =!= col("bid"))
+      .select(col("bid"), col(idCol).as("cid")).distinct()
+
+  /** The live corpus rows of the candidates' `cid`s, read from their
+    * buckets only, and the broadcast decision made for them. `cand` is
+    * a checkpoint (no size stats — the LogicalRDD rule), so the
+    * candidate-sized probe side gets the size-gated broadcast
+    * explicitly or the touched TEXT shuffles into an SMJ (the r17
+    * probe measured 300 MB of corpus text moving for a 64-row id
+    * list); the gate counts the raw pair frame ONCE, never the
+    * distinct view. */
+  private def candidateCorpus(spark: org.apache.spark.sql.SparkSession,
+                              corpusPath: String, cand: DataFrame,
+                              idCol: String, caller: String): (DataFrame, Boolean) = {
+    val cids = cand.select(col("cid").as(idCol))
+    val (touched, _, _) = splitByTailBuckets(spark, corpusPath,
+      cids, Seq(idCol), caller, withUntouched = false)
+    val small = graft.llm.Joins.fitsBroadcast(cand)
+    (graft.relational.Cdc.publicSnapshot(touched)
+      .join(graft.llm.Joins.hinted(small, cids.distinct()), Seq(idCol), "left_semi"),
+      small)
+  }
+
   /** Read-only dedup PROBE (r18) — "would these docs be near-dups of
     * the corpus, and of WHICH doc?": the serving query of a
     * [[dedupStream]] deployment (an ingest API checking content before
@@ -1442,9 +1472,9 @@ object StreamOps {
     val spark = docs.sparkSession
     // lazy cuts (GC-released): the probe RETURNS a frame, so the eager
     // cut + release discipline of the batch path does not apply
-    val b = docs.localCheckpoint(false)
+    val b = docs.cut()
     val sigsB = Dedup.signatureIndex(b, k, bands, rowsPerBand,
-      idCol, textCol, poly).localCheckpoint(false)
+      idCol, textCol, poly).cut()
     val (storedIdx, idxIdType) =
       readTouchedIndex(spark, indexPath, sigsB, nIdxBuckets, idCol,
         "this probe")
@@ -1453,24 +1483,12 @@ object StreamOps {
     storedIdx match {
       case None => b.select(col(idCol), noDup)
       case Some(idx) =>
-        val cand = idx.join(Joins.gatedBroadcast(sigsB.select(
-              col(idCol).as("bid"), col("band"), col("sig"))),
-            Seq("band", "sig"))
-          .where(col(idCol) =!= col("bid"))
-          .select(col("bid"), col(idCol).as("cid")).distinct()
-          .localCheckpoint(false) // candidate-sized; feeds fetch + verify
-        val cids = cand.select(col("cid").as(idCol))
-        val (touched, _, _) = splitByTailBuckets(spark, corpusPath,
-          cids, Seq(idCol), "probeDedup", withUntouched = false)
-        // the applyDedupBatch broadcast discipline: cand is a
-        // checkpoint (no size stats), gate ONCE on the raw pair frame
-        // and apply the decision to every candidate-derived view —
-        // including the final evidence join, whose post-agg side the
-        // planner also cannot size past the checkpoint
-        val small = Joins.fitsBroadcast(cand)
-        val corpusCand = graft.relational.Cdc.publicSnapshot(touched)
-          .join(Joins.hinted(small, cids.distinct()),
-            Seq(idCol), "left_semi")
+        val cand = indexCandidates(idx, sigsB, idCol)
+          .cut() // candidate-sized; feeds fetch + verify
+        // the gate decision also applies to the final evidence join,
+        // whose post-agg side the planner cannot size past the checkpoint
+        val (corpusCand, small) =
+          candidateCorpus(spark, corpusPath, cand, idCol, "probeDedup")
         val best = Dedup.verifiedDupPairs(cand, b, corpusCand,
             k, threshold, idCol, textCol)
           .groupBy("bid").agg(min(col("cid")).as("dup_of"))
@@ -1637,8 +1655,7 @@ object StreamOps {
                                      tailFiles: Int = 1): Unit = {
     require(maxTailBatches > 0,
       s"maxTailBatches must be positive, got $maxTailBatches")
-    import graft.llm.{Dedup, Joins}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.llm.Dedup
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     require(!batch.columns.contains("version") && !batch.columns.contains("op"),
@@ -1670,148 +1687,116 @@ object StreamOps {
     val indexFolded = idx.isFolded(idxMeta, writer, batchId)
     // the batch feeds signatures, the within-batch pass, and the verify
     // — cut once so the source is not re-derived per consumer
-    val b = batch.localCheckpoint(true)
-    try {
+    Cut.scope {
+      val b = batch.cutNow()
       val sigsB = Dedup.signatureIndex(b, k, bands, rowsPerBand,
-        idCol, textCol, poly).localCheckpoint(true)
-      try {
-        val (storedIdx, idxIdType) =
-          readTouchedIndex(spark, indexPath, sigsB, nIdxBuckets, idCol,
-            "this stream")
-        val indexExists = storedIdx.isDefined || idxIdType.isDefined
-        // banding candidates: touched index buckets ⨝ batch signatures
-        // (batch side size-gated broadcast — an initial-load batch can
-        // be huge, and an unconditional broadcast OOMs; the Joins
-        // gate); id equality excludes a replayed doc's own prior entry
-        val cand =
-          (storedIdx match {
-            case None =>
-              sigsB.select(col(idCol).as("bid"), col(idCol).as("cid")).limit(0)
-            case Some(idx) =>
-              idx.join(Joins.gatedBroadcast(sigsB.select(
-                  col(idCol).as("bid"), col("band"), col("sig"))),
-                  Seq("band", "sig"))
-                .where(col(idCol) =!= col("bid"))
-                .select(col("bid"), col(idCol).as("cid")).distinct()
-          })
-            .localCheckpoint(true) // candidate-sized; feeds fetch + verify
-        try {
-          val corpusCand =
-            if (!indexExists) b.limit(0)
-            else {
-              val cids = cand.select(col("cid").as(idCol))
-              val (touched, _, _) = splitByTailBuckets(spark, corpusPath,
-                cids, Seq(idCol), "applyDedupBatch", withUntouched = false)
-              // cand is a checkpoint (no size stats — the LogicalRDD
-              // rule), so the candidate-sized probe side gets the
-              // size-gated broadcast explicitly or the touched TEXT
-              // shuffles into an SMJ (the r17 probe measured 300 MB of
-              // corpus text moving for a 64-row id list); the gate
-              // counts the raw pair frame, never the distinct view
-              graft.relational.Cdc.publicSnapshot(touched)
-                .join(Joins.hinted(Joins.fitsBroadcast(cand),
-                    cids.distinct()),
-                  Seq(idCol), "left_semi")
-            }
-          val matchedCorpus = Dedup.verifiedDupIds(cand, b, corpusCand,
-            k, threshold, idCol, textCol)
-          // within-batch pass over the ALREADY-COMPUTED batch
-          // signatures (r20): sigsB IS signatureIndex(b) under this
-          // batch's (k, bands, rowsPerBand, poly) — the text-input
-          // near-dup faces would re-derive the same frame, paying the
-          // MinHash encode of every ingested document a second time
-          val (withinPairs, withinCuts) = Dedup.nearDupsFromSigsCut(sigsB,
-            b, k, threshold, idCol, textCol)
-          // within-batch election: the default pairwise keep-lowest-id
-          // rule drops each verified pair's higher side — the
-          // documented ESTIMATE (it over-keeps a doc whose only pairs
-          // are with higher ids that themselves dropped: on pairs
-          // (1,3),(2,3) it keeps {1,2} though 2's whole cluster has
-          // rep 1). `exactWithinBatch` elects one min-id rep per
-          // TRANSITIVE cluster instead (Dedup.dupClusters' closure,
-          // batch-pair-sized) — closure-exact batches for deployments
-          // that want them; the estimate stays the default (cheaper —
-          // no iteration — and the oracle-matched shape).
-          val withinDrops =
-            if (exactWithinBatch)
-              graft.llm.Components
-                .pairComponents(withinPairs.select("a", "b"), "a", "b", "bid")
-                .where(col("bid") =!= col("component"))
-                .select("bid")
-            else withinPairs.select(col("b").as("bid")).distinct()
-          // no extra distinct on the union: the left_anti probe side
-          // dedups inherently (the r4 rule), and each branch is
-          // already distinct
-          val survivors = b.join(
-              matchedCorpus.unionByName(withinDrops)
-                .select(col("bid").as(idCol)),
-              Seq(idCol), "left_anti")
-            .localCheckpoint(true) // feeds the corpus merge + the index write
-          // survivors is eagerly materialized — the within-pass's two
-          // internal cuts are superseded; release them NOW instead of
-          // leaking two checkpointed frames per micro-batch for the
-          // session (r21, the r20 ADVICE note; the Curation pairStage
-          // pattern). Each cut is its own checkpoint root, so this
-          // never touches the caller-owned b/sigsB cuts.
-          withinCuts.foreach(ColumnBridge.releaseCheckpoint)
-          try {
-            // the corpus store is pinned to THIS stream's writer id — a
-            // second dedupStream on the same corpusPath fails loudly
-            // instead of silently losing committed survivors to the CDC
-            // read-merge-overwrite race (r18: DEPLOY.md's "one stream
-            // per (indexPath, corpusPath)" now has mechanical teeth).
-            // PRE-verify that claim before the overlapped writes fork
-            // (r21): applyCdcBatch re-checks it on its own thread, but a
-            // batch doomed at the corpus pin must touch NEITHER store —
-            // without this, the concurrent index write would land a tail
-            // partition for a bounced batch (claim-ordering spec in
-            // DedupStreamSpec). Idempotent for the rightful writer.
-            val corpus = Store.CdcSnapshot.at(spark, corpusPath)
-            corpus.claim(Some(writer), corpus.meta.flatMap(_.writer))
-            // the two store writes are INDEPENDENT — different paths,
-            // every shared input an eager checkpoint — so they run
-            // OVERLAPPED from two driver threads (r21, guide §2.6: the
-            // index write's tasks back-fill executor slots the corpus
-            // merge's straggler tail leaves idle; at deployment scale
-            // the two writes are the batch's dominant sequential jobs).
-            // Commit ORDER no longer carries recovery semantics: the
-            // corpus merge replays unconditionally (see the
-            // folded-watermark comment above), and each write is
-            // idempotent on redelivery by itself.
-            overlapped("graft-dedup-index-write")(
-              if (!indexFolded) {
-                val survivorSigs = sigsB
-                  .join(survivors.select(idCol), Seq(idCol), "left_semi")
-                val typed = idxIdType.fold(survivorSigs)(t =>
-                  survivorSigs.withColumn(idCol, col(idCol).cast(t)))
-                // the per-batch meta carries the fold watermarks through
-                idx.writeTier(typed, writer, batchId, None,
-                  IdxMeta(nIdxBuckets, typed.schema,
-                    idxMeta.fold(Map.empty[String, Long])(_.folded)),
-                  tailFiles)
-              })(
-              applyCdcBatch(
-                survivors.withColumn("version", lit(batchId + 1L))
-                  .withColumn("op", lit("U")),
-                corpusPath, Seq(idCol), "version", "op", nBuckets,
-                Some(writer)))
-            // the TAIL BOUND (r19, the r18 verdict ask 2): every probe
-            // reads the whole tail, so unbounded per-batch fact
-            // partitions are the one growth term the two-tier layout
-            // left to operator cadence — auto-fold when the tail
-            // crosses the bound. The fold is index-wide (an amortized
-            // 1/maxTailBatches share per batch); retraction GC (the
-            // corpus semi-join) stays the offline compactDedupIndex
-            // call — the auto path must never add a corpus read to a
-            // micro-batch. Crash mid-fold = meta-without-dirs, caught
-            // loudly by the next probe's torn-layout guard; the
-            // replayed batch then re-folds after rebuildDedupIndex.
-            if (idx.tailBatches >= maxTailBatches)
-              compactDedupIndexOwned(spark, indexPath, None, Some(writer))
-          } finally ColumnBridge.releaseCheckpoint(survivors)
-        } finally ColumnBridge.releaseCheckpoint(cand)
-      } finally ColumnBridge.releaseCheckpoint(sigsB)
-    } finally ColumnBridge.releaseCheckpoint(b)
+        idCol, textCol, poly).cutNow()
+      val (storedIdx, idxIdType) =
+        readTouchedIndex(spark, indexPath, sigsB, nIdxBuckets, idCol,
+          "this stream")
+      val indexExists = storedIdx.isDefined || idxIdType.isDefined
+      // survivors is eagerly materialized, so this inner scope releases
+      // the candidate cut and the within-pass's internal cuts the moment
+      // it returns, instead of leaking them per micro-batch for the
+      // session (r21, the r20 ADVICE note; the Curation pairStage
+      // pattern). b and sigsB belong to the outer scope.
+      val survivors = Cut.scope {
+        val cand = storedIdx
+          .fold(sigsB.select(col(idCol).as("bid"), col(idCol).as("cid")).limit(0))(
+            indexCandidates(_, sigsB, idCol))
+          .cutNow() // candidate-sized; feeds fetch + verify
+        val corpusCand =
+          if (!indexExists) b.limit(0)
+          else candidateCorpus(spark, corpusPath, cand, idCol, "applyDedupBatch")._1
+        val matchedCorpus = Dedup.verifiedDupIds(cand, b, corpusCand,
+          k, threshold, idCol, textCol)
+        // within-batch pass over the ALREADY-COMPUTED batch
+        // signatures (r20): sigsB IS signatureIndex(b) under this
+        // batch's (k, bands, rowsPerBand, poly) — the text-input
+        // near-dup faces would re-derive the same frame, paying the
+        // MinHash encode of every ingested document a second time
+        val withinPairs = Dedup.nearDupsFromSigs(sigsB, b, k, threshold,
+          idCol, textCol)
+        // within-batch election: the default pairwise keep-lowest-id
+        // rule drops each verified pair's higher side — the
+        // documented ESTIMATE (it over-keeps a doc whose only pairs
+        // are with higher ids that themselves dropped: on pairs
+        // (1,3),(2,3) it keeps {1,2} though 2's whole cluster has
+        // rep 1). `exactWithinBatch` elects one min-id rep per
+        // TRANSITIVE cluster instead (Dedup.dupClusters' closure,
+        // batch-pair-sized) — closure-exact batches for deployments
+        // that want them; the estimate stays the default (cheaper —
+        // no iteration — and the oracle-matched shape).
+        val withinDrops =
+          if (exactWithinBatch)
+            graft.llm.Components
+              .pairComponents(withinPairs.select("a", "b"), "a", "b", "bid")
+              .where(col("bid") =!= col("component"))
+              .select("bid")
+          else withinPairs.select(col("b").as("bid")).distinct()
+        // no extra distinct on the union: the left_anti probe side
+        // dedups inherently (the r4 rule), and each branch is
+        // already distinct
+        b.join(
+            matchedCorpus.unionByName(withinDrops)
+              .select(col("bid").as(idCol)),
+            Seq(idCol), "left_anti")
+          .cutNow() // feeds the corpus merge + the index write
+      }
+      // the corpus store is pinned to THIS stream's writer id — a
+      // second dedupStream on the same corpusPath fails loudly
+      // instead of silently losing committed survivors to the CDC
+      // read-merge-overwrite race (r18: DEPLOY.md's "one stream
+      // per (indexPath, corpusPath)" now has mechanical teeth).
+      // PRE-verify that claim before the overlapped writes fork
+      // (r21): applyCdcBatch re-checks it on its own thread, but a
+      // batch doomed at the corpus pin must touch NEITHER store —
+      // without this, the concurrent index write would land a tail
+      // partition for a bounced batch (claim-ordering spec in
+      // DedupStreamSpec). Idempotent for the rightful writer.
+      val corpus = Store.CdcSnapshot.at(spark, corpusPath)
+      corpus.claim(Some(writer), corpus.meta.flatMap(_.writer))
+      // the two store writes are INDEPENDENT — different paths,
+      // every shared input an eager checkpoint — so they run
+      // OVERLAPPED from two driver threads (r21, guide §2.6: the
+      // index write's tasks back-fill executor slots the corpus
+      // merge's straggler tail leaves idle; at deployment scale
+      // the two writes are the batch's dominant sequential jobs).
+      // Commit ORDER no longer carries recovery semantics: the
+      // corpus merge replays unconditionally (see the
+      // folded-watermark comment above), and each write is
+      // idempotent on redelivery by itself.
+      overlapped("graft-dedup-index-write")(
+        if (!indexFolded) {
+          val survivorSigs = sigsB
+            .join(survivors.select(idCol), Seq(idCol), "left_semi")
+          val typed = idxIdType.fold(survivorSigs)(t =>
+            survivorSigs.withColumn(idCol, col(idCol).cast(t)))
+          // the per-batch meta carries the fold watermarks through
+          idx.writeTier(typed, writer, batchId, None,
+            IdxMeta(nIdxBuckets, typed.schema,
+              idxMeta.fold(Map.empty[String, Long])(_.folded)),
+            tailFiles)
+        })(
+        applyCdcBatch(
+          survivors.withColumn("version", lit(batchId + 1L))
+            .withColumn("op", lit("U")),
+          corpusPath, Seq(idCol), "version", "op", nBuckets,
+          Some(writer)))
+      // the TAIL BOUND (r19, the r18 verdict ask 2): every probe
+      // reads the whole tail, so unbounded per-batch fact
+      // partitions are the one growth term the two-tier layout
+      // left to operator cadence — auto-fold when the tail
+      // crosses the bound. The fold is index-wide (an amortized
+      // 1/maxTailBatches share per batch); retraction GC (the
+      // corpus semi-join) stays the offline compactDedupIndex
+      // call — the auto path must never add a corpus read to a
+      // micro-batch. Crash mid-fold = meta-without-dirs, caught
+      // loudly by the next probe's torn-layout guard; the
+      // replayed batch then re-folds after rebuildDedupIndex.
+      if (idx.tailBatches >= maxTailBatches)
+        compactDedupIndexOwned(spark, indexPath, None, Some(writer))
+    }
   }
 
   /** Fold the accumulated batch-keyed index partitions into one
@@ -1846,8 +1831,7 @@ object StreamOps {
     * inside [[applyDedupBatch]] IS the owning stream's batch. */
   private[graft] def compactDedupIndexOwned(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      corpusPath: Option[String], asWriter: Option[String]): Unit = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+      corpusPath: Option[String], asWriter: Option[String]): Unit = Cut.scope {
     val idx = Store.SignatureIndex.at(spark, indexPath)
     // the fold preserves the stored bucket layout — the meta owns it
     val (meta, _, folded) = idx.beginFold(asWriter, "compactDedupIndex",
@@ -1858,10 +1842,9 @@ object StreamOps {
     val kept = corpusPath.fold(all) { cp =>
       all.join(readDedupCorpus(spark, cp).select(idCol), Seq(idCol), "left_semi")
     }
-    val cut = kept.localCheckpoint(true)
-    try idx.writeTier(cut, "compact", -1L, Some(sigBucket(meta.nIdxBuckets)),
+    val cut = kept.cutNow()
+    idx.writeTier(cut, "compact", -1L, Some(sigBucket(meta.nIdxBuckets)),
       IdxMeta(meta.nIdxBuckets, cut.schema, folded))
-    finally ColumnBridge.releaseCheckpoint(cut)
   }
 
   /** Rebuild the signature index from the LIVE corpus — the recovery
@@ -2102,7 +2085,6 @@ object StreamOps {
   private def compactAnnIndexOwned(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String,
                                    asWriter: Option[String]): Unit = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val codesPath = s"$indexPath/codes"
     val codes = Store.AnnCodes.at(spark, codesPath)
     val (meta, dirs, folded) = codes.beginFold(asWriter, "compactAnnIndex",
@@ -2120,18 +2102,16 @@ object StreamOps {
     // window over the ENTIRE store on every fold): the untouched base
     // flows STRAIGHT to the cell-clustered write (shuffle-records
     // receipt pinned in AnnStreamSpec)
-    val (latest, tail) = annLatestWins(spark, codesPath, meta.schema, idCol,
-      dirs.filterNot(_ == tailDirName).toSeq, withTail = true)
-    try {
+    Cut.scope {
       // eager cut before the static overwrite of the files this plan
       // reads (the compactCdcSnapshot rule)
-      val cut = latest
+      val cut = annLatestWins(spark, codesPath, meta.schema, idCol,
+          dirs.filterNot(_ == tailDirName).toSeq, withTail = true)
         .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .localCheckpoint(true)
-      try codes.writeTier(cut, "compact", -1L, Some(col("cell")),
+        .cutNow()
+      codes.writeTier(cut, "compact", -1L, Some(col("cell")),
         meta.copy(schema = cut.schema, folded = folded))
-      finally ColumnBridge.releaseCheckpoint(cut)
-    } finally tail.foreach(ColumnBridge.releaseCheckpoint)
+    }
   }
 
   /** The ANN codes read LATEST-WINS per (id, subspace) — the one read
@@ -2150,13 +2130,13 @@ object StreamOps {
     * lands on either path. Bootstrap and prior folds sit at batch −1,
     * so any tail write outranks them. `baseDirs` are cell dir names;
     * without a tail (`withTail = false`, a folded store) the base is
-    * returned as is. Returns the codes and the tail's lazy cut. */
+    * returned as is. The tail is a lazy cut, owned by the caller's
+    * [[Cut.scope]] if one is open. */
   private def annLatestWins(spark: org.apache.spark.sql.SparkSession,
                             codesPath: String,
                             stored: org.apache.spark.sql.types.StructType,
                             idCol: String, baseDirs: Seq[String],
-                            withTail: Boolean)
-      : (DataFrame, Option[DataFrame]) = {
+                            withTail: Boolean): DataFrame = {
     val partSchema = stored
       .add(AnnCellCol, org.apache.spark.sql.types.LongType)
       .add(AnnWriterCol, org.apache.spark.sql.types.StringType)
@@ -2169,10 +2149,10 @@ object StreamOps {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stored)
       else readTiers(baseDirs).drop(AnnCellCol, AnnWriterCol, AnnBatchCol)
-    if (!withTail) (base, None)
+    if (!withTail) base
     else {
       val tail = readTiers(Seq(s"$AnnCellCol=$AnnTail"))
-        .drop(AnnCellCol, AnnWriterCol).localCheckpoint(false)
+        .drop(AnnCellCol, AnnWriterCol).cut()
       val fitTail = graft.llm.Joins.fitsBroadcast(tail)
       val latestTail = tail
         .withColumn("__rn", row_number().over(
@@ -2183,9 +2163,9 @@ object StreamOps {
         .drop("__rn", AnnBatchCol)
       // no distinct on the anti-join probe side (the r4 rule — the
       // join dedups inherently)
-      (base.join(graft.llm.Joins.hinted(fitTail, tail.select(idCol)),
+      base.join(graft.llm.Joins.hinted(fitTail, tail.select(idCol)),
           Seq(idCol), "left_anti")
-        .unionByName(latestTail), Some(tail))
+        .unionByName(latestTail)
     }
   }
 
@@ -2230,7 +2210,7 @@ object StreamOps {
     require(nprobe >= 1 && nprobe <= coarse.length,
       s"nprobe must be in [1, ${coarse.length}], got $nprobe")
     // queries feed routing (collected) and the search — cut once, lazily
-    val q = queries.localCheckpoint(false)
+    val q = queries.cut()
     // the routing is resolved ONCE: the collected (query, cell) pairs
     // drive the dir pruning AND go back into the search as a local
     // relation — re-executing the routing window inside searchPqIndex
@@ -2246,7 +2226,7 @@ object StreamOps {
       .distinct.sorted
     // latest-wins serving over the routed cells plus the tail; a folded
     // store (no tail dir) pays nothing for it
-    val (codes, _) = annLatestWins(spark, s"$indexPath/codes", meta.schema,
+    val codes = annLatestWins(spark, s"$indexPath/codes", meta.schema,
       idCol, routedCells.map(c => s"$AnnCellCol=$c").filter(dirs.contains).toSeq,
       withTail = dirs.contains(s"$AnnCellCol=$AnnTail"))
     Similarity.searchPqIndexWith(q,
@@ -2311,23 +2291,18 @@ object StreamOps {
     // a lost checkpoint = releaseStoreClaim with the stream stopped
     // (labels are monotone state; any stream may resume them solo).
     labels.claim(Some(writer), None)
-    val next = nextLabels(priorLabels(spark, labels), batch, aCol, bCol, idCol)
-    val cut = next.localCheckpoint(true)
-    try {
+    // the scope releases BOTH the write cut and the closure's own final
+    // labels checkpoint — a long-running stream would otherwise pin one
+    // dead label frame per micro-batch
+    Cut.scope {
+      val cut = nextLabels(priorLabels(spark, labels), batch, aCol, bCol, idCol)
+        .cutNow()
       val n = cut.count()
       require(n <= maxNodes,
         s"componentsStream labeling grew to $n nodes (> $maxNodes) — " +
           "bounded node domains only; use the batch closure for corpora")
       cut.write.mode("overwrite").parquet(labelsPath)
       labels.writeMeta(())
-    } finally {
-      // release BOTH the write cut and the closure's own final labels
-      // checkpoint (inside `next`'s plan) — a long-running stream
-      // would otherwise pin one dead label frame per micro-batch.
-      // `batch` carries no caller-owned checkpoints (foreachBatch
-      // source), so the blanket release is safe (r13 ownership rule)
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(cut)
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(next)
     }
   }
 
@@ -2433,7 +2408,6 @@ object StreamOps {
                                      writer: String, srcCol: String,
                                      hostCol: String, weightCol: String,
                                      nBuckets: Int, maxNodes: Long): Unit = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     if (batch.isEmpty) return
     val spark = batch.sparkSession
@@ -2473,44 +2447,35 @@ object StreamOps {
     // (or second canon stream) folding the same labelsPath would lose
     // edges to the read-fold-overwrite race
     labelStore.claim(Some(writer), None)
-    // OUR OWN eager cut of the batch severs any caller lineage before
-    // the closure: `labels`' plan below then contains only this cut +
-    // disk reads, so the blanket releaseCheckpoint in the finally can
-    // never unpersist a CALLER-owned checkpoint upstream of `batch`
-    // (the r13 ownership rule — the in-query face feeds filtered views
-    // of one checkpointed edge frame). The cut also makes the two
-    // batch consumers (pairs + the fold's canon agg) read one
-    // materialization instead of re-deriving the source.
-    val b = batch.localCheckpoint(true)
-    try {
+    // one eager cut of the batch: the two batch consumers (pairs + the
+    // fold's canon agg) read one materialization instead of re-deriving
+    // the source. The scope releases it, the closure's labels and the
+    // write cut when the batch ends; a caller's checkpoints upstream of
+    // `batch` are not its to release.
+    Cut.scope {
+      val b = batch.cutNow()
       val pairs = b.select(
         concat(lit("src:"), col(srcCol).cast("string")).as("a"),
         concat(lit("host:"), col(hostCol).cast("string")).as("b"))
-      val labels = nextLabels(prior, pairs, "a", "b", "node")
-      val newLabels = labels.localCheckpoint(true)
-      try {
-        val n = newLabels.count()
-        require(n <= maxNodes,
-          s"canonEdgesStream labeling grew to $n nodes (> $maxNodes) — " +
-            "bounded host/source domains only")
-        if (batchId > applied) {
-          inflight.writeMeta(batchId)
-          foldCanonBatch(b, newLabels, prior, canon, srcCol, hostCol,
-            weightCol, nBuckets)
-          canon.writeMeta(CanonMeta(nBuckets, writer, batchId))
-          inflight.removeMeta()
-        }
-        // labels LAST: a crash above replays against the prior labels and
-        // recomputes the same rep diff (see the ordering argument)
-        newLabels.write.mode("overwrite").parquet(labelsPath)
-        // the labels marker goes through labelsPath's OWN FileSystem —
-        // the two paths may live on different schemes
-        labelStore.writeMeta(())
-      } finally {
-        ColumnBridge.releaseCheckpoint(newLabels)
-        ColumnBridge.releaseCheckpoint(labels)
+      val newLabels = nextLabels(prior, pairs, "a", "b", "node").cutNow()
+      val n = newLabels.count()
+      require(n <= maxNodes,
+        s"canonEdgesStream labeling grew to $n nodes (> $maxNodes) — " +
+          "bounded host/source domains only")
+      if (batchId > applied) {
+        inflight.writeMeta(batchId)
+        foldCanonBatch(b, newLabels, prior, canon, srcCol, hostCol,
+          weightCol, nBuckets)
+        canon.writeMeta(CanonMeta(nBuckets, writer, batchId))
+        inflight.removeMeta()
       }
-    } finally ColumnBridge.releaseCheckpoint(b)
+      // labels LAST: a crash above replays against the prior labels and
+      // recomputes the same rep diff (see the ordering argument)
+      newLabels.write.mode("overwrite").parquet(labelsPath)
+      // the labels marker goes through labelsPath's OWN FileSystem —
+      // the two paths may live on different schemes
+      labelStore.writeMeta(())
+    }
   }
 
   /** The fold: batch edges canonicalized under `newLabels`, retired
@@ -2524,8 +2489,7 @@ object StreamOps {
                              priorLabels: Option[DataFrame],
                              canon: Store[CanonMeta],
                              srcCol: String, hostCol: String,
-                             weightCol: String, nBuckets: Int): Unit = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+                             weightCol: String, nBuckets: Int): Unit = Cut.scope {
     val spark = batch.sparkSession
     val canonPath = canon.root
     // ONE root listStatus: layout detection + the touched-dir existence
@@ -2547,80 +2511,76 @@ object StreamOps {
       .join(broadcast(canonOf), hostCol)
       .groupBy(col(srcCol), col("canon_host"))
       .agg(sum(col(weightCol).cast("long")).as(weightCol))
-      .localCheckpoint(true)
-    try {
-      // representatives this batch RETIRED: a stored row's canon_host is
-      // always a prior rep (self-labeled node), so the re-key map is the
-      // prior reps whose label moved — node-sized, never edge-sized
-      val repMap = priorLabels.filter(_ => exists).map { prior =>
-        prior.where(col("node") === col("component")).select(col("node"))
-          .join(newLabels, "node")
-          .where(col("node") =!= col("component"))
-          .select(expr("substring(node, 6)").as("old_rep"),
-            expr("substring(component, 6)").as("new_rep"))
+      .cutNow()
+    // representatives this batch RETIRED: a stored row's canon_host is
+    // always a prior rep (self-labeled node), so the re-key map is the
+    // prior reps whose label moved — node-sized, never edge-sized
+    val repMap = priorLabels.filter(_ => exists).map { prior =>
+      prior.where(col("node") === col("component")).select(col("node"))
+        .join(newLabels, "node")
+        .where(col("node") =!= col("component"))
+        .select(expr("substring(node, 6)").as("old_rep"),
+          expr("substring(component, 6)").as("new_rep"))
+    }
+    // touched buckets: batch reps ∪ retired reps ∪ survivors —
+    // bucket ids collected driver-side, bounded by nBuckets
+    val touchedFrames =
+      batchCanon.select(bucketOf(col("canon_host")).as("b")) +:
+        repMap.toSeq.flatMap(m => Seq(
+          m.select(bucketOf(col("old_rep")).as("b")),
+          m.select(bucketOf(col("new_rep")).as("b"))))
+    val touched = touchedFrames.reduce(_ unionByName _)
+      .distinct().collect().map(_.getInt(0)).sorted
+    val merged0 =
+      if (!exists) batchCanon
+      else {
+        // read ONLY the touched bucket dirs by constructed name, with
+        // the stored schema from one dir (every bucket's file schema
+        // is identical by the layout contract); a touched bucket with
+        // no dir yet simply isn't read, and an all-new touched set
+        // merges against an empty frame CARRYING the stored schema
+        val storedSchema =
+          spark.read.parquet(s"$canonPath/${canonDirs.head}").schema
+        val touchedDirs = touched.map(b => s"$CanonBucketCol=$b")
+          .filter(canonDirs.contains).map(d => s"$canonPath/$d")
+        val existing =
+          if (touchedDirs.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[
+              org.apache.spark.sql.Row], storedSchema)
+          else spark.read.schema(storedSchema)
+            .parquet(touchedDirs.toIndexedSeq: _*)
+        val rekeyed = repMap match {
+          case None => existing
+          case Some(m) => existing
+            .join(broadcast(m), col("canon_host") === col("old_rep"),
+              "left")
+            .select(col(srcCol),
+              coalesce(col("new_rep"), col("canon_host")).as("canon_host"),
+              col(weightCol))
+        }
+        rekeyed.unionByName(batchCanon)
+          .groupBy(col(srcCol), col("canon_host"))
+          .agg(sum(col(weightCol)).as(weightCol))
       }
-      // touched buckets: batch reps ∪ retired reps ∪ survivors —
-      // bucket ids collected driver-side, bounded by nBuckets
-      val touchedFrames =
-        batchCanon.select(bucketOf(col("canon_host")).as("b")) +:
-          repMap.toSeq.flatMap(m => Seq(
-            m.select(bucketOf(col("old_rep")).as("b")),
-            m.select(bucketOf(col("new_rep")).as("b"))))
-      val touched = touchedFrames.reduce(_ unionByName _)
-        .distinct().collect().map(_.getInt(0)).sorted
-      val merged0 =
-        if (!exists) batchCanon
-        else {
-          // read ONLY the touched bucket dirs by constructed name, with
-          // the stored schema from one dir (every bucket's file schema
-          // is identical by the layout contract); a touched bucket with
-          // no dir yet simply isn't read, and an all-new touched set
-          // merges against an empty frame CARRYING the stored schema
-          val storedSchema =
-            spark.read.parquet(s"$canonPath/${canonDirs.head}").schema
-          val touchedDirs = touched.map(b => s"$CanonBucketCol=$b")
-            .filter(canonDirs.contains).map(d => s"$canonPath/$d")
-          val existing =
-            if (touchedDirs.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[
-                org.apache.spark.sql.Row], storedSchema)
-            else spark.read.schema(storedSchema)
-              .parquet(touchedDirs.toIndexedSeq: _*)
-          val rekeyed = repMap match {
-            case None => existing
-            case Some(m) => existing
-              .join(broadcast(m), col("canon_host") === col("old_rep"),
-                "left")
-              .select(col(srcCol),
-                coalesce(col("new_rep"), col("canon_host")).as("canon_host"),
-                col(weightCol))
-          }
-          rekeyed.unionByName(batchCanon)
-            .groupBy(col(srcCol), col("canon_host"))
-            .agg(sum(col(weightCol)).as(weightCol))
-        }
-      val merged = merged0
-        .withColumn(CanonBucketCol, bucketOf(col("canon_host")))
-        .localCheckpoint(true) // sever the snapshot self-read pre-overwrite
-      try {
-        // bucket-clustered (the applyCdcBatch r17 rule): one file per
-        // touched bucket per batch, not nTasks per bucket
-        merged.repartition(col(CanonBucketCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(CanonBucketCol)
-          .parquet(canonPath)
-        // a touched bucket whose rows ALL re-keyed away is absent from
-        // `merged` — dynamic overwrite leaves its stale files; delete
-        // explicitly (crash before this point = inflight marker trips)
-        val written = merged.select(col(CanonBucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSet
-        (touched.toSet -- written).foreach { b =>
-          canon.fs.delete(new org.apache.hadoop.fs.Path(
-            canonPath, s"$CanonBucketCol=$b"), true)
-        }
-      } finally ColumnBridge.releaseCheckpoint(merged)
-    } finally ColumnBridge.releaseCheckpoint(batchCanon)
+    val merged = merged0
+      .withColumn(CanonBucketCol, bucketOf(col("canon_host")))
+      .cutNow() // sever the snapshot self-read pre-overwrite
+    // bucket-clustered (the applyCdcBatch r17 rule): one file per
+    // touched bucket per batch, not nTasks per bucket
+    merged.repartition(col(CanonBucketCol))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(CanonBucketCol)
+      .parquet(canonPath)
+    // a touched bucket whose rows ALL re-keyed away is absent from
+    // `merged` — dynamic overwrite leaves its stale files; delete
+    // explicitly (crash before this point = inflight marker trips)
+    val written = merged.select(col(CanonBucketCol)).distinct()
+      .collect().map(_.getInt(0)).toSet
+    (touched.toSet -- written).foreach { b =>
+      canon.fs.delete(new org.apache.hadoop.fs.Path(
+        canonPath, s"$CanonBucketCol=$b"), true)
+    }
   }
 
   final case class UserRunning(user_id: Long, n: Long, total: Double)

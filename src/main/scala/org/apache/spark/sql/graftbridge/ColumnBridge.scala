@@ -21,22 +21,6 @@ object ColumnBridge {
       org.apache.spark.sql.catalyst.expressions.aggregate.GraftCollectTopK(e, k, reverse)
         .toAggregateExpression())
 
-  /** Release the block-backed RDD behind a `localCheckpoint`ed frame NOW,
-    * instead of waiting for a GC cycle plus the ContextCleaner to notice
-    * the frame is unreachable: collect the plan's `LogicalRDD` leaves and
-    * unpersist them (non-blocking). In a long-lived session (Bench runs
-    * ~40 queries after a curation pass) the lag between "superseded" and
-    * "collected" keeps dead MEMORY_AND_DISK blocks competing with live
-    * queries for executor memory. Call ONLY on frames whose checkpoint is
-    * superseded — the blocks have no lineage, so any later action on the
-    * frame fails instead of recomputing. */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** BATCH execution of `transformWithState` loads a real state store,
     * which needs the driver's StateStoreCoordinator RPC endpoint — an
     * endpoint streaming queries create lazily via the query manager.

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 /** The session factory's contract, read off the suite's own session
   * (built by [[Session.local]] with [[SparkSpec.cpus]]). */
 class SessionSpec extends SparkSpec {
@@ -30,12 +28,6 @@ class SessionSpec extends SparkSpec {
     val src = Paths.get("src")
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")
     val builder = raw"SparkSession\s*\.\s*builder".r
-    val walk = Files.walk(src)
-    val sites = try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        builder.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => src.relativize(p).toString).toList.sorted
-    finally walk.close()
-    sites shouldBe List("main/scala/graft/Session.scala")
+    SourceGuard.scan(src, builder) shouldBe List("main/scala/graft/Session.scala")
   }
 }

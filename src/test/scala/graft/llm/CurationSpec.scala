@@ -75,7 +75,7 @@ class CurationSpec extends SparkSpec {
 
   test("the near-dup pair stage is one checkpoint boundary the closure reads") {
     // the pair checkpoint IS the closure's edge cut (pairComponents
-    // inputIsCut): the symmetric view, the participant shuffle and
+    // reads a cut in place): the symmetric view, the participant shuffle and
     // every propagation round read these blocks — unless the pair
     // stage is a checkpoint (a single LogicalRDD), the minhash
     // pipeline (shingling, hash lanes, banding shuffle, Jaccard

@@ -1,6 +1,8 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.core.Cut
+import graft.core.Cut.CutOps
 import org.apache.spark.sql.functions._
 
 /** Dedup operators (SURVEY §2.9): fixtures with one planted duplicate pair
@@ -54,16 +56,15 @@ class DedupSpec extends SparkSpec {
       // the streaming caller's shape: signatures precomputed AND
       // checkpointed (row order may differ from a fresh derivation —
       // the bounded-heap cap must make that immaterial)
-      val sigs = Dedup.signatureIndex(many, k = 2, bands = 8,
-        rowsPerBand = 2, poly = poly).localCheckpoint(true)
-      try {
+      Cut.scope {
+        val sigs = Dedup.signatureIndex(many, k = 2, bands = 8,
+          rowsPerBand = 2, poly = poly).cutNow()
         val viaSigs = Dedup.nearDupsFromSigs(sigs, many, k = 2,
             threshold = 0.3)
           .select("a", "b", "jaccard").as[(Long, Long, Double)]
           .collect().toSet
         viaSigs shouldBe viaText
-      } finally org.apache.spark.sql.graftbridge.ColumnBridge
-        .releaseCheckpoint(sigs)
+      }
     }
   }
 

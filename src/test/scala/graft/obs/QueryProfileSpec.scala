@@ -2,9 +2,7 @@ package graft.obs
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import graft.SparkSpec
+import graft.{SourceGuard, SparkSpec}
 import graft.model.Tables
 
 /** [[QueryProfile]], the one run profiler: it counts what a body ran, and
@@ -22,12 +20,7 @@ class QueryProfileSpec extends SparkSpec {
     val src = Paths.get("src")
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")
     val listener = raw"(extends|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b|addSparkListener\s*\(".r
-    val walk = Files.walk(src)
-    val sites = try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        listener.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => src.relativize(p).toString).toList.sorted
-    finally walk.close()
-    sites shouldBe List("main/scala/graft/obs/QueryProfile.scala")
+    SourceGuard.scan(src, listener) shouldBe
+      List("main/scala/graft/obs/QueryProfile.scala")
   }
 }

@@ -1,11 +1,11 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import graft.SourceGuard
 
 /** [[Q.createTempDirectory]]: the one place a stateful face or example
   * makes its store directory, so every such directory is removed at
@@ -25,16 +25,11 @@ class StoreDirSpec extends AnyFunSuite with Matchers {
   test("queries and examples make temp directories only through Q.createTempDirectory") {
     val src = Paths.get("src/main/scala/graft")
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")
-    def scala(dir: Path) = {
-      val walk = Files.walk(dir)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
     val jdkCall = raw"Files\s*\.\s*createTempDirectory".r
-    val sites = (scala(src.resolve("queries")) ++ scala(src.resolve("examples")))
-      .filter(p => p.getFileName.toString != "Q.scala" &&
-        jdkCall.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => src.relativize(p).toString)
-    sites shouldBe Nil
+    val facesAndExamples = SourceGuard.sources(src).filter { case (f, _) =>
+      (f.startsWith("queries/") || f.startsWith("examples/")) &&
+        !f.endsWith("/Q.scala")
+    }
+    SourceGuard.offenders(facesAndExamples, jdkCall) shouldBe Nil
   }
 }

@@ -3,9 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import graft.SparkSpec
+import graft.{SourceGuard, SparkSpec}
 import graft.relational.Cdc
 import graft.streaming.Store.{AnnMeta, CanonMeta, CdcMeta, IdxMeta}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -206,12 +204,6 @@ class StoreSpec extends SparkSpec {
     // a string literal naming a sidecar (".meta", "x.meta", ".meta.claim"),
     // or the claim sidecar's reader / exclusive create
     val sidecar = raw""""[^"\n]*\.(meta|claim)\b|\breadClaim\s*\(|CREATE_NEW""".r
-    val walk = Files.walk(main)
-    val sites = try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        sidecar.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => main.relativize(p).toString).toList.sorted
-    finally walk.close()
-    sites shouldBe List("graft/streaming/Store.scala")
+    SourceGuard.scan(main, sidecar) shouldBe List("graft/streaming/Store.scala")
   }
 }

@@ -1,4 +1,5 @@
 """Tests for the local oracle compare: python3 -m pytest tools"""
+import importlib.util
 import json
 import os
 import subprocess
@@ -7,7 +8,13 @@ import sys
 import duckdb
 import pytest
 
-import check
+# Loaded under its own module name: perfbench/check.py is also `check`,
+# and one pytest run over both directories must not hand either test
+# module the other's.
+_spec = importlib.util.spec_from_file_location(
+    "tools_check", os.path.join(os.path.dirname(os.path.abspath(__file__)), "check.py"))
+check = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check)
 
 SF = "/root/testdata/sf0.001"
 SELECT = "SELECT r_regionkey, r_name FROM {region} ORDER BY 1"
