@@ -35,16 +35,19 @@ object Cut {
   private val made = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[RDD[_], java.lang.Boolean]())
 
+  /** The local property behind `SparkContext.setCallSite`. */
+  private val ShortCallSite = "callSite.short"
+
   /** The open scopes on this thread, innermost first. */
   private val open =
     ThreadLocal.withInitial[List[mutable.ArrayBuffer[RDD[_]]]](() => Nil)
 
   /** `ds.localCheckpoint(false)`: materializes under the first action
     * that reads it. */
-  def lazyCut[T](ds: Dataset[T]): Dataset[T] = register(ds.localCheckpoint(false))
+  def lazyCut[T](ds: Dataset[T]): Dataset[T] = register(ds, ds.localCheckpoint(false))
 
   /** `ds.localCheckpoint(true)`: materialized before it returns. */
-  def eager[T](ds: Dataset[T]): Dataset[T] = register(ds.localCheckpoint(true))
+  def eager[T](ds: Dataset[T]): Dataset[T] = register(ds, ds.localCheckpoint(true))
 
   /** The call form at the sites: `df.cut()` is [[lazyCut]], `df.cutNow()`
     * is [[eager]]. */
@@ -101,7 +104,19 @@ object Cut {
     narrow(ds.queryExecution.analyzed)
   }
 
-  private def register[T](cut: Dataset[T]): Dataset[T] = {
+  /** Checkpoints under the caller's call site, so the cut's RDDs (and an
+    * eager cut's job) name the line that asked for the cut rather than
+    * this file, as a raw `localCheckpoint` there would; the previous
+    * call-site property is restored afterwards. */
+  private def register[T](ds: Dataset[T], checkpoint: => Dataset[T]): Dataset[T] = {
+    val sc = ds.sparkSession.sparkContext
+    val previous = sc.getLocalProperty(ShortCallSite)
+    val caller = Thread.currentThread.getStackTrace.iterator.drop(1).find { f =>
+      val c = f.getClassName
+      c != "graft.core.Cut" && !c.startsWith("graft.core.Cut$")
+    }
+    caller.foreach(f => sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    val cut = try checkpoint finally sc.setLocalProperty(ShortCallSite, previous)
     val rdd = cut.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
     made.put(rdd, java.lang.Boolean.TRUE)
     open.get.headOption.foreach(_ += rdd)

@@ -15,36 +15,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * definition, oracle-replayable in SQL). Empty/token-free text → empty
   * array, so a distribution scan's explode simply contributes no rows. */
 case class HashedNgramBuckets(child: Expression, k: Int, buckets: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(k > 0, s"gram size k must be positive, got $k")
   require(buckets >= 2 && buckets <= (1 << 20),
     s"buckets must be in [2, 2^20], got $buckets")
-
-  override def prettyName: String = "graft_ngram_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.ngramBuckets(input.asInstanceOf[UTF8String], k, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.ngramBuckets($s, $k, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_ngram_buckets", Seq(StringType), Kernel.LongArray)(
+    "ngramBuckets", k, buckets)
 }
 
 object HashedNgramBuckets {
   def apply(text: Column, k: Int, buckets: Int): Column =
-    ColumnBridge.column(
-      HashedNgramBuckets(ColumnBridge.expression(text), k, buckets))
+    StaticKernel.on(text)(HashedNgramBuckets(_, k, buckets))
 }
 
 /** [[TextKernelObjs.ngramScoreBoxed]] as a narrow codegen kernel: the

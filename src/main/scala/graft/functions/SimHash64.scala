@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Shared interpreted/codegen kernel: 64-bit SimHash of a token array.
@@ -53,29 +50,11 @@ object SimHashKernel {
   * One behavioral delta vs the aggregate formulation, by design: a
   * document whose token array is empty still yields a row (simhash 0)
   * where explode() silently dropped it. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_simhash64"
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashKernel.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SimHashKernel.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class SimHash64(child: Expression) extends UnaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_simhash64", Seq(ArrayType(StringType)), LongType,
+    obj = SimHashKernel)("compute")
 }
 
 object SimHash64 {
-  def apply(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
+  def apply(tokens: Column): Column = StaticKernel.on(tokens)(SimHash64(_))
 }

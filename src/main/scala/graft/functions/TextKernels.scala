@@ -522,33 +522,14 @@ object TextKernelObjs {
 /** Word k-shingles of a string column as ONE narrow kernel — replaces a
   * split + sequence + transform(slice + concat_ws) chain whose lambda
   * body ran on the interpreted HOF path, allocating per shingle. */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
-
+case class WordShingles(child: Expression, k: Int) extends UnaryExpression with StaticKernel {
   require(k > 0, "shingle size k must be positive")
-
-  override def prettyName: String = "graft_word_shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.shingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.shingles($s, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_word_shingles", Seq(StringType),
+    ArrayType(StringType, containsNull = false))("shingles", k)
 }
 
 object WordShingles {
-  def apply(text: Column, k: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), k))
+  def apply(text: Column, k: Int): Column = StaticKernel.on(text)(WordShingles(_, k))
 }
 
 /** All MinHash lanes of a shingle array as ONE narrow kernel: lane i is
@@ -561,33 +542,16 @@ object WordShingles {
   * per-lane values derive from it with one hashLong each — H× less
   * string hashing than the exploded form. Empty array → all-MaxValue
   * lanes (unreachable via [[WordShingles]], which emits ≥ 1 shingle). */
-case class MinHashLanes(child: Expression, numLanes: Int) extends UnaryExpression {
-
+case class MinHashLanes(child: Expression, numLanes: Int)
+    extends UnaryExpression with StaticKernel {
   require(numLanes > 0, "need at least one lane")
-
-  override def prettyName: String = "graft_minhash_lanes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.minHashLanes(input.asInstanceOf[ArrayData], numLanes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TextKernelObjs.minHashLanes($a, $numLanes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_minhash_lanes", Seq(ArrayType(StringType)),
+    Kernel.LongArray)("minHashLanes", numLanes)
 }
 
 object MinHashLanes {
   def apply(shingles: Column, numLanes: Int): Column =
-    ColumnBridge.column(MinHashLanes(ColumnBridge.expression(shingles), numLanes))
+    StaticKernel.on(shingles)(MinHashLanes(_, numLanes))
 }
 
 /** MinHash lanes under the cross-engine affine family, straight from the
@@ -598,74 +562,29 @@ object MinHashLanes {
   * one token-hash pass + numLanes·m multiply-mods. Null for tokenless
   * text (no shingles → no signature → the doc drops from banding). */
 case class PolyMinHashLanes(child: Expression, k: Int, numLanes: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(k > 0, "shingle size k must be positive")
   require(numLanes > 0, "need at least one lane")
-
-  override def prettyName: String = "graft_poly_minhash_lanes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // tokenless text → null signature
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.polyMinHashLanes(input.asInstanceOf[UTF8String], k, numLanes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"""
-      ${ev.value} = graft.functions.TextKernelObjs.polyMinHashLanes($s, $k, $numLanes);
-      ${ev.isNull} = ${ev.value} == null;""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_poly_minhash_lanes", Seq(StringType), Kernel.LongArray,
+    nullable = true)("polyMinHashLanes", k, numLanes)
 }
 
 object PolyMinHashLanes {
   def apply(text: Column, k: Int, numLanes: Int): Column =
-    ColumnBridge.column(PolyMinHashLanes(ColumnBridge.expression(text), k, numLanes))
+    StaticKernel.on(text)(PolyMinHashLanes(_, k, numLanes))
 }
 
 /** [[TextKernelObjs.polySimHash]] as a narrow codegen kernel — the
   * cross-engine twin of [[SimHash64]] (which votes on xxhash64 bits and
-  * therefore can't be replayed in SQL). */
-case class PolySimHash(child: Expression, bits: Int)
-    extends UnaryExpression {
-
+  * therefore can't be replayed in SQL). Null for tokenless text. */
+case class PolySimHash(child: Expression, bits: Int) extends UnaryExpression with StaticKernel {
   require(bits > 0 && bits <= 32, s"bits must be in [1, 32], got $bits")
-
-  override def prettyName: String = "graft_poly_simhash"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true // tokenless text → null signature
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.polySimHash(input.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("polySimhash")
-    nullSafeCodeGen(ctx, ev, s => s"""
-      java.lang.Long $r = graft.functions.TextKernelObjs.polySimHash($s, $bits);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.longValue(); }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_poly_simhash", Seq(StringType), LongType,
+    nullable = true)("polySimHash", bits)
 }
 
 object PolySimHash {
-  def apply(text: Column, bits: Int): Column =
-    ColumnBridge.column(PolySimHash(ColumnBridge.expression(text), bits))
+  def apply(text: Column, bits: Int): Column = StaticKernel.on(text)(PolySimHash(_, bits))
 }
 
 /** Occurrence count of tokens belonging to a fixed marker set, as ONE
@@ -724,33 +643,14 @@ object CountTokensIn {
 /** Winnowing-style rolling-gram fingerprint as ONE narrow kernel —
   * replaces a transform-over-sequence HOF that paid an interpreted
   * xxhash64 + substr per character position. */
-case class MinGramHash(child: Expression, gram: Int) extends UnaryExpression {
-
+case class MinGramHash(child: Expression, gram: Int) extends UnaryExpression with StaticKernel {
   require(gram > 0, "gram size must be positive")
-
-  override def prettyName: String = "graft_min_gram_hash"
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.minGramHash(input.asInstanceOf[UTF8String], gram)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.minGramHash($s, $gram);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel =
+    Kernel("graft_min_gram_hash", Seq(StringType), LongType)("minGramHash", gram)
 }
 
 object MinGramHash {
-  def apply(text: Column, gram: Int): Column =
-    ColumnBridge.column(MinGramHash(ColumnBridge.expression(text), gram))
+  def apply(text: Column, gram: Int): Column = StaticKernel.on(text)(MinGramHash(_, gram))
 }
 
 /** [[TextKernelObjs.minGramHashPolyBoxed]] as a narrow codegen kernel —
@@ -759,103 +659,39 @@ object MinGramHash {
   * instead of xxhash64, so the whole fingerprint replays in DuckDB SQL
   * (llm_fingerprint_poly). NULL on empty text (no gram exists). */
 case class PolyMinGramHash(child: Expression, gram: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(gram > 0, "gram size must be positive")
-
-  override def prettyName: String = "graft_poly_min_gram_hash"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.minGramHashPolyBoxed(input.asInstanceOf[UTF8String], gram)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("polyMinGram")
-    nullSafeCodeGen(ctx, ev, s => s"""
-      java.lang.Long $r =
-        graft.functions.TextKernelObjs.minGramHashPolyBoxed($s, $gram);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.longValue(); }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_poly_min_gram_hash", Seq(StringType), LongType,
+    nullable = true)("minGramHashPolyBoxed", gram)
 }
 
 object PolyMinGramHash {
-  def apply(text: Column, gram: Int): Column =
-    ColumnBridge.column(PolyMinGramHash(ColumnBridge.expression(text), gram))
+  def apply(text: Column, gram: Int): Column = StaticKernel.on(text)(PolyMinGramHash(_, gram))
 }
 
 /** [[TextKernelObjs.charPolyHash]] as a narrow codegen kernel: the
   * whole-text polynomial content hash backing shard-manifest checksums. */
-case class CharPolyHash(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_char_poly_hash"
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.charPolyHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.charPolyHash($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class CharPolyHash(child: Expression) extends UnaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_char_poly_hash", Seq(StringType), LongType)("charPolyHash")
 }
 
 object CharPolyHash {
-  def apply(text: Column): Column =
-    ColumnBridge.column(CharPolyHash(ColumnBridge.expression(text)))
+  def apply(text: Column): Column = StaticKernel.on(text)(CharPolyHash(_))
 }
 
 /** [[TextKernelObjs.winnow]] as a narrow codegen kernel: the document's
   * winnowing fingerprint set (distinct selected window-min gram hashes,
   * sorted ascending). */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(k > 0, s"gram size k must be positive, got $k")
   require(w > 0, s"window size w must be positive, got $w")
-
-  override def prettyName: String = "graft_winnow"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.winnow($s, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_winnow", Seq(StringType), Kernel.LongArray)("winnow", k, w)
 }
 
 object WinnowFingerprints {
   def apply(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(
-      WinnowFingerprints(ColumnBridge.expression(text), k, w))
+    StaticKernel.on(text)(WinnowFingerprints(_, k, w))
 }
 
 /** Deflate compression ratio of the text's UTF-8 bytes in 4dp basis
@@ -868,31 +704,12 @@ object WinnowFingerprints {
   * and runs on one cluster image — but NOT contractual across engines,
   * which is why the operator is spec-gated, not DuckDB-oracle-gated.
   * Empty text → 10000 (ratio 1.0) by convention. */
-case class CompressionRatioBp(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_compression_bp"
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.compressionBp(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.compressionBp($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class CompressionRatioBp(child: Expression) extends UnaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_compression_bp", Seq(StringType), LongType)("compressionBp")
 }
 
 object CompressionRatioBp {
-  def apply(text: Column): Column =
-    ColumnBridge.column(CompressionRatioBp(ColumnBridge.expression(text)))
+  def apply(text: Column): Column = StaticKernel.on(text)(CompressionRatioBp(_))
 }
 
 /** Fixed-point character-entropy kernel ([[TextKernelObjs.charEntropyFp]])
@@ -901,31 +718,12 @@ object CompressionRatioBp {
   * base64/random blobs near 6 (≈6100 fp). One narrow codegen'd
   * projection; cross-engine exact, so oracle-gated (llm_entropy) where
   * [[CompressionRatioBp]]'s deflate bytes never can be. */
-case class CharEntropyFp(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_char_entropy_fp"
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.charEntropyFp(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.charEntropyFp($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class CharEntropyFp(child: Expression) extends UnaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_char_entropy_fp", Seq(StringType), LongType)("charEntropyFp")
 }
 
 object CharEntropyFp {
-  def apply(text: Column): Column =
-    ColumnBridge.column(CharEntropyFp(ColumnBridge.expression(text)))
+  def apply(text: Column): Column = StaticKernel.on(text)(CharEntropyFp(_))
 }
 
 /** [[TextKernelObjs.repGramStats]] as a narrow codegen kernel: the
@@ -936,35 +734,16 @@ object CharEntropyFp {
   * outputs are integer counts over the single-space gram strings, so
   * the whole battery is oracle-gated. */
 case class RepGramStats(child: Expression, topN: Int, dupN: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(topN > 0, s"topN must be positive, got $topN")
   require(dupN > 0, s"dupN must be positive, got $dupN")
-
-  override def prettyName: String = "graft_rep_gram_stats"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> tokens, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.repGramStats(input.asInstanceOf[ArrayData], topN, dupN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.repGramStats($s, $topN, $dupN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def kernel: Kernel = Kernel("graft_rep_gram_stats", Seq(ArrayType(StringType)),
+    Kernel.LongArray)("repGramStats", topN, dupN)
 }
 
 object RepGramStats {
   def apply(tokens: Column, topN: Int, dupN: Int): Column =
-    ColumnBridge.column(
-      RepGramStats(ColumnBridge.expression(tokens), topN, dupN))
+    StaticKernel.on(tokens)(RepGramStats(_, topN, dupN))
 }
 
 /** Trigram-context positions of a document in one compiled walk — the
@@ -982,39 +761,18 @@ object RepGramStats {
   * side walks half the corpus). Same single-space split as the
   * formulation it replaces (empty tokens kept). */
 case class ContextTriples(child: Expression, fromPos: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with StaticKernel {
   require(fromPos == 1 || fromPos == 3,
     s"fromPos must be 1 (padded) or 3 (full contexts), got $fromPos")
-
-  override def prettyName: String = "graft_context_triples"
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  def kernel: Kernel = Kernel("graft_context_triples", Seq(StringType), ArrayType(StructType(Seq(
     StructField("p2", StringType, nullable = true),
     StructField("p1", StringType, nullable = true),
     StructField("w", StringType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.contextTriples(input.asInstanceOf[UTF8String], fromPos)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.contextTriples($s, $fromPos);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false))("contextTriples", fromPos)
 }
 
 object ContextTriples {
-  def apply(text: Column, fromPos: Int): Column =
-    ColumnBridge.column(
-      ContextTriples(ColumnBridge.expression(text), fromPos))
+  def apply(text: Column, fromPos: Int): Column = StaticKernel.on(text)(ContextTriples(_, fromPos))
 }
 
 /** Adjacent-token pairs of a document in one compiled walk — the
@@ -1024,34 +782,15 @@ object ContextTriples {
   * array(null)), (a, b) -> struct(a, b))` — position i pairs with its
   * successor, the last position with null (the word2phrase boundary
   * marker). Same single-space split (empty tokens kept). */
-case class PairGrams(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_pair_grams"
-  override def dataType: DataType = ArrayType(StructType(Seq(
+case class PairGrams(child: Expression) extends UnaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_pair_grams", Seq(StringType), ArrayType(StructType(Seq(
     StructField("w1", StringType, nullable = false),
     StructField("w2", StringType, nullable = true))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernelObjs.pairGrams(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TextKernelObjs.pairGrams($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false))("pairGrams")
 }
 
 object PairGrams {
-  def apply(text: Column): Column =
-    ColumnBridge.column(PairGrams(ColumnBridge.expression(text)))
+  def apply(text: Column): Column = StaticKernel.on(text)(PairGrams(_))
 }
 
 /** Space-join of a token array MINUS a sorted set of 1-based positions,
@@ -1066,31 +805,9 @@ object PairGrams {
   * lambda interpreted per kept token. Positions must be ascending and
   * distinct (sort_array(collect_set) upstream). */
 case class RemoveAtJoin(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def prettyName: String = "graft_remove_at_join"
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<string>, array<int>), got " +
-          s"(${l.sql}, ${r.sql})")
-    }
-
-  override def nullSafeEval(toks: Any, pos: Any): Any =
-    TextKernelObjs.removeAtJoin(
-      toks.asInstanceOf[ArrayData], pos.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, p) =>
-      s"${ev.value} = graft.functions.TextKernelObjs.removeAtJoin($t, $p);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+    extends BinaryExpression with StaticKernel {
+  def kernel: Kernel = Kernel("graft_remove_at_join",
+    Seq(ArrayType(StringType), ArrayType(IntegerType)), StringType)("removeAtJoin")
 }
 
 object RemoveAtJoin {

@@ -45,15 +45,18 @@ class SparkEntrySpec extends SparkSpec {
     // registry sources; each createTempDirectory occurrence inside a
     // Q("name", ...) block must belong to a registered lifecycle face.
     val faces = tempDirFaces(querySources)
-    val offenders = faces
-      .filterNot { case (_, name) => graft.queries.Q.lifecycleFaces.contains(name) }
-      .map { case (file, name) => s"$file: $name" }
+    val offenders = unregistered(faces)
     withClue("temp-dir lifecycle queries missing from Q.lifecycleFaces:\n" +
       offenders.mkString("\n")) { offenders shouldBe empty }
     // the heuristic itself stays live: at least one call is attributed to
     // a Q block (a hit anywhere else, such as the helper's own body in
     // Q.scala, would pass while the gate finds no face at all)
     faces should not be empty
+    // ...and it fires: a planted face that makes a store dir unregistered
+    unregistered(tempDirFaces(Seq("Planted.scala" ->
+      """Q("planted_face", "stores", (spark, sf) => {
+        |  val dir = Q.createTempDirectory("planted")""".stripMargin))) shouldBe
+      Seq("Planted.scala: planted_face")
   }
 
   test("the temp-dir lifecycle gate reports itself blind when the helper is renamed") {
@@ -74,15 +77,15 @@ class SparkEntrySpec extends SparkSpec {
   /** Each `createTempDirectory` call inside a `Q("name", …)` block, as
     * (file name, query name); a call before the file's first block is
     * attributed to no query. */
-  private def tempDirFaces(sources: Seq[(String, String)]): Seq[(String, String)] = {
-    val qDef = """Q(?:\.noOracle)?\(\s*"([a-z0-9_]+)"""".r
-    sources.flatMap { case (file, src) =>
-      val defs = qDef.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
-      "createTempDirectory".r.findAllMatchIn(src).flatMap { hit =>
-        defs.takeWhile(_._1 < hit.start).lastOption.map(d => file -> d._2)
-      }.toSeq.distinct
+  private def tempDirFaces(sources: Seq[(String, String)]): Seq[(String, String)] =
+    SourceGuard.hits(sources, "createTempDirectory".r).collect {
+      case SourceGuard.Hit(file, Some(SourceGuard.Block("Q", name))) => file -> name
     }
-  }
+
+  /** The faces among `faces` that `Q.lifecycleFaces` does not register. */
+  private def unregistered(faces: Seq[(String, String)]): Seq[String] = faces
+    .filterNot { case (_, name) => graft.queries.Q.lifecycleFaces.contains(name) }
+    .map { case (file, name) => s"$file: $name" }
 
   test("declared queries run and are non-empty on sf0.001") {
     // the driver's weaker check for oracle-less queries is rows > 0; catch

@@ -115,6 +115,21 @@ class CutSpec extends SparkSpec {
     Seq(c1, c2).foreach(Cut.release)
   }
 
+  test("a cut's RDD names the line that made the cut as its creation site") {
+    val sc = spark.sparkContext
+    sc.setCallSite("planted site")
+    try {
+      val line = new Throwable().getStackTrace()(0).getLineNumber + 1
+      val cuts = Seq(frame(3).cut(), frame(3).cutNow())
+      cuts.foreach { c =>
+        rddOf(c).toString should endWith(s" at localCheckpoint at CutSpec.scala:$line")
+      }
+      // the caller's own call site is back in place
+      sc.getLocalProperty("callSite.short") shouldBe "planted site"
+      cuts.foreach(Cut.release)
+    } finally sc.clearCallSite()
+  }
+
   test("graft/core/Cut.scala is the only main source that checkpoints or releases") {
     val main = Paths.get("src/main/scala")
     assume(Files.isDirectory(main), s"run from the repository root (no $main)")

@@ -1,6 +1,11 @@
 package graft.functions
 
-import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+
+import graft.{SourceGuard, SparkSpec}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
 
 /** WordShingles / MinHashLanes: the narrow kernels must be bit-identical
@@ -266,6 +271,78 @@ class TextKernelsSpec extends SparkSpec {
     // int-literal-only params fail at analysis, not mid-job
     an[Exception] should be thrownBy
       spark.sql("SELECT graft_word_shingles(text, doc_id) FROM __tk_docs").collect()
+    // a wrong input type fails at analysis too: never implicitly cast
+    Seq("graft_word_shingles(doc_id, 2)", "graft_simhash64(text)",
+        "graft_min_gram_hash(split(text, ' '), 5)").foreach { call =>
+      withClue(call) {
+        an[AnalysisException] should be thrownBy spark.sql(s"SELECT $call FROM __tk_docs")
+      }
+    }
+  }
+
+  test("each stateless kernel is a direct static call in whole-stage codegen") {
+    // parquet-backed, so the projection is planned and compiled rather
+    // than folded into a LocalRelation at optimization time (which takes
+    // the interpreted path, as the literal-frame specs here do)
+    val dir = Files.createTempDirectory("graft_tk_codegen")
+    try {
+      texts.write.mode("overwrite").parquet(dir.toString)
+      val docs = spark.read.parquet(dir.toString)
+      val text = col("text")
+      val toks = split(text, " ")
+      Seq(
+        WordShingles(text, 2) -> "TextKernelObjs.shingles(",
+        MinHashLanes(toks, 4) -> "TextKernelObjs.minHashLanes(",
+        PolyMinHashLanes(text, 2, 4) -> "TextKernelObjs.polyMinHashLanes(",
+        PolySimHash(text, 32) -> "TextKernelObjs.polySimHash(",
+        MinGramHash(text, 5) -> "TextKernelObjs.minGramHash(",
+        PolyMinGramHash(text, 5) -> "TextKernelObjs.minGramHashPolyBoxed(",
+        CharPolyHash(text) -> "TextKernelObjs.charPolyHash(",
+        WinnowFingerprints(text, 2, 2) -> "TextKernelObjs.winnow(",
+        CompressionRatioBp(text) -> "TextKernelObjs.compressionBp(",
+        CharEntropyFp(text) -> "TextKernelObjs.charEntropyFp(",
+        RepGramStats(toks, 2, 2) -> "TextKernelObjs.repGramStats(",
+        ContextTriples(text, 1) -> "TextKernelObjs.contextTriples(",
+        PairGrams(text) -> "TextKernelObjs.pairGrams(",
+        RemoveAtJoin(toks, array(lit(1))) -> "TextKernelObjs.removeAtJoin(",
+        HashedNgramBuckets(text, 2, 16) -> "TextKernelObjs.ngramBuckets(",
+        SimHash64(toks) -> "SimHashKernel.compute("
+      ).foreach { case (kernel, fn) =>
+        withClue(fn) {
+          val compiled = docs.select(col("doc_id"), kernel.as("k"))
+          val code = codegenStringSeq(compiled.queryExecution.executedPlan)
+            .map(_._2).mkString("\n")
+          code should include(s"graft.functions.$fn")
+          code should not include ".invoke("
+          // the compiled call and the interpreted one agree
+          compiled.orderBy("doc_id").collect() shouldBe
+            texts.select(col("doc_id"), kernel.as("k")).orderBy("doc_id").collect()
+        }
+      }
+    } finally FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("under graft/functions only the model-carrying kernels and DotProduct keep their own eval and codegen") {
+    // the stateless kernels are StaticKernel declarations; a kernel that
+    // carries a driver-built model compares by that model's content and
+    // keeps its addReferenceObj codegen, and RewriteDotProduct matches
+    // DotProduct's class
+    val own = raw"def\s+(doGenCode|nullSafeEval)\b".r
+    val allowed = Set("CountTokensIn", "HashedNgramScore", "BpeTokenCount",
+      "ViterbiTokenCount", "UnigramSegment", "BpeTokens", "NgramLmScore", "PqEncode",
+      "SignProjection", "TopDotIndices", "BloomMightContainStr", "DotProduct")
+      .map(n => Option(SourceGuard.Block("case class", n)))
+    val src = Paths.get("src/main/scala/graft/functions")
+    assume(Files.isDirectory(src), s"run from the repository root (no $src)")
+    val found = SourceGuard.hits(SourceGuard.sources(src), own)
+    found should not be empty
+    found.filterNot(h => allowed(h.in)) shouldBe Nil
+    // the guard fires: a planted stateless kernel with its own eval is reported
+    SourceGuard.hits(Seq("Planted.scala" ->
+      """case class Planted(child: Expression) extends UnaryExpression {
+        |  override def nullSafeEval(input: Any): Any = input""".stripMargin), own)
+      .filterNot(h => allowed(h.in)) shouldBe
+      List(SourceGuard.Hit("Planted.scala", Some(SourceGuard.Block("case class", "Planted"))))
   }
 
   test("null text yields null shingles and null lanes") {

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SourceGuard, SparkSpec}
 import graft.model.Tables
 import graft.obs.QueryProfile
 import org.apache.commons.io.FileUtils
@@ -93,8 +93,12 @@ class SourcesSpec extends SparkSpec {
     val src = Paths.get("src/main/scala/graft")
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")
     val bare = raw"spark\s*\.\s*read\s*\.\s*parquet\s*\(".r
-    Seq("model/Tables.scala", "sources/IO.scala", "SparkEntry.scala").foreach { f =>
-      withClue(f) { bare.findFirstIn(Files.readString(src.resolve(f))) shouldBe None }
-    }
+    val files = Seq("model/Tables.scala", "sources/IO.scala", "SparkEntry.scala")
+      .map(f => f -> Files.readString(src.resolve(f)))
+    SourceGuard.hits(files, bare) shouldBe Nil
+    // the scan fires: a planted bare read is reported with its case class
+    SourceGuard.hits(files :+ ("model/Planted.scala" ->
+      "case class Planted(sf: String) {\n  def df = spark.read.parquet(sf)\n}"), bare) shouldBe
+      List(SourceGuard.Hit("model/Planted.scala", Some(SourceGuard.Block("case class", "Planted"))))
   }
 }
