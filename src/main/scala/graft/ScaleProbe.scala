@@ -45,11 +45,15 @@ object ScaleProbe {
     "if(__rep = 0 or pmod(xxhash64(i, __rep), 2) = 0, x, -x))")
 
   /** Writes every fixture table of `sfDir` `rep`× into `dest`, one file
-    * set per replica, so a file holds the same rows at every scale and
-    * only the file count grows. Replica r adds r × K to the [[keyCols]],
-    * with one K (one more than the largest key in the fixture) so every
-    * foreign-key join still matches within its replica. */
-  def replicate(spark: SparkSession, sfDir: String, rep: Int, dest: String): Unit = {
+    * set per replica. Replica r adds r × K to the [[keyCols]], with one K
+    * (one more than the largest key in the fixture) so every foreign-key
+    * join still matches within its replica. `spread` > 1 writes each
+    * replicated table in `spread` times the files one replica makes: the
+    * 1× side with `spread` = N has as many files as an N× table, so a
+    * scan runs as many tasks at both scales, and a one-file scan stage
+    * cannot pass for a single-task stage of the base. */
+  def replicate(spark: SparkSession, sfDir: String, rep: Int, dest: String,
+                spread: Int = 1): Unit = {
     val tables = Tables.names.map(n => n -> table(spark, sfDir, n))
     val k = 1L + tables.filterNot { case (n, _) => sharedTables(n) }.map { case (_, df) =>
       df.agg(max(greatest(keyCols(df).map(c => col(c).cast("long")) :+ lit(0L): _*)))
@@ -67,7 +71,13 @@ object ScaleProbe {
           case _ => shifted
         }).drop("__rep")
       }
-      val rows = if (sharedTables(name)) df else (0 until rep).map(replica).reduce(_ union _)
+      val rows =
+        if (sharedTables(name)) df
+        else {
+          val replicas = (0 until rep).map(replica).reduce(_ union _)
+          if (spread > 1) replicas.repartition(replicas.rdd.getNumPartitions * spread)
+          else replicas
+        }
       rows.write.mode("overwrite").parquet(s"$dest/$name.parquet")
     }
   }
@@ -197,9 +207,10 @@ object ScaleProbe {
     // side from the driver-provided fixture layout conflated file-layout
     // differences (partition count, row-group sizes) with scale behavior
     // — a scan-bound ratio was uninterpretable. `rep = 1` reproduces the
-    // fixture content in this session's layout.
+    // fixture content in this session's layout, in as many files as the
+    // N× side.
     val (dir1, dirN) = (s"$out/x1", s"$out/x$factor")
-    replicate(spark, sfDir, 1, dir1)
+    replicate(spark, sfDir, 1, dir1, spread = factor)
     replicate(spark, sfDir, factor, dirN)
     val llmBase = 5000L
     val all = rows(spark, dir1, llmBase, out).zip(rows(spark, dirN, llmBase * factor, out))

@@ -44,7 +44,8 @@ object Dedup {
     * candidate frame with a localCheckpoint ([[minHashNearDups]] since
     * r11) publish it on the candidate-stage execution, not the final
     * frame — read it there, or call bucketPairs directly.
-    * Output pairs are distinct
+    * Output pairs are distinct (`distinct = false` leaves that to a
+    * caller that unions more pairs first)
     * with a < b; a FIXED-WIDTH payload column (e.g. a 64-bit hash) can ride
     * along in the bucket set so downstream scoring needs no re-attach join
     * — never route wide payloads (vectors, shingle sets) through here. */
@@ -52,7 +53,8 @@ object Dedup {
 
   private[llm] def bucketPairs(banded: DataFrame, bucketCols: Seq[String],
                                idCol: String, payloadCol: Option[String] = None,
-                               maxBucket: Int = 256): DataFrame = {
+                               maxBucket: Int = 256,
+                               distinct: Boolean = true): DataFrame = {
     require(maxBucket > 1, "maxBucket must be at least 2")
     val member = payloadCol match {
       case Some(p) => struct(col(idCol).as("id"), col(p).as("pl"))
@@ -83,13 +85,12 @@ object Dedup {
       // per (doc, band)); guard anyway so duplicate ids can never emit a
       // self-pair now that the bounded collector doesn't dedup
       .where(col("__p.a.id") < col("__p.b.id"))
-    payloadCol match {
+    val out = payloadCol match {
       case Some(p) => pairs.select(col("__p.a.id").as("a"), col("__p.b.id").as("b"),
           col("__p.a.pl").as(s"${p}_a"), col("__p.b.pl").as(s"${p}_b"))
-        .distinct()
       case None => pairs.select(col("__p.a.id").as("a"), col("__p.b.id").as("b"))
-        .distinct()
     }
+    if (distinct) out.distinct() else out
   }
 
   /** Exact dedup: one surviving doc per distinct content (min doc_id), with
@@ -510,13 +511,11 @@ object Dedup {
       docs, k, bands, rowsPerBand, idCol, textCol)
 
   /** [[minHashNearDups]] / [[polyMinHashNearDups]] with the banding
-    * SIGNATURES precomputed (r20): the streaming ingest path
-    * (`StreamOps.applyDedupBatch`) already holds the batch's
-    * checkpointed [[signatureIndex]] frame for the index write and the
-    * stored-index probe — re-deriving the same signatures from text
-    * inside the within-batch pass paid the whole MinHash encode a
-    * second time per batch (at deployment scale, a second full pass
-    * over every ingested document's tokens). Same candidate topology,
+    * SIGNATURES precomputed (r20): a caller that already holds the
+    * [[signatureIndex]] frame (the curation pipeline's pair stage)
+    * need not re-derive it from text — that paid the whole MinHash
+    * encode a second time (at deployment scale, a second full pass
+    * over every document's tokens). Same candidate topology,
     * bucket cap and exact-Jaccard verify as the text-input faces
     * (shared [[bucketPairs]] + [[verifiedPairs]], so the families
     * cannot drift); `sigs` MUST be [[signatureIndex]] of `docs` under
@@ -535,28 +534,78 @@ object Dedup {
     verifiedPairs(docs, candidates, k, threshold, idCol, textCol)
   }
 
+  /** Both kinds of near-dup candidates of one ingested batch in ONE
+    * frame `(bid, cid, within)`, for [[verifiedBatchDrops]]:
+    * `corpusPairs` `(bid, cid)` — a batch doc against a stored one, as
+    * an index probe finds them, duplicates allowed — and the within-batch
+    * [[bucketPairs]] of the batch's own signatures `sigs` (its default
+    * bucket cap, as [[nearDupsFromSigs]]), turned so `bid` is the HIGHER
+    * id, the side the keep-lowest-id rule drops, and `cid` the lower.
+    * One distinct serves both kinds. */
+  private[graft] def batchCandidates(corpusPairs: DataFrame, sigs: DataFrame,
+                                     idCol: String): DataFrame =
+    corpusPairs.select(col("bid"), col("cid"), lit(false).as("within"))
+      .unionByName(bucketPairs(sigs, Seq("band", "sig"), idCol, distinct = false)
+        .select(col("b").as("bid"), col("a").as("cid"), lit(true).as("within")))
+      .distinct()
+
+  /** The batch ids one exact-Jaccard verify pass drops, over a
+    * [[batchCandidates]] frame `cand`: every verified `bid` — a batch doc
+    * that matches a stored doc, or the higher side of a verified
+    * within-batch pair (the pairwise keep-lowest-id rule). With
+    * `exactWithinBatch` the within-batch drops are instead every
+    * non-representative of a TRANSITIVE cluster of verified within pairs
+    * ([[dupClusters]]' min-id election, via
+    * [[Components.pairComponents]]), from the same verified frame.
+    *
+    * One shingle-set attach serves both kinds: each doc a candidate
+    * names gets its set once, tagged by where its text lives — the
+    * batch (`batchDocs`: every `bid`, and the `cid` of a within pair)
+    * or the store (`corpusDocs`: the `cid` of a corpus pair) — and one
+    * Jaccard filter runs over every candidate. Shingles are exact
+    * strings, so the verdicts are those of [[verifiedDupPairs]] and
+    * [[nearDupsFromSigs]]. `cand` should be an eager cut: the broadcast
+    * gates then read its count with no job. */
+  private[graft] def verifiedBatchDrops(cand: DataFrame, batchDocs: DataFrame,
+                                        corpusDocs: DataFrame, k: Int,
+                                        threshold: Double, idCol: String,
+                                        textCol: String,
+                                        exactWithinBatch: Boolean): DataFrame = {
+    import graft.functions.WordShingles
+    val named = cand.select(lit(true).as("in_batch"), col("bid").as("id"))
+      .unionByName(cand.select(col("within").as("in_batch"), col("cid").as("id")))
+    // candidate-sized, and the text sides carry no useful size: gate
+    // on the candidate count, hint explicitly
+    val sets = batchDocs.select(lit(true).as("in_batch"), col(idCol).as("id"), col(textCol))
+      .unionByName(corpusDocs.select(lit(false).as("in_batch"), col(idCol).as("id"),
+        col(textCol)))
+      .join(Joins.hinted(Joins.fitsBroadcast(cand), named), Seq("in_batch", "id"), "left_semi")
+      .select(col("in_batch"), col("id"),
+        array_distinct(WordShingles(col(textCol), k)).as("set"))
+      .cutNow() // read by both sides of every pair
+    val small = Joins.fitsBroadcast(sets)
+    val verified = cand
+      .join(Joins.hinted(small, sets.where(col("in_batch"))
+        .select(col("id").as("bid"), col("set").as("set_b"))), "bid")
+      .join(Joins.hinted(small, sets.select(col("in_batch").as("within"),
+        col("id").as("cid"), col("set").as("set_c"))), Seq("within", "cid"))
+      .where(jaccardOf(col("set_b"), col("set_c")) >= threshold)
+    if (!exactWithinBatch) verified.select(col("bid"))
+    else verified.where(!col("within")).select(col("bid")).unionByName(
+      Components.pairComponents(verified.where(col("within"))
+          .select(col("cid").as("a"), col("bid").as("b")), "a", "b", "bid")
+        .where(col("bid") =!= col("component")).select(col("bid")))
+  }
+
   /** The verify half of the incremental family with the CANDIDATES
     * precomputed (an index probe) and the corpus text already fetched
-    * and pruned by the caller: distinct batch ids whose exact k-gram
-    * Jaccard against some candidate corpus doc clears `threshold`.
-    * `pairs` columns: `(bid, cid)`. Shingle sets are computed only for
-    * docs appearing in `pairs` (semi-join-pruned), the
-    * [[minHashNearDups]] verify discipline — candidates from banding,
-    * correctness from exact verification, identical across hash
-    * families (shingles are exact strings). */
-  def verifiedDupIds(pairs: DataFrame, batchDocs: DataFrame,
-                     corpusDocs: DataFrame, k: Int, threshold: Double,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame =
-    verifiedDupPairs(pairs, batchDocs, corpusDocs, k, threshold,
-      idCol, textCol)
-      .select(col("bid")).distinct()
-
-  /** The pair-level face of [[verifiedDupIds]] (r18): the verified
-    * `(bid, cid)` pairs themselves — for callers that need the
-    * EVIDENCE (which corpus doc matched), e.g. the read-only serving
-    * probe `StreamOps.probeDedup`. Same plan: candidate-pruned shingle
-    * sets on both sides, exact-Jaccard filter. */
+    * and pruned by the caller: the `(bid, cid)` pairs whose exact k-gram
+    * Jaccard clears `threshold` — the EVIDENCE (which corpus doc
+    * matched) the read-only serving probe `StreamOps.probeDedup` needs.
+    * Shingle sets are computed only for docs appearing in `pairs`
+    * (semi-join-pruned), the [[minHashNearDups]] verify discipline —
+    * candidates from banding, correctness from exact verification,
+    * identical across hash families (shingles are exact strings). */
   def verifiedDupPairs(pairs: DataFrame, batchDocs: DataFrame,
                        corpusDocs: DataFrame, k: Int, threshold: Double,
                        idCol: String = "doc_id",

@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions.broadcast
   * (the measured 3→10-shuffle `llm_dedup_contain` regression class).
   * So the choice must be made HERE, with real cardinality in hand.
   *
+  * An eager cut (`Cut.eager`), or a projection of one, already knows its
+  * row count: the gate reads it and starts no job. Any other frame is
+  * counted.
+  *
   * The gate counts rows via `queryExecution.toRdd.count()` rather than
   * `df.count()`: the RDD count runs one job over the (cut) partitions
   * with no SinglePartition aggregate exchange, so the gate itself
@@ -58,7 +62,7 @@ object Joins {
   def fitsBroadcast(df: DataFrame,
                     maxRows: Long = DefaultMaxBroadcastRows): Boolean = {
     require(maxRows >= 0, s"maxRows must be >= 0, got $maxRows")
-    df.queryExecution.toRdd.count() <= maxRows
+    graft.core.Cut.rows(df).getOrElse(df.queryExecution.toRdd.count()) <= maxRows
   }
 
   /** Apply a [[fitsBroadcast]] decision to one view of the table. */

@@ -84,8 +84,10 @@ object ExchangeBudgets {
     "llm_ccnet_buckets"               -> 5,
     "llm_contamination_bloom"         -> 5,
     "llm_contamination_report"        -> 4,
-    "llm_curate_full"                 -> 22,
-    "llm_curate_full_poly"            -> 22,
+    // 22 → 18: the pair stage's eager cuts carry their measured row
+    // counts, so its candidate-sized joins plan as broadcasts
+    "llm_curate_full"                 -> 18,
+    "llm_curate_full_poly"            -> 18,
     "llm_curriculum"                  -> 5,
     "llm_dedup_cluster"               -> 18,
     // r16 outlink-graph components: one corpus-sized edge aggregation
@@ -192,7 +194,9 @@ object ExchangeBudgets {
     // being written, killing the nTasks-files-per-bucket layout whose
     // full-root listing made a fixed batch 3× slower at 10× snapshot
     // (cdc_sink_prune probe, measured before/after: 3.0× → 1.1×).
-    "stream_cdc_read_latest"          -> 9,
+    // 9 → 8: the sink batch's eager cut gathers its touched buckets
+    // (no discovery distinct)
+    "stream_cdc_read_latest"          -> 8,
     // r17 time-travel face; 5 → 10 (r18, a DELIBERATE lifecycle
     // extension, not a regression): the face now runs the FULL
     // retention story in-query — retainSnapshot (its max-version
@@ -205,7 +209,9 @@ object ExchangeBudgets {
     // full-outer side exchange now that the base is the retained
     // copy). Every added exchange is changelog- or single-row-sized;
     // the untouched leg stays exchange-free by design.
-    "stream_cdc_read_asof"            -> 10,
+    // 10 → 9: the live sink batch's discovery distinct is gone (its
+    // eager cut gathers the touched buckets)
+    "stream_cdc_read_asof"            -> 9,
     // r18 point-lookup face (readKeys): bootstrap clustering + one
     // sink batch (discovery + window + clustering) + the lookup
     // itself — wanted-keys bucket discovery distinct, the tail's
@@ -215,12 +221,14 @@ object ExchangeBudgets {
     // construction — the snapshot side was bucket-pruned and
     // semi-joined to the broadcast key set BEFORE the exchange) +
     // the declared sort. No untouched leg at all — the point priced.
-    "stream_cdc_read_keys"            -> 9,
+    // 9 → 8: the sink batch's discovery distinct, as read_latest
+    "stream_cdc_read_keys"            -> 8,
     // r17 evolution face: read_latest's exact lifecycle (bootstrap
     // incl. bucket clustering + sink batch + merge-on-read) — the
     // evolution step itself is an O(1) meta append costing ZERO
     // exchanges, which is the point being priced
-    "stream_cdc_evolve"               -> 9,
+    // 9 → 8: as read_latest
+    "stream_cdc_evolve"               -> 8,
     // r17 streaming-dedup disk lifecycle: bootstrap (CDC snapshot +
     // index writes, each bucket/partition-clustered) + TWO
     // applyDedupBatch rounds, each = batch cut + index-probe distinct
@@ -238,7 +246,12 @@ object ExchangeBudgets {
     // trading a ≤nIdxBuckets-int exchange per batch for the r17
     // full-index scan, the last linear-in-corpus per-batch term
     // (dedup_stream_batch probe, re-measured r18).
-    "llm_dedup_stream"                -> 34,
+    // 34 → 15: each batch's eager cuts gather the index and corpus
+    // buckets they touch (no discovery distincts), the within-batch and
+    // corpus candidates share one distinct and one verify pass, and
+    // the cuts' measured row counts plan the candidate-sized joins as
+    // broadcasts.
+    "llm_dedup_stream"                -> 15,
     // r18 read-only serving probe face: bootstrap (corpus clustering +
     // bucketed index write = 2) + the probe itself — candidate
     // distinct, the gated-broadcast cid distinct, the exact-verify
@@ -247,7 +260,10 @@ object ExchangeBudgets {
     // min-evidence agg and the declared sort. Every probe-side
     // exchange is candidate-sized; corpus text moves only for
     // candidate ids.
-    "llm_dedup_probe"                 -> 9,
+    // 9 → 7: the candidate cut gathers the corpus buckets it fetches
+    // (no discovery distinct) and the fetch is pruned by the verify's
+    // own candidate semi-join only
+    "llm_dedup_probe"                 -> 7,
     // r19 maintained-ANN lifecycle face: bootstrap (one cell-clustered
     // codes write) + TWO ingest batches (one tail-clustered write
     // each — the write path reads NO index at all) + the serving probe

@@ -128,7 +128,7 @@ object ScanBudgets {
     "stream_cdc_read_asof"   -> 5, // r18 full retention lifecycle: orders (changelog ckpt + bootstrap write = 2) + retainSnapshot's narrow max-version scan + the live sink batch's merge read + readAsOf's touched leg over the RETAINED copy (its untouched leg prunes to zero files at sf0.001 — the tail hits all 16 buckets)
     "stream_cdc_read_keys"   -> 5, // r18 point lookup: orders (changelog ckpt + bootstrap write + wanted-keys ckpt = 3) + the sink batch's merge read + the lookup's wanted-bucket read; NO untouched leg by design
     "llm_dedup_probe"        -> 5, // r18 read-only serving probe: documents ×3 (corpus twice at bootstrap — the no-corpus-checkpoint discipline — + the one-scan probe planting at its cut) + the touched index read + the candidate-pruned corpus text read
-    "llm_dedup_stream"       -> 17, // r17 disk lifecycle: documents derived narrowly ~6x (corpus twice at bootstrap — the incrementalNear no-corpus-checkpoint discipline — and each batch union twice at its cut) + the temp index/corpus-store reads across two batches and the final read-back; per production batch only the index probe + touched-bucket reads recur
+    "llm_dedup_stream"       -> 13, // 17 → 13: one verify pass reads the batch and the fetched corpus text once; r17 disk lifecycle: documents derived narrowly ~6x (corpus twice at bootstrap — the incrementalNear no-corpus-checkpoint discipline — and each batch union twice at its cut) + the temp index/corpus-store reads across two batches and the final read-back; per production batch only the index probe + touched-bucket reads recur
     "llm_ann_probe"          -> 4, // r19 maintained-ANN lifecycle: embeddings once (the shared cut's materialization feeds bootstrap + both batches + queries) + the codebook-table read + the probe's codes reads — 3 → 4 in r20: the latest-wins serving read splits the TAIL (read once into its cut, tail-bounded) from the routed cell dirs, so re-sent/replayed generations resolve at serve time; the two serving scans are the only per-request reads
     "llm_ann_probe_filtered" -> 4, // the llm_ann_probe lifecycle + the allowIds gate: SAME scans — the live-id frame derives from the shared embeddings cut (zero extra source reads)
     "llm_host_canon_stream"  -> 7  // r17 disk lifecycle: documents (edge cut) + wave-2's node-sized labels reads (incremental prior + repMap prior) + the canon snapshot's touched-bucket reads + the final declared read-back; per production batch only the labels + touched-bucket reads recur

@@ -83,11 +83,16 @@ private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
   def open(): (Option[M], Array[String]) = {
     val d = dirs
     val m = meta
+    requireIntact(m, d)
+    (m, d)
+  }
+
+  /** The torn-overwrite guard of [[open]] over a meta and a listing read
+    * earlier (an op that must not fail before it knows it has work). */
+  def requireIntact(m: Option[M], d: Array[String]): Unit =
     require(m.isEmpty || d.nonEmpty,
       s"${kind.metaNoun} exists at $root.meta but the ${kind.dataNoun} " +
         s"are gone — ${kind.tornHint}")
-    (m, d)
-  }
 
   /** [[open]] for an op that needs the store to exist: an absent meta
     * fails with `hint` (what to run first). */

@@ -815,29 +815,47 @@ object StreamOps {
                                  keyCols: Seq[String], caller: String,
                                  withUntouched: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
+    val layout = cdcLayout(spark, snapshotPath, caller)
+    // align tail KEY dtypes to the stored snapshot's before hashing —
+    // the applyCdcBatch rule (xxhash64(int) != xxhash64(long))
+    val aligned = keyCols.foldLeft(tail) { (b, k) =>
+      b.withColumn(k, col(k).cast(layout.schema(k).dataType))
+    }
+    // touched buckets: bounded by nBuckets, so the collect is too
+    val changed = aligned
+      .select(cdcBucket(keyCols, layout.nBuckets).as("b")).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val touched = layout.bucketDirs(changed)
+    val untouchedNames =
+      if (withUntouched) layout.dirs.toSeq.filterNot(touched.contains)
+      else Seq.empty
+    (readBucketDirs(spark, snapshotPath, touched, layout.schema),
+      readBucketDirs(spark, snapshotPath, untouchedNames, layout.schema),
+      aligned)
+  }
+
+  /** What a reader of an existing snapshot needs of its layout: the
+    * bucket count, the bucket dirs (one root listing) and the logical
+    * schema — from the snapshot's own meta, never guessed. */
+  private final case class CdcLayout(nBuckets: Int, dirs: Array[String],
+                                     schema: org.apache.spark.sql.types.StructType) {
+    /** The stored bucket of one key column `key` named `keyCol`, cast to
+      * the stored dtype first (xxhash64(int) != xxhash64(long)). */
+    def bucketOf(key: Column, keyCol: String): Column =
+      pmod(xxhash64(key.cast(schema(keyCol).dataType)), lit(nBuckets)).cast("int")
+
+    /** The dirs of `buckets` that exist. */
+    def bucketDirs(buckets: Seq[Int]): Seq[String] =
+      buckets.map(b => s"$CdcBucketCol=$b").filter(dirs.contains)
+  }
+
+  private def cdcLayout(spark: org.apache.spark.sql.SparkSession,
+                        snapshotPath: String, caller: String): CdcLayout = {
     val (meta, dirs) = Store.CdcSnapshot.at(spark, snapshotPath).openExisting(
       s"$caller must match the writer's bucket layout, never guess it; " +
         "bootstrap the snapshot through writeCdcSnapshot (or let the " +
         "stream's first batch land) before reading through it")
-    val nBuckets = meta.nBuckets
-    val storedSchema = cdcSchema(spark, snapshotPath, Some(meta), dirs)
-    // align tail KEY dtypes to the stored snapshot's before hashing —
-    // the applyCdcBatch rule (xxhash64(int) != xxhash64(long))
-    val aligned = keyCols.foldLeft(tail) { (b, k) =>
-      b.withColumn(k, col(k).cast(storedSchema(k).dataType))
-    }
-    // touched buckets: bounded by nBuckets, so the collect is too
-    val changed = aligned
-      .select(cdcBucket(keyCols, nBuckets).as("b")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val touchedNames = changed.map(b => s"$CdcBucketCol=$b")
-      .filter(dirs.contains).toSeq
-    val untouchedNames =
-      if (withUntouched) dirs.toSeq.filterNot(touchedNames.contains)
-      else Seq.empty
-    (readBucketDirs(spark, snapshotPath, touchedNames, storedSchema),
-      readBucketDirs(spark, snapshotPath, untouchedNames, storedSchema),
-      aligned)
+    CdcLayout(meta.nBuckets, dirs, cdcSchema(spark, snapshotPath, Some(meta), dirs))
   }
 
   /** In-place tombstone GC of a maintained snapshot
@@ -1096,7 +1114,6 @@ object StreamOps {
                                    // inside this batch's claim window
                                    claimHook: () => Unit = () => ()): Unit = {
     import graft.relational.Cdc
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     val snap = Store.CdcSnapshot.at(spark, snapshotPath)
     // the layout is ours, so detect it precisely: partition dirs are
@@ -1106,55 +1123,11 @@ object StreamOps {
     // AND the touched-dir existence filter below — never a recursive
     // full-file listing, whose cost scales with the whole snapshot
     // (the r17 cdc_sink_prune probe: two full listings per batch made
-    // a fixed batch 3× slower at 10× the snapshot).
-    val (storedMeta, bucketDirs) = snap.open()
-    val hasDirs = bucketDirs.nonEmpty
-    storedMeta match {
-      case Some(m) =>
-        requireNotRetained(Some(m), snapshotPath, "applyCdcBatch")
-        require(m.nBuckets == nBuckets,
-          s"snapshot at $snapshotPath is laid out with " +
-            s"nBuckets=${m.nBuckets} but this " +
-            s"stream was configured with nBuckets=$nBuckets — pruning " +
-            "would read the wrong buckets and silently duplicate keys")
-      case None if hasDirs =>
-        // dirs without meta = a pre-meta layout, or a FIRST write that
-        // crashed between the parquet commit and the meta write. A
-        // restart configured with a different nBuckets would prune the
-        // wrong buckets and silently duplicate keys, so verify the
-        // on-disk layout actually used THIS nBuckets before trusting
-        // pruning: a dir value >= nBuckets is proof of mismatch
-        // (cheap), and a one-time full re-hash check catches a SMALLER
-        // historical nBuckets the dir names alone cannot (it runs at
-        // most once — this batch's successful write lands the meta).
-        val dirBuckets = bucketDirs
-          .map(_.stripPrefix(CdcBucketCol + "=").toInt)
-        require(dirBuckets.forall(_ < nBuckets),
-          s"snapshot at $snapshotPath has bucket dir " +
-            s"${CdcBucketCol}=${dirBuckets.max} but no meta sidecar and " +
-            s"this stream was configured with nBuckets=$nBuckets — the " +
-            "layout was written with a different bucket count; rebuild " +
-            "the snapshot (or restore its meta sidecar) before resuming")
-        val misHashed = spark.read.parquet(snapshotPath)
-          .where(cdcBucket(keyCols, nBuckets) =!= col(CdcBucketCol))
-        require(misHashed.isEmpty,
-          s"snapshot at $snapshotPath has no meta sidecar and its rows " +
-            s"do not hash to their bucket dirs under nBuckets=$nBuckets " +
-            "— the layout was written with a different bucket count; " +
-            "rebuild the snapshot (or restore its meta sidecar) before " +
-            "resuming")
-      case None => // cold start: meta lands AFTER the first successful
-        // write (writing it first would make a crashed FIRST batch
-        // read as lost state)
-    }
-    // ownership — BEFORE any data moves: a stream's batch atomically
-    // claims an unowned store (exclusive sidecar create — exactly one
-    // of two racing first batches wins) or must match the owner; a
-    // direct (writer = None) application must not go around a live
-    // stream's ownership either
-    claimHook()
-    snap.claim(writer, storedMeta.flatMap(_.writer))
-    val exists = hasDirs
+    // a fixed batch 3× slower at 10× the snapshot). Read unguarded: an
+    // empty batch returns before any check, as it always has.
+    val bucketDirs = snap.dirs
+    val storedMeta = snap.meta
+    val exists = bucketDirs.nonEmpty
     val storedSchema: Option[org.apache.spark.sql.types.StructType] =
       if (!exists) None
       else Some(cdcSchema(spark, snapshotPath, storedMeta, bucketDirs))
@@ -1167,59 +1140,107 @@ object StreamOps {
         b.withColumn(k, col(k).cast(s(k).dataType))
       }
     }
-    // the touched buckets: bounded by nBuckets, so the collect is too
-    val changed = aligned
-      .select(cdcBucket(keyCols, nBuckets).as("b")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    // read ONLY the touched bucket directories, by constructed name —
-    // the bucket-pruning contract applied to the LISTING too (a
-    // partition filter over a root read still lists every file first);
-    // a touched bucket with no dir yet simply isn't read. Empty merge
-    // side must carry the STORED schema, not the batch's — a payload
-    // dtype drift would otherwise land mixed-schema files in one dir.
-    val touchedDirs = changed.map(b => s"$CdcBucketCol=$b")
-      .filter(bucketDirs.contains).map(d => s"$snapshotPath/$d")
-    val existing = storedSchema match {
-      case Some(s) if touchedDirs.nonEmpty =>
-        spark.read.schema(s).parquet(touchedDirs.toIndexedSeq: _*)
-      case Some(s) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[
-          org.apache.spark.sql.Row], s)
-      case None =>
-        Cdc.bootstrap(aligned.drop(versionCol, opCol).limit(0), keyCols)
-    }
     Cut.scope {
-      val merged = Cdc.mergeVersioned(existing, aligned, keyCols, versionCol, opCol)
-        .cutNow() // sever the snapshot self-read before overwrite
-      // bucket-clustered like writeCdcSnapshot: one file per touched
-      // bucket per batch instead of nTasks per bucket — one extra
-      // exchange of ONLY the touched rows (k/nBuckets of the snapshot,
-      // data the batch already moves), buying every later read a
-      // file-listing that scales with buckets, not batches × tasks
-      merged.withColumn(CdcBucketCol, cdcBucket(keyCols, nBuckets))
-        .repartition(col(CdcBucketCol))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(CdcBucketCol)
-        .parquet(snapshotPath)
-      // the meta carries the layout's LOGICAL schema from here on (a
-      // pre-r17 schema-less meta upgrades on its next batch). The
-      // schema written is the UNION of the merge's output schema and
-      // the meta re-read NOW — an evolveCdcSnapshot racing this batch
-      // (appending a column after our read, before this write) must
-      // not be silently reverted by us rewriting the pre-evolution
-      // schema (r18, the r17 race note; evolution is additive-only,
-      // so the union is well-defined). The writer pin: the RE-READ pin
-      // wins when present (r19, the r18 advice — a repinCdcSnapshot
-      // takeover landing mid-batch must stay loud: preserving the NEW
-      // pin makes OUR next batch fail its pin check, instead of this
-      // closing write silently reverting the takeover); absent a
-      // stored pin (first batch, or an explicit unpin), ours claims.
-      raceHook()
-      val reRead = snap.meta
-      snap.writeMeta(CdcMeta(nBuckets,
-        Some(unionAdditiveSchema(merged.schema, reRead.flatMap(_.schema))),
-        reRead.flatMap(_.writer).orElse(writer), None))
+      // the batch cut ONCE, eagerly: its count is the emptiness check
+      // and the same job gathers the touched buckets (bounded by
+      // nBuckets) — no isEmpty job, no distinct-collect of its own
+      val (changes, changed) = aligned.cutNow(cdcBucket(keyCols, nBuckets))
+      if (Cut.rows(changes).exists(_ > 0)) {
+        snap.requireIntact(storedMeta, bucketDirs)
+        storedMeta match {
+          case Some(m) =>
+            requireNotRetained(Some(m), snapshotPath, "applyCdcBatch")
+            require(m.nBuckets == nBuckets,
+              s"snapshot at $snapshotPath is laid out with " +
+                s"nBuckets=${m.nBuckets} but this " +
+                s"stream was configured with nBuckets=$nBuckets — pruning " +
+                "would read the wrong buckets and silently duplicate keys")
+          case None if exists =>
+            // dirs without meta = a pre-meta layout, or a FIRST write that
+            // crashed between the parquet commit and the meta write. A
+            // restart configured with a different nBuckets would prune the
+            // wrong buckets and silently duplicate keys, so verify the
+            // on-disk layout actually used THIS nBuckets before trusting
+            // pruning: a dir value >= nBuckets is proof of mismatch
+            // (cheap), and a one-time full re-hash check catches a SMALLER
+            // historical nBuckets the dir names alone cannot (it runs at
+            // most once — this batch's successful write lands the meta).
+            val dirBuckets = bucketDirs
+              .map(_.stripPrefix(CdcBucketCol + "=").toInt)
+            require(dirBuckets.forall(_ < nBuckets),
+              s"snapshot at $snapshotPath has bucket dir " +
+                s"${CdcBucketCol}=${dirBuckets.max} but no meta sidecar and " +
+                s"this stream was configured with nBuckets=$nBuckets — the " +
+                "layout was written with a different bucket count; rebuild " +
+                "the snapshot (or restore its meta sidecar) before resuming")
+            val misHashed = spark.read.parquet(snapshotPath)
+              .where(cdcBucket(keyCols, nBuckets) =!= col(CdcBucketCol))
+            require(misHashed.isEmpty,
+              s"snapshot at $snapshotPath has no meta sidecar and its rows " +
+                s"do not hash to their bucket dirs under nBuckets=$nBuckets " +
+                "— the layout was written with a different bucket count; " +
+                "rebuild the snapshot (or restore its meta sidecar) before " +
+                "resuming")
+          case None => // cold start: meta lands AFTER the first successful
+            // write (writing it first would make a crashed FIRST batch
+            // read as lost state)
+        }
+        // ownership — BEFORE any data moves: a stream's batch atomically
+        // claims an unowned store (exclusive sidecar create — exactly one
+        // of two racing first batches wins) or must match the owner; a
+        // direct (writer = None) application must not go around a live
+        // stream's ownership either
+        claimHook()
+        snap.claim(writer, storedMeta.flatMap(_.writer))
+        // read ONLY the touched bucket directories, by constructed name —
+        // the bucket-pruning contract applied to the LISTING too (a
+        // partition filter over a root read still lists every file first);
+        // a touched bucket with no dir yet simply isn't read. Empty merge
+        // side must carry the STORED schema, not the batch's — a payload
+        // dtype drift would otherwise land mixed-schema files in one dir.
+        val touchedDirs = changed.map(b => s"$CdcBucketCol=$b")
+          .filter(bucketDirs.contains).map(d => s"$snapshotPath/$d")
+        val existing = storedSchema match {
+          case Some(s) if touchedDirs.nonEmpty =>
+            spark.read.schema(s).parquet(touchedDirs.toIndexedSeq: _*)
+          case Some(s) =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[
+              org.apache.spark.sql.Row], s)
+          case None =>
+            Cdc.bootstrap(changes.drop(versionCol, opCol).limit(0), keyCols)
+        }
+        val merged = Cdc.mergeVersioned(existing, changes, keyCols, versionCol, opCol)
+          .cutNow() // sever the snapshot self-read before overwrite
+        // bucket-clustered like writeCdcSnapshot: one file per touched
+        // bucket per batch instead of nTasks per bucket — one extra
+        // exchange of ONLY the touched rows (k/nBuckets of the snapshot,
+        // data the batch already moves), buying every later read a
+        // file-listing that scales with buckets, not batches × tasks
+        merged.withColumn(CdcBucketCol, cdcBucket(keyCols, nBuckets))
+          .repartition(col(CdcBucketCol))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(CdcBucketCol)
+          .parquet(snapshotPath)
+        // the meta carries the layout's LOGICAL schema from here on (a
+        // pre-r17 schema-less meta upgrades on its next batch). The
+        // schema written is the UNION of the merge's output schema and
+        // the meta re-read NOW — an evolveCdcSnapshot racing this batch
+        // (appending a column after our read, before this write) must
+        // not be silently reverted by us rewriting the pre-evolution
+        // schema (r18, the r17 race note; evolution is additive-only,
+        // so the union is well-defined). The writer pin: the RE-READ pin
+        // wins when present (r19, the r18 advice — a repinCdcSnapshot
+        // takeover landing mid-batch must stay loud: preserving the NEW
+        // pin makes OUR next batch fail its pin check, instead of this
+        // closing write silently reverting the takeover); absent a
+        // stored pin (first batch, or an explicit unpin), ours claims.
+        raceHook()
+        val reRead = snap.meta
+        snap.writeMeta(CdcMeta(nBuckets,
+          Some(unionAdditiveSchema(merged.schema, reRead.flatMap(_.schema))),
+          reRead.flatMap(_.writer).orElse(writer), None))
+      }
     }
   }
 
@@ -1333,13 +1354,14 @@ object StreamOps {
     * silently ADMIT dups — loud failure instead), then read ONLY the
     * buckets `sigs` hashes into plus the unbucketed tail, by
     * constructed dir name (path-level pruning: the probe never lists
-    * the rest of the index). Returns `(touchedIndex, storedIdType)`:
+    * the rest of the index). `touched` is evaluated only when an index
+    * exists. Returns `(touchedIndex, storedIdType)`:
     * touchedIndex is None when nothing relevant is stored; the id
     * dtype is Some whenever the index EXISTS (meta-first, else one
     * dir's footer) — the dtype every write must cast to (mixed-dtype
     * files in one dataset are unreadable). */
   private def readTouchedIndex(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String, sigs: DataFrame,
+                               indexPath: String, touched: => Seq[Int],
                                nIdxBuckets: Int, idCol: String, who: String)
       : (Option[DataFrame], Option[org.apache.spark.sql.types.DataType]) = {
     // ONE root listStatus: layout detection + the touched-dir
@@ -1390,15 +1412,12 @@ object StreamOps {
             .schema(idCol).dataType)
         else None
       }
-    // the index buckets these signatures hash into — bounded by
-    // nIdxBuckets, so the collect is too; ONLY these dirs plus the
-    // unbucketed tail (batches since the last compaction) are read
-    // (r18, killing the last linear-in-corpus per-batch term)
+    // ONLY the touched dirs plus the unbucketed tail (batches since the
+    // last compaction) are read (r18, killing the last
+    // linear-in-corpus per-batch term)
     val storedIdx: Option[DataFrame] =
       if (!indexExists) None
       else {
-        val touched = sigs.select(sigBucket(nIdxBuckets).as("sb"))
-          .distinct().collect().map(_.getInt(0)).sorted
         val touchedDirs = (DedupIdxTail +: touched)
           .map(sb => s"$DedupIdxBucketCol=$sb")
           .filter(idxDirs.contains).map(d => s"$indexPath/$d")
@@ -1417,35 +1436,30 @@ object StreamOps {
     (storedIdx, idxIdType)
   }
 
-  /** Banding candidates `(bid, cid)`: touched index rows ⨝ batch
-    * signatures (batch side size-gated broadcast — an initial-load batch
-    * can be huge, and an unconditional broadcast OOMs; the Joins gate);
-    * id equality excludes a replayed doc's own prior entry. */
+  /** Banding candidates `(bid, cid)`, one row per shared band (the
+    * caller takes the distinct): touched index rows ⨝ batch signatures
+    * (batch side size-gated broadcast — an initial-load batch can be
+    * huge, and an unconditional broadcast OOMs; the Joins gate); id
+    * equality excludes a replayed doc's own prior entry. */
   private def indexCandidates(idx: DataFrame, sigs: DataFrame,
                               idCol: String): DataFrame =
     idx.join(graft.llm.Joins.gatedBroadcast(sigs.select(
         col(idCol).as("bid"), col("band"), col("sig"))), Seq("band", "sig"))
       .where(col(idCol) =!= col("bid"))
-      .select(col("bid"), col(idCol).as("cid")).distinct()
+      .select(col("bid"), col(idCol).as("cid"))
 
-  /** The live corpus rows of the candidates' `cid`s, read from their
-    * buckets only, and the broadcast decision made for them. `cand` is
-    * a checkpoint (no size stats — the LogicalRDD rule), so the
-    * candidate-sized probe side gets the size-gated broadcast
-    * explicitly or the touched TEXT shuffles into an SMJ (the r17
-    * probe measured 300 MB of corpus text moving for a 64-row id
-    * list); the gate counts the raw pair frame ONCE, never the
-    * distinct view. */
-  private def candidateCorpus(spark: org.apache.spark.sql.SparkSession,
-                              corpusPath: String, cand: DataFrame,
-                              idCol: String, caller: String): (DataFrame, Boolean) = {
-    val cids = cand.select(col("cid").as(idCol))
-    val (touched, _, _) = splitByTailBuckets(spark, corpusPath,
-      cids, Seq(idCol), caller, withUntouched = false)
-    val small = graft.llm.Joins.fitsBroadcast(cand)
-    (graft.relational.Cdc.publicSnapshot(touched)
-      .join(graft.llm.Joins.hinted(small, cids.distinct()), Seq(idCol), "left_semi"),
-      small)
+  /** `cand` cut, and the live corpus rows of the `cid`s its `stored`
+    * rows name, read from their buckets only: the cut gathers those
+    * buckets in the job that stores it, so the fetch starts no job of its
+    * own (the r17 probe measured 300 MB of corpus text moving for a
+    * 64-row id list before the text was bucket-pruned). */
+  private def cutWithCorpus(spark: org.apache.spark.sql.SparkSession,
+                            corpusPath: String, cand: DataFrame, stored: Column,
+                            idCol: String, caller: String): (DataFrame, DataFrame) = {
+    val layout = cdcLayout(spark, corpusPath, caller)
+    val (cut, touched) = cand.cutNow(when(stored, layout.bucketOf(col("cid"), idCol)))
+    (cut, graft.relational.Cdc.publicSnapshot(readBucketDirs(spark, corpusPath,
+      layout.bucketDirs(touched), layout.schema)))
   }
 
   /** Read-only dedup PROBE (r18) — "would these docs be near-dups of
@@ -1470,25 +1484,28 @@ object StreamOps {
                  nIdxBuckets: Int = 64): DataFrame = {
     import graft.llm.{Dedup, Joins}
     val spark = docs.sparkSession
-    // lazy cuts (GC-released): the probe RETURNS a frame, so the eager
-    // cut + release discipline of the batch path does not apply
-    val b = docs.cut()
-    val sigsB = Dedup.signatureIndex(b, k, bands, rowsPerBand,
-      idCol, textCol, poly).cut()
+    // unowned cuts (GC-released): the probe RETURNS a frame that reads
+    // them, so the scope discipline of the batch path does not apply.
+    // Eager, as there: their counts answer the gates, and the signature
+    // cut gathers the index buckets it touches
+    val b = docs.cutNow()
+    val (sigsB, idxTouched) = Dedup.signatureIndex(b, k, bands, rowsPerBand,
+      idCol, textCol, poly).cutNow(sigBucket(nIdxBuckets))
     val (storedIdx, idxIdType) =
-      readTouchedIndex(spark, indexPath, sigsB, nIdxBuckets, idCol,
+      readTouchedIndex(spark, indexPath, idxTouched, nIdxBuckets, idCol,
         "this probe")
     val noDup = lit(null)
       .cast(idxIdType.getOrElse(b.schema(idCol).dataType)).as("dup_of")
     storedIdx match {
       case None => b.select(col(idCol), noDup)
       case Some(idx) =>
-        val cand = indexCandidates(idx, sigsB, idCol)
-          .cut() // candidate-sized; feeds fetch + verify
+        // candidate-sized; feeds fetch + verify
+        val (cand, corpusCand) = cutWithCorpus(spark, corpusPath,
+          indexCandidates(idx, sigsB, idCol).distinct(), lit(true), idCol,
+          "probeDedup")
         // the gate decision also applies to the final evidence join,
-        // whose post-agg side the planner cannot size past the checkpoint
-        val (corpusCand, small) =
-          candidateCorpus(spark, corpusPath, cand, idCol, "probeDedup")
+        // whose post-agg side the planner cannot size
+        val small = Joins.fitsBroadcast(cand)
         val best = Dedup.verifiedDupPairs(cand, b, corpusCand,
             k, threshold, idCol, textCol)
           .groupBy("bid").agg(min(col("cid")).as("dup_of"))
@@ -1655,147 +1672,142 @@ object StreamOps {
                                      tailFiles: Int = 1): Unit = {
     require(maxTailBatches > 0,
       s"maxTailBatches must be positive, got $maxTailBatches")
-    import graft.llm.Dedup
-    if (batch.isEmpty) return
+    import graft.llm.{Dedup, Joins}
     val spark = batch.sparkSession
-    require(!batch.columns.contains("version") && !batch.columns.contains("op"),
-      "dedupStream docs must not carry 'version'/'op' — the survivor " +
-        "store's internal merge columns")
-    // BOTH stores are claimed before anything mutates (r19): the corpus
-    // claim lands inside its applyCdcBatch; the INDEX store is claimed
-    // here — an offline compactDedupIndex is a read-compact-overwrite
-    // racing the tail writes (the compactAnnIndex class), so the index
-    // carries its own claim and compaction must present the owner.
-    // Takeover of a dedup deployment = repinCdcSnapshot on the corpus
-    // + releaseStoreClaim on the index (DEPLOY.md).
-    val idx = Store.SignatureIndex.at(spark, indexPath)
-    idx.claim(Some(writer), None)
-    // a batch at or below this writer's folded watermark is a REPLAY
-    // of a batch a fold already moved into the bucketed tier (r20, the
-    // r19 ADVICE note): the INDEX write recognizes itself and skips.
-    // The CORPUS merge is NOT skipped (r21): with the two store writes
-    // overlapped (guide §2.6), a folded tail no longer proves the
-    // corpus merge committed (the r20 ordering proof "tail lands AFTER
-    // corpus"), so redelivery always re-applies the merge — a fixed
-    // point by the at-least-once replay contract. Cost: one extra merge
-    // on the rare replay-after-fold path; benefit: an offline fold
-    // taken between a crash and the restart can never silently lose a
-    // batch's survivors (DedupStreamSpec pins exactly that window).
-    // Checked after the claim, so second writers still bounce on
-    // replays.
-    val idxMeta = idx.meta
-    val indexFolded = idx.isFolded(idxMeta, writer, batchId)
-    // the batch feeds signatures, the within-batch pass, and the verify
-    // — cut once so the source is not re-derived per consumer
+    // the batch feeds signatures, the verify and the survivor anti join
+    // — cut once so the source is not re-derived per consumer; its count
+    // is the emptiness check
     Cut.scope {
       val b = batch.cutNow()
-      val sigsB = Dedup.signatureIndex(b, k, bands, rowsPerBand,
-        idCol, textCol, poly).cutNow()
-      val (storedIdx, idxIdType) =
-        readTouchedIndex(spark, indexPath, sigsB, nIdxBuckets, idCol,
-          "this stream")
-      val indexExists = storedIdx.isDefined || idxIdType.isDefined
-      // survivors is eagerly materialized, so this inner scope releases
-      // the candidate cut and the within-pass's internal cuts the moment
-      // it returns, instead of leaking them per micro-batch for the
-      // session (r21, the r20 ADVICE note; the Curation pairStage
-      // pattern). b and sigsB belong to the outer scope.
-      val survivors = Cut.scope {
-        val cand = storedIdx
-          .fold(sigsB.select(col(idCol).as("bid"), col(idCol).as("cid")).limit(0))(
+      if (Cut.rows(b).exists(_ > 0)) {
+        require(!batch.columns.contains("version") && !batch.columns.contains("op"),
+          "dedupStream docs must not carry 'version'/'op' — the survivor " +
+            "store's internal merge columns")
+        // BOTH stores are claimed before anything mutates (r19): the corpus
+        // claim lands inside its applyCdcBatch; the INDEX store is claimed
+        // here — an offline compactDedupIndex is a read-compact-overwrite
+        // racing the tail writes (the compactAnnIndex class), so the index
+        // carries its own claim and compaction must present the owner.
+        // Takeover of a dedup deployment = repinCdcSnapshot on the corpus
+        // + releaseStoreClaim on the index (DEPLOY.md).
+        val idx = Store.SignatureIndex.at(spark, indexPath)
+        idx.claim(Some(writer), None)
+        // a batch at or below this writer's folded watermark is a REPLAY
+        // of a batch a fold already moved into the bucketed tier (r20, the
+        // r19 ADVICE note): the INDEX write recognizes itself and skips.
+        // The CORPUS merge is NOT skipped (r21): with the two store writes
+        // overlapped (guide §2.6), a folded tail no longer proves the
+        // corpus merge committed (the r20 ordering proof "tail lands AFTER
+        // corpus"), so redelivery always re-applies the merge — a fixed
+        // point by the at-least-once replay contract. Cost: one extra merge
+        // on the rare replay-after-fold path; benefit: an offline fold
+        // taken between a crash and the restart can never silently lose a
+        // batch's survivors (DedupStreamSpec pins exactly that window).
+        // Checked after the claim, so second writers still bounce on
+        // replays.
+        val idxMeta = idx.meta
+        val indexFolded = idx.isFolded(idxMeta, writer, batchId)
+        // the cut that writes the signatures also gathers the index
+        // buckets they hash into
+        val (sigsB, idxTouched) = Dedup.signatureIndex(b, k, bands, rowsPerBand,
+          idCol, textCol, poly).cutNow(sigBucket(nIdxBuckets))
+        val (storedIdx, idxIdType) =
+          readTouchedIndex(spark, indexPath, idxTouched, nIdxBuckets, idCol,
+            "this stream")
+        val indexExists = storedIdx.isDefined || idxIdType.isDefined
+        // survivors is eagerly materialized, so this inner scope releases
+        // the candidate and shingle-set cuts the moment it returns,
+        // instead of leaking them per micro-batch for the session (r21,
+        // the r20 ADVICE note; the Curation pairStage pattern). b and
+        // sigsB belong to the outer scope.
+        val survivors = Cut.scope {
+          // ONE candidate frame for both kinds — the stored-index probe
+          // and the within-batch banding over the ALREADY-COMPUTED batch
+          // signatures (r20: sigsB IS signatureIndex(b) under this batch's
+          // (k, bands, rowsPerBand, poly); re-deriving it would pay the
+          // MinHash encode of every ingested document a second time). Its
+          // cut gathers the corpus buckets of the stored candidates, so
+          // their text is fetched bucket-pruned with no job of its own.
+          val corpusPairs = storedIdx.fold(
+            sigsB.select(col(idCol).as("bid"), col(idCol).as("cid")).limit(0))(
             indexCandidates(_, sigsB, idCol))
-          .cutNow() // candidate-sized; feeds fetch + verify
-        val corpusCand =
-          if (!indexExists) b.limit(0)
-          else candidateCorpus(spark, corpusPath, cand, idCol, "applyDedupBatch")._1
-        val matchedCorpus = Dedup.verifiedDupIds(cand, b, corpusCand,
-          k, threshold, idCol, textCol)
-        // within-batch pass over the ALREADY-COMPUTED batch
-        // signatures (r20): sigsB IS signatureIndex(b) under this
-        // batch's (k, bands, rowsPerBand, poly) — the text-input
-        // near-dup faces would re-derive the same frame, paying the
-        // MinHash encode of every ingested document a second time
-        val withinPairs = Dedup.nearDupsFromSigs(sigsB, b, k, threshold,
-          idCol, textCol)
-        // within-batch election: the default pairwise keep-lowest-id
-        // rule drops each verified pair's higher side — the
-        // documented ESTIMATE (it over-keeps a doc whose only pairs
-        // are with higher ids that themselves dropped: on pairs
-        // (1,3),(2,3) it keeps {1,2} though 2's whole cluster has
-        // rep 1). `exactWithinBatch` elects one min-id rep per
-        // TRANSITIVE cluster instead (Dedup.dupClusters' closure,
-        // batch-pair-sized) — closure-exact batches for deployments
-        // that want them; the estimate stays the default (cheaper —
-        // no iteration — and the oracle-matched shape).
-        val withinDrops =
-          if (exactWithinBatch)
-            graft.llm.Components
-              .pairComponents(withinPairs.select("a", "b"), "a", "b", "bid")
-              .where(col("bid") =!= col("component"))
-              .select("bid")
-          else withinPairs.select(col("b").as("bid")).distinct()
-        // no extra distinct on the union: the left_anti probe side
-        // dedups inherently (the r4 rule), and each branch is
-        // already distinct
-        b.join(
-            matchedCorpus.unionByName(withinDrops)
-              .select(col("bid").as(idCol)),
-            Seq(idCol), "left_anti")
-          .cutNow() // feeds the corpus merge + the index write
+          val batchCand = Dedup.batchCandidates(corpusPairs, sigsB, idCol)
+          val (cand, corpusDocs) =
+            if (indexExists) cutWithCorpus(spark, corpusPath, batchCand,
+              !col("within"), idCol, "applyDedupBatch")
+            else (batchCand.cutNow(), b.limit(0))
+          // one verify pass. The within-batch election: the default
+          // pairwise keep-lowest-id rule drops each verified pair's higher
+          // side — the documented ESTIMATE (it over-keeps a doc whose only
+          // pairs are with higher ids that themselves dropped: on pairs
+          // (1,3),(2,3) it keeps {1,2} though 2's whole cluster has rep
+          // 1). `exactWithinBatch` elects one min-id rep per TRANSITIVE
+          // cluster instead (Dedup.dupClusters' closure, batch-pair-sized)
+          // — closure-exact batches for deployments that want them; the
+          // estimate stays the default (cheaper — no iteration — and the
+          // oracle-matched shape).
+          val drops = Dedup.verifiedBatchDrops(cand, b, corpusDocs, k, threshold,
+            idCol, textCol, exactWithinBatch)
+          // no distinct on the drops: the left_anti probe side dedups
+          // inherently (the r4 rule); they number at most the candidates
+          b.join(Joins.hinted(Joins.fitsBroadcast(cand),
+              drops.select(col("bid").as(idCol))), Seq(idCol), "left_anti")
+            .cutNow() // feeds the corpus merge + the index write
+        }
+        // the corpus store is pinned to THIS stream's writer id — a
+        // second dedupStream on the same corpusPath fails loudly
+        // instead of silently losing committed survivors to the CDC
+        // read-merge-overwrite race (r18: DEPLOY.md's "one stream
+        // per (indexPath, corpusPath)" now has mechanical teeth).
+        // PRE-verify that claim before the overlapped writes fork
+        // (r21): applyCdcBatch re-checks it on its own thread, but a
+        // batch doomed at the corpus pin must touch NEITHER store —
+        // without this, the concurrent index write would land a tail
+        // partition for a bounced batch (claim-ordering spec in
+        // DedupStreamSpec). Idempotent for the rightful writer.
+        val corpus = Store.CdcSnapshot.at(spark, corpusPath)
+        corpus.claim(Some(writer), corpus.meta.flatMap(_.writer))
+        // the two store writes are INDEPENDENT — different paths,
+        // every shared input an eager checkpoint — so they run
+        // OVERLAPPED from two driver threads (r21, guide §2.6: the
+        // index write's tasks back-fill executor slots the corpus
+        // merge's straggler tail leaves idle; at deployment scale
+        // the two writes are the batch's dominant sequential jobs).
+        // Commit ORDER no longer carries recovery semantics: the
+        // corpus merge replays unconditionally (see the
+        // folded-watermark comment above), and each write is
+        // idempotent on redelivery by itself.
+        overlapped("graft-dedup-index-write")(
+          if (!indexFolded) {
+            val survivorSigs = sigsB
+              .join(survivors.select(idCol), Seq(idCol), "left_semi")
+            val typed = idxIdType.fold(survivorSigs)(t =>
+              survivorSigs.withColumn(idCol, col(idCol).cast(t)))
+            // the per-batch meta carries the fold watermarks through
+            idx.writeTier(typed, writer, batchId, None,
+              IdxMeta(nIdxBuckets, typed.schema,
+                idxMeta.fold(Map.empty[String, Long])(_.folded)),
+              tailFiles)
+          })(
+          applyCdcBatch(
+            survivors.withColumn("version", lit(batchId + 1L))
+              .withColumn("op", lit("U")),
+            corpusPath, Seq(idCol), "version", "op", nBuckets,
+            Some(writer)))
+        // the TAIL BOUND (r19, the r18 verdict ask 2): every probe
+        // reads the whole tail, so unbounded per-batch fact
+        // partitions are the one growth term the two-tier layout
+        // left to operator cadence — auto-fold when the tail
+        // crosses the bound. The fold is index-wide (an amortized
+        // 1/maxTailBatches share per batch); retraction GC (the
+        // corpus semi-join) stays the offline compactDedupIndex
+        // call — the auto path must never add a corpus read to a
+        // micro-batch. Crash mid-fold = meta-without-dirs, caught
+        // loudly by the next probe's torn-layout guard; the
+        // replayed batch then re-folds after rebuildDedupIndex.
+        if (idx.tailBatches >= maxTailBatches)
+          compactDedupIndexOwned(spark, indexPath, None, Some(writer))
       }
-      // the corpus store is pinned to THIS stream's writer id — a
-      // second dedupStream on the same corpusPath fails loudly
-      // instead of silently losing committed survivors to the CDC
-      // read-merge-overwrite race (r18: DEPLOY.md's "one stream
-      // per (indexPath, corpusPath)" now has mechanical teeth).
-      // PRE-verify that claim before the overlapped writes fork
-      // (r21): applyCdcBatch re-checks it on its own thread, but a
-      // batch doomed at the corpus pin must touch NEITHER store —
-      // without this, the concurrent index write would land a tail
-      // partition for a bounced batch (claim-ordering spec in
-      // DedupStreamSpec). Idempotent for the rightful writer.
-      val corpus = Store.CdcSnapshot.at(spark, corpusPath)
-      corpus.claim(Some(writer), corpus.meta.flatMap(_.writer))
-      // the two store writes are INDEPENDENT — different paths,
-      // every shared input an eager checkpoint — so they run
-      // OVERLAPPED from two driver threads (r21, guide §2.6: the
-      // index write's tasks back-fill executor slots the corpus
-      // merge's straggler tail leaves idle; at deployment scale
-      // the two writes are the batch's dominant sequential jobs).
-      // Commit ORDER no longer carries recovery semantics: the
-      // corpus merge replays unconditionally (see the
-      // folded-watermark comment above), and each write is
-      // idempotent on redelivery by itself.
-      overlapped("graft-dedup-index-write")(
-        if (!indexFolded) {
-          val survivorSigs = sigsB
-            .join(survivors.select(idCol), Seq(idCol), "left_semi")
-          val typed = idxIdType.fold(survivorSigs)(t =>
-            survivorSigs.withColumn(idCol, col(idCol).cast(t)))
-          // the per-batch meta carries the fold watermarks through
-          idx.writeTier(typed, writer, batchId, None,
-            IdxMeta(nIdxBuckets, typed.schema,
-              idxMeta.fold(Map.empty[String, Long])(_.folded)),
-            tailFiles)
-        })(
-        applyCdcBatch(
-          survivors.withColumn("version", lit(batchId + 1L))
-            .withColumn("op", lit("U")),
-          corpusPath, Seq(idCol), "version", "op", nBuckets,
-          Some(writer)))
-      // the TAIL BOUND (r19, the r18 verdict ask 2): every probe
-      // reads the whole tail, so unbounded per-batch fact
-      // partitions are the one growth term the two-tier layout
-      // left to operator cadence — auto-fold when the tail
-      // crosses the bound. The fold is index-wide (an amortized
-      // 1/maxTailBatches share per batch); retraction GC (the
-      // corpus semi-join) stays the offline compactDedupIndex
-      // call — the auto path must never add a corpus read to a
-      // micro-batch. Crash mid-fold = meta-without-dirs, caught
-      // loudly by the next probe's torn-layout guard; the
-      // replayed batch then re-folds after rebuildDedupIndex.
-      if (idx.tailBatches >= maxTailBatches)
-        compactDedupIndexOwned(spark, indexPath, None, Some(writer))
     }
   }
 

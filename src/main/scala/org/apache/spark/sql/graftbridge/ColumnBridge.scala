@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * supported pattern for libraries shipping custom Catalyst expressions
@@ -48,4 +50,30 @@ object ColumnBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `key` resolved against `ds` and bound to the positions of its
+    * output: an expression an executor can evaluate over the rows of
+    * `ds`'s RDD. */
+  def boundOver(ds: Dataset[_], key: Column): Expression =
+    ds.select(key).queryExecution.analyzed match {
+      case Project(Seq(e), child) =>
+        BindReferences.bindReference(e match {
+          case a: Alias => a.child
+          case x => x
+        }, child.output)
+      case plan => throw new IllegalArgumentException(s"not a projection of one column:\n$plan")
+    }
+
+  /** `cut` — a frame whose plan is one `LogicalRDD` — with that node's
+    * statistics replaced by a measured row count and byte size. The RDD,
+    * output, partitioning, ordering and constraints stay as they are.
+    * (`LogicalRDD.fromDataset` copies the origin plan's estimates, and a
+    * frame over a chosen plan can only be built inside `sql`.) */
+  def withStatistics[T](cut: Dataset[T], rows: Long, bytes: Long): Dataset[T] = {
+    val lr = cut.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val session = cut.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val stats = Statistics(sizeInBytes = BigInt(math.max(bytes, 1L)), rowCount = Some(BigInt(rows)))
+    org.apache.spark.sql.classic.Dataset[T](session,
+      lr.copy()(session, Some(stats), Some(lr.constraints)))(cut.encoder)
+  }
 }

@@ -89,6 +89,16 @@ class ScaleProbeSpec extends SparkSpec {
     pairs(x2) should be <= 2 * base
   }
 
+  test("the 1× side spread over N× files holds the base rows in as many files as the N× table") {
+    val x1 = s"$root/x1spread"
+    ScaleProbe.replicate(spark, sf, 1, x1, spread = 2)
+    fingerprint(x1) shouldBe baseFp
+    def files(dir: String, n: String): Int =
+      new java.io.File(s"$dir/$n.parquet").listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    scaled.foreach(n => withClue(n)(files(x1, n) shouldBe files(x2, n)))
+  }
+
   test("the probe rows are every declared query, sorted, then the kept shapes") {
     ScaleProbe.rows(spark, root, 5000L, root).map(_._1) shouldBe
       SparkEntry.queries.keys.toSeq.sorted ++ Seq("dup_clusters_hub", "cc_rounds",

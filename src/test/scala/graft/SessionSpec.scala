@@ -24,6 +24,24 @@ class SessionSpec extends SparkSpec {
       graft.functions.RewriteDotProduct, graft.plans.RewriteRangeJoin)
   }
 
+  test("the generated-code cache holds a working set: a query re-run after twenty others compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
+      Session.CodegenCacheEntries.toString
+    // cold, twenty aggregation queries compile well over Spark's default
+    // 100 entries, which would evict the first query's classes
+    val others = SparkEntry.queries.keys.toSeq.sorted
+      .filter(q => q.startsWith("agg_") && q != "agg_count").take(20)
+    def run(q: String): Unit = SparkEntry.queries(q)(spark, graft.plans.RegistrySweep.sfDir)
+      .write.format("noop").mode("overwrite").save()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run("agg_count")
+    others.foreach(run)
+    val before = compiles
+    run("agg_count")
+    compiles shouldBe before
+  }
+
   test("graft/Session.scala is the only SparkSession builder under src/") {
     val src = Paths.get("src")
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")

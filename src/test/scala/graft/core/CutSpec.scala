@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{SourceGuard, SparkSpec}
 import graft.core.Cut.CutOps
+import graft.obs.QueryProfile
 
 /** [[Cut]], the one owner of checkpoint blocks: what a scope releases,
   * what it hands on, and what [[Cut.release]] and [[Cut.isView]]
@@ -128,6 +129,29 @@ class CutSpec extends SparkSpec {
       sc.getLocalProperty("callSite.short") shouldBe "planted site"
       cuts.foreach(Cut.release)
     } finally sc.clearCallSite()
+  }
+
+  test("an eager cut counts its rows and bytes, and gathers a key set, in the one job that stores it") {
+    Cut.scope {
+      val ((cut, keys), run) = QueryProfile.measure(spark)(frame(7).cutNow(col("g")))
+      run.jobs shouldBe 1
+      keys shouldBe Seq(0, 1, 2)
+      Cut.rows(cut) shouldBe Some(7L)
+      val stats = cut.queryExecution.optimizedPlan.stats
+      stats.rowCount shouldBe Some(BigInt(7))
+      stats.sizeInBytes should be > BigInt(0)
+      // a projection keeps every row; a filter, a join or a lazy cut does not know
+      Cut.rows(cut.select(col("id").as("x")).withColumn("y", lit(1))) shouldBe Some(7L)
+      Cut.rows(cut.where(col("g") === 0)) shouldBe None
+      Cut.rows(cut.join(cut, "id")) shouldBe None
+      Cut.rows(frame(3).cut()) shouldBe None
+      Cut.rows(frame(3)) shouldBe None
+      cut.orderBy("id").collect().map(_.getLong(0)).toSeq shouldBe (1L to 7L)
+      // an empty frame counts 0 and gathers nothing
+      val (noRows, noKeys) = frame(3).where(col("id") < 0).cutNow(col("g"))
+      Cut.rows(noRows) shouldBe Some(0L)
+      noKeys shouldBe empty
+    }
   }
 
   test("graft/core/Cut.scala is the only main source that checkpoints or releases") {

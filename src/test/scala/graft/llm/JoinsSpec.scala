@@ -41,4 +41,23 @@ class JoinsSpec extends SparkSpec {
     val (_, run) = graft.obs.QueryProfile.measure(spark)(Joins.fitsBroadcast(table(1000)))
     run.shuffles shouldBe 0
   }
+
+  test("over an eager cut, or a projection of one, the gate starts no job; over any other frame it counts") {
+    import graft.core.Cut
+    import graft.core.Cut.CutOps
+    def jobs(gate: => Boolean): (Boolean, Int) = {
+      val (fits, run) = graft.obs.QueryProfile.measure(spark)(gate)
+      (fits, run.jobs)
+    }
+    val plain = spark.range(100).select(col("id").as("k"), (col("id") * 7L).as("v"))
+    Cut.scope {
+      val eager = plain.cutNow()
+      jobs(Joins.fitsBroadcast(eager, maxRows = 100L)) shouldBe ((true, 0))
+      jobs(Joins.fitsBroadcast(eager.select(col("v").as("w")).withColumn("one", lit(1)),
+        maxRows = 99L)) shouldBe ((false, 0))
+      jobs(Joins.fitsBroadcast(eager.where(col("k") < 10), maxRows = 10L)) shouldBe ((true, 1))
+      jobs(Joins.fitsBroadcast(plain.cut(), maxRows = 100L)) shouldBe ((true, 1))
+      jobs(Joins.fitsBroadcast(plain, maxRows = 100L)) shouldBe ((true, 1))
+    }
+  }
 }
