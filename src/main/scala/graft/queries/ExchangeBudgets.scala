@@ -116,8 +116,11 @@ object ExchangeBudgets {
     // clusters by bucket first — one exchange of only the rows being
     // written per fold (two folds in this fixture), killing the
     // nTasks-files-per-bucket layout the cdc_sink_prune probe measured
-    // at 3× batch cost under a 10× snapshot (listing-bound)
-    "llm_host_canon_stream"           -> 37,
+    // at 3× batch cost under a 10× snapshot (listing-bound).
+    // 37 → 33: each batch reads its label count off the eager cut and
+    // its written buckets off the merge cut's own job — no count
+    // aggregate, no distinct over the cut (two batches)
+    "llm_host_canon_stream"           -> 33,
     // sweep: banding groupBy + bucket-pair distinct + the multi-distinct
     // Expand aggregate over the CANDIDATE frame + the |thresholds| sort
     "llm_dedup_sweep"                 -> 4,

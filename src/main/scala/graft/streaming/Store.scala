@@ -4,19 +4,30 @@ import java.nio.charset.StandardCharsets
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
-/** The on-disk lifecycle every stateful [[StreamOps]] sink shares, for
-  * one store root: the `.meta` sidecar, the ownership claim, the
-  * data-dir listing, the torn-overwrite guard and — for the two tiered
+/** One on-disk store of the stateful [[StreamOps]] sinks, at one root:
+  * the `.meta` sidecar, the ownership claim, the data-dir listing, the
+  * torn-overwrite guard, the bucket layout and — for the two tiered
   * stores — the tail tier. The store kinds ([[Store.CdcSnapshot]],
   * [[Store.SignatureIndex]], [[Store.AnnCodes]], [[Store.Labels]],
   * [[Store.CanonEdges]]) only say what differs: their meta fields,
-  * which root children are data, and their messages. What a store
-  * reads and writes as DataFrames stays with its sink in StreamOps.
+  * their bucket column, which root children are data, and their
+  * messages.
+  *
+  * The bucket layout is `<root>/<bucketCol>=<b>/` (tiered kinds: writer
+  * and batch dirs beneath, and one tail dir). It is known here only: a
+  * sink says which buckets it wants and what it does with the rows;
+  * this class builds the dir names from the one root listing, reads
+  * them under the stored schema ([[schema]]: the meta's, else one footer
+  * read on the driver — never a schema-inference job), writes rows
+  * clustered by bucket ([[write]], [[writeTier]]), and checks a layout
+  * that has no meta ([[verifyLayout]]).
   *
   * The meta is a SIBLING file (`<root>.meta`), so a static overwrite of
   * the data dir can never delete it: it pins the layout (a mismatched
@@ -26,8 +37,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * cold-start fallback would silently re-bootstrap from empty and
   * publish a plausible-looking partial store). */
 private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
-                                    val fs: FileSystem) {
+                                    spark: SparkSession) {
   import Store._
+
+  val fs: FileSystem = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The decoded meta, None when absent. A meta this kind cannot decode
     * — zero bytes from a create-then-die write, or another store's meta
@@ -104,6 +117,137 @@ private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
   def missing(hint: String): IllegalArgumentException =
     new IllegalArgumentException(s"no ${kind.metaNoun} at $root.meta — $hint")
 
+  // ---- the stored rows: schema, reads, writes and the no-meta layout
+  // check. `listed` is a listing [[dirs]] (or [[open]]) returned: every
+  // dir name is built from it, so a read of N buckets lists only those
+  // N dirs, never the rest of the store (the r18 readKeys fix).
+
+  /** The stored rows' schema, partition columns excluded: the meta's
+    * when it records one (the CDC snapshot's may run AHEAD of older
+    * files, which then null-backfill), else the footer of one listed
+    * data child, read on the driver — no Spark job, and every data file
+    * has this schema by the layout contract. */
+  def schema(m: Option[M], listed: => Array[String]): StructType =
+    m.flatMap(kind.schemaOf).orElse(listed.headOption
+        .flatMap(d => GraftFooterSchema.read(spark, s"$root/$d")))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no ${kind.dataNoun} at $root to read a schema from"))
+
+  /** Every stored row, partition columns dropped: one recursive listing
+    * of the root, under [[schema]]. */
+  def readAll(m: Option[M], listed: => Array[String] = dirs): DataFrame =
+    scan(Seq(root), schema(m, listed))
+
+  /** The rows of `buckets` — and of the tail tier when `withTail` —
+    * under `schema`, partition columns dropped. Only the dirs `listed`
+    * holds are read, by constructed name: a bucket with no dir is
+    * skipped, and none at all yields an empty frame CARRYING `schema`. */
+  def read(schema: StructType, listed: Array[String], buckets: Iterable[Any],
+           withTail: Boolean = false): DataFrame = {
+    val chosen = pick(listed, buckets, withTail)
+    if (chosen.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else scan(chosen.map(d => s"$root/$d"), schema)
+  }
+
+  /** Whether [[read]] of these buckets would read any dir. */
+  def holds(listed: Array[String], buckets: Iterable[Any],
+            withTail: Boolean = false): Boolean =
+    pick(listed, buckets, withTail).nonEmpty
+
+  private def pick(listed: Array[String], buckets: Iterable[Any],
+                   withTail: Boolean): Seq[String] = {
+    val have = listed.toSet
+    ((if (withTail) Seq(tail.value) else Nil) ++ buckets).map(dirOf)
+      .filter(have.contains).toSeq
+  }
+
+  /** `paths` under `schema` plus the partition columns (a nested
+    * writer/batch dir reads as columns, never inferred); partition
+    * columns dropped except `keep`. */
+  private def scan(paths: Seq[String], schema: StructType,
+                   keep: Seq[String] = Nil): DataFrame = {
+    val parts = partitionFields
+    spark.read.option("basePath", root)
+      .schema(StructType(schema.fields ++ parts))
+      .parquet(paths: _*)
+      .drop(parts.map(_.name).filterNot(keep.contains): _*)
+  }
+
+  private def bucketCol: String = kind.bucket.getOrElse(throw
+    new IllegalStateException(s"the ${kind.name} has no bucket dirs")).col
+
+  private def dirOf(bucket: Any): String = s"$bucketCol=$bucket"
+
+  /** The columns a stored file carries in its path: the bucket, then
+    * (tiered kinds) the writer and the batch. */
+  private def partitionFields: Seq[StructField] =
+    kind.bucket.toSeq.map(b => StructField(b.col, b.dataType)) ++
+      kind.tail.toSeq.flatMap(t => Seq(StructField(t.writerCol, StringType),
+        StructField(t.batchCol, LongType)))
+
+  /** The one bucket-clustered write: `rows` tagged with `bucket` and
+    * clustered by it — one file per bucket per write, spread over the
+    * buckets' tasks (unclustered, every task lands a file in every
+    * bucket: a small-file layout whose LISTING taxes every later read,
+    * 3.0× at 10× snapshot in the r17 cdc_sink_prune probe) — or, given
+    * `spread`, hash-spread over that many tasks on that column. Then a
+    * static overwrite of the whole root, or a `dynamic` one of only the
+    * partitions `rows` holds. */
+  def write(rows: DataFrame, bucket: Column, dynamic: Boolean,
+            spread: Option[(Int, Column)] = None): Unit = {
+    val tagged = rows.withColumn(bucketCol, bucket)
+    overwrite(spread.fold(tagged.repartition(col(bucketCol))) {
+      case (n, c) => tagged.repartition(n, c)
+    }, root, partitionFields.map(_.name), dynamic)
+  }
+
+  /** Delete the dirs of `buckets` — a dynamic overwrite leaves the
+    * files of a bucket whose rows all moved away. */
+  def removeBuckets(buckets: Iterable[Any]): Unit =
+    buckets.foreach(b => fs.delete(new Path(root, dirOf(b)), true))
+
+  /** Copy the data children `listed` byte for byte under `to`'s root. */
+  def copyInto(to: Store[M], listed: Array[String]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    to.fs.mkdirs(new Path(to.root))
+    listed.foreach(d =>
+      FileUtil.copy(fs, new Path(root, d), to.fs, new Path(to.root, d), false, conf))
+  }
+
+  /** The check a layout with NO meta needs before its bucket pruning is
+    * trusted — dirs without meta are a pre-meta layout, or a FIRST write
+    * that crashed between its commit and its meta, and a bucket count
+    * other than the one configured (`setting`=`n`, named in messages
+    * with `who`) would prune the wrong buckets and silently duplicate
+    * keys or admit dups. A dir value >= `n` is proof (cheap); one full
+    * re-hash — every row outside the tail hashes to its dir under
+    * `bucketOf` — catches a SMALLER count the names cannot. A pass is
+    * memoized per (store, n) in this JVM: a writer's next batch lands
+    * the meta, but a read-only probe never writes, and without the memo
+    * every serving probe would re-pay a full-store scan. An empty
+    * listing has nothing to check. */
+  def verifyLayout(listed: Array[String], setting: String, n: Int,
+                   bucketOf: Column, who: String): Unit = {
+    val key = (kind.name, root, n)
+    if (listed.nonEmpty && !verifiedLayouts.contains(key)) {
+      val values = listed.map(_.stripPrefix(bucketCol + "=").toLong)
+      require(values.forall(_ < n),
+        s"${kind.name} at $root has bucket dir $bucketCol=${values.max} but " +
+          s"no meta sidecar and $who was configured with $setting=$n — the " +
+          s"layout was written with a different bucket count; rebuild the " +
+          s"${kind.name} (or restore its meta sidecar)")
+      val inTail = kind.tail.fold(lit(false))(t => col(bucketCol) === lit(t.value))
+      val misHashed = scan(Seq(root), schema(None, listed), keep = Seq(bucketCol))
+        .where(!inTail && bucketOf =!= col(bucketCol))
+      require(misHashed.isEmpty,
+        s"${kind.name} at $root has no meta sidecar and its rows do not hash " +
+          s"to their bucket dirs under $setting=$n — rebuild the ${kind.name} " +
+          "(or restore its meta sidecar)")
+      memoizeVerified(key)
+    }
+  }
+
   // ---- ownership, by the claim sidecar (the code below the Store class)
 
   def claim(writer: Option[String], storedPin: Option[String]): Unit =
@@ -130,7 +274,7 @@ private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
     * data): one listStatus of the tail dir plus one per writer dir. */
   private def tailBatchIds: Map[String, Seq[Long]] = {
     val t = tail
-    val dir = new Path(root, s"${t.partCol}=${t.value}")
+    val dir = new Path(root, dirOf(t.value))
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir)
       .filter(s => s.isDirectory &&
@@ -149,6 +293,24 @@ private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
     * grows between folds, since every probe reads the whole tail. */
   def tailBatches: Int = tailBatchIds.values.map(_.size).sum
 
+  /** Whether `listed` holds the tail dir. */
+  def hasTail(listed: Array[String]): Boolean = listed.contains(dirOf(tail.value))
+
+  /** The tail tier's rows under `schema`, WITH their batch column —
+    * each row is one batch's fact; [[latest]] resolves them. */
+  def readTail(schema: StructType, listed: Array[String]): DataFrame =
+    scan(pick(listed, Nil, withTail = true).map(d => s"$root/$d"), schema,
+      keep = Seq(tail.batchCol))
+
+  /** One row per `key` of [[readTail]] rows: the latest batch's, then
+    * the lowest `tiebreak`; the batch column dropped. */
+  def latest(tailRows: DataFrame, key: Seq[Column], tiebreak: Column): DataFrame =
+    tailRows
+      .withColumn("__rn", row_number().over(Window.partitionBy(key: _*)
+        .orderBy(col(tail.batchCol).desc, tiebreak)))
+      .where(col("__rn") === 1)
+      .drop("__rn", tail.batchCol)
+
   /** Whether `batchId` is a REPLAY of a batch a fold already moved into
     * the bucketed tier: the fold deleted the tail partition that made
     * the write idempotent, so re-landing it would duplicate its rows
@@ -159,34 +321,27 @@ private[graft] final class Store[M](val kind: Store.Kind[M], val root: String,
   def isFolded(m: Option[M], writer: String, batchId: Long): Boolean =
     m.exists(kind.folded(_).get(writer).exists(batchId <= _))
 
-  /** The tier write: `rows` tagged with their tier — `bucket` for a
-    * corpus-sized static write (bootstrap, fold: clustered, one file
-    * per bucket, spread over the bucket count's tasks), else the tail
-    * value for a batch's dynamic write (ONE partition commit per batch;
-    * bucketing a batch would pay one commit per touched bucket) — plus
-    * the writer and batch partitions beneath (the idempotent-sink
-    * keying: a replayed batch rewrites its own partition). One commit
-    * needs one partition DIR, not one file: `tailFiles` > 1
-    * hash-spreads a large batch over that many tasks inside the one
-    * tail dir. A static write that left no data dirs removes the store
-    * (checked on the dirs AFTER the write — an isEmpty pre-check would
-    * execute the input plan an extra time); otherwise `meta` lands
-    * after the data. */
+  /** The tier write, through [[write]]: `rows` tagged with their tier —
+    * `bucket` for a corpus-sized static write (bootstrap, fold:
+    * clustered, one file per bucket, spread over the bucket count's
+    * tasks), else the tail value for a batch's dynamic write (ONE
+    * partition commit per batch; bucketing a batch would pay one commit
+    * per touched bucket) — plus the writer and batch partitions beneath
+    * (the idempotent-sink keying: a replayed batch rewrites its own
+    * partition). One commit needs one partition DIR, not one file:
+    * `tailFiles` > 1 hash-spreads a large batch over that many tasks
+    * inside the one tail dir. A static write that left no data dirs
+    * removes the store (checked on the dirs AFTER the write — an
+    * isEmpty pre-check would execute the input plan an extra time);
+    * otherwise `meta` lands after the data. */
   def writeTier(rows: DataFrame, writer: String, batch: Long,
                 bucket: Option[Column], meta: M, tailFiles: Int = 1): Unit = {
     require(tailFiles >= 1, s"tailFiles must be >= 1, got $tailFiles")
     val t = tail
-    val tagged = rows.withColumn(t.partCol, bucket.getOrElse(lit(t.value)))
-      .withColumn(t.writerCol, lit(writer))
-      .withColumn(t.batchCol, lit(batch))
-    val clustered =
-      if (bucket.isDefined || tailFiles == 1) tagged.repartition(col(t.partCol))
-      else tagged.repartition(tailFiles,
-        col(rows.columns.filterNot(t.keyCols.contains).head))
-    val w = clustered.write.mode("overwrite")
-    (if (bucket.isEmpty) w.option("partitionOverwriteMode", "dynamic") else w)
-      .partitionBy(t.partCol, t.writerCol, t.batchCol)
-      .parquet(root)
+    write(rows.withColumn(t.writerCol, lit(writer)).withColumn(t.batchCol, lit(batch)),
+      bucket.getOrElse(lit(t.value)), dynamic = bucket.isEmpty,
+      if (bucket.isDefined || tailFiles == 1) None
+      else Some(tailFiles -> col(rows.columns.filterNot(t.keyCols.contains).head)))
     if (bucket.isDefined && dirs.isEmpty) remove()
     else writeMeta(meta)
   }
@@ -259,7 +414,7 @@ private[graft] object Store {
     }
   }
 
-  private def schemaOf(json: String): StructType =
+  private def parseSchema(json: String): StructType =
     DataType.fromJson(json).asInstanceOf[StructType]
 
   /** The CDC snapshot's meta: the bucket count every reader/writer must
@@ -287,28 +442,34 @@ private[graft] object Store {
     * state, so a replay at or below it skips the fold). */
   final case class CanonMeta(nBuckets: Int, writer: String, applied: Long)
 
-  /** The tail tier of a tiered kind: the tier partition column and its
-    * tail value, the writer/batch partitions beneath, and the row key
-    * columns (the other column is the id a large tail write spreads
-    * on). */
-  final case class Tail(partCol: String, value: Any, writerCol: String,
-                        batchCol: String, keyCols: Seq[String])
+  /** The bucket partition column of a bucketed kind — the
+    * `<col>=<value>` dirs under the root — and the type its values read
+    * back as. */
+  final case class Bucket(col: String, dataType: DataType = IntegerType)
+
+  /** The tail tier of a tiered kind: the bucket value of its one tail
+    * dir, the writer/batch partitions beneath, and the row key columns
+    * (the other column is the id a large tail write spreads on). */
+  final case class Tail(value: Any, writerCol: String, batchCol: String,
+                        keyCols: Seq[String])
 
   /** What one store kind parametrizes: its names in messages, its meta
-    * fields, which root children are data, and (tiered kinds) its tail. */
+    * fields, its bucket column, which root children are data, and
+    * (tiered kinds) its tail. */
   abstract class Kind[M](val name: String, val metaNoun: String,
-                         val dataNoun: String, val tornHint: String) {
+                         val dataNoun: String, val tornHint: String,
+                         val bucket: Option[Bucket] = None) {
     def decode(m: Meta): M
     def encode(m: M): Meta
-    def isData(child: String): Boolean
+    /** The stored rows' schema, when the meta records one. */
+    def schemaOf(m: M): Option[StructType] = None
+    def isData(child: String): Boolean = bucket.exists(b => partitioned(b.col)(child))
     def tail: Option[Tail] = None
     def folded(m: M): Map[String, Long] = Map.empty
     /** Fail on a root holding a layout this build cannot serve. */
     def checkLayout(root: String, children: Array[String]): Unit = ()
 
-    def at(spark: SparkSession, root: String): Store[M] =
-      new Store(this, root,
-        new Path(root).getFileSystem(spark.sessionState.newHadoopConf()))
+    def at(spark: SparkSession, root: String): Store[M] = new Store(this, root, spark)
   }
 
   private def partitioned(partCol: String)(child: String): Boolean =
@@ -316,35 +477,35 @@ private[graft] object Store {
 
   object CdcSnapshot extends Kind[CdcMeta]("snapshot", "layout meta",
       "bucket dirs", "a prior overwrite crashed mid-write; rebuild the " +
-        "snapshot (from the changelog, or writeCdcSnapshot) first") {
+        "snapshot (from the changelog, or writeCdcSnapshot) first",
+      Some(Bucket(StreamOps.CdcBucketCol))) {
     private val keys = Seq("nBuckets", "schema", "writer", "retained")
     def decode(m: Meta): CdcMeta = {
       m.expect(keys)
-      CdcMeta(m("nBuckets").toInt, m.get("schema").map(schemaOf),
+      CdcMeta(m("nBuckets").toInt, m.get("schema").map(parseSchema),
         m.get("writer"), m.get("retained").map(_.toLong))
     }
     def encode(c: CdcMeta): Meta = Meta(keys.zip(Seq(Some(c.nBuckets.toString),
       c.schema.map(_.json), c.writer, c.retained.map(_.toString)))
       .collect { case (k, Some(v)) => k -> v })
-    def isData(child: String): Boolean = partitioned(StreamOps.CdcBucketCol)(child)
+    override def schemaOf(m: CdcMeta): Option[StructType] = m.schema
   }
 
   object SignatureIndex extends Kind[IdxMeta]("signature index",
       "signature-index meta", "bucket dirs", "a compaction/rewrite " +
         "crashed mid-overwrite; rebuild the index from the live corpus " +
-        "(rebuildDedupIndex) before probing through it") {
+        "(rebuildDedupIndex) before probing through it",
+      Some(Bucket(StreamOps.DedupIdxBucketCol))) {
     private val keys = Seq("nIdxBuckets", "schema")
     def decode(m: Meta): IdxMeta = {
       m.expect(keys, folding = true)
-      IdxMeta(m("nIdxBuckets").toInt, schemaOf(m("schema")), m.folded)
+      IdxMeta(m("nIdxBuckets").toInt, parseSchema(m("schema")), m.folded)
     }
     def encode(i: IdxMeta): Meta = Meta(
       keys.zip(Seq(i.nIdxBuckets.toString, i.schema.json)), folded = i.folded)
-    def isData(child: String): Boolean =
-      partitioned(StreamOps.DedupIdxBucketCol)(child)
-    override val tail: Option[Tail] = Some(Tail(StreamOps.DedupIdxBucketCol,
-      StreamOps.DedupIdxTail, StreamOps.DedupWriterCol,
-      StreamOps.DedupBatchCol, Seq("band", "sig")))
+    override def schemaOf(m: IdxMeta): Option[StructType] = Some(m.schema)
+    override val tail: Option[Tail] = Some(Tail(StreamOps.DedupIdxTail,
+      StreamOps.DedupWriterCol, StreamOps.DedupBatchCol, Seq("band", "sig")))
     override def folded(m: IdxMeta): Map[String, Long] = m.folded
     override def checkLayout(root: String, children: Array[String]): Unit =
       require(!children.exists(partitioned(StreamOps.DedupWriterCol)),
@@ -357,18 +518,18 @@ private[graft] object Store {
   object AnnCodes extends Kind[AnnMeta]("ANN code store",
       "ANN code-store meta", "cell dirs", "a compaction/rewrite crashed " +
         "mid-overwrite; re-bootstrap the index from the corpus " +
-        "(bootstrapAnn) first") {
+        "(bootstrapAnn) first", Some(Bucket(StreamOps.AnnCellCol, LongType))) {
     private val keys = Seq("cells", "cbhash", "schema")
     def decode(m: Meta): AnnMeta = {
       m.expect(keys, folding = true)
-      AnnMeta(m("cells").toInt, m("cbhash"), schemaOf(m("schema")), m.folded)
+      AnnMeta(m("cells").toInt, m("cbhash"), parseSchema(m("schema")), m.folded)
     }
     def encode(a: AnnMeta): Meta = Meta(
       keys.zip(Seq(a.cells.toString, a.cbHash, a.schema.json)),
       folded = a.folded)
-    def isData(child: String): Boolean = partitioned(StreamOps.AnnCellCol)(child)
-    override val tail: Option[Tail] = Some(Tail(StreamOps.AnnCellCol,
-      StreamOps.AnnTail, StreamOps.AnnWriterCol, StreamOps.AnnBatchCol,
+    override def schemaOf(m: AnnMeta): Option[StructType] = Some(m.schema)
+    override val tail: Option[Tail] = Some(Tail(StreamOps.AnnTail,
+      StreamOps.AnnWriterCol, StreamOps.AnnBatchCol,
       Seq("cell", "subspace", "code")))
     override def folded(m: AnnMeta): Map[String, Long] = m.folded
   }
@@ -382,12 +543,12 @@ private[graft] object Store {
     def decode(m: Meta): Unit =
       require(m.fields.isEmpty && m.folded.isEmpty && m.markers == Seq(marker))
     def encode(u: Unit): Meta = Meta(markers = Seq(marker))
-    def isData(child: String): Boolean = child.endsWith(".parquet")
+    override def isData(child: String): Boolean = child.endsWith(".parquet")
   }
 
   object CanonEdges extends Kind[CanonMeta]("canonical snapshot",
       "canonical snapshot meta", "bucket dirs", "rebuild the snapshot " +
-        "from the raw edge log") {
+        "from the raw edge log", Some(Bucket(StreamOps.CanonBucketCol))) {
     private val keys = Seq("nBuckets", "writer", "applied")
     def decode(m: Meta): CanonMeta = {
       m.expect(keys)
@@ -395,8 +556,6 @@ private[graft] object Store {
     }
     def encode(c: CanonMeta): Meta = Meta(
       keys.zip(Seq(c.nBuckets.toString, c.writer, c.applied.toString)))
-    def isData(child: String): Boolean =
-      partitioned(StreamOps.CanonBucketCol)(child)
   }
 
   /** The canonical-edge fold's crash marker (at `<canonPath>.inflight`):
@@ -408,8 +567,41 @@ private[graft] object Store {
       m.markers.head.toLong
     }
     def encode(b: Long): Meta = Meta(markers = Seq(b.toString))
-    def isData(child: String): Boolean = false
   }
+
+  /** Meta-less layouts whose [[Store.verifyLayout]] passed in this JVM,
+    * by (kind, root, bucket count). Entries are never evicted one by
+    * one (a meta-less layout stays meta-less until a writer lands the
+    * meta), so past the bound the whole memo is dropped: the worst case
+    * is one re-paid verification, never a correctness change. */
+  private val verifiedLayouts =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, Int)]()
+
+  private val VerifiedLayoutsBound = 4096
+
+  private def memoizeVerified(key: (String, String, Int)): Unit = {
+    if (verifiedLayouts.size >= VerifiedLayoutsBound) verifiedLayouts.clear()
+    verifiedLayouts.add(key)
+  }
+
+  /** The overwrite under every store write: partitioned by `partCols`,
+    * static (the whole `path`) or `dynamic` (only the partitions `rows`
+    * holds). */
+  private def overwrite(rows: DataFrame, path: String, partCols: Seq[String],
+                        dynamic: Boolean): Unit = {
+    val w = rows.write.mode("overwrite")
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy(partCols: _*).parquet(path)
+  }
+
+  /** The idempotent per-batch sink write (the r11 keying, which the
+    * tail tier nests under its tail dir): `rows` tagged with the `keys`
+    * partition values, dynamically overwriting exactly that partition —
+    * a replayed batch rewrites its own partition and touches nothing
+    * else. */
+  def writeKeyed(rows: DataFrame, path: String, keys: Seq[(String, Column)]): Unit =
+    overwrite(keys.foldLeft(rows) { case (r, (k, v)) => r.withColumn(k, v) },
+      path, keys.map(_._1), dynamic = true)
 
   private def metaPath(dir: String) = new Path(dir + ".meta")
 

@@ -321,14 +321,9 @@ object StreamOps {
                                           shardCol: String, posCol: String,
                                           textCol: String,
                                           tokenCount: Option[Column]): Unit = {
-    graft.llm.Audit
-      .shardManifest(batch, shardCol, posCol, textCol, tokenCount)
-      .withColumn("run_id", lit(runId))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id", "batch_id")
-      .parquet(manifestPath)
+    Store.writeKeyed(
+      graft.llm.Audit.shardManifest(batch, shardCol, posCol, textCol, tokenCount),
+      manifestPath, Seq("run_id" -> lit(runId), "batch_id" -> lit(batchId)))
   }
 
   final case class DocIn(doc_id: Long, source: String, text: String)
@@ -502,19 +497,6 @@ object StreamOps {
                         storePath: String): Unit =
     Store.releaseClaim(spark, storePath)
 
-  /** The snapshot's LOGICAL schema (key + payload + internal columns,
-    * WITHOUT the bucket partition column): the meta's when recorded —
-    * it may be AHEAD of the files after [[evolveCdcSnapshot]] — else
-    * ONE bucket dir's footer (all files are uniform by the layout
-    * contract; inferring from the root would pay a recursive listing
-    * that grows with the snapshot). */
-  private def cdcSchema(spark: org.apache.spark.sql.SparkSession,
-                        snapshotPath: String, meta: Option[CdcMeta],
-                        dirs: Array[String])
-      : org.apache.spark.sql.types.StructType =
-    meta.flatMap(_.schema).getOrElse(
-      spark.read.parquet(s"$snapshotPath/${dirs.head}").schema)
-
   /** Every MUTATING op refuses a retained time-travel base: its rows
     * AND its tombstones reproduce history for [[readAsOf]]; any write
     * (a merge, a compaction's tombstone GC, even a schema evolve)
@@ -551,15 +533,7 @@ object StreamOps {
           "stale buckets — delete the snapshot AND its meta sidecar to " +
           "relayout")
     }
-    // cluster by bucket before the partitioned write: without it every
-    // task holds rows of every bucket and the layout lands
-    // nTasks × nBuckets files — a small-file explosion whose LISTING
-    // cost then taxes every subsequent batch's read (the r17
-    // cdc_sink_prune probe measured 3.0× at 10× snapshot from exactly
-    // this; clustered, one file per bucket, the ratio is ~flat)
-    versioned.withColumn(CdcBucketCol, cdcBucket(keyCols, nBuckets))
-      .repartition(col(CdcBucketCol))
-      .write.mode("overwrite").partitionBy(CdcBucketCol).parquet(snapshotPath)
+    snap.write(versioned, cdcBucket(keyCols, nBuckets), dynamic = false)
     // a full static rewrite carries the frame's own schema — it IS the
     // layout now (a prior evolved-ahead meta schema is materialized or
     // replaced by what was just written); OWNERSHIP resets to the
@@ -585,7 +559,7 @@ object StreamOps {
     requireNotRetained(Some(meta), snapshotPath, "repinCdcSnapshot")
     val writer = checkpoint.map(writerIdFor)
     snap.writeMeta(CdcMeta(meta.nBuckets,
-      Some(cdcSchema(spark, snapshotPath, Some(meta), dirs)), writer, None))
+      Some(snap.schema(Some(meta), dirs)), writer, None))
     snap.resetClaim(writer)
   }
 
@@ -593,17 +567,12 @@ object StreamOps {
     * [[graft.relational.Cdc.publicSnapshot]] strips them). Reads under
     * the meta's LOGICAL schema when present, so columns added by
     * [[evolveCdcSnapshot]] surface (null over pre-evolution rows); a
-    * pre-meta or schema-less layout falls back to a plain read. */
+    * pre-meta or schema-less layout reads under one bucket file's
+    * footer. */
   def readCdcSnapshot(spark: org.apache.spark.sql.SparkSession,
                       snapshotPath: String): DataFrame = {
-    Store.CdcSnapshot.at(spark, snapshotPath).meta.flatMap(_.schema) match {
-      case Some(s) =>
-        spark.read.schema(
-            s.add(org.apache.spark.sql.types.StructField(
-              CdcBucketCol, org.apache.spark.sql.types.IntegerType)))
-          .parquet(snapshotPath).drop(CdcBucketCol)
-      case None => spark.read.parquet(snapshotPath).drop(CdcBucketCol)
-    }
+    val snap = Store.CdcSnapshot.at(spark, snapshotPath)
+    snap.readAll(snap.meta)
   }
 
   /** Additive schema evolution of a maintained snapshot — O(1), no
@@ -635,7 +604,7 @@ object StreamOps {
     val (meta, dirs) = snap.openExisting("evolve an EXISTING " +
       "maintained snapshot (bootstrap through writeCdcSnapshot first)")
     requireNotRetained(Some(meta), snapshotPath, "evolveCdcSnapshot")
-    val current = cdcSchema(spark, snapshotPath, Some(meta), dirs)
+    val current = snap.schema(Some(meta), dirs)
     val clash = newCols.map(_._1)
       .filter(n => current.fieldNames.contains(n) || n == CdcBucketCol)
     require(clash.isEmpty,
@@ -773,22 +742,6 @@ object StreamOps {
       keyCols, versionCol, opCol))
   }
 
-  /** Read a set of bucket dirs under the layout's logical `schema` —
-    * explicit paths (pruning at the PATH level, so only these dirs are
-    * ever listed) and an explicit schema (files written before an
-    * [[evolveCdcSnapshot]] null-backfill the new columns; inference
-    * over mixed-generation files would pick one footer arbitrarily).
-    * An empty dir set yields an empty frame CARRYING the schema. */
-  private def readBucketDirs(spark: org.apache.spark.sql.SparkSession,
-                             snapshotPath: String, dirNames: Seq[String],
-                             schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    if (dirNames.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(dirNames.map(d => s"$snapshotPath/$d"): _*)
-
   /** The merge-on-read bucket split shared by [[readLatest]],
     * [[readAsOf]] and [[readKeys]]: the stored snapshot partitioned
     * into the buckets the tail's keys hash into (these flow through
@@ -825,37 +778,35 @@ object StreamOps {
     val changed = aligned
       .select(cdcBucket(keyCols, layout.nBuckets).as("b")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    val touched = layout.bucketDirs(changed)
-    val untouchedNames =
-      if (withUntouched) layout.dirs.toSeq.filterNot(touched.contains)
-      else Seq.empty
-    (readBucketDirs(spark, snapshotPath, touched, layout.schema),
-      readBucketDirs(spark, snapshotPath, untouchedNames, layout.schema),
+    (layout.read(changed),
+      layout.read(if (withUntouched)
+        (0 until layout.nBuckets).filterNot(changed.toSet) else Nil),
       aligned)
   }
 
   /** What a reader of an existing snapshot needs of its layout: the
     * bucket count, the bucket dirs (one root listing) and the logical
     * schema — from the snapshot's own meta, never guessed. */
-  private final case class CdcLayout(nBuckets: Int, dirs: Array[String],
+  private final case class CdcLayout(snap: Store[CdcMeta], nBuckets: Int,
+                                     dirs: Array[String],
                                      schema: org.apache.spark.sql.types.StructType) {
     /** The stored bucket of one key column `key` named `keyCol`, cast to
       * the stored dtype first (xxhash64(int) != xxhash64(long)). */
     def bucketOf(key: Column, keyCol: String): Column =
       pmod(xxhash64(key.cast(schema(keyCol).dataType)), lit(nBuckets)).cast("int")
 
-    /** The dirs of `buckets` that exist. */
-    def bucketDirs(buckets: Seq[Int]): Seq[String] =
-      buckets.map(b => s"$CdcBucketCol=$b").filter(dirs.contains)
+    /** The rows of `buckets`: only the dirs that exist are read. */
+    def read(buckets: Seq[Int]): DataFrame = snap.read(schema, dirs, buckets)
   }
 
   private def cdcLayout(spark: org.apache.spark.sql.SparkSession,
                         snapshotPath: String, caller: String): CdcLayout = {
-    val (meta, dirs) = Store.CdcSnapshot.at(spark, snapshotPath).openExisting(
+    val snap = Store.CdcSnapshot.at(spark, snapshotPath)
+    val (meta, dirs) = snap.openExisting(
       s"$caller must match the writer's bucket layout, never guess it; " +
         "bootstrap the snapshot through writeCdcSnapshot (or let the " +
         "stream's first batch land) before reading through it")
-    CdcLayout(meta.nBuckets, dirs, cdcSchema(spark, snapshotPath, Some(meta), dirs))
+    CdcLayout(snap, meta.nBuckets, dirs, snap.schema(Some(meta), dirs))
   }
 
   /** In-place tombstone GC of a maintained snapshot
@@ -943,17 +894,16 @@ object StreamOps {
                      snapshotPath: String,
                      retainedPath: Option[String] = None,
                      ownerCheckpoint: Option[String] = None): (String, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
     val snap = Store.CdcSnapshot.at(spark, snapshotPath)
     val (meta, dirs) = snap.openExisting("retain an EXISTING maintained " +
       "snapshot (bootstrap through writeCdcSnapshot or let the stream's " +
       "first batch land)")
     snap.requireOwner(meta.writer, ownerCheckpoint.map(writerIdFor),
       "retainSnapshot")
-    val storedSchema = cdcSchema(spark, snapshotPath, Some(meta), dirs)
+    val storedSchema = snap.schema(Some(meta), dirs)
     // the copy's serving floor: the highest version applied (narrow
     // column scan — version only, parquet-pruned)
-    val v = readBucketDirs(spark, snapshotPath, dirs.toIndexedSeq, storedSchema)
+    val v = snap.readAll(Some(meta), dirs)
       .agg(max(col(graft.relational.Cdc.VersionCol)).cast("long"))
       .head().getLong(0)
     val target = retainedPath.getOrElse(s"$snapshotPath.retained/v=$v")
@@ -968,15 +918,9 @@ object StreamOps {
       require(copy.meta.isEmpty,
         s"retention target $target already holds a COMPLETED retained " +
           "copy — refusing to overwrite history; pick a fresh target")
-      copy.fs.delete(dstRoot, true)
+      copy.remove()
     }
-    copy.fs.mkdirs(dstRoot)
-    dirs.foreach { d =>
-      org.apache.hadoop.fs.FileUtil.copy(
-        snap.fs, new org.apache.hadoop.fs.Path(snapshotPath, d),
-        copy.fs, new org.apache.hadoop.fs.Path(dstRoot, d),
-        false, conf)
-    }
+    snap.copyInto(copy, dirs)
     copy.writeMeta(CdcMeta(meta.nBuckets, Some(storedSchema), None, Some(v)))
     (target, v)
   }
@@ -1002,7 +946,7 @@ object StreamOps {
         // would resolve against the wrong store downstream (the
         // applyCanonBatch two-scheme rule, r19 self-review)
         val p = d.getPath.toString
-        new Store(Store.CdcSnapshot, p, fs).meta
+        Store.CdcSnapshot.at(spark, p).meta
           .flatMap(_.retained).map(v => (p, v))
       }
       .sortBy(_._2)
@@ -1128,9 +1072,7 @@ object StreamOps {
     val bucketDirs = snap.dirs
     val storedMeta = snap.meta
     val exists = bucketDirs.nonEmpty
-    val storedSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (!exists) None
-      else Some(cdcSchema(spark, snapshotPath, storedMeta, bucketDirs))
+    val storedSchema = Option.when(exists)(snap.schema(storedMeta, bucketDirs))
     // align the batch's KEY dtypes to the stored snapshot's before
     // anything hashes: xxhash64(int) != xxhash64(long), so an
     // unaligned changelog would compute the wrong buckets AND miss its
@@ -1156,31 +1098,11 @@ object StreamOps {
                 s"stream was configured with nBuckets=$nBuckets — pruning " +
                 "would read the wrong buckets and silently duplicate keys")
           case None if exists =>
-            // dirs without meta = a pre-meta layout, or a FIRST write that
-            // crashed between the parquet commit and the meta write. A
-            // restart configured with a different nBuckets would prune the
-            // wrong buckets and silently duplicate keys, so verify the
-            // on-disk layout actually used THIS nBuckets before trusting
-            // pruning: a dir value >= nBuckets is proof of mismatch
-            // (cheap), and a one-time full re-hash check catches a SMALLER
-            // historical nBuckets the dir names alone cannot (it runs at
-            // most once — this batch's successful write lands the meta).
-            val dirBuckets = bucketDirs
-              .map(_.stripPrefix(CdcBucketCol + "=").toInt)
-            require(dirBuckets.forall(_ < nBuckets),
-              s"snapshot at $snapshotPath has bucket dir " +
-                s"${CdcBucketCol}=${dirBuckets.max} but no meta sidecar and " +
-                s"this stream was configured with nBuckets=$nBuckets — the " +
-                "layout was written with a different bucket count; rebuild " +
-                "the snapshot (or restore its meta sidecar) before resuming")
-            val misHashed = spark.read.parquet(snapshotPath)
-              .where(cdcBucket(keyCols, nBuckets) =!= col(CdcBucketCol))
-            require(misHashed.isEmpty,
-              s"snapshot at $snapshotPath has no meta sidecar and its rows " +
-                s"do not hash to their bucket dirs under nBuckets=$nBuckets " +
-                "— the layout was written with a different bucket count; " +
-                "rebuild the snapshot (or restore its meta sidecar) before " +
-                "resuming")
+            // dirs without meta: verify the on-disk layout used THIS
+            // nBuckets before trusting pruning (at most once — this
+            // batch's successful write lands the meta)
+            snap.verifyLayout(bucketDirs, "nBuckets", nBuckets,
+              cdcBucket(keyCols, nBuckets), "this stream")
           case None => // cold start: meta lands AFTER the first successful
             // write (writing it first would make a crashed FIRST batch
             // read as lost state)
@@ -1192,36 +1114,21 @@ object StreamOps {
         // stream's ownership either
         claimHook()
         snap.claim(writer, storedMeta.flatMap(_.writer))
-        // read ONLY the touched bucket directories, by constructed name —
-        // the bucket-pruning contract applied to the LISTING too (a
-        // partition filter over a root read still lists every file first);
-        // a touched bucket with no dir yet simply isn't read. Empty merge
-        // side must carry the STORED schema, not the batch's — a payload
+        // read ONLY the touched buckets — the bucket-pruning contract
+        // applied to the LISTING too (a partition filter over a root read
+        // still lists every file first). The merge side carries the
+        // STORED schema, not the batch's, even when empty — a payload
         // dtype drift would otherwise land mixed-schema files in one dir.
-        val touchedDirs = changed.map(b => s"$CdcBucketCol=$b")
-          .filter(bucketDirs.contains).map(d => s"$snapshotPath/$d")
-        val existing = storedSchema match {
-          case Some(s) if touchedDirs.nonEmpty =>
-            spark.read.schema(s).parquet(touchedDirs.toIndexedSeq: _*)
-          case Some(s) =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[
-              org.apache.spark.sql.Row], s)
-          case None =>
-            Cdc.bootstrap(changes.drop(versionCol, opCol).limit(0), keyCols)
-        }
+        val existing = storedSchema.fold(
+          Cdc.bootstrap(changes.drop(versionCol, opCol).limit(0), keyCols))(
+          snap.read(_, bucketDirs, changed))
         val merged = Cdc.mergeVersioned(existing, changes, keyCols, versionCol, opCol)
           .cutNow() // sever the snapshot self-read before overwrite
-        // bucket-clustered like writeCdcSnapshot: one file per touched
-        // bucket per batch instead of nTasks per bucket — one extra
-        // exchange of ONLY the touched rows (k/nBuckets of the snapshot,
-        // data the batch already moves), buying every later read a
-        // file-listing that scales with buckets, not batches × tasks
-        merged.withColumn(CdcBucketCol, cdcBucket(keyCols, nBuckets))
-          .repartition(col(CdcBucketCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(CdcBucketCol)
-          .parquet(snapshotPath)
+        // bucket-clustered like writeCdcSnapshot: one exchange of ONLY
+        // the touched rows (data the batch already moves) buys every
+        // later read a listing that scales with buckets, not batches ×
+        // tasks
+        snap.write(merged, cdcBucket(keyCols, nBuckets), dynamic = true)
         // the meta carries the layout's LOGICAL schema from here on (a
         // pre-r17 schema-less meta upgrades on its next batch). The
         // schema written is the UNION of the merge's output schema and
@@ -1303,137 +1210,43 @@ object StreamOps {
   private def sigBucket(nIdxBuckets: Int): Column =
     pmod(xxhash64(col("band"), col("sig")), lit(nIdxBuckets)).cast("int")
 
-  /** Meta-less index layouts whose one-time re-hash verification has
-    * PASSED in this JVM (r19, the r18 advice): a WRITER's next batch
-    * lands the meta, but the read-only [[probeDedup]] never writes —
-    * without memoization every serving probe against a crash-remnant
-    * meta-less index would re-pay a full-index scan, the exact
-    * linear-in-corpus cost the r18 bucketed layout removed. Keyed by
-    * (path, nIdxBuckets); a layout REPLACED under the same path after
-    * a pass would normally land its meta (making this moot) — the
-    * memo trusts that write discipline, same as the meta itself. */
-  private val verifiedNoMetaIdx =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  /** Entries are never individually evicted (a meta-less layout stays
-    * meta-less until a writer lands the meta), so a long-lived driver
-    * probing many crash-remnant indexes would grow the set unboundedly
-    * (r20, the r19 ADVICE note) — past the bound, drop the whole memo:
-    * the worst case is re-paying the one-time re-hash verification,
-    * never a correctness change. */
-  private val VerifiedNoMetaIdxBound = 4096
-
-  private def memoizeVerifiedNoMetaIdx(key: (String, Int)): Unit = {
-    if (verifiedNoMetaIdx.size >= VerifiedNoMetaIdxBound)
-      verifiedNoMetaIdx.clear()
-    verifiedNoMetaIdx.add(key)
-  }
-
-  /** The FULL stored index (compaction/GC path — per-batch probes read
-    * touched buckets only) under its meta's sig-row schema, as
-    * [[readTouchedIndex]] reads the touched dirs: no schema-inference
-    * job. Partition columns stripped. */
-  private def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String, meta: IdxMeta): DataFrame =
-    spark.read.schema(withIdxPartitions(meta.schema)).parquet(indexPath)
-      .drop(DedupIdxBucketCol, DedupWriterCol, DedupBatchCol)
-
-  /** A stored index file's read schema: the sig rows plus the bucket,
-    * writer and batch partition columns. */
-  private def withIdxPartitions(sigSchema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    sigSchema.add(DedupIdxBucketCol, IntegerType)
-      .add(DedupWriterCol, StringType)
-      .add(DedupBatchCol, LongType)
-  }
-
   /** The probe-side index read shared by [[applyDedupBatch]] and
     * [[probeDedup]]: verify the stored layout against the configured
     * `nIdxBuckets` (a mismatch would prune the wrong buckets and
     * silently ADMIT dups — loud failure instead), then read ONLY the
-    * buckets `sigs` hashes into plus the unbucketed tail, by
-    * constructed dir name (path-level pruning: the probe never lists
-    * the rest of the index). `touched` is evaluated only when an index
-    * exists. Returns `(touchedIndex, storedIdType)`:
-    * touchedIndex is None when nothing relevant is stored; the id
-    * dtype is Some whenever the index EXISTS (meta-first, else one
-    * dir's footer) — the dtype every write must cast to (mixed-dtype
-    * files in one dataset are unreadable). */
+    * buckets `sigs` hashes into plus the unbucketed tail (path-level
+    * pruning: the probe never lists the rest of the index, r18).
+    * `touched` is evaluated only when an index exists. Returns
+    * `(touchedIndex, storedIdType)`: touchedIndex is None when nothing
+    * relevant is stored; the id dtype is Some whenever the index EXISTS
+    * — the dtype every write must cast to (mixed-dtype files in one
+    * dataset are unreadable). */
   private def readTouchedIndex(spark: org.apache.spark.sql.SparkSession,
                                indexPath: String, touched: => Seq[Int],
                                nIdxBuckets: Int, idCol: String, who: String)
       : (Option[DataFrame], Option[org.apache.spark.sql.types.DataType]) = {
-    // ONE root listStatus: layout detection + the touched-dir
-    // existence filter (rejects the pre-r18 flat layout loudly); meta
-    // without dirs = a compaction/rewrite's static overwrite died
-    // between the delete and the commit (r19) — treating it as "no
-    // index" would silently ADMIT every dup, so it fails loudly
-    val (idxMeta, idxDirs) = Store.SignatureIndex.at(spark, indexPath).open()
-    idxMeta.foreach { m =>
-      require(m.nIdxBuckets == nIdxBuckets,
-        s"signature index at $indexPath is laid out with " +
-          s"nIdxBuckets=${m.nIdxBuckets}, $who configured " +
-          s"$nIdxBuckets — probing would read the wrong buckets " +
-          "and silently admit dups")
+    // ONE root listStatus (rejects the pre-r18 flat layout loudly); meta
+    // without dirs = a compaction/rewrite's static overwrite died between
+    // the delete and the commit (r19) — treating it as "no index" would
+    // silently ADMIT every dup, so it fails loudly
+    val idx = Store.SignatureIndex.at(spark, indexPath)
+    val (idxMeta, idxDirs) = idx.open()
+    idxMeta match {
+      case Some(m) =>
+        require(m.nIdxBuckets == nIdxBuckets,
+          s"signature index at $indexPath is laid out with " +
+            s"nIdxBuckets=${m.nIdxBuckets}, $who configured " +
+            s"$nIdxBuckets — probing would read the wrong buckets " +
+            "and silently admit dups")
+      case None =>
+        idx.verifyLayout(idxDirs, "nIdxBuckets", nIdxBuckets,
+          sigBucket(nIdxBuckets), who)
     }
-    if (idxMeta.isEmpty && idxDirs.nonEmpty &&
-        !verifiedNoMetaIdx.contains((indexPath, nIdxBuckets))) {
-      // dirs without meta = the FIRST index write crashed between
-      // parquet and meta; verify the on-disk layout actually used
-      // THIS nIdxBuckets before trusting pruning (the applyCdcBatch
-      // no-meta discipline — a writer's next batch lands the meta;
-      // read-only probes memoize the pass instead, see
-      // [[verifiedNoMetaIdx]]). The index is narrow, so the re-hash
-      // check is cheap even at scale. The tail dir −1 is exempt: its
-      // rows are unbucketed by design and the probe always reads it.
-      val dirBuckets = idxDirs.map(_.stripPrefix(DedupIdxBucketCol + "=").toInt)
-      require(dirBuckets.forall(_ < nIdxBuckets),
-        s"signature index at $indexPath has bucket dir " +
-          s"$DedupIdxBucketCol=${dirBuckets.max} but no meta sidecar and " +
-          s"$who was configured with nIdxBuckets=$nIdxBuckets " +
-          "— the layout was written with a different bucket count; " +
-          "rebuild the index (or restore its meta sidecar)")
-      val misHashed = spark.read.parquet(indexPath)
-        .where(col(DedupIdxBucketCol) =!= DedupIdxTail &&
-          sigBucket(nIdxBuckets) =!= col(DedupIdxBucketCol))
-      require(misHashed.isEmpty,
-        s"signature index at $indexPath has no meta sidecar and its rows " +
-          s"do not hash to their bucket dirs under " +
-          s"nIdxBuckets=$nIdxBuckets — rebuild the index (or " +
-          "restore its meta sidecar)")
-      memoizeVerifiedNoMetaIdx((indexPath, nIdxBuckets))
-    }
-    val indexExists = idxDirs.nonEmpty
-    val idxIdType =
-      idxMeta.map(_.schema(idCol).dataType).orElse {
-        if (indexExists)
-          Some(spark.read.parquet(s"$indexPath/${idxDirs.head}")
-            .schema(idCol).dataType)
-        else None
-      }
-    // ONLY the touched dirs plus the unbucketed tail (batches since the
-    // last compaction) are read (r18, killing the last
-    // linear-in-corpus per-batch term)
-    val storedIdx: Option[DataFrame] =
-      if (!indexExists) None
-      else {
-        val touchedDirs = (DedupIdxTail +: touched)
-          .map(sb => s"$DedupIdxBucketCol=$sb")
-          .filter(idxDirs.contains).map(d => s"$indexPath/$d")
-        if (touchedDirs.isEmpty) None
-        else {
-          val sigSchema = idxMeta.map(_.schema).getOrElse(
-            spark.read.parquet(touchedDirs.head).schema
-              .filter(f => !f.name.startsWith("__dedup_"))
-              .foldLeft(new org.apache.spark.sql.types.StructType)(_ add _))
-          Some(spark.read.option("basePath", indexPath)
-            .schema(withIdxPartitions(sigSchema))
-            .parquet(touchedDirs.toIndexedSeq: _*)
-            .drop(DedupIdxBucketCol, DedupWriterCol, DedupBatchCol))
-        }
-      }
-    (storedIdx, idxIdType)
+    val schema = Option.when(idxDirs.nonEmpty)(idx.schema(idxMeta, idxDirs))
+    lazy val buckets = touched
+    val storedIdx = schema.filter(_ => idx.holds(idxDirs, buckets, withTail = true))
+      .map(idx.read(_, idxDirs, buckets, withTail = true))
+    (storedIdx, schema.map(_(idCol).dataType))
   }
 
   /** Banding candidates `(bid, cid)`, one row per shared band (the
@@ -1458,8 +1271,7 @@ object StreamOps {
                             idCol: String, caller: String): (DataFrame, DataFrame) = {
     val layout = cdcLayout(spark, corpusPath, caller)
     val (cut, touched) = cand.cutNow(when(stored, layout.bucketOf(col("cid"), idCol)))
-    (cut, graft.relational.Cdc.publicSnapshot(readBucketDirs(spark, corpusPath,
-      layout.bucketDirs(touched), layout.schema)))
+    (cut, graft.relational.Cdc.publicSnapshot(layout.read(touched)))
   }
 
   /** Read-only dedup PROBE (r18) — "would these docs be near-dups of
@@ -1849,7 +1661,7 @@ object StreamOps {
     val (meta, _, folded) = idx.beginFold(asWriter, "compactDedupIndex",
       "compact an index written by this engine (a pre-r18 flat index " +
         "has none; rebuild via bootstrapDedup)")
-    val all = readDedupIndex(spark, indexPath, meta)
+    val all = idx.readAll(Some(meta))
     val idCol = all.columns.filterNot(Seq("band", "sig").contains).head
     val kept = corpusPath.fold(all) { cp =>
       all.join(readDedupCorpus(spark, cp).select(idCol), Seq(idCol), "left_semi")
@@ -2097,16 +1909,14 @@ object StreamOps {
   private def compactAnnIndexOwned(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String,
                                    asWriter: Option[String]): Unit = {
-    val codesPath = s"$indexPath/codes"
-    val codes = Store.AnnCodes.at(spark, codesPath)
+    val codes = Store.AnnCodes.at(spark, s"$indexPath/codes")
     val (meta, dirs, folded) = codes.beginFold(asWriter, "compactAnnIndex",
       "compact a store written by bootstrapAnn/annStream")
-    val tailDirName = s"$AnnCellCol=$AnnTail"
     // no tail → nothing to fold: the base is already one converged
     // generation per (id, subspace) by construction (bootstrap encodes
     // a unique corpus; prior folds keep one row per key) — rewriting
     // it would be an index-sized no-op
-    if (!dirs.contains(tailDirName)) return
+    if (!codes.hasTail(dirs)) return
     val idCol = meta.schema.fieldNames
       .filterNot(Seq("cell", "subspace", "code").contains).head
     // fold-time convergence for RE-SENT ids is CANDIDATE-sized (r20,
@@ -2117,8 +1927,8 @@ object StreamOps {
     Cut.scope {
       // eager cut before the static overwrite of the files this plan
       // reads (the compactCdcSnapshot rule)
-      val cut = annLatestWins(spark, codesPath, meta.schema, idCol,
-          dirs.filterNot(_ == tailDirName).toSeq, withTail = true)
+      val cut = annLatestWins(codes, meta.schema, dirs, idCol,
+          0L until meta.cells)
         .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
         .cutNow()
       codes.writeTier(cut, "compact", -1L, Some(col("cell")),
@@ -2140,39 +1950,20 @@ object StreamOps {
     * auto-fold — resolves its own generations with one TAIL-sized
     * window. The base read flows on untouched: no index-sized exchange
     * lands on either path. Bootstrap and prior folds sit at batch −1,
-    * so any tail write outranks them. `baseDirs` are cell dir names;
-    * without a tail (`withTail = false`, a folded store) the base is
-    * returned as is. The tail is a lazy cut, owned by the caller's
-    * [[Cut.scope]] if one is open. */
-  private def annLatestWins(spark: org.apache.spark.sql.SparkSession,
-                            codesPath: String,
+    * so any tail write outranks them. `cells` are the base cells to
+    * read; a store without a tail (folded) returns that base as is. The
+    * tail is a lazy cut, owned by the caller's [[Cut.scope]] if one is
+    * open. */
+  private def annLatestWins(codes: Store[AnnMeta],
                             stored: org.apache.spark.sql.types.StructType,
-                            idCol: String, baseDirs: Seq[String],
-                            withTail: Boolean): DataFrame = {
-    val partSchema = stored
-      .add(AnnCellCol, org.apache.spark.sql.types.LongType)
-      .add(AnnWriterCol, org.apache.spark.sql.types.StringType)
-      .add(AnnBatchCol, org.apache.spark.sql.types.LongType)
-    def readTiers(dirs: Seq[String]): DataFrame =
-      spark.read.option("basePath", codesPath).schema(partSchema)
-        .parquet(dirs.map(d => s"$codesPath/$d").toIndexedSeq: _*)
-    val base =
-      if (baseDirs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stored)
-      else readTiers(baseDirs).drop(AnnCellCol, AnnWriterCol, AnnBatchCol)
-    if (!withTail) base
+                            dirs: Array[String], idCol: String,
+                            cells: Seq[Long]): DataFrame = {
+    val base = codes.read(stored, dirs, cells)
+    if (!codes.hasTail(dirs)) base
     else {
-      val tail = readTiers(Seq(s"$AnnCellCol=$AnnTail"))
-        .drop(AnnCellCol, AnnWriterCol).cut()
+      val tail = codes.readTail(stored, dirs).cut()
       val fitTail = graft.llm.Joins.fitsBroadcast(tail)
-      val latestTail = tail
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col(idCol), col("subspace"))
-            .orderBy(col(AnnBatchCol).desc, col("code"))))
-        .where(col("__rn") === 1)
-        .drop("__rn", AnnBatchCol)
+      val latestTail = codes.latest(tail, Seq(col(idCol), col("subspace")), col("code"))
       // no distinct on the anti-join probe side (the r4 rule — the
       // join dedups inherently)
       base.join(graft.llm.Joins.hinted(fitTail, tail.select(idCol)),
@@ -2216,8 +2007,8 @@ object StreamOps {
       : DataFrame = {
     import graft.llm.Similarity
     val spark = queries.sparkSession
-    val (meta, dirs) = Store.AnnCodes.at(spark, s"$indexPath/codes")
-      .openExisting("bootstrapAnn the corpus first")
+    val codes = Store.AnnCodes.at(spark, s"$indexPath/codes")
+    val (meta, dirs) = codes.openExisting("bootstrapAnn the corpus first")
     val (coarse, codebooks) = annCodebooks(spark, indexPath, meta.cbHash)
     require(nprobe >= 1 && nprobe <= coarse.length,
       s"nprobe must be in [1, ${coarse.length}], got $nprobe")
@@ -2238,11 +2029,9 @@ object StreamOps {
       .distinct.sorted
     // latest-wins serving over the routed cells plus the tail; a folded
     // store (no tail dir) pays nothing for it
-    val codes = annLatestWins(spark, s"$indexPath/codes", meta.schema,
-      idCol, routedCells.map(c => s"$AnnCellCol=$c").filter(dirs.contains).toSeq,
-      withTail = dirs.contains(s"$AnnCellCol=$AnnTail"))
+    val served = annLatestWins(codes, meta.schema, dirs, idCol, routedCells.toSeq)
     Similarity.searchPqIndexWith(q,
-      Similarity.PqIndex(codes, coarse, codebooks), routedLocal,
+      Similarity.PqIndex(served, coarse, codebooks), routedLocal,
       k, queryIdCol, vecCol, idCol, allowIds)
   }
 
@@ -2294,8 +2083,7 @@ object StreamOps {
                                           maxNodes: Long,
                                           writer: String = "default"): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val labels = Store.Labels.at(spark, labelsPath)
+    val labels = Store.Labels.at(batch.sparkSession, labelsPath)
     // the labels store is claimed by its stream (r19): labels CONVERGE
     // under serialized batches (each fold includes the stored prior),
     // but two CONCURRENT streams read-fold-overwrite — the loser's
@@ -2307,9 +2095,10 @@ object StreamOps {
     // labels checkpoint — a long-running stream would otherwise pin one
     // dead label frame per micro-batch
     Cut.scope {
-      val cut = nextLabels(priorLabels(spark, labels), batch, aCol, bCol, idCol)
+      val cut = nextLabels(priorLabels(labels), batch, aCol, bCol, idCol)
         .cutNow()
-      val n = cut.count()
+      // the eager cut counted itself
+      val n = Cut.rows(cut).get
       require(n <= maxNodes,
         s"componentsStream labeling grew to $n nodes (> $maxNodes) — " +
           "bounded node domains only; use the batch closure for corpora")
@@ -2325,10 +2114,9 @@ object StreamOps {
     * silently re-closing over this batch's edges alone). LAZY — still
     * reading the labels path; callers cut what they derive from it
     * before any overwrite of that path. */
-  private def priorLabels(spark: org.apache.spark.sql.SparkSession,
-                          labels: Store[Unit]): Option[DataFrame] = {
+  private def priorLabels(labels: Store[Unit]): Option[DataFrame] = {
     val (_, files) = labels.open()
-    if (files.isEmpty) None else Some(spark.read.parquet(labels.root))
+    if (files.isEmpty) None else Some(labels.readAll(None, files))
   }
 
   /** The label phase, second half: next labeling = incremental
@@ -2409,7 +2197,7 @@ object StreamOps {
     * weightCol)`, weights summed over every edge applied so far. */
   def readCanonEdges(spark: org.apache.spark.sql.SparkSession,
                      canonPath: String): DataFrame =
-    spark.read.parquet(canonPath).drop(CanonBucketCol)
+    Store.CanonEdges.at(spark, canonPath).readAll(None)
 
   /** One micro-batch of [[canonEdgesStream]] — package-visible so
     * parity/replay/crash are spec-testable (the applyCdcBatch
@@ -2448,7 +2236,7 @@ object StreamOps {
     }
     // ---- label phase: bipartite contraction over (src:, host:) ----
     val labelStore = Store.Labels.at(spark, labelsPath)
-    val prior = priorLabels(spark, labelStore)
+    val prior = priorLabels(labelStore)
     // a canonical table without its labels cannot re-key correctly:
     // closing over this batch alone would elect wrong representatives
     require(prior.isDefined || applied < 0L,
@@ -2470,7 +2258,7 @@ object StreamOps {
         concat(lit("src:"), col(srcCol).cast("string")).as("a"),
         concat(lit("host:"), col(hostCol).cast("string")).as("b"))
       val newLabels = nextLabels(prior, pairs, "a", "b", "node").cutNow()
-      val n = newLabels.count()
+      val n = Cut.rows(newLabels).get
       require(n <= maxNodes,
         s"canonEdgesStream labeling grew to $n nodes (> $maxNodes) — " +
           "bounded host/source domains only")
@@ -2502,8 +2290,6 @@ object StreamOps {
                              canon: Store[CanonMeta],
                              srcCol: String, hostCol: String,
                              weightCol: String, nBuckets: Int): Unit = Cut.scope {
-    val spark = batch.sparkSession
-    val canonPath = canon.root
     // ONE root listStatus: layout detection + the touched-dir existence
     // filter (the applyCdcBatch r17 rule — a recursive full listing
     // grows with the whole snapshot and taxes every batch)
@@ -2546,21 +2332,9 @@ object StreamOps {
     val merged0 =
       if (!exists) batchCanon
       else {
-        // read ONLY the touched bucket dirs by constructed name, with
-        // the stored schema from one dir (every bucket's file schema
-        // is identical by the layout contract); a touched bucket with
-        // no dir yet simply isn't read, and an all-new touched set
-        // merges against an empty frame CARRYING the stored schema
-        val storedSchema =
-          spark.read.parquet(s"$canonPath/${canonDirs.head}").schema
-        val touchedDirs = touched.map(b => s"$CanonBucketCol=$b")
-          .filter(canonDirs.contains).map(d => s"$canonPath/$d")
-        val existing =
-          if (touchedDirs.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[
-              org.apache.spark.sql.Row], storedSchema)
-          else spark.read.schema(storedSchema)
-            .parquet(touchedDirs.toIndexedSeq: _*)
+        // read ONLY the touched buckets (an all-new touched set merges
+        // against an empty frame carrying the stored schema)
+        val existing = canon.read(canon.schema(None, canonDirs), canonDirs, touched)
         val rekeyed = repMap match {
           case None => existing
           case Some(m) => existing
@@ -2574,25 +2348,14 @@ object StreamOps {
           .groupBy(col(srcCol), col("canon_host"))
           .agg(sum(col(weightCol)).as(weightCol))
       }
-    val merged = merged0
-      .withColumn(CanonBucketCol, bucketOf(col("canon_host")))
-      .cutNow() // sever the snapshot self-read pre-overwrite
-    // bucket-clustered (the applyCdcBatch r17 rule): one file per
-    // touched bucket per batch, not nTasks per bucket
-    merged.repartition(col(CanonBucketCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(CanonBucketCol)
-      .parquet(canonPath)
+    // sever the snapshot self-read pre-overwrite; the same job gathers
+    // the buckets the merge writes
+    val (merged, written) = merged0.cutNow(bucketOf(col("canon_host")))
+    canon.write(merged, bucketOf(col("canon_host")), dynamic = true)
     // a touched bucket whose rows ALL re-keyed away is absent from
     // `merged` — dynamic overwrite leaves its stale files; delete
     // explicitly (crash before this point = inflight marker trips)
-    val written = merged.select(col(CanonBucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSet
-    (touched.toSet -- written).foreach { b =>
-      canon.fs.delete(new org.apache.hadoop.fs.Path(
-        canonPath, s"$CanonBucketCol=$b"), true)
-    }
+    canon.removeBuckets(touched.toSet -- written)
   }
 
   final case class UserRunning(user_id: Long, n: Long, total: Double)

@@ -47,5 +47,17 @@ class SessionSpec extends SparkSpec {
     assume(Files.isDirectory(src), s"run from the repository root (no $src)")
     val builder = raw"SparkSession\s*\.\s*builder".r
     SourceGuard.scan(src, builder) shouldBe List("main/scala/graft/Session.scala")
+    // live: the one builder is found where it lives
+    val owner = "main/scala/graft/Session.scala"
+    val found = SourceGuard.hits(SourceGuard.sources(src), builder)
+    found should not be empty
+    found.map(_.file).distinct shouldBe List(owner)
+    // it fires: a planted builder is reported with its case class (the
+    // token is split here so this spec does not plant it in src/ itself)
+    SourceGuard.hits(Seq("main/scala/graft/Planted.scala" ->
+      ("case class Planted(n: Int) {\n  def s = SparkSession" + ".builder().getOrCreate()\n}")),
+      builder) shouldBe
+      List(SourceGuard.Hit("main/scala/graft/Planted.scala",
+        Some(SourceGuard.Block("case class", "Planted"))))
   }
 }

@@ -22,5 +22,15 @@ class QueryProfileSpec extends SparkSpec {
     val listener = raw"(extends|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b|addSparkListener\s*\(".r
     SourceGuard.scan(src, listener) shouldBe
       List("main/scala/graft/obs/QueryProfile.scala")
+    // live: the one listener is found where it lives
+    val found = SourceGuard.hits(SourceGuard.sources(src), listener)
+    found should not be empty
+    found.map(_.file).distinct shouldBe List("main/scala/graft/obs/QueryProfile.scala")
+    // it fires: a planted listener is reported with its case class (the
+    // token is split here so this spec does not plant it in src/ itself)
+    SourceGuard.hits(Seq("main/scala/graft/Planted.scala" ->
+      ("case class Planted(n: Int) {\n  val l = new Spark" + "Listener {}\n}")), listener) shouldBe
+      List(SourceGuard.Hit("main/scala/graft/Planted.scala",
+        Some(SourceGuard.Block("case class", "Planted"))))
   }
 }

@@ -31,5 +31,19 @@ class StoreDirSpec extends AnyFunSuite with Matchers {
         !f.endsWith("/Q.scala")
     }
     SourceGuard.offenders(facesAndExamples, jdkCall) shouldBe Nil
+    // live: the helper's own JDK call is what the scan exempts, and the
+    // faces it covers do make store dirs (through the helper, inside
+    // their Q blocks)
+    val helper = SourceGuard.sources(src).filter(_._1 == "queries/Q.scala")
+    SourceGuard.hits(helper, jdkCall) should not be empty
+    SourceGuard.hits(facesAndExamples, raw"Q\s*\.\s*createTempDirectory".r)
+      .exists(_.in.exists(_.kind == "Q")) shouldBe true
+    // it fires: a planted face making its dir through the JDK is
+    // reported, attributed to its Q block
+    SourceGuard.hits(Seq("queries/Planted.scala" ->
+      """Q("planted_face", "stores", (spark, sf) => {
+        |  val dir = java.nio.file.Files.createTempDirectory("planted")""".stripMargin),
+      jdkCall) shouldBe
+      List(SourceGuard.Hit("queries/Planted.scala", Some(SourceGuard.Block("Q", "planted_face"))))
   }
 }

@@ -101,4 +101,17 @@ class SourcesSpec extends SparkSpec {
       "case class Planted(sf: String) {\n  def df = spark.read.parquet(sf)\n}"), bare) shouldBe
       List(SourceGuard.Hit("model/Planted.scala", Some(SourceGuard.Block("case class", "Planted"))))
   }
+
+  test("no schema-inferring parquet read remains in the streaming stores") {
+    val src = Paths.get("src/main/scala/graft/streaming")
+    assume(Files.isDirectory(src), s"run from the repository root (no $src)")
+    val bare = raw"spark\s*\.\s*read\s*\.\s*parquet\s*\(".r
+    val files = Seq("StreamOps.scala", "Store.scala")
+      .map(f => f -> Files.readString(src.resolve(f)))
+    SourceGuard.hits(files, bare) shouldBe Nil
+    // the scan fires: a planted store read is reported with its case class
+    SourceGuard.hits(files :+ ("Planted.scala" ->
+      "case class Planted(root: String) {\n  def rows = spark.read.parquet(root)\n}"), bare) shouldBe
+      List(SourceGuard.Hit("Planted.scala", Some(SourceGuard.Block("case class", "Planted"))))
+  }
 }

@@ -16,7 +16,8 @@ import graft.relational.Cdc
   * one [[QueryProfile.measure]]. The dedup batch holds a corpus dup, a
   * within-batch pair and fresh docs, and folds its tail
   * (`maxTailBatches = 1`), as every batch of the `store_serve` benchmark
-  * does.
+  * does. The components and canon batches each add edges that merge two
+  * stored components.
   */
 class ApplyJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +26,9 @@ class ApplyJobsSpec extends SparkSpec {
   val budgets: Map[String, Int] = Map(
     "applyDedupBatch" -> 25,
     "applyCdcBatch" -> 6,
-    "applyAnnBatch" -> 8)
+    "applyAnnBatch" -> 8,
+    "applyComponentsBatch" -> 20,
+    "applyCanonBatch" -> 33)
 
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
@@ -90,5 +93,29 @@ class ApplyJobsSpec extends SparkSpec {
     jobsOf("applyAnnBatch")(apply(200 until 210, 1L)) should be <=
       budgets("applyAnnBatch")
     StreamOps.annIndexTailBatches(spark, dir) shouldBe 0
+  }
+
+  test("applyComponentsBatch stays within its job budget") {
+    val labels = tmp("jobs_components") + "/labels"
+    def apply(edges: (Long, Long)*): Unit =
+      StreamOps.applyComponentsBatch(edges.toDF("a", "b"), labels, "a", "b", "node",
+        1L << 20, "w")
+    apply((1L, 2L), (3L, 4L), (5L, 6L))
+    apply((7L, 8L))
+    jobsOf("applyComponentsBatch")(apply((2L, 3L), (8L, 9L))) should be <=
+      budgets("applyComponentsBatch")
+    spark.read.parquet(labels).select("component").distinct().count() shouldBe 3L
+  }
+
+  test("applyCanonBatch stays within its job budget") {
+    val dir = tmp("jobs_canon")
+    def apply(id: Long, edges: (String, String, Long)*): Unit =
+      StreamOps.applyCanonBatch(edges.toDF("src", "dst_host", "n_links"), id,
+        s"$dir/l", s"$dir/c", "w", "src", "dst_host", "n_links", 4, 1L << 20)
+    apply(0L, ("s1", "a.com", 3L), ("s2", "b.com", 2L), ("s3", "c.com", 1L))
+    apply(1L, ("s4", "d.com", 4L))
+    jobsOf("applyCanonBatch")(apply(2L, ("s1", "b.com", 5L), ("s5", "e.com", 1L))) should be <=
+      budgets("applyCanonBatch")
+    StreamOps.readCanonEdges(spark, s"$dir/c").count() shouldBe 5L
   }
 }

@@ -4,15 +4,19 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import graft.{SourceGuard, SparkSpec}
+import graft.obs.QueryProfile
 import graft.relational.Cdc
 import graft.streaming.Store.{AnnMeta, CanonMeta, CdcMeta, IdxMeta}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The store lifecycle's contract: every meta a parent build wrote
   * still opens and decodes to the same values (CDC, index and ANN metas
   * re-encode byte for byte), a corrupt meta fails the same way on every
-  * store — naming the store and its path — and no code outside
-  * `Store.scala` touches a meta or claim sidecar. */
+  * store — naming the store and its path —, the one bucket reader reads
+  * what a filtered full read reads, and no code outside `Store.scala`
+  * touches a meta or claim sidecar or the bucket layout. */
 class StoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -198,6 +202,87 @@ class StoreSpec extends SparkSpec {
     }
   }
 
+  // ---- the one bucket reader, over each bucketed kind
+
+  /** The reader contract of the bucketed store at `root`: no bucket
+    * reads an empty frame carrying the stored schema; a touched read
+    * (a bucket with no dir skipped) holds exactly the full read's rows
+    * of those buckets — and of the tail, when the kind has one; and the
+    * schema resolves from one footer, with no Spark job, when there is
+    * no meta to read it from. */
+  private def readsItsBuckets[M](kind: Store.Kind[M], root: String,
+                                 bucketCol: String, tail: Option[Long] = None): Unit = {
+    val store = kind.at(spark, root)
+    val (m, listed) = store.open()
+    val schema = store.schema(m, listed)
+    val full = spark.read.parquet(root)
+    def rowsOf(df: DataFrame) =
+      df.select(schema.fieldNames.map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+    def fullOf(buckets: Seq[Long]) = rowsOf(full.where(col(bucketCol).isin(buckets: _*)))
+
+    val none = store.read(schema, listed, Nil)
+    none.schema shouldBe schema
+    none.count() shouldBe 0L
+
+    val buckets = listed.map(_.stripPrefix(bucketCol + "=").toLong)
+      .filterNot(tail.contains).sorted.take(2).toSeq
+    buckets should not be empty
+    val absent = buckets.max + 1000L
+    val touched = store.read(schema, listed, buckets :+ absent)
+    touched.columns.toSeq shouldBe schema.fieldNames.toSeq
+    rowsOf(touched) shouldBe fullOf(buckets)
+    rowsOf(touched) should not be empty
+    tail.foreach { t =>
+      rowsOf(store.read(schema, listed, buckets, withTail = true)) shouldBe fullOf(buckets :+ t)
+    }
+
+    val (footer, run) = QueryProfile.measure(spark)(store.schema(None, listed))
+    run.jobs shouldBe 0
+    footer.map(f => f.name -> f.dataType) shouldBe schema.map(f => f.name -> f.dataType)
+  }
+
+  test("the CDC snapshot reads its buckets as a filtered full read does") {
+    val snap = tmp("store_read_cdc") + "/snap"
+    val base = (1L to 40L).map(k => (k, s"n$k", k * 1.5)).toDF("k", "name", "amt")
+    StreamOps.writeCdcSnapshot(Cdc.bootstrap(base, Seq("k")), snap, Seq("k"), nBuckets = 8)
+    readsItsBuckets(Store.CdcSnapshot, snap, StreamOps.CdcBucketCol)
+  }
+
+  test("the signature index reads its buckets and its tail as a filtered full read does") {
+    val dir = tmp("store_read_idx"); val idx = s"$dir/idx"; val corp = s"$dir/corp"
+    def text(i: Int) = (0 until 12).map(w => s"w${i}x$w").mkString(" ")
+    StreamOps.bootstrapDedup((1 to 30).map(i => (i.toLong, text(i))).toDF("doc_id", "text"),
+      idx, corp, nBuckets = 4, nIdxBuckets = 8)
+    // one batch lands in the tail
+    StreamOps.applyDedupBatch((40 to 45).map(i => (i.toLong, text(i))).toDF("doc_id", "text"),
+      0L, idx, corp, 2, 8, 2, 0.5, 4, "doc_id", "text", poly = false, nIdxBuckets = 8)
+    readsItsBuckets(Store.SignatureIndex, idx, StreamOps.DedupIdxBucketCol,
+      Some(StreamOps.DedupIdxTail.toLong))
+  }
+
+  test("the ANN code store reads its cells and its tail as a filtered full read does") {
+    val dir = tmp("store_read_ann") + "/ann"
+    val dims = 4
+    val coarse = (0 until 4).map(c => (0 until dims).map(j => ((c + j) % 4 - 2) / 2.0))
+    val pq = (0 until 2).map(s => (0 until 2).map(k =>
+      (0 until 2).map(j => ((s + k + j) % 4 - 2) / 2.0)))
+    def vecs(ids: Range) = ids.map(i => (i.toLong,
+        (0 until dims).map(j => ((i * 5 + j) % 7 - 3) / 3.0f)))
+      .toDF("vec_id", "embedding")
+    StreamOps.bootstrapAnn(vecs(0 until 40), dir, coarse, pq)
+    StreamOps.applyAnnBatch(vecs(50 until 56), 0L, dir)
+    readsItsBuckets(Store.AnnCodes, s"$dir/codes", StreamOps.AnnCellCol, Some(StreamOps.AnnTail))
+  }
+
+  test("the canonical-edge snapshot reads its buckets as a filtered full read does") {
+    val dir = tmp("store_read_canon")
+    val edges = (1 to 30).map(i => (s"s${i % 7}", s"h$i.com", i.toLong))
+      .toDF("src", "dst_host", "n_links")
+    StreamOps.applyCanonBatch(edges, 0L, s"$dir/l", s"$dir/c", "w1", "src",
+      "dst_host", "n_links", 8, 1L << 20)
+    readsItsBuckets(Store.CanonEdges, s"$dir/c", StreamOps.CanonBucketCol)
+  }
+
   test("Store.scala is the only main source that touches a meta or claim sidecar") {
     val main = Paths.get("src/main/scala")
     assume(Files.isDirectory(main), s"run from the repository root (no $main)")
@@ -205,5 +290,34 @@ class StoreSpec extends SparkSpec {
     // or the claim sidecar's reader / exclusive create
     val sidecar = raw""""[^"\n]*\.(meta|claim)\b|\breadClaim\s*\(|CREATE_NEW""".r
     SourceGuard.scan(main, sidecar) shouldBe List("graft/streaming/Store.scala")
+  }
+
+  /** A partitioned write, a dynamic overwrite, a base-path read. */
+  private val layoutToken = """partitionBy\(|partitionOverwriteMode|"basePath"""".r
+
+  /** A bucket-dir name built from a bucket-column constant. */
+  private val bucketDirName =
+    """\$\{?[\w.]*(BucketCol|AnnCellCol)\}?=|(BucketCol|AnnCellCol)\s*\+\s*"="""".r
+
+  test("Store.scala is the only main source that builds a bucket-dir name or partitions a store") {
+    val main = Paths.get("src/main/scala")
+    assume(Files.isDirectory(main), s"run from the repository root (no $main)")
+    val streaming = SourceGuard.sources(main.resolve("graft/streaming"))
+    // live: the store's own reads and writes are found, and only there
+    val layout = SourceGuard.hits(streaming, layoutToken)
+    layout should not be empty
+    layout.map(_.file).distinct shouldBe List("Store.scala")
+    SourceGuard.hits(SourceGuard.sources(main), bucketDirName)
+      .filterNot(_.file == "graft/streaming/Store.scala") shouldBe Nil
+    // it fires: a planted sink that names a bucket dir and partitions
+    // its own write is reported, attributed to its case class
+    val planted = "Planted.scala" ->
+      ("case class Planted(root: String) {\n" +
+        "  def dir(b: Int) = s\"$root/${StreamOps.CdcBucketCol}=$b\"\n" +
+        "  def put(df: DataFrame) = df.write.partitionBy(\"b\").parquet(root)\n}")
+    val at = Some(SourceGuard.Block("case class", "Planted"))
+    SourceGuard.hits(streaming :+ planted, layoutToken).filterNot(_.file == "Store.scala") shouldBe
+      List(SourceGuard.Hit("Planted.scala", at))
+    SourceGuard.hits(Seq(planted), bucketDirName) shouldBe List(SourceGuard.Hit("Planted.scala", at))
   }
 }
